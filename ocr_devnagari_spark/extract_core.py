@@ -110,80 +110,19 @@ _RAWTEXT_TAGS = frozenset("script style textarea title".split())
 _RAWTEXT_CLOSE = {t: re.compile(f"</{t}\\s*>", re.I) for t in _RAWTEXT_TAGS}
 
 
-def iter_html_events(html: str):
-    """Yield (kind, payload): START → (tag, attr_str, self_closing),
-    END → tag, DATA → text (entities already decoded)."""
-    i, n = 0, len(html)
-    find = html.find
-    while i < n:
-        lt = find("<", i)
-        if lt < 0:
-            d = html[i:]
-            yield DATA, (unescape(d) if "&" in d else d)
-            break
-        if lt > i:
-            d = html[i:lt]
-            yield DATA, (unescape(d) if "&" in d else d)
-        if html.startswith("<!--", lt):
-            end = find("-->", lt + 4)
-            i = n if end < 0 else end + 3
-            continue
-        nxt = html[lt + 1: lt + 2]
-        if nxt in ("!", "?"):
-            end = find(">", lt)
-            i = n if end < 0 else end + 1
-            continue
-        m = _TAG_RE.match(html, lt)
-        if not m:
-            yield DATA, "<"
-            i = lt + 1
-            continue
-        closing, tag, attr_str, selfclose = m.groups()
-        tag = tag.lower()
-        i = m.end()
-        if closing:
-            yield END, tag
-            continue
-        yield START, (tag, attr_str, bool(selfclose))
-        if tag in _RAWTEXT_TAGS and not selfclose:
-            m2 = _RAWTEXT_CLOSE[tag].search(html, i)
-            if m2 is None:
-                i = n                       # unterminated: rest is raw
-            else:
-                yield END, tag
-                i = m2.end()
-
-
-# ---------------------------------------------------------------------------
-# Block model
-# ---------------------------------------------------------------------------
-
-@dataclass
-class Block:
-    tag: str
-    parts: list = field(default_factory=list)
-    anchor_chars: int = 0
-    n_links: int = 0
-    dropped: bool = False        # inside nav/header/footer/aside/drop-class
-    _text: str | None = None
-
-    def text(self) -> str:
-        if self._text is None:
-            self._text = canon("".join(self.parts))
-        return self._text
-
-
 def materialize_events(html_str: str) -> list:
-    """Tokenize ONCE into a list both extraction paths can consume — the
-    escalated ~8-15% of documents previously tokenized the HTML twice
-    (fast pass streams events, then precise_extract_html re-ran the
-    tokenizer to build the DOM). The guard keeps partial-event semantics
-    identical to the streaming consumers' try/except.
+    """The HTML tokenizer: ``[(kind, payload), ...]`` with START →
+    (tag, attr_str, self_closing), END → tag, DATA → text (entities
+    already decoded).
 
-    This is a list-building twin of ``iter_html_events`` (no generator
-    suspend/resume on the per-doc hot path, markup dispatch keyed on
-    the char after '<' before any comment probe) — event-for-event
-    identical to the generator, pinned by test."""
+    Events come back as a list so the escalated ~8-15% of documents
+    tokenize ONCE for both the fast pass and the precise DOM build.
+    Markup dispatch keys on the char after '<': '<!--' comments run to
+    '-->', other '<!'/'<?' markup to the next '>' (unterminated: to the
+    end), and a '<' that opens no tag is literal data.  On an internal
+    error the events parsed so far are returned (malformed input keeps
+    whatever parsed).  The expected events for hostile markup are
+    pinned by test."""
     out: list = []
     emit = out.append
     html = html_str
@@ -237,11 +176,30 @@ def materialize_events(html_str: str) -> list:
     return out
 
 
+# ---------------------------------------------------------------------------
+# Block model
+# ---------------------------------------------------------------------------
+
+@dataclass
+class Block:
+    tag: str
+    parts: list = field(default_factory=list)
+    anchor_chars: int = 0
+    n_links: int = 0
+    dropped: bool = False        # inside nav/header/footer/aside/drop-class
+    _text: str | None = None
+
+    def text(self) -> str:
+        if self._text is None:
+            self._text = canon("".join(self.parts))
+        return self._text
+
+
 def segment_blocks(html_str_or_events) -> list[Block]:
     """Streaming flat block segmentation over the event stream. Accepts
     raw HTML or a pre-materialized event list (``materialize_events``)."""
     events = (html_str_or_events if isinstance(html_str_or_events, list)
-              else iter_html_events(html_str_or_events))
+              else materialize_events(html_str_or_events))
     blocks: list[Block] = []
     drop_stack: list[str] = []
     cur = Block(tag="body")
@@ -357,7 +315,7 @@ _MAX_TREE_DEPTH = 120   # bounds recursion in the tree walks below; real
 
 def parse_tree(html_str_or_events) -> Node:
     events = (html_str_or_events if isinstance(html_str_or_events, list)
-              else iter_html_events(html_str_or_events))
+              else materialize_events(html_str_or_events))
     root = Node("document")
     stack = [root]
     skip = 0
@@ -708,8 +666,9 @@ def extract_document(url: str, payload: bytes,
                      primary=None, precise=None) -> dict:
     """The per-row pure function: route → extract → validate → escalate.
 
-    Deterministic two-pass semantics (identical to the distributed plan in
-    ``operators/hybrid.py``, which is what byte-identity tests pin down):
+    Deterministic hybrid-route semantics (run per row by the distributed
+    stage ``operators/extract.py::extract_fused``, which is what the
+    byte-identity tests pin down):
 
     1. PDF payloads go to the layout branch (backend_used='pdf').
     2. Fast extract; compute confidence + critical flags.

@@ -24,19 +24,15 @@ stated precisely so the DuckDB oracle can mirror it bit-for-bit:
   greatest gram (struct max), part of the spec.
 
 Scale notes: a per-document statistic never needs to leave its row,
-so BOTH implementations are shuffle-free single projections:
-
-- ``impl='arrow'`` (default) — Counter over Arrow batches; measured
-  ~12× the Catalyst path locally because Spark evaluates lambda
-  higher-order functions per element WITHOUT whole-stage codegen.
-- ``impl='jvm'`` — pure Catalyst: grams in the array domain
-  (``transform`` + ``slice``), sorted in-row, reduced by one
-  ``F.aggregate`` run-length pass.  Zero Python, for clusters where
-  Python workers are unavailable/expensive.
-
-The two are pinned equal by test (including the HALF_UP 6-d.p.
-rounding rule — Python's banker's round diverges on exact ties) and
-both match the same DuckDB oracle.
+so the signals are a shuffle-free single projection.  The gate and the
+signal frame (``repetition_signals``/``repetition_pass_expr``) run a
+Counter over Arrow batches — measured ~12× a pure-Catalyst in-row
+construction, because Spark evaluates lambda higher-order functions
+per element WITHOUT whole-stage codegen.  They follow the HALF_UP
+6-d.p. rounding rule (Python's banker's round diverges on exact ties)
+and match the DuckDB oracle.  ``ngram_stats`` stays pure Catalyst
+(grams in the array domain, sorted in-row, one ``F.aggregate``
+run-length pass) because it also reports the tie-broken top gram.
 
 No counterpart in the reference (an OCR orchestrator); this family is
 part of the engine's web-corpus surface alongside functions/text.py's
@@ -67,8 +63,8 @@ def word_ngrams(col: Column, n: int) -> Column:
         F.array().cast("array<string>"))
 
 
-def _run_stats(sorted_grams: Column, with_gram: bool = True) -> Column:
-    """struct(top, dup[, topg]) from a SORTED gram array via one
+def _run_stats(sorted_grams: Column) -> Column:
+    """struct(top, dup, topg) from a SORTED gram array via one
     ``F.aggregate`` pass over run-lengths — per-document repetition is
     a per-ROW statistic, so it never needs to leave the row: no
     explode, no shuffle.
@@ -76,55 +72,40 @@ def _run_stats(sorted_grams: Column, with_gram: bool = True) -> Column:
     ``top`` = max over runs of run·len(gram) (ties: the ``>=`` update
     on the ascending-sorted array keeps the lexicographically GREATEST
     gram, the documented tie rule); ``dup`` = Σ (run−1)·len(gram) over
-    runs ≥ 2.  ``with_gram=False`` drops the tie-broken gram STRING
-    from the accumulator — the signal frame only needs the fractions,
-    and a narrower accumulator is measurably cheaper on the
-    higher-order-function evaluation path.  The "" sentinel is safe:
+    runs ≥ 2.  The "" sentinel is safe:
     an n≥2 gram always contains the join space, and for n=1 an empty
     first gram simply extends the zero-length initial run (counted
     correctly from run=0).
     """
     zero = F.lit(0).cast("long")
-    fields = [F.lit("").alias("prev"), zero.alias("run"),
-              zero.alias("top"), zero.alias("dup")]
-    if with_gram:
-        fields.append(F.lit("").alias("topg"))
-    init = F.struct(*fields)
+    init = F.struct(F.lit("").alias("prev"), zero.alias("run"),
+                    zero.alias("top"), zero.alias("dup"),
+                    F.lit("").alias("topg"))
 
     def _closed(acc):
         # stats of the run that just ended (acc.prev × acc.run)
         mass = acc["run"] * F.length(acc["prev"])
         better = (acc["run"] > 0) & (mass >= acc["top"])
-        out = {"top": F.when(better, mass).otherwise(acc["top"]),
-               "dup": F.when(acc["run"] >= 2,
-                             acc["dup"] + (acc["run"] - 1)
-                             * F.length(acc["prev"]))
-               .otherwise(acc["dup"])}
-        if with_gram:
-            out["topg"] = (F.when(better, acc["prev"])
-                           .otherwise(acc["topg"]))
-        return out
+        return {"top": F.when(better, mass).otherwise(acc["top"]),
+                "dup": F.when(acc["run"] >= 2,
+                              acc["dup"] + (acc["run"] - 1)
+                              * F.length(acc["prev"]))
+                .otherwise(acc["dup"]),
+                "topg": F.when(better, acc["prev"]).otherwise(acc["topg"])}
 
     def step(acc, g):
         same = acc["prev"] == g
         c = _closed(acc)
-        fields = [
+        return F.struct(
             g.alias("prev"),
             F.when(same, acc["run"] + F.lit(1).cast("long"))
             .otherwise(F.lit(1).cast("long")).alias("run"),
-            F.when(same, acc["top"]).otherwise(c["top"]).alias("top"),
-            F.when(same, acc["dup"]).otherwise(c["dup"]).alias("dup")]
-        if with_gram:
-            fields.append(F.when(same, acc["topg"]).otherwise(c["topg"])
-                          .alias("topg"))
-        return F.struct(*fields)
+            *[F.when(same, acc[k]).otherwise(c[k]).alias(k)
+              for k in ("top", "dup", "topg")])
 
     def finish(acc):
         c = _closed(acc)
-        fields = [c["top"].alias("top"), c["dup"].alias("dup")]
-        if with_gram:
-            fields.append(c["topg"].alias("topg"))
-        return F.struct(*fields)
+        return F.struct(*[c[k].alias(k) for k in ("top", "dup", "topg")])
 
     return F.aggregate(sorted_grams, init, step, finish)
 
@@ -169,7 +150,7 @@ def _round6(x: float) -> float:
 
 def _py_signals(text: str, specs: tuple):
     """One document's signals for ``specs`` = ((n, want_top), ...) —
-    the SAME mass/round definitions as the Catalyst path (gram chars =
+    the SAME mass/round definitions as ``ngram_stats`` (gram chars =
     sum(word lens) + n−1 = len(' '.join(gram)))."""
     from collections import Counter
     if text is None:
@@ -183,8 +164,7 @@ def _py_signals(text: str, specs: tuple):
             continue
         if total == 0:
             # n=1 over '' : no characters to measure — NULL ("cannot
-            # repeat"), matching the jvm path's total>0 guard (a bare
-            # 0/0 would raise under ANSI mode)
+            # repeat"), not a 0/0
             out.append(None)
             continue
         # zip over n shifted views builds the gram tuples at C speed —
@@ -226,20 +206,18 @@ def _signals_udf(specs: tuple):
 
 def repetition_signals(df: DataFrame, top_ns: tuple = (2, 3),
                        dup_ns: tuple = (5,), id_col: str = "doc_id",
-                       text_col: str = "text",
-                       impl: str = "arrow") -> DataFrame:
+                       text_col: str = "text") -> DataFrame:
     """Per-document signal frame: one ``top{n}_frac`` column per entry
     of ``top_ns`` and one ``dup{n}_frac`` per ``dup_ns``.  Documents
     shorter than a given n carry NULL for that n's signals — callers
     treat NULL as "cannot repeat", i.e. pass.
 
-    SHUFFLE-FREE either way: per-document repetition is a per-row
-    statistic.  ``impl='arrow'`` (default) computes the signals in an
-    Arrow-batched UDF — measured ~12× the ``impl='jvm'`` pure-Catalyst
-    path, because Spark evaluates lambda higher-order functions
-    per-element WITHOUT whole-stage codegen while the Arrow path runs a
-    C-backed Counter over columnar batches.  Both implementations are
-    pinned equal by test and match the same DuckDB oracle.
+    SHUFFLE-FREE: per-document repetition is a per-row statistic,
+    computed in an Arrow-batched UDF — a C-backed Counter over columnar
+    batches, measured ~12× a pure-Catalyst lambda-HOF construction
+    (Spark evaluates lambda higher-order functions per element WITHOUT
+    whole-stage codegen).  Matches the DuckDB ``repetition_gate``
+    oracle.
     """
     ns = sorted(set(top_ns) | set(dup_ns))
     specs, names = [], []
@@ -250,81 +228,48 @@ def repetition_signals(df: DataFrame, top_ns: tuple = (2, 3),
         if n in dup_ns:
             specs.append((n, False))
             names.append(f"dup{n}_frac")
-    if impl == "arrow":
-        udf = _signals_udf(tuple(specs))
-        out = df.select(F.col(id_col), udf(F.col(text_col)).alias("_s"))
-        return out.select(id_col, *[
-            F.col(f"_s.s{i}").alias(nm) for i, nm in enumerate(names)])
-    if impl != "jvm":
-        raise ValueError("impl must be 'arrow' or 'jvm'")
-    total = F.length(F.col(text_col))
-    frac = lambda c: F.round(  # noqa: E731
-        F.least(F.lit(1.0), c.cast("double") / total), 6)
-    cols = [F.col(id_col)]
-    for (n, want_top), nm in zip(specs, names):
-        grams = word_ngrams(F.col(text_col), n)
-        st = _run_stats(F.array_sort(grams), with_gram=False)
-        present = (F.size(grams) > 0) & (total > 0)
-        field = "top" if want_top else "dup"
-        cols.append(F.when(present, frac(st[field])).alias(nm))
-    return df.select(*cols)
+    udf = _signals_udf(tuple(specs))
+    out = df.select(F.col(id_col), udf(F.col(text_col)).alias("_s"))
+    return out.select(id_col, *[
+        F.col(f"_s.s{i}").alias(nm) for i, nm in enumerate(names)])
 
 
 def repetition_pass_expr(text: Column, max_top2: float = 0.20,
                          max_top3: float = 0.18,
-                         max_dup5: float = 0.15,
-                         impl: str = "arrow") -> Column:
+                         max_dup5: float = 0.15) -> Column:
     """Boolean Gopher repetition gate as ONE Column expression — lets
     compositions (plans/curation.py) filter inline with zero joins.
-    NULL signals (doc shorter than n) count as passing.  Default
-    ``impl='arrow'`` for the same ~12× reason as
-    :func:`repetition_signals`; ``'jvm'`` keeps the gate pure-Catalyst.
+    NULL signals (doc shorter than n) count as passing.  An
+    Arrow-batched UDF over the same signals as
+    :func:`repetition_signals`.
     """
-    if impl == "arrow":
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
 
-        specs = ((2, True), (3, True), (5, False))
-        lims = (max_top2, max_top3, max_dup5)
+    specs = ((2, True), (3, True), (5, False))
+    lims = (max_top2, max_top3, max_dup5)
 
-        def fn(s):
-            return pd.Series(
-                [all((v is None) or (v <= lim)
-                     for v, lim in zip(_py_signals(t, specs), lims))
-                 if t is not None else True
-                 for t in s])
+    def fn(s):
+        return pd.Series(
+            [all((v is None) or (v <= lim)
+                 for v, lim in zip(_py_signals(t, specs), lims))
+             if t is not None else True
+             for t in s])
 
-        return pandas_udf(fn, "boolean")(text)
-    if impl != "jvm":
-        raise ValueError("impl must be 'arrow' or 'jvm'")
-
-    def sig(n, field):
-        grams = word_ngrams(text, n)
-        val = _run_stats(F.array_sort(grams),
-                         with_gram=False)[field].cast("double") \
-            / F.length(text)
-        return F.coalesce(
-            F.when(F.size(grams) > 0,
-                   F.round(F.least(F.lit(1.0), val), 6)),
-            F.lit(0.0))
-
-    return ((sig(2, "top") <= max_top2)
-            & (sig(3, "top") <= max_top3)
-            & (sig(5, "dup") <= max_dup5))
+    return pandas_udf(fn, "boolean")(text)
 
 
 def gopher_repetition_pass(df: DataFrame, id_col: str = "doc_id",
                            text_col: str = "text",
                            max_top2: float = 0.20,
                            max_top3: float = 0.18,
-                           max_dup5: float = 0.15,
-                           impl: str = "arrow") -> DataFrame:
+                           max_dup5: float = 0.15) -> DataFrame:
     """Gopher-style repetition gate: keep documents below every
     threshold (Rae et al. 2021 use 0.20/0.18/.../0.15 for the
     corresponding signals).  Returns ``(id_col, top2_frac, top3_frac,
     dup5_frac, rep_pass)``."""
     sig = repetition_signals(df, top_ns=(2, 3), dup_ns=(5,),
-                             id_col=id_col, text_col=text_col, impl=impl)
+                             id_col=id_col, text_col=text_col)
     keep = ((F.coalesce(F.col("top2_frac"), F.lit(0.0)) <= max_top2)
             & (F.coalesce(F.col("top3_frac"), F.lit(0.0)) <= max_top3)
             & (F.coalesce(F.col("dup5_frac"), F.lit(0.0)) <= max_dup5))

@@ -1,24 +1,13 @@
-"""Distributed extraction stages (Arrow-batched ``mapInPandas``).
+"""Distributed extraction stage (Arrow-batched ``mapInPandas``).
 
-Two physically different realizations of the reference's hybrid routing
-(``backends/hybrid_backend.py:144-218``), with identical semantics:
-
-**Fused (default, the 100-TB path).** One narrow ``mapInPandas`` stage per
-input split: fast-extract every row, run the precise extractor inline on the
-escalated minority of the batch. Plan shape = scan → map → sink: zero
-shuffles, one pass over the payload bytes, embarrassingly parallel, task
-working set bounded by the Arrow batch size. At 10^12 documents this is the
-only sane topology — any alternative either scans the payload column twice
-or shuffles it.
-
-**Two-pass (explicit DataFrame topology).** fast over 100% → ``filter`` the
-escalation predicate → precise over the flagged ~8-15% → left join-back +
-``coalesce``. This mirrors the reference's operator graph literally and
-gives Catalyst/AQE a real selectivity boundary, but it re-materializes the
-fast output (or rescans the source) — kept for parity demonstration and as
-the shape you'd use if the precise path ran on different hardware (the
-reference's precise path was a remote API). Tests assert both topologies
-produce byte-identical results.
+The reference's hybrid routing (``backends/hybrid_backend.py:144-218``)
+runs as ONE narrow ``mapInPandas`` stage per input split: fast-extract every
+row, run the precise extractor inline on the escalated minority of the
+batch. Plan shape = scan → map → sink: zero shuffles, one pass over the
+payload bytes, embarrassingly parallel, task working set bounded by the
+Arrow batch size. At 10^12 documents this is the only sane topology — a
+fast → filter → precise → join-back plan either scans the payload column
+twice or shuffles it.
 
 The per-row logic is ``extract_core.extract_document`` — the same pure
 function the golden oracle runs, which is what makes byte-identity a
@@ -35,15 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..extract_core import (
-    CONFIDENCE_THRESHOLD,
-    detect_critical_full,
-    estimate_confidence,
-    extract_document,
-    fast_extract_html,
-    precise_extract_html,
-    validate_text,
-)
+from ..extract_core import CONFIDENCE_THRESHOLD, extract_document
 
 # Output schema — FIXTURES.md F3 ``extracted`` + partition provenance.
 EXTRACTED_SCHEMA = T.StructType([
@@ -67,7 +48,7 @@ def _pid() -> int:
 
 
 # ---------------------------------------------------------------------------
-# Fused stage (default)
+# Fused stage
 # ---------------------------------------------------------------------------
 
 def _fused_batches(batches: Iterator[pd.DataFrame], threshold: float,
@@ -146,148 +127,6 @@ def extract_fused(pages: DataFrame,
     return src.mapInPandas(
         lambda it: _fused_batches(it, threshold, primary, precise),
         schema=EXTRACTED_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Two-pass topology (reference-literal plan shape)
-# ---------------------------------------------------------------------------
-
-_FAST_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("fast_text", T.StringType(), True),
-    T.StructField("fast_valid", T.BooleanType(), False),
-    T.StructField("fast_error", T.StringType(), True),
-    T.StructField("confidence", T.DoubleType(), False),
-    T.StructField("critical", T.BooleanType(), False),
-    T.StructField("priority", T.DoubleType(), False),
-    T.StructField("rule_hits", T.MapType(T.StringType(), T.LongType()), False),
-    T.StructField("is_pdf", T.BooleanType(), False),
-    T.StructField("partition_id", T.IntegerType(), False),
-])
-
-_PRECISE_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("precise_text", T.StringType(), True),
-    T.StructField("precise_valid", T.BooleanType(), False),
-    T.StructField("precise_error", T.StringType(), True),
-    T.StructField("precise_confidence", T.DoubleType(), False),
-])
-
-
-def _fast_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..extract_core import PDF_MAGIC, extract_pdf, is_pdf_payload
-    pid = _pid()
-    for pdf in batches:
-        recs = []
-        for url, payload in zip(pdf["url"], pdf["html"]):
-            if is_pdf_payload(payload):
-                text = extract_pdf(payload)
-                ok, err = validate_text(text)
-                recs.append(dict(url=url, fast_text=text,
-                                 fast_valid=ok, fast_error=err,
-                                 confidence=1.0 if ok else 0.5,
-                                 critical=False, priority=0.0,
-                                 rule_hits={}, is_pdf=True,
-                                 partition_id=pid))
-                continue
-            html_str = payload.decode("utf-8", errors="replace")
-            text, _ = fast_extract_html(html_str)
-            ok, err = validate_text(text)
-            conf = estimate_confidence(text)
-            det = detect_critical_full(text)
-            recs.append(dict(url=url, fast_text=text,
-                             fast_valid=ok, fast_error=err, confidence=conf,
-                             critical=det["flag"], priority=det["priority"],
-                             rule_hits=det["hits"], is_pdf=False,
-                             partition_id=pid))
-        yield pd.DataFrame.from_records(recs)[
-            [f.name for f in _FAST_SCHEMA.fields]]
-
-
-def _precise_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        recs = []
-        for url, payload in zip(pdf["url"], pdf["html"]):
-            text = precise_extract_html(payload.decode("utf-8",
-                                                       errors="replace"))
-            ok, err = validate_text(text)
-            recs.append(dict(url=url, precise_text=text, precise_valid=ok,
-                             precise_error=err,
-                             precise_confidence=estimate_confidence(text)))
-        yield pd.DataFrame.from_records(recs)[
-            [f.name for f in _PRECISE_SCHEMA.fields]]
-
-
-def escalation_predicate(threshold: float = CONFIDENCE_THRESHOLD):
-    """The selectivity boundary Catalyst sees between the two passes."""
-    return (~F.col("is_pdf")) & (
-        (~F.col("fast_valid"))
-        | (F.col("confidence") < F.lit(threshold))
-        | F.col("critical"))
-
-
-def extract_two_pass(pages: DataFrame,
-                     threshold: float = CONFIDENCE_THRESHOLD,
-                     budget: int | None = None) -> DataFrame:
-    """Explicit fast → filter → precise → join-back ``coalesce`` topology.
-
-    The persisted intermediate carries NO payload bytes (only the fast
-    results); the precise pass re-reads the source for the flagged ~8-15%
-    via a LEFT SEMI join on url — at scale that is a second, smaller scan,
-    never a cache of the corpus. The join-back is an equi left join on
-    ``url``, broadcast-eligible because the escalated side is small and
-    AQE-right-sized at large scale (SURVEY.md §4.1 R1).
-
-    ``budget`` (O3): escalate only the top-``budget`` flagged rows by
-    detector priority (ties → url) — the budgeted-verification mode the
-    reference's detector priority score implies but never consumed
-    (mantra_detector.py:253-271). Planned as TakeOrdered (per-partition
-    heaps + driver merge of k), never a full sort. ``budget=None``
-    escalates every flagged row and is byte-identical to the fused path.
-    """
-    fast = pages.select("url", "html").mapInPandas(_fast_pass, _FAST_SCHEMA)
-    fast = fast.persist()
-    esc = escalation_predicate(threshold)
-    flagged = fast.filter(esc)
-    if budget is not None:
-        flagged = (flagged.orderBy(F.desc("priority"), F.asc("url"))
-                   .limit(budget))
-    flagged_urls = flagged.select("url")
-    precise_src = pages.select("url", "html").join(
-        flagged_urls, "url", "left_semi")
-    precise = precise_src.mapInPandas(_precise_pass, _PRECISE_SCHEMA)
-    chosen = flagged_urls.withColumn("_chosen", F.lit(True))
-    joined = fast.join(precise, "url", "left").join(chosen, "url", "left")
-    escalated = F.col("_chosen").isNotNull()   # esc ∧ within budget
-    final_text = F.when(F.col("precise_valid") == F.lit(True),
-                        F.col("precise_text")).otherwise(F.col("fast_text"))
-    final_ok = F.when(F.col("precise_valid") == F.lit(True), F.lit(True)) \
-                .otherwise(F.col("fast_valid"))
-    final_err = F.when(F.col("precise_valid") == F.lit(True),
-                       F.lit(None).cast("string")) \
-                 .otherwise(F.coalesce(F.col("fast_error"),
-                                       F.col("precise_error")))
-    backend = (F.when(F.col("is_pdf"), F.lit("pdf"))
-                .when(escalated, F.lit("fast+precise"))
-                .otherwise(F.lit("fast")))
-    final_conf = F.when(F.col("precise_valid") == F.lit(True),
-                        F.col("precise_confidence")) \
-                  .otherwise(F.col("confidence"))
-    return joined.select(
-        "url",
-        final_text.alias("text"),
-        final_ok.alias("success"),
-        final_conf.alias("confidence"),
-        final_err.alias("error"),
-        backend.alias("backend_used"),
-        # plain `critical`, NOT critical & escalated: a critical row the
-        # budget deferred was never precise-verified and must stay visible
-        # to the downstream verification queue. Unbudgeted, critical ⇒
-        # flagged ⇒ chosen, so this is byte-identical to the fused path.
-        F.col("critical").alias("needs_verification"),
-        "rule_hits",
-        "partition_id",
-    )
 
 
 # ---------------------------------------------------------------------------

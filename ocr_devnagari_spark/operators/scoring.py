@@ -2,7 +2,7 @@
 weighting for training-data curation.
 
 Two published recipe stages the heuristic gates (Gopher/C4) cannot
-express, both pure DataFrame compositions:
+express:
 
 - **Linear quality classifier** (fastText-style, the FineWeb-Edu /
   DCLM filtering construction): a trained bag-of-words linear model is
@@ -17,11 +17,13 @@ express, both pure DataFrame compositions:
   distribution — ``w(doc) = Σ_gram log(p_target(h(gram)) /
   p_raw(h(gram)))`` over hashed n-gram buckets with add-α smoothing.
   Both distributions are tiny (``n_buckets`` rows) aggregates; the
-  log-ratio table rides a broadcast join onto the corpus grams.
+  log-ratio map is broadcast to an Arrow pass over the corpus.
 
 Scale shape: the models/distributions are small by construction (10^4-
-10^6 rows) and the corpus side is explode → broadcast-join → per-id
-sum — one keyed shuffle, no corpus-sized collect, no Python workers.
+10^6 rows).  The linear classifier's corpus side is explode →
+broadcast-join → per-id sum — one keyed shuffle, no corpus-sized
+collect.  DSIR/LM count and score in Arrow-batched passes against a
+broadcast bucket map — no per-gram rows, zero shuffles when scoring.
 Cross-engine parity: gram hashing rides the shared 32-bit md5 wheel
 (functions/splits.py) and per-bucket log-ratios are quantized to
 INTEGER micro-units (1e-6) before the per-document sum, so the sum is
@@ -41,9 +43,6 @@ import logging
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.repetition import word_ngrams
-from ..functions.splits import hash_bucket
 
 log = logging.getLogger(__name__)
 
@@ -82,10 +81,11 @@ def linear_quality_score(df: DataFrame, weights, bias: float = 0.0,
     10^6 terms, so the broadcast path is the norm — past the limit the
     join falls back to a shuffle hash join on the term.
 
-    One row per DISTINCT ``id_col`` comes out (the scoring family's
-    aggregation contract, shared with dsir_weights/lm_cross_entropy):
-    rows sharing an id — malformed input for a per-document score —
-    aggregate into one.
+    Malformed ids: one row per DISTINCT ``id_col`` comes out.  Rows
+    sharing an id aggregate into one (their tokens pool into one bag),
+    and all NULL-id rows group into a single NULL-id row.  This differs
+    from :func:`dsir_weights`/:func:`lm_cross_entropy`, which score
+    row by row.
     """
     spark = df.sparkSession
     if not isinstance(weights, DataFrame):
@@ -138,15 +138,6 @@ def _check_model_params(n_buckets: int, alpha: float) -> None:
         raise ValueError("alpha must be > 0 (smoothing)")
 
 
-def _py_bucket(g: str, n_buckets: int) -> int:
-    """Python mirror of ``functions/splits.hash_bucket`` —
-    ``int(md5(utf8)[:8 hex], 16) % n_buckets``, the shared 32-bit md5
-    wheel, so Arrow stages can never desynchronize from the Catalyst
-    expression or the DuckDB oracle."""
-    import hashlib
-    return int(hashlib.md5(g.encode()).hexdigest()[:8], 16) % n_buckets
-
-
 # per-process memo for the md5 wheel: corpus grams repeat heavily (a
 # Zipf vocabulary), and one md5 costs ~10× a dict hit (measured 4× on
 # the sf0.1 gram stream).  Values are exact — the cache only skips
@@ -157,7 +148,10 @@ _BUCKET_MEMO_CAP = 1_000_000
 
 
 def _bucket_memo(n_buckets: int):
-    """A memoized (gram → bucket) lookup bound to ``n_buckets``."""
+    """A memoized (gram → bucket) lookup bound to ``n_buckets`` — the
+    Python mirror of ``functions/splits.hash_bucket``
+    (``int(md5(utf8)[:8 hex], 16) % n_buckets``, the shared 32-bit md5
+    wheel), so the Arrow stages agree with the DuckDB oracle."""
     import hashlib
     cache: dict = {}
 
@@ -174,7 +168,7 @@ def _bucket_memo(n_buckets: int):
 
 
 def _tagged_bucket_counts(sides: list, n: int, n_buckets: int,
-                          text_col: str, impl: str) -> DataFrame:
+                          text_col: str) -> DataFrame:
     """(_side, bucket, c) hashed-n-gram counts over ``sides`` =
     ``[(tag, DataFrame), ...]`` — ONE Spark job however many corpora,
     the single implementation behind ``_bucket_counts`` (one side) and
@@ -182,26 +176,14 @@ def _tagged_bucket_counts(sides: list, n: int, n_buckets: int,
     so a tokenization/NULL-handling change can never desynchronize the
     paired DSIR counts from the single-corpus LM counts.
 
-    ``impl='arrow'`` pre-aggregates each Arrow batch into a Counter and
-    ships ≤ sides × ``n_buckets`` partial rows per batch — no per-gram
-    row ever exists, and the uncodegen'd gram-building lambda HOF (the
-    repetition family's measured bottleneck) is gone.  ``impl='jvm'``
-    keeps the pure-Catalyst explode→groupBy (map-side partial sums);
-    both produce identical exact counts."""
+    Each Arrow batch pre-aggregates into a Counter and ships ≤ sides ×
+    ``n_buckets`` partial rows — no per-gram row ever exists, and the
+    uncodegen'd gram-building lambda HOF (the repetition family's
+    measured bottleneck) never runs."""
     tagged = None
     for tag, df in sides:
         part = df.select(F.lit(int(tag)).alias("_side"), F.col(text_col))
         tagged = part if tagged is None else tagged.unionByName(part)
-    if impl == "jvm":
-        return (tagged.select(
-                    "_side",
-                    F.explode(word_ngrams(F.col(text_col), n)).alias("g"))
-                .select("_side",
-                        hash_bucket(F.col("g"), n_buckets).alias("bucket"))
-                .groupBy("_side", "bucket")
-                .agg(F.count(F.lit(1)).alias("c")))
-    if impl != "arrow":
-        raise ValueError("impl must be 'arrow' or 'jvm'")
 
     def run(batches):
         from collections import Counter
@@ -227,25 +209,24 @@ def _tagged_bucket_counts(sides: list, n: int, n_buckets: int,
 
 
 def _bucket_counts(df: DataFrame, n: int, n_buckets: int,
-                   text_col: str, impl: str = "arrow") -> DataFrame:
+                   text_col: str) -> DataFrame:
     """(bucket, c) hashed-n-gram counts for one corpus — see
     ``_tagged_bucket_counts`` for the shared implementation and its
     scale shape."""
-    return (_tagged_bucket_counts([(0, df)], n, n_buckets, text_col,
-                                  impl)
+    return (_tagged_bucket_counts([(0, df)], n, n_buckets, text_col)
             .select("bucket", "c"))
 
 
 def _bucket_counts_pair(a: DataFrame, b: DataFrame, n: int,
-                        n_buckets: int, text_col: str,
-                        impl: str) -> tuple[dict, dict]:
+                        n_buckets: int, text_col: str
+                        ) -> tuple[dict, dict]:
     """Bucket-count maps for TWO corpora in ONE Spark job — halves the
     job/collect round trips of the sequential two-pass model build (the
     DSIR ratio needs both distributions anyway).  Exactly the same
     per-side counts as two ``_bucket_counts`` runs (same shared
     implementation)."""
     counts = _tagged_bucket_counts([(0, a), (1, b)], n, n_buckets,
-                                   text_col, impl).collect()
+                                   text_col).collect()
     amap = {r["bucket"]: r["c"] for r in counts if r["_side"] == 0}
     bmap = {r["bucket"]: r["c"] for r in counts if r["_side"] == 1}
     return amap, bmap
@@ -264,8 +245,7 @@ def _micro6(x: float) -> int:
 def dsir_bucket_logratios(target: DataFrame, raw: DataFrame,
                           n: int = 2, n_buckets: int = 4096,
                           alpha: float = 1.0,
-                          text_col: str = "text",
-                          impl: str = "arrow") -> DataFrame:
+                          text_col: str = "text") -> DataFrame:
     """(bucket, logratio_micro, logratio) — the DSIR importance model:
     add-α-smoothed hashed-n-gram distributions of the TARGET and RAW
     corpora, ``logratio = ln(p_target) - ln(p_raw)`` quantized HALF_UP
@@ -274,21 +254,20 @@ def dsir_bucket_logratios(target: DataFrame, raw: DataFrame,
 
     Exactly ``n_buckets`` rows come out (a bucket no gram hashed into
     still carries its smoothed ratio), so the result broadcasts onto
-    any corpus.  The two inputs are each one explode→groupBy aggregate
-    — at 10^12 rows that is the cheapest possible full-corpus statistic
-    (map-side partial sums, ``n_buckets`` final rows)."""
+    any corpus.  Both inputs are counted in one Spark job of
+    per-batch partial histograms (``n_buckets`` final rows per side) —
+    at 10^12 rows that is the cheapest possible full-corpus
+    statistic."""
     _check_model_params(n_buckets, alpha)
     spark = target.sparkSession
-    micros = _dsir_micro_map(target, raw, n, n_buckets, alpha,
-                             text_col, impl)
+    micros = _dsir_micro_map(target, raw, n, n_buckets, alpha, text_col)
     rows = [(b, m, m / 1e6) for b, m in sorted(micros.items())]
     return spark.createDataFrame(
         rows, "bucket long, logratio_micro long, logratio double")
 
 
 def _dsir_micro_map(target: DataFrame, raw: DataFrame, n: int,
-                    n_buckets: int, alpha: float, text_col: str,
-                    impl: str) -> dict:
+                    n_buckets: int, alpha: float, text_col: str) -> dict:
     """{bucket → logratio_micro} computed with ONE Spark job (the
     tagged-union pair count): the model the Arrow scoring pass
     broadcasts.  Same numbers as ``dsir_bucket_logratios`` — that
@@ -296,8 +275,7 @@ def _dsir_micro_map(target: DataFrame, raw: DataFrame, n: int,
     import math
 
     # totals ride the same tiny aggregates — no extra corpus pass
-    tmap, rmap = _bucket_counts_pair(target, raw, n, n_buckets,
-                                     text_col, impl)
+    tmap, rmap = _bucket_counts_pair(target, raw, n, n_buckets, text_col)
     nt = sum(tmap.values())
     nr = sum(rmap.values())
     denom_t = nt + alpha * n_buckets
@@ -316,8 +294,9 @@ def _apply_bucket_model(docs: DataFrame, model, micro_col: str,
     construction) ship as a Spark broadcast variable, and each document
     scores in ONE narrow Arrow pass — ``(id, n_grams, micro_sum)`` with
     exact Python-int accumulation, ZERO shuffles and no per-gram rows.
-    Grams whose bucket has no model row don't count (mirrors the inner
-    join of the Catalyst path)."""
+    Grams whose bucket has no model row don't count.  Each input row
+    yields exactly one output row — ids are carried through, never
+    grouped."""
     from pyspark.sql import types as T
     if isinstance(model, dict):
         rmap = model
@@ -359,8 +338,7 @@ def _apply_bucket_model(docs: DataFrame, model, micro_col: str,
 def dsir_weights(docs: DataFrame, target: DataFrame, n: int = 2,
                  n_buckets: int = 4096, alpha: float = 1.0,
                  id_col: str = "doc_id", text_col: str = "text",
-                 ratios: DataFrame | None = None,
-                 impl: str = "arrow") -> DataFrame:
+                 ratios: DataFrame | None = None) -> DataFrame:
     """Per-document DSIR importance weight over ``docs`` (the RAW
     corpus) against ``target``.
 
@@ -378,71 +356,31 @@ def dsir_weights(docs: DataFrame, target: DataFrame, n: int = 2,
     discipline.  The ratio table is ``n_buckets`` rows and always
     broadcasts.
 
-    ``impl='arrow'`` (default) scores each document in one narrow
-    Arrow pass against the broadcast ratio map — zero shuffles, no
-    per-gram rows (measured ~2× at sf0.1 including model build); the
-    pure-Catalyst ``impl='jvm'`` explode→broadcast-join→sum is pinned
-    equal by test.  Both end in the same exact integer micro-sum and
-    one IEEE division, so the doubles are bit-identical."""
-    if ratios is None and impl == "arrow":
+    Each document scores in one narrow Arrow pass against the
+    broadcast ratio map — zero shuffles, no per-gram rows (measured ~2×
+    an explode→broadcast-join→sum plan at sf0.1, model build included).
+
+    Malformed ids: ONE ROW PER INPUT ROW comes out — ids are carried
+    through, not grouped.  Rows sharing an id each keep their own
+    weight, and every NULL-id row keeps its own row.  This differs from
+    :func:`linear_quality_score`, which groups by id."""
+    if ratios is None:
         # build the micro map driver-side and skip the model-DataFrame
         # round trip (createDataFrame + collect = one extra Spark job
         # per scoring call); ``dsir_bucket_logratios`` emits the same
         # numbers when a persistent/shareable model table is wanted
         ratios = _dsir_micro_map(target, docs, n, n_buckets, alpha,
-                                 text_col, impl)
-    elif ratios is None:
-        ratios = dsir_bucket_logratios(target, docs, n, n_buckets,
-                                       alpha, text_col, impl)
-    if impl == "arrow":
-        scored = _apply_bucket_model(docs, ratios, "logratio_micro",
-                                     n, n_buckets, id_col, text_col)
-        return scored.select(
-            F.col(id_col), F.col("n_grams"),
-            (F.col("_ms").cast("double") / F.lit(1000000.0))
-            .alias("weight"))
-    if impl != "jvm":
-        raise ValueError("impl must be 'arrow' or 'jvm'")
-    # LEFT-join the broadcast model onto the exploded grams and
-    # aggregate EVERY document in the one doc-keyed aggregation
-    # (the linear_quality_score shape): the former inner-join +
-    # doc-spine left join-back cost a second scan, a second doc_id
-    # exchange and a join; count/sum skip NULL non-matches, and
-    # explode_outer keeps gram-less documents in the frame (weight 0,
-    # the empty-product convention, exactly as the spine delivered).
-    grams = docs.select(
-        F.col(id_col),
-        F.explode_outer(word_ngrams(F.col(text_col), n)).alias("g"))
-    joined = (grams
-              .select(F.col(id_col),
-                      # the explode_outer sentinel must stay NULL —
-                      # hash_bucket folds NULL keys into the ""-bucket,
-                      # which would count a phantom gram for gram-less
-                      # documents
-                      F.when(F.col("g").isNotNull(),
-                             hash_bucket(F.col("g"), n_buckets))
-                      .alias("bucket"))
-              .join(F.broadcast(ratios.select("bucket", "logratio_micro")
-                                .withColumn("_m", F.lit(1))),
-                    on="bucket", how="left")
-              .groupBy(id_col)
-              # count the _m marker, not the value column: a model row
-              # with a NULL micro must still count its matched grams,
-              # exactly as the old inner join did (linear_quality_score
-              # precedent)
-              .agg(F.count("_m").alias("n_grams"),
-                   F.sum("logratio_micro").alias("_wm")))
-    return joined.select(
-        F.col(id_col),
-        F.col("n_grams").cast("long").alias("n_grams"),
-        (F.coalesce(F.col("_wm"), F.lit(0)).cast("double")
-         / F.lit(1000000.0)).alias("weight"))
+                                 text_col)
+    scored = _apply_bucket_model(docs, ratios, "logratio_micro",
+                                 n, n_buckets, id_col, text_col)
+    return scored.select(
+        F.col(id_col), F.col("n_grams"),
+        (F.col("_ms").cast("double") / F.lit(1000000.0)).alias("weight"))
 
 
 def lm_bucket_logprobs(target: DataFrame, n: int = 1,
                        n_buckets: int = 4096, alpha: float = 1.0,
-                       text_col: str = "text",
-                       impl: str = "arrow") -> DataFrame:
+                       text_col: str = "text") -> DataFrame:
     """(bucket, logprob_micro, logprob) — a hashed-n-gram language
     model trained on the TARGET corpus (the CCNet construction, Wenzek
     et al. 2020, with hashed buckets standing in for the KenLM
@@ -451,20 +389,21 @@ def lm_bucket_logprobs(target: DataFrame, n: int = 1,
     ``ln p`` (the scoring.py exact-sum parity discipline).
 
     Exactly ``n_buckets`` rows come out, so the model broadcasts onto
-    any corpus; training is one explode→groupBy aggregate."""
+    any corpus; training is one counting job of per-batch partial
+    histograms."""
     _check_model_params(n_buckets, alpha)
-    micros = _lm_micro_map(target, n, n_buckets, alpha, text_col, impl)
+    micros = _lm_micro_map(target, n, n_buckets, alpha, text_col)
     rows = [(b, m, m / 1e6) for b, m in sorted(micros.items())]
     return target.sparkSession.createDataFrame(
         rows, "bucket long, logprob_micro long, logprob double")
 
 
 def _lm_micro_map(target: DataFrame, n: int, n_buckets: int,
-                  alpha: float, text_col: str, impl: str) -> dict:
+                  alpha: float, text_col: str) -> dict:
     """{bucket → logprob_micro} — the LM the Arrow scoring pass
     broadcasts; one counting job, no model-DataFrame round trip."""
     import math
-    tc = _bucket_counts(target, n, n_buckets, text_col, impl).collect()
+    tc = _bucket_counts(target, n, n_buckets, text_col).collect()
     nt = sum(r["c"] for r in tc)
     tmap = {r["bucket"]: r["c"] for r in tc}
     denom = nt + alpha * n_buckets
@@ -476,8 +415,7 @@ def lm_cross_entropy(docs: DataFrame, target: DataFrame | None = None,
                      n: int = 1, n_buckets: int = 4096,
                      alpha: float = 1.0, id_col: str = "doc_id",
                      text_col: str = "text",
-                     logprobs: DataFrame | None = None,
-                     impl: str = "arrow") -> DataFrame:
+                     logprobs: DataFrame | None = None) -> DataFrame:
     """Per-document cross-entropy under the target LM — the CCNet
     perplexity filter (perplexity = ``exp(cross_entropy)`` is monotone
     in it, so the tier thresholds translate directly).
@@ -493,58 +431,24 @@ def lm_cross_entropy(docs: DataFrame, target: DataFrame | None = None,
     Pass a precomputed ``logprobs`` (:func:`lm_bucket_logprobs`) to
     amortize the model; otherwise ``target`` is required.
 
-    ``impl='arrow'`` (default) scores in one narrow Arrow pass against
-    the broadcast logprob map (zero shuffles — the ``dsir_weights``
-    construction); ``impl='jvm'`` keeps the pure-Catalyst
-    explode→broadcast-join→sum, pinned equal by test."""
+    Scores in one narrow Arrow pass against the broadcast logprob map
+    (zero shuffles — the ``dsir_weights`` construction).
+
+    Malformed ids: ONE ROW PER INPUT ROW, exactly as
+    :func:`dsir_weights` — duplicate and NULL ids are carried through,
+    not grouped."""
     if logprobs is None:
         if target is None:
             raise ValueError("either target or logprobs is required")
-        if impl == "arrow":
-            # driver-side micro map: skips the model-DataFrame round
-            # trip (createDataFrame + collect), same numbers
-            logprobs = _lm_micro_map(target, n, n_buckets, alpha,
-                                     text_col, impl)
-        else:
-            logprobs = lm_bucket_logprobs(target, n, n_buckets, alpha,
-                                          text_col, impl)
-    if impl == "arrow":
-        scored = _apply_bucket_model(docs, logprobs, "logprob_micro",
-                                     n, n_buckets, id_col, text_col)
-        ce = (-(F.col("_ms").cast("double") / F.lit(1000000.0))
-              / F.col("n_grams").cast("double"))
-        return scored.select(
-            F.col(id_col), F.col("n_grams"),
-            F.when(F.col("n_grams") > 0, ce).alias("cross_entropy"))
-    if impl != "jvm":
-        raise ValueError("impl must be 'arrow' or 'jvm'")
-    # spine-free aggregation — see dsir_weights' jvm path for the
-    # construction and its equivalence argument
-    grams = docs.select(
-        F.col(id_col),
-        F.explode_outer(word_ngrams(F.col(text_col), n)).alias("g"))
-    joined = (grams
-              .select(F.col(id_col),
-                      # the explode_outer sentinel must stay NULL —
-                      # hash_bucket folds NULL keys into the ""-bucket,
-                      # which would count a phantom gram for gram-less
-                      # documents
-                      F.when(F.col("g").isNotNull(),
-                             hash_bucket(F.col("g"), n_buckets))
-                      .alias("bucket"))
-              .join(F.broadcast(logprobs.select("bucket", "logprob_micro")
-                                .withColumn("_m", F.lit(1))),
-                    on="bucket", how="left")
-              .groupBy(id_col)
-              # _m marker for the same NULL-model-value parity as the
-              # dsir path above
-              .agg(F.count("_m").alias("n_grams"),
-                   F.sum("logprob_micro").alias("_sm")))
-    ce = (-(F.col("_sm").cast("double") / F.lit(1000000.0))
+        # driver-side micro map: skips the model-DataFrame round trip
+        # (createDataFrame + collect), same numbers
+        logprobs = _lm_micro_map(target, n, n_buckets, alpha, text_col)
+    scored = _apply_bucket_model(docs, logprobs, "logprob_micro",
+                                 n, n_buckets, id_col, text_col)
+    ce = (-(F.col("_ms").cast("double") / F.lit(1000000.0))
           / F.col("n_grams").cast("double"))
-    return joined.select(
-        F.col(id_col),
-        F.col("n_grams").cast("long").alias("n_grams"),
+    return scored.select(
+        F.col(id_col), F.col("n_grams"),
         F.when(F.col("n_grams") > 0, ce).alias("cross_entropy"))
 
 

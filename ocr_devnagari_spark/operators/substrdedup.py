@@ -13,14 +13,13 @@ interval subtraction:
 
 1. every document explodes to its ``min_len``-token rolling windows
    (one row per window, keyed by a 128-bit content hash —
-   collision-negligible; Arrow-batched BLAKE2b by default, md5 on the
-   pure-Catalyst variant);
+   collision-negligible; Arrow-batched 16-byte BLAKE2b);
 2. one groupBy finds window contents occurring ≥ 2 times;
 3. duplicated-window occurrences come back per document as the SORTED
    SET OF WINDOW STARTS (collect_set(p) — never the exploded covered
    indices, which would carry ``min_len``× the shuffle volume);
-4. one corpus equi-join attaches the starts and an in-row rebuild
-   subtracts the covered intervals from the token stream.
+4. one corpus equi-join attaches the starts and an Arrow-batched
+   rebuild subtracts the covered intervals from the token stream.
 
 Scale shape: two keyed shuffles (window-hash groupBy reusing its own
 exchange for the dup-join probe, then the per-doc starts groupBy) plus
@@ -38,8 +37,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.repetition import word_ngrams
 
 
 def _py_rebuild(text, starts, min_len: int):
@@ -127,7 +124,6 @@ def _window_hash_stage(docs: DataFrame, min_len: int, id_col: str,
 def exact_substring_dedup(docs: DataFrame, min_len: int = 50,
                           id_col: str = "doc_id",
                           text_col: str = "text",
-                          impl: str = "arrow",
                           materialize_windows: bool | None = None
                           ) -> DataFrame:
     """Remove every token covered by a duplicated ``min_len``-token
@@ -141,16 +137,13 @@ def exact_substring_dedup(docs: DataFrame, min_len: int = 50,
     (single-space split/rejoin is lossless, so ``text_clean`` equals
     the input text byte-for-byte for untouched documents).
 
-    ``impl='arrow'`` (default) hashes windows in an Arrow stage
-    (~2.5× the HOF+md5 construction, half the shuffle bytes per key)
-    and rebuilds the surviving text in an Arrow-batched UDF via
-    difference-array interval subtraction — O(tokens + duplicated
-    windows) per document.  ``impl='jvm'`` keeps a pure-Catalyst
-    pipeline (md5 over HOF-built grams, covered-index array + indexed
-    filter); it is pinned equal by test but costs O(tokens × covered)
-    per row in uncodegen'd lambda HOFs, so use it only where the
-    Python worker path is unavailable.  The window stream feeds both
-    the duplicate groupBy and the join probe: in the cluster regime
+    Windows are hashed in an Arrow stage (~2.5× an HOF+md5
+    construction, half the shuffle bytes per key) and the surviving
+    text is rebuilt in an Arrow-batched UDF via difference-array
+    interval subtraction — O(tokens + duplicated windows) per document,
+    where a covered-index filter in lambda HOFs would cost O(tokens ×
+    covered) per row, uncodegen'd.  The window stream feeds both the
+    duplicate groupBy and the join probe: in the cluster regime
     (sort-merge join) both consumers ride one ReusedExchange, so the
     Arrow stage runs once; the small-input broadcast regime would
     recompute it, so ``materialize_windows=None`` (auto) checkpoints
@@ -165,30 +158,18 @@ def exact_substring_dedup(docs: DataFrame, min_len: int = 50,
     """
     if min_len < 2:
         raise ValueError("min_len must be >= 2 tokens")
-    if impl not in ("arrow", "jvm"):
-        raise ValueError("impl must be 'arrow' or 'jvm'")
-    toks = F.split(F.col(text_col), " ")
-
-    if impl == "arrow":
-        wins = _window_hash_stage(docs, min_len, id_col, text_col)
-        if materialize_windows is None:
-            from .dedup import compact_input
-            # the window table is ~8× the input text bytes (one
-            # (id, int, 16-byte digest) row per token), so the compact
-            # budget must apply to the MATERIALIZED size — without the
-            # amplification a default-conf 32-core session would judge
-            # a ~4 GB input "compact" and eagerly checkpoint ~30 GB
-            materialize_windows = compact_input(docs, amplification=8.0)
-        if materialize_windows:
-            from .dedup import _materialize
-            wins = _materialize(wins)
-    else:
-        wins = (docs.select(
-                    F.col(id_col),
-                    F.posexplode(word_ngrams(F.col(text_col), min_len))
-                    .alias("p", "g"))
-                .select(F.col(id_col), F.col("p"),
-                        F.md5(F.col("g")).alias("h")))
+    wins = _window_hash_stage(docs, min_len, id_col, text_col)
+    if materialize_windows is None:
+        from .dedup import compact_input
+        # the window table is ~8× the input text bytes (one
+        # (id, int, 16-byte digest) row per token), so the compact
+        # budget must apply to the MATERIALIZED size — without the
+        # amplification a default-conf 32-core session would judge
+        # a ~4 GB input "compact" and eagerly checkpoint ~30 GB
+        materialize_windows = compact_input(docs, amplification=8.0)
+    if materialize_windows:
+        from .dedup import _materialize
+        wins = _materialize(wins)
     dup_h = (wins.groupBy("h")
              .agg(F.count(F.lit(1)).alias("c"))
              .filter(F.col("c") >= 2)
@@ -199,26 +180,11 @@ def exact_substring_dedup(docs: DataFrame, min_len: int = 50,
               .groupBy(id_col)
               .agg(F.sort_array(F.collect_set("p")).alias("_starts")))
     joined = docs.join(starts, on=id_col, how="left")
-
-    if impl == "arrow":
-        udf = _rebuild_udf(min_len)
-        return (joined
-                .select(F.col(id_col),
-                        udf(F.col(text_col), F.col("_starts"))
-                        .alias("_r"))
-                .select(id_col,
-                        F.col("_r.n_tokens").alias("n_tokens"),
-                        F.col("_r.n_removed").alias("n_removed"),
-                        F.col("_r.text_clean").alias("text_clean")))
-
-    cov = F.array_distinct(F.flatten(F.transform(
-        F.col("_starts"),
-        lambda s: F.sequence(s, s + F.lit(min_len - 1)))))
-    kept = F.when(F.col("_starts").isNull(), toks).otherwise(
-        F.filter(toks, lambda x, i: ~F.array_contains(cov, i)))
+    udf = _rebuild_udf(min_len)
     return (joined
             .select(F.col(id_col),
-                    F.size(toks).cast("long").alias("n_tokens"),
-                    (F.size(toks) - F.size(kept)).cast("long")
-                    .alias("n_removed"),
-                    F.array_join(kept, " ").alias("text_clean")))
+                    udf(F.col(text_col), F.col("_starts")).alias("_r"))
+            .select(id_col,
+                    F.col("_r.n_tokens").alias("n_tokens"),
+                    F.col("_r.n_removed").alias("n_removed"),
+                    F.col("_r.text_clean").alias("text_clean")))

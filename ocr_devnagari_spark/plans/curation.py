@@ -15,12 +15,11 @@ One declarative plan chaining the public web-corpus recipe:
    (``functions/splits.split_assign``).
 
 Everything stays one plan: the quality gate and split are codegen
-expressions, the repetition gate an Arrow-batched per-row predicate by
-default (``repetition_impl='jvm'`` keeps it pure Catalyst for clusters
-without Python workers), dedup one hash-partitioned window.  Spark
-pipelines the whole thing — no intermediate materialization, and every
-shuffle is keyed (doc id / text hash), never all-pairs.  At 100 TB the
-plan is scan → narrow gates → one window shuffle → final agg.
+expressions, the repetition gate an Arrow-batched per-row predicate,
+dedup one hash-partitioned window.  Spark pipelines the whole thing — no
+intermediate materialization, and every shuffle is keyed (doc id / text
+hash), never all-pairs.  At 100 TB the plan is scan → narrow gates → one
+window shuffle → final agg.
 
 Gate order is part of the spec (gates BEFORE dedup: a boilerplate page
 that fails quality can then never claim keeper-ship over a passing
@@ -45,7 +44,6 @@ def curate_docs(df: DataFrame, id_col: str = "doc_id",
                 text_col: str = "text", host_col: str = "host",
                 weights: dict[str, float] | None = None,
                 min_words: int = 40,
-                repetition_impl: str = "arrow",
                 blockterms: list[str] | None = None,
                 pii_scrub: bool = False,
                 para_max_docs: int | None = None) -> DataFrame:
@@ -74,7 +72,7 @@ def curate_docs(df: DataFrame, id_col: str = "doc_id",
     """
     text = F.col(text_col)
     gate = (gopher_pass(text, min_words=min_words)
-            & repetition_pass_expr(text, impl=repetition_impl))
+            & repetition_pass_expr(text))
     if blockterms:
         from ..functions.text import blocklist_pass
         gate = gate & blocklist_pass(text, blockterms)
@@ -174,7 +172,6 @@ def curation_report(df: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text", host_col: str = "host",
                     weights: dict[str, float] | None = None,
                     min_words: int = 40,
-                    repetition_impl: str = "arrow",
                     blockterms: list[str] | None = None,
                     pii_scrub: bool = False,
                     para_max_docs: int | None = None) -> DataFrame:
@@ -184,7 +181,6 @@ def curation_report(df: DataFrame, id_col: str = "doc_id",
     return (curate_docs(df, id_col=id_col, text_col=text_col,
                         host_col=host_col, weights=weights,
                         min_words=min_words,
-                        repetition_impl=repetition_impl,
                         blockterms=blockterms, pii_scrub=pii_scrub,
                         para_max_docs=para_max_docs)
             .groupBy("split")

@@ -35,24 +35,48 @@ HOSTILE_MARKUP = [
 ]
 
 
-def test_materialize_events_matches_generator_tokenizer():
-    """The list-building tokenizer twin must stay event-for-event
-    identical to the generator (it IS the spec) — including rawtext
-    skips, unterminated comments, bare '<', '<!'/'<?' dispatch and
-    mixed-case close tags."""
+def test_materialize_events_pinned_spec():
+    """The tokenizer IS the extraction spec: fixed expected events for
+    the hostile cases (rawtext skips, mixed-case close tags, the
+    unterminated comment, bare '<', '<!'/'<?' dispatch, a '<' that
+    opens no tag, entities), plus a seeded random sweep that must never
+    raise and must tokenize deterministically."""
     from ocr_devnagari_spark.extract_core import (
-        iter_html_events,
+        DATA,
+        END,
+        START,
         materialize_events,
     )
     import random
     import string
 
-    cases = list(HOSTILE_MARKUP)
+    expected = {
+        "<script>if (a<b) { x = '</div>'; }</script>after":
+            [(START, ("script", "", False)), (END, "script"),
+             (DATA, "after")],
+        "<SCRIPT>upper close</SCRIPT>tail":
+            [(START, ("script", "", False)), (END, "script"),
+             (DATA, "tail")],
+        "<!-- unterminated comment <p>y</p>": [],
+        "<": [(DATA, "<")],
+        "tail<": [(DATA, "tail"), (DATA, "<")],
+        "<!bang no gt": [],
+        # '<?' runs to the FIRST '>', even one inside a quoted string
+        "<?php echo '<p>'; ?>w": [(DATA, "'; ?>w")],
+        "<1notatag>u": [(DATA, "<"), (DATA, "1notatag>u")],
+        "text &amp; entities &lt;kept&gt; &#65;":
+            [(DATA, "text & entities <kept> A")],
+    }
+    assert set(expected) <= set(HOSTILE_MARKUP)
+    for h, want in expected.items():
+        assert materialize_events(h) == want, h
+
     rng = random.Random(42)
     frags = ["<p>", "</p>", "<div class='ad'>", "</div>", "text ",
              "<script>", "</script>", "<!--", "-->", "&amp;", "<",
              ">", "'", '"', "<br/>", "<a href='u'>", "</a>",
              "<!doctype>", "<?pi?>", "॥ 1 ॥ ॐ "]
+    cases = list(HOSTILE_MARKUP)
     for _ in range(300):
         cases.append("".join(rng.choice(frags)
                              for _ in range(rng.randint(1, 40))))
@@ -60,7 +84,9 @@ def test_materialize_events_matches_generator_tokenizer():
         cases.append("".join(rng.choice(string.printable)
                              for _ in range(rng.randint(0, 120))))
     for h in cases:
-        assert list(iter_html_events(h)) == materialize_events(h), h
+        events = materialize_events(h)
+        assert events == materialize_events(h), h
+        assert all(kind in (START, END, DATA) for kind, _ in events), h
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
@@ -68,7 +94,6 @@ from pyspark.sql import functions as F
 from ocr_devnagari_spark.corpus import gen_page
 from ocr_devnagari_spark.operators.extract import (
     extract_fused,
-    extract_two_pass,
     split_routes,
 )
 from ocr_devnagari_spark.plans.pipeline import read_pages
@@ -105,59 +130,6 @@ def test_expected_text_recovered_for_clean_docs(spark, corpus_dir):
     total = j.count()
     assert total > 400
     assert bad == 0
-
-
-def test_two_pass_equals_fused(spark, corpus_dir):
-    """The explicit fast→filter→precise→join-back topology and the fused
-    single-stage plan implement the same function."""
-    pages = read_pages(spark, corpus_dir)
-    cols = ["url", "text", "success", "confidence", "error",
-            "backend_used", "needs_verification"]
-    a = {r.url: tuple(r) for r in extract_fused(pages).select(cols).collect()}
-    b = {r.url: tuple(r)
-         for r in extract_two_pass(pages).select(cols).collect()}
-    assert a == b
-
-
-def test_budgeted_escalation(spark, corpus_dir):
-    """O3: budget=∞ is byte-identical to unbudgeted; budget=k escalates
-    exactly the top-k flagged rows by detector priority."""
-    pages = read_pages(spark, corpus_dir)
-    cols = ["url", "text", "success", "confidence", "error",
-            "backend_used", "needs_verification"]
-    unbudgeted = {r.url: tuple(r)
-                  for r in extract_two_pass(pages).select(cols).collect()}
-    infinite = {r.url: tuple(r)
-                for r in extract_two_pass(pages, budget=10**9)
-                .select(cols).collect()}
-    assert unbudgeted == infinite
-
-    n_flagged = sum(1 for v in unbudgeted.values()
-                    if v[cols.index("backend_used")] == "fast+precise")
-    assert n_flagged > 10
-    # critical rows rank above low-confidence ones (mantra rows ≥ 0.78,
-    # code/table rows ~0.21-0.24, plain low-confidence 0.0), so a budget
-    # below the critical count MUST defer some
-    n_critical = sum(1 for v in unbudgeted.values()
-                     if v[cols.index("needs_verification")])
-    assert n_critical > 2
-    k = n_critical // 2
-    budgeted = extract_two_pass(pages, budget=k).select(cols).collect()
-    esc_urls = {r.url for r in budgeted if r.backend_used == "fast+precise"}
-    assert len(esc_urls) == k
-    # non-escalated rows fall back to the fast result, text included
-    by_url = {r.url: r for r in budgeted}
-    for url, v in unbudgeted.items():
-        if url not in esc_urls:
-            assert by_url[url].backend_used in ("fast", "pdf")
-    # a critical row the budget deferred was never verified — it must KEEP
-    # needs_verification=True for the downstream verification queue
-    nv = cols.index("needs_verification")
-    deferred_critical = [u for u, v in unbudgeted.items()
-                         if v[nv] and u not in esc_urls]
-    assert deferred_critical, "budget must defer at least one critical row"
-    for u in deferred_critical:
-        assert by_url[u].needs_verification, u
 
 
 def test_partitioning_invariance(spark, corpus_dir, golden_path):

@@ -52,16 +52,6 @@ def test_pdf_route_predicate_is_jvm_side(spark, corpus_dir):
         assert "EvalPython" not in plan     # startswith on binary: Catalyst
 
 
-def test_two_pass_join_back_broadcasts(spark, corpus_dir):
-    """The escalated side is ~8-15% of rows → Catalyst/AQE should pick a
-    broadcast hash join for the join-back at this scale."""
-    from ocr_devnagari_spark.operators.extract import extract_two_pass
-    out = extract_two_pass(read_pages(spark, corpus_dir))
-    out.count()                              # let AQE finalize
-    plan = _plan(out)
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
-
-
 def test_resume_antijoin_planned_as_join(spark, corpus_dir, work_root):
     from ocr_devnagari_spark.config import ExtractConfig
     from ocr_devnagari_spark.plans.pipeline import (

@@ -152,3 +152,31 @@ def test_failed_second_init_cleans_up_first(spark, corpus_dir, tmp_path):
     inits = glob.glob(f"{marker_dir}/a-init-*")
     dones = glob.glob(f"{marker_dir}/a-done-*")
     assert len(inits) >= 1 and len(dones) == len(inits)
+
+
+def test_no_twin_implementation_selectors():
+    """One implementation per operator: no public or private function in
+    the package takes an ``impl``/``*_impl`` parameter that selects a
+    second code path."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    import ocr_devnagari_spark as pkg
+    offenders = []
+    for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        mod = importlib.import_module(info.name)
+        for obj in vars(mod).values():
+            if inspect.isclass(obj):
+                fns = [v for v in vars(obj).values()
+                       if inspect.isfunction(v)]
+            else:
+                fns = [obj] if inspect.isfunction(obj) else []
+            for fn in fns:
+                if fn.__module__ != mod.__name__:
+                    continue            # re-exported from elsewhere
+                offenders += [
+                    f"{mod.__name__}.{fn.__qualname__}({p})"
+                    for p in inspect.signature(fn).parameters
+                    if p == "impl" or p.endswith("_impl")]
+    assert not offenders, offenders

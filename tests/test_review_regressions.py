@@ -118,22 +118,6 @@ def test_class_pattern_in_both_detectors(spark):
     assert abs(got - score) < 1e-9
 
 
-def test_two_pass_does_not_persist_payload(spark, corpus_dir):
-    """The persisted two-pass intermediate must not carry the html bytes."""
-    from ocr_devnagari_spark.operators.extract import _FAST_SCHEMA
-    assert "html" not in [f.name for f in _FAST_SCHEMA.fields]
-
-    from ocr_devnagari_spark.operators.extract import extract_two_pass
-    from ocr_devnagari_spark.plans.pipeline import read_pages
-    pages = read_pages(spark, corpus_dir)
-    out = extract_two_pass(pages)
-    out.count()
-    # every InMemoryRelation in the plan must exclude the payload column
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    for line in plan.splitlines():
-        if "InMemoryRelation" in line:
-            assert "html" not in line, line
-
 def test_data_class_attrs_are_not_class(spark=None):
     """data-class= / data-id= are custom attributes, not class/id — they
     must not mark real content blocks as dropped ('-' is a word boundary,

@@ -82,31 +82,35 @@ RAW = [(0, "the quick brown fox jumps"),        # = target doc → high w
        (3, "x")]                                 # <n words → 0 grams
 
 
-def _brute_dsir(n=2, n_buckets=64, alpha=1.0):
-    from decimal import ROUND_HALF_UP, Decimal
+def _bucket(g, n_buckets):
+    """The md5 wheel, written out independently of the engine."""
     import hashlib
+    return int(hashlib.md5(g.encode()).hexdigest()[:8], 16) % n_buckets
 
-    def bucket(g):
-        return int(hashlib.md5(g.encode()).hexdigest()[:8], 16) % n_buckets
 
-    def grams(t):
-        ws = t.split(" ")
-        return [" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)] \
-            if len(ws) >= n else []
+def _grams(t, n):
+    ws = t.split(" ")
+    return [" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)] \
+        if len(ws) >= n else []
 
-    tb = [bucket(g) for _, t in TARGET for g in grams(t)]
-    rb = [bucket(g) for _, t in RAW for g in grams(t)]
+
+def _micro(x):
+    from decimal import ROUND_HALF_UP, Decimal
+    return int(Decimal(repr(x)).scaleb(6).quantize(
+        Decimal(1), rounding=ROUND_HALF_UP))
+
+
+def _brute_dsir(n=2, n_buckets=64, alpha=1.0):
+    tb = [_bucket(g, n_buckets) for _, t in TARGET for g in _grams(t, n)]
+    rb = [_bucket(g, n_buckets) for _, t in RAW for g in _grams(t, n)]
     dt, dr = len(tb) + alpha * n_buckets, len(rb) + alpha * n_buckets
-    lrm = {}
-    for b in range(n_buckets):
-        x = (math.log((tb.count(b) + alpha) / dt)
-             - math.log((rb.count(b) + alpha) / dr))
-        lrm[b] = int(Decimal(repr(x)).scaleb(6).quantize(
-            Decimal(1), rounding=ROUND_HALF_UP))
+    lrm = {b: _micro(math.log((tb.count(b) + alpha) / dt)
+                     - math.log((rb.count(b) + alpha) / dr))
+           for b in range(n_buckets)}
     out = {}
     for i, t in RAW:
-        gs = grams(t)
-        out[i] = (len(gs), sum(lrm[bucket(g)] for g in gs) / 1e6)
+        gs = _grams(t, n)
+        out[i] = (len(gs), sum(lrm[_bucket(g, n_buckets)] for g in gs) / 1e6)
     return out
 
 
@@ -136,6 +140,22 @@ def test_dsir_precomputed_ratios_path(spark):
     assert a == b
 
 
+def test_bucket_counts_match_brute_force(spark):
+    """The Arrow per-batch histogram equals a brute-force Counter of
+    md5-wheel buckets (NULL text contributes no grams)."""
+    from collections import Counter
+
+    from ocr_devnagari_spark.operators.scoring import _bucket_counts
+    rows = RAW + [(4, ""), (5, None)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    for n in (1, 2):
+        want = Counter(_bucket(g, 64) for _, t in rows if t is not None
+                       for g in _grams(t, n))
+        got = {r["bucket"]: r["c"]
+               for r in _bucket_counts(df, n, 64, "text").collect()}
+        assert got == dict(want), n
+
+
 def test_dsir_rejects_bad_params(spark):
     df = spark.createDataFrame(RAW, "doc_id long, text string")
     with pytest.raises(ValueError):
@@ -148,50 +168,40 @@ def test_dsir_rejects_bad_params(spark):
 # CCNet LM cross-entropy
 # ---------------------------------------------------------------------------
 
-def _brute_lm_ce(n=1, n_buckets=64, alpha=1.0):
-    from decimal import ROUND_HALF_UP, Decimal
-    import hashlib
-
-    def bucket(g):
-        return int(hashlib.md5(g.encode()).hexdigest()[:8], 16) % n_buckets
-
-    def grams(t):
-        ws = t.split(" ")
-        return [" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)] \
-            if len(ws) >= n else []
-
-    tb = [bucket(g) for _, t in TARGET for g in grams(t)]
+def _brute_lm_ce(docs, n=1, n_buckets=64, alpha=1.0):
+    tb = [_bucket(g, n_buckets) for _, t in TARGET for g in _grams(t, n)]
     denom = len(tb) + alpha * n_buckets
-    lpm = {}
-    for b in range(n_buckets):
-        x = math.log((tb.count(b) + alpha) / denom)
-        lpm[b] = int(Decimal(repr(x)).scaleb(6).quantize(
-            Decimal(1), rounding=ROUND_HALF_UP))
+    lpm = {b: _micro(math.log((tb.count(b) + alpha) / denom))
+           for b in range(n_buckets)}
     out = {}
-    for i, t in RAW:
-        gs = grams(t)
+    for i, t in docs:
+        gs = _grams(t, n)
         if not gs:
             out[i] = (0, None)
         else:
-            s = sum(lpm[bucket(g)] for g in gs)
+            s = sum(lpm[_bucket(g, n_buckets)] for g in gs)
             out[i] = (len(gs), -(s / 1e6) / len(gs))
     return out
 
 
 def test_lm_cross_entropy_matches_brute_force(spark):
+    docs = RAW + [(4, "")]
     target = spark.createDataFrame(TARGET, "doc_id long, text string")
-    raw = spark.createDataFrame(RAW, "doc_id long, text string")
-    got = {r["doc_id"]: r for r in
-           lm_cross_entropy(raw, target, n=1, n_buckets=64).collect()}
-    want = _brute_lm_ce()
-    assert set(got) == set(want)
-    for i, (n_grams, ce) in want.items():
-        assert got[i]["n_grams"] == n_grams, i
-        assert got[i]["cross_entropy"] == ce, i   # exact — micro sums
-    # the target-identical doc is closest to the LM
-    assert got[0]["cross_entropy"] < got[1]["cross_entropy"]
-    # single-word doc DOES have one unigram; an empty-text doc has none
-    assert got[3]["n_grams"] == 1
+    raw = spark.createDataFrame(docs, "doc_id long, text string")
+    for n in (1, 2):
+        got = {r["doc_id"]: r for r in
+               lm_cross_entropy(raw, target, n=n, n_buckets=64).collect()}
+        want = _brute_lm_ce(docs, n=n)
+        assert set(got) == set(want), n
+        for i, (n_grams, ce) in want.items():
+            assert got[i]["n_grams"] == n_grams, (n, i)
+            assert got[i]["cross_entropy"] == ce, (n, i)   # exact sums
+        # the target-identical doc is closest to the LM
+        assert got[0]["cross_entropy"] < got[1]["cross_entropy"], n
+        if n == 1:
+            assert got[3]["n_grams"] == 1       # single word: one unigram
+        else:
+            assert got[4]["cross_entropy"] is None   # "": no bigram
 
 
 def test_lm_empty_doc_null_ce_routes_tail(spark):
@@ -223,6 +233,39 @@ def test_lm_requires_target_or_logprobs(spark):
         lm_cross_entropy(raw)
     with pytest.raises(ValueError):
         ccnet_tier(F.col("x"), 2.0, 1.0)
+
+
+def test_scorers_malformed_id_contract(spark):
+    """Duplicate and NULL ids: dsir_weights and lm_cross_entropy emit one
+    row per INPUT row, each scoring its own text; linear_quality_score
+    emits one row per DISTINCT id (NULL ids group into one row) with the
+    group's tokens pooled into one bag."""
+    rows = [(7, "science research advances"), (7, "spam click spam"),
+            (None, "the quick brown fox jumps"), (None, "science")]
+    schema = "doc_id long, text string"
+    bad = spark.createDataFrame(rows, schema)
+    clean = spark.createDataFrame(
+        [(i, t) for i, (_, t) in enumerate(rows)], schema)
+    target = spark.createDataFrame(TARGET, schema)
+
+    for score in (
+            lambda d: dsir_weights(d, target, n=2, n_buckets=64),
+            lambda d: lm_cross_entropy(d, target, n=1, n_buckets=64)):
+        got = score(bad).collect()
+        assert sorted((r[0] is None, r[0]) for r in got) == \
+            [(False, 7), (False, 7), (True, None), (True, None)]
+        # every row keeps its own text's score: same multiset as a run
+        # over the same texts with clean ids
+        assert sorted(tuple(r)[1:] for r in got) == \
+            sorted(tuple(r)[1:] for r in score(clean).collect())
+
+    got = {r["doc_id"]: r for r in linear_quality_score(bad, WEIGHTS)
+           .collect()}
+    assert set(got) == {7, None}
+    for i in (7, None):
+        n, sc = _brute_linear(" ".join(t for j, t in rows if j == i))
+        assert got[i]["n_hits"] == n, i
+        assert got[i]["score"] == pytest.approx(sc, abs=1e-6), i
 
 
 def test_ccnet_tier_routing(spark):
@@ -321,43 +364,6 @@ def test_semdedup_kmeans_path_drops_planted_dups(spark):
     # originals of the dups survive
     for i in range(3):
         assert got[i] is True
-
-
-# ---------------------------------------------------------------------------
-# Arrow vs Catalyst impl pins (shared md5-wheel, exact integer sums)
-# ---------------------------------------------------------------------------
-
-def test_dsir_impls_pinned_equal(spark):
-    target = spark.createDataFrame(TARGET, "doc_id long, text string")
-    raw = spark.createDataFrame(RAW, "doc_id long, text string")
-    a = sorted(map(tuple, dsir_weights(
-        raw, target, n=2, n_buckets=64, impl="arrow").collect()))
-    j = sorted(map(tuple, dsir_weights(
-        raw, target, n=2, n_buckets=64, impl="jvm").collect()))
-    assert a == j
-    with pytest.raises(ValueError):
-        dsir_weights(raw, target, n=2, n_buckets=64, impl="rdd")
-
-
-def test_lm_impls_pinned_equal(spark):
-    target = spark.createDataFrame(TARGET, "doc_id long, text string")
-    raw = spark.createDataFrame(RAW + [(4, "")],
-                                "doc_id long, text string")
-    a = sorted(map(tuple, lm_cross_entropy(
-        raw, target, n=2, n_buckets=64, impl="arrow").collect()))
-    j = sorted(map(tuple, lm_cross_entropy(
-        raw, target, n=2, n_buckets=64, impl="jvm").collect()))
-    assert a == j
-
-
-def test_bucket_counts_impls_pinned_equal(spark):
-    from ocr_devnagari_spark.operators.scoring import _bucket_counts
-    df = spark.createDataFrame(RAW, "doc_id long, text string")
-    a = sorted(map(tuple, _bucket_counts(df, 2, 64, "text",
-                                         impl="arrow").collect()))
-    j = sorted(map(tuple, _bucket_counts(df, 2, 64, "text",
-                                         impl="jvm").collect()))
-    assert a == j
 
 
 def test_ccnet_tier_cuts_terciles(spark):

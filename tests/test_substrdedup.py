@@ -42,12 +42,11 @@ DOCS = [
 ]
 
 
-@pytest.mark.parametrize("impl", ["arrow", "jvm"])
 @pytest.mark.parametrize("L", [3, 4])
-def test_matches_brute_force(spark, L, impl):
+def test_matches_brute_force(spark, L):
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
     got = {r["doc_id"]: r for r in
-           exact_substring_dedup(df, min_len=L, impl=impl).collect()}
+           exact_substring_dedup(df, min_len=L).collect()}
     want = _brute(DOCS, L)
     assert set(got) == set(want)
     for i, (n, rm, clean) in want.items():
@@ -92,13 +91,11 @@ def test_min_len_validated(spark):
     df = spark.createDataFrame(DOCS[:1], "doc_id long, text string")
     with pytest.raises(ValueError):
         exact_substring_dedup(df, min_len=1)
-    with pytest.raises(ValueError):
-        exact_substring_dedup(df, min_len=4, impl="rdd")
 
 
-def test_impls_pinned_equal_random(spark):
-    """Arrow and Catalyst rebuilds byte-equal on a randomized corpus
-    with planted cross-doc and in-doc duplication."""
+def test_random_corpus_matches_brute_force(spark):
+    """Byte-equal to the brute-force oracle on a randomized corpus with
+    planted cross-doc and in-doc duplication."""
     import random
     rng = random.Random(41)
     vocab = [f"w{i}" for i in range(30)]
@@ -112,11 +109,6 @@ def test_impls_pinned_equal_random(spark):
             body = shared + " " + body
         docs.append((i, body.strip() or "x"))
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    a = sorted(map(tuple, exact_substring_dedup(
-        df, min_len=4, impl="arrow").collect()))
-    j = sorted(map(tuple, exact_substring_dedup(
-        df, min_len=4, impl="jvm").collect()))
-    assert a == j
-    want = _brute(docs, 4)
-    for i, n, rm, clean in a:
-        assert (n, rm, clean) == want[i], i
+    got = {i: (n, rm, clean) for i, n, rm, clean in
+           exact_substring_dedup(df, min_len=4).collect()}
+    assert got == _brute(docs, 4)

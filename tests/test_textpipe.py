@@ -430,29 +430,45 @@ def test_url_spam_signals_fixed(spark):
     assert got[2]["p"] == 2 and got[3]["p"] == 0
 
 
-def test_repetition_arrow_equals_jvm(spark):
-    """The Arrow default and the pure-Catalyst path are the same
-    function — pinned over a real corpus slice including short docs."""
+def test_repetition_signals_match_python_oracle(spark):
+    """repetition_signals and the repetition_pass_expr gate against the
+    test-local n-gram oracle over TEXTS plus a NULL and an empty row.
+    NULL text and too-short docs give NULL signals; n=1 over '' has one
+    empty gram but no characters to measure, which must give NULL too
+    (not a 0/0)."""
     from ocr_devnagari_spark.functions.repetition import (
         repetition_pass_expr,
         repetition_signals,
     )
     rows = list(enumerate(TEXTS)) + [(90, None), (91, "")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = {r["doc_id"]: tuple(r)[1:] for r in
-         repetition_signals(df, impl="arrow").collect()}
-    j = {r["doc_id"]: tuple(r)[1:] for r in
-         repetition_signals(df, impl="jvm").collect()}
-    assert a == j
-    pa = {r["doc_id"]: r["p"] for r in df.select(
-        "doc_id", repetition_pass_expr(F.col("text"),
-                                       impl="arrow").alias("p")).collect()}
-    pj = {r["doc_id"]: r["p"] for r in df.select(
-        "doc_id", repetition_pass_expr(F.col("text"),
-                                       impl="jvm").alias("p")).collect()}
-    assert pa == pj
-    with pytest.raises(ValueError):
-        repetition_signals(df, impl="rdd")
+
+    def want(t, n, field):
+        if t is None or t == "":
+            return None
+        exp = _py_ngram_stats(t, n)
+        return None if exp is None else exp[1 if field == "top" else 2]
+
+    got = {r["doc_id"]: r for r in repetition_signals(
+        df, top_ns=(1, 2, 3), dup_ns=(1, 5)).collect()}
+    assert set(got) == {i for i, _ in rows}
+    for i, t in rows:
+        for field, n in (("top", 1), ("top", 2), ("top", 3),
+                         ("dup", 1), ("dup", 5)):
+            assert got[i][f"{field}{n}_frac"] == want(t, n, field), \
+                (i, field, n)
+    assert got[91]["top1_frac"] is None
+
+    def passes(t):
+        sig = (want(t, 2, "top"), want(t, 3, "top"), want(t, 5, "dup"))
+        return all(v is None or v <= lim
+                   for v, lim in zip(sig, (0.20, 0.18, 0.15)))
+
+    gate = {r["doc_id"]: r["p"] for r in df.select(
+        "doc_id", repetition_pass_expr(F.col("text")).alias("p"))
+        .collect()}
+    assert gate == {i: passes(t) for i, t in rows}
+    assert gate[5] is False and gate[90] is True
 
 
 def test_round6_matches_engine_rounding_on_tie_quotients(spark):
@@ -465,17 +481,6 @@ def test_round6_matches_engine_rounding_on_tie_quotients(spark):
         eng = spark.sql(f"SELECT round(CAST({num} AS DOUBLE) / {den}, 6) "
                         "AS r").collect()[0]["r"]
         assert _round6(x) == eng, (num, den)
-
-
-def test_repetition_arrow_n1_empty_text_matches_jvm(spark):
-    from ocr_devnagari_spark.functions.repetition import repetition_signals
-    df = spark.createDataFrame([(0, ""), (1, "a a")],
-                               "doc_id long, text string")
-    a = {r["doc_id"]: r["top1_frac"] for r in repetition_signals(
-        df, top_ns=(1,), dup_ns=(), impl="arrow").collect()}
-    j = {r["doc_id"]: r["top1_frac"] for r in repetition_signals(
-        df, top_ns=(1,), dup_ns=(), impl="jvm").collect()}
-    assert a == j
 
 
 def test_lang_confidence_share(spark):

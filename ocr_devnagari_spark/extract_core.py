@@ -78,8 +78,13 @@ _ATTR_CLASS_RE = re.compile(
 
 def _has_drop_class(attr_str: str | None) -> bool:
     """Does the tag's raw attribute string carry a drop-listed class/id
-    token? Attributes are parsed lazily — most tags never need them."""
-    if not attr_str or ("class" not in attr_str and "id" not in attr_str):
+    token? Attributes are parsed lazily — most tags never need them; the
+    precheck is case-insensitive like ``_ATTR_CLASS_RE`` (``ID=``,
+    ``CLASS=``, ``Class=`` all name the attribute)."""
+    if not attr_str:
+        return False
+    low = attr_str.lower()
+    if "class" not in low and "id" not in low:
         return False
     for m in _ATTR_CLASS_RE.finditer(attr_str):
         v = m.group(2) or m.group(3) or m.group(4) or ""

@@ -82,3 +82,23 @@ def test_extract_document_pinned_digest():
                 payload.decode("utf-8", errors="replace"))).encode())
     assert h.hexdigest() == (
         "0aa4d3cf60dff362354362b28026701d770c1ff061a4e8c46f64cd8819a609c1")
+
+
+def test_drop_class_attribute_name_is_case_insensitive():
+    """``ID=``/``CLASS=``/``Class=`` drop a block exactly like their
+    lowercase forms, on the fast and the precise path."""
+    from ocr_devnagari_spark.extract_core import (
+        fast_extract_html,
+        precise_extract_html,
+    )
+    body = ("<p>Main article paragraph with enough words to be kept.</p>"
+            "<div {attr}>Sponsored offer text that must never be kept.</div>"
+            "<p>Closing paragraph of the same article body here.</p>")
+    for attr in ('ID="ad"', 'CLASS="banner"', "Class='promo'",
+                 "iD=ads", 'cLaSs="x social"'):
+        for fn in (lambda h: fast_extract_html(h)[0], precise_extract_html):
+            got = fn(f"<html><body>{body.format(attr=attr)}</body></html>")
+            want = fn(f"<html><body>{body.format(attr=attr.lower())}"
+                      f"</body></html>")
+            assert "Sponsored" not in want
+            assert got == want, (attr, got)

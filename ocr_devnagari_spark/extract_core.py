@@ -33,6 +33,8 @@ from __future__ import annotations
 
 import json
 import re
+import string
+from bisect import bisect_left
 from dataclasses import dataclass, field
 from html import unescape
 
@@ -95,24 +97,73 @@ def _has_drop_class(attr_str: str | None) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# HTML tokenizer — a single-pass regex scanner emitting (start/end/data)
-# events. Replaces stdlib html.parser (3-4× faster: no per-char position
-# tracking, lazy attribute parsing, C-speed regex scanning). Both extraction
-# paths AND the golden oracle consume these events, so the tokenizer IS the
-# spec — byte-identity is preserved by construction.
+# HTML tokenizer — one compiled token regex walked with ``finditer``,
+# emitting (start/end/data) events. Replaces stdlib html.parser (no
+# per-char position tracking, lazy attribute parsing, C-speed scanning).
+# Both extraction paths AND the golden oracle consume these events, so the
+# tokenizer IS the spec — byte-identity is preserved by construction.
+#
+# Cost is linear in the document's length, for every input:
+# - the tag name and attribute runs are possessive: the same matches as the
+#   earlier lazy pattern (its alternatives are disjoint on their first
+#   char), but a failed tag attempt never backtracks;
+# - the scan restarts only after a rawtext close tag — and, once a tag has
+#   failed, after each tag;
+# - a '<' that opens no tag costs amortized O(1): after the first failed
+#   tag the scan continues without the tag alternative and each later '<'
+#   is checked first — past the document's last '>' no tag can match, and
+#   before it a right-to-left table (``_attr_reach``, built once) says
+#   whether the attribute scan from there reaches an unquoted '>'.
+#   Without the check every unterminated ``<a `` re-scanned the rest of the
+#   document (quadratic; ``test_extract_core.py`` pins the linear growth).
 # ---------------------------------------------------------------------------
 
 START, END, DATA = 0, 1, 2
 
-_TAG_RE = re.compile(
-    r"<(/?)([a-zA-Z][a-zA-Z0-9\-]*)"
-    r"((?:[^>\"']|\"[^\"]*\"|'[^']*')*?)(/?)>", re.S)
+# Alternatives after the tag: a data run (group 5), a comment (to '-->';
+# unterminated: to the end), other '<!'/'<?' markup (to the next '>', or
+# the end), a '<' that starts a tag name but whose tag did not match
+# (group 6) and any other '<' (group 7).
+_NOT_TAG = (r"|([^<]+)|<!--(?:.*?-->|.*)|<[!?][^>]*>?"
+            r"|(<(?=/?[a-zA-Z]))|(<)")
+# Tag groups: 1 '/' of a close tag, 2 name, 3 raw attribute string (quoted
+# values may hold '>'), 4 '/' of a self-closing tag.
+_TOKEN_RE = re.compile(
+    r"<(/?)([a-zA-Z][a-zA-Z0-9\-]*+)"
+    r"((?:[^>\"'/]++|/(?!>)|\"[^\"]*+\"|'[^']*+')*+)(/?)>" + _NOT_TAG, re.S)
+# The scan after the first failed tag: no tag alternative, same group
+# numbers.
+_GUARDED_RE = re.compile(r"(?!)()()()()" + _NOT_TAG, re.S)
+_ATTR_STOP_RE = re.compile(r"[>\"']")
 
 # Content of these tags is raw text until the close tag (script may contain
 # '<'); they are all skip-tags, so content is dropped wholesale. Close-tag
 # search must be case-INSENSITIVE (</SCRIPT> is common in real crawl HTML).
 _RAWTEXT_TAGS = frozenset("script style textarea title".split())
 _RAWTEXT_CLOSE = {t: re.compile(f"</{t}\\s*>", re.I) for t in _RAWTEXT_TAGS}
+
+
+def _attr_reach(html: str, start: int) -> tuple[list, list]:
+    """Where a tag's attribute scan ends, for every position from
+    ``start``: ``stops`` are the positions of '>', '"' and "'", and
+    ``ok[i]`` says whether a scan arriving outside quotes at ``stops[i]``
+    ends at an unquoted '>' (a quote jumps to the next quote of its kind;
+    a quote with none after it fails the tag). ``ok[-1]`` is False: the
+    scan ran off the end. Built right to left in one pass."""
+    stops = [m.start() for m in _ATTR_STOP_RE.finditer(html, start)]
+    ok = [False] * (len(stops) + 1)
+    next_dq = next_sq = -1            # index of the next '"' / "'"
+    for i in range(len(stops) - 1, -1, -1):
+        c = html[stops[i]]
+        if c == ">":
+            ok[i] = True
+        elif c == '"':
+            ok[i] = next_dq >= 0 and ok[next_dq + 1]
+            next_dq = i
+        else:
+            ok[i] = next_sq >= 0 and ok[next_sq + 1]
+            next_sq = i
+    return stops, ok
 
 
 def materialize_events(html_str: str) -> list:
@@ -131,102 +182,109 @@ def materialize_events(html_str: str) -> list:
     out: list = []
     emit = out.append
     html = html_str
-    i, n = 0, len(html)
-    find = html.find
-    match = _TAG_RE.match
+    n = len(html)
+    last_gt = html.rfind(">")       # no tag can end after it
+    scanner = _TOKEN_RE
+    stops = ok = None               # _attr_reach, once a tag has failed
+    pos = 0
     try:
-        while i < n:
-            lt = find("<", i)
-            if lt < 0:
-                d = html[i:]
-                emit((DATA, (unescape(d) if "&" in d else d)))
-                break
-            if lt > i:
-                d = html[i:lt]
-                emit((DATA, (unescape(d) if "&" in d else d)))
-            nxt = html[lt + 1: lt + 2]
-            if nxt == "!":
-                if html.startswith("<!--", lt):
-                    end = find("-->", lt + 4)
-                    i = n if end < 0 else end + 3
-                else:
-                    end = find(">", lt)
-                    i = n if end < 0 else end + 1
-                continue
-            if nxt == "?":
-                end = find(">", lt)
-                i = n if end < 0 else end + 1
-                continue
-            m = match(html, lt)
-            if not m:
-                emit((DATA, "<"))
-                i = lt + 1
-                continue
-            closing, tag, attr_str, selfclose = m.groups()
-            tag = tag.lower()
-            i = m.end()
-            if closing:
-                emit((END, tag))
-                continue
-            emit((START, (tag, attr_str, bool(selfclose))))
-            if tag in _RAWTEXT_TAGS and not selfclose:
-                m2 = _RAWTEXT_CLOSE[tag].search(html, i)
-                if m2 is None:
-                    i = n                   # unterminated: rest is raw
-                else:
+        while pos < n:
+            for m in scanner.finditer(html, pos):
+                k = m.lastindex
+                if k == 5:
+                    d = m[5]
+                    emit((DATA, (unescape(d) if "&" in d else d)))
+                    continue
+                if k == 7:
+                    emit((DATA, "<"))
+                    continue
+                if k == 6:
+                    lt = m.start()
+                    if scanner is _TOKEN_RE:    # the first failed tag
+                        emit((DATA, "<"))
+                        scanner = _GUARDED_RE
+                        if lt < last_gt:
+                            stops, ok = _attr_reach(html, lt)
+                        pos = lt + 1
+                        break
+                    if not (lt < last_gt and ok[bisect_left(stops, lt)]):
+                        emit((DATA, "<"))
+                        continue
+                    m = _TOKEN_RE.match(html, lt)   # cannot fail
+                elif k is None:
+                    continue                # comment / '<!' / '<?' markup
+                tag = m[2].lower()
+                if m[1]:
                     emit((END, tag))
-                    i = m2.end()
+                else:
+                    selfclose = m[4] == "/"
+                    emit((START, (tag, m[3], selfclose)))
+                    if tag in _RAWTEXT_TAGS and not selfclose:
+                        m2 = _RAWTEXT_CLOSE[tag].search(html, m.end())
+                        if m2 is None:
+                            pos = n         # unterminated: rest is raw
+                        else:
+                            emit((END, tag))
+                            pos = m2.end()
+                        break
+                if scanner is _GUARDED_RE:  # it consumed only the '<'
+                    pos = m.end()
+                    break
+            else:
+                pos = n
     except Exception:
         pass
     return out
 
 
 # ---------------------------------------------------------------------------
-# Block model
+# Fast path: streaming block segmentation + text-density / link-density
+# classification over the event list.
 # ---------------------------------------------------------------------------
 
-@dataclass
-class Block:
-    tag: str
-    parts: list = field(default_factory=list)
-    anchor_chars: int = 0
-    n_links: int = 0
-    dropped: bool = False        # inside nav/header/footer/aside/drop-class
-    _text: str | None = None
+def _is_kept(text: str, anchor_chars: int, n_links: int,
+             dropped: bool) -> bool:
+    """Fast-path block classifier (text-density / link-density heuristic)
+    for a block whose canonical text is non-empty."""
+    if dropped:
+        return False
+    if n_links:
+        if anchor_chars / len(text) > LINK_DENSITY_MAX:
+            return False
+        if len(text) < SHORT_LINKY_CHARS:
+            return False
+    return True
 
-    def text(self) -> str:
-        if self._text is None:
-            self._text = canon("".join(self.parts))
-        return self._text
 
+def fast_extract_html(html_str_or_events) -> tuple[str, dict]:
+    """Fast path: flat block segmentation, streamed — each block is
+    classified the moment a block boundary ends it (a block tag, or a
+    nav/header/footer/aside/form or drop-class section opening or
+    closing) — then the kept texts are joined.  Accepts raw HTML or a
+    pre-materialized event list (``materialize_events``).
 
-def segment_blocks(html_str_or_events) -> list[Block]:
-    """Streaming flat block segmentation over the event stream. Accepts
-    raw HTML or a pre-materialized event list (``materialize_events``)."""
+    Returns (text, stats) where stats feed confidence + lineage histograms.
+    """
     events = (html_str_or_events if isinstance(html_str_or_events, list)
               else materialize_events(html_str_or_events))
-    blocks: list[Block] = []
+    texts: list[str] = []          # kept block texts
+    total = 0                      # blocks with non-empty text
+    parts: list[str] = []          # the open block's data
+    anchor_chars = n_links = 0
+    dropped = False                # open block is inside a drop section
     drop_stack: list[str] = []
-    cur = Block(tag="body")
-    skip = 0                     # depth inside non-rawtext skip tags
-    anchor = 0                   # <a> nesting depth
-
-    def flush(next_tag: str = "body") -> Block:
-        nonlocal cur
-        if cur.parts:
-            blocks.append(cur)
-        cur = Block(tag=next_tag, dropped=bool(drop_stack))
-        return cur
-
+    skip = 0                       # depth inside non-rawtext skip tags
+    anchor = 0                     # <a> nesting depth
     try:
         for kind, payload in events:
             if kind == DATA:
                 if skip or not payload:
                     continue
-                cur.parts.append(payload)
+                parts.append(payload)
                 if anchor:
-                    cur.anchor_chars += len(canon(payload))
-            elif kind == START:
+                    anchor_chars += len(canon(payload))
+                continue
+            if kind == START:
                 tag, attr_str, selfclose = payload
                 if tag in SKIP_TAGS:
                     if tag not in _RAWTEXT_TAGS and not selfclose:
@@ -234,71 +292,51 @@ def segment_blocks(html_str_or_events) -> list[Block]:
                     continue
                 if skip:
                     continue
-                if (tag in SECTION_DROP_TAGS or _has_drop_class(attr_str)) \
+                if (tag in SECTION_DROP_TAGS
+                        or attr_str and _has_drop_class(attr_str)) \
                         and tag not in VOID_TAGS:
-                    flush(tag)
                     drop_stack.append(tag)
-                    cur.dropped = True
-                    continue
-                if tag == "a":
-                    anchor += 1
-                    cur.n_links += 1
-                if tag in BLOCK_TAGS:
-                    flush(tag)
+                else:
+                    if tag == "a":
+                        anchor += 1
+                        n_links += 1
+                    if tag not in BLOCK_TAGS:
+                        continue
             else:  # END
                 tag = payload
                 if tag in SKIP_TAGS:
-                    if tag not in _RAWTEXT_TAGS:
-                        skip = max(0, skip - 1)
+                    if tag not in _RAWTEXT_TAGS and skip:
+                        skip -= 1
                     continue
                 if skip:
                     continue
                 if drop_stack and tag == drop_stack[-1]:
-                    flush()
                     drop_stack.pop()
-                    cur.dropped = bool(drop_stack)
-                    continue
-                if tag == "a":
-                    anchor = max(0, anchor - 1)
-                if tag in BLOCK_TAGS:
-                    flush()
+                else:
+                    if tag == "a" and anchor:
+                        anchor -= 1
+                    if tag not in BLOCK_TAGS:
+                        continue
+            # block boundary: the open block ends, with the drop state it
+            # had; the next one takes the state after this event
+            if parts:
+                t = canon("".join(parts))
+                if t:
+                    total += 1
+                    if _is_kept(t, anchor_chars, n_links, dropped):
+                        texts.append(t)
+                parts = []
+            anchor_chars = n_links = 0
+            dropped = bool(drop_stack)
     except Exception:
         pass                      # malformed input: keep whatever parsed
-    flush()
-    return blocks
-
-
-def _keep_fast(b: Block) -> bool:
-    """Fast-path block classifier (text-density / link-density heuristic)."""
-    if b.dropped:
-        return False
-    t = b.text()
-    n = len(t)
-    if n == 0:
-        return False
-    if b.n_links:
-        if b.anchor_chars / n > LINK_DENSITY_MAX:
-            return False
-        if n < SHORT_LINKY_CHARS:
-            return False
-    return True
-
-
-def fast_extract_html(html_str_or_events) -> tuple[str, dict]:
-    """Fast path: segment → classify → canonical join.
-
-    Returns (text, stats) where stats feed confidence + lineage histograms.
-    """
-    blocks = segment_blocks(html_str_or_events)
-    kept = [b for b in blocks if _keep_fast(b)]
-    texts = [b.text() for b in kept]
-    texts = [t for t in texts if t]
-    total_blocks = sum(1 for b in blocks if b.text())
-    stats = {
-        "blocks_total": total_blocks,
-        "blocks_kept": len(texts),
-    }
-    return "\n".join(texts), stats
+    t = canon("".join(parts))
+    if t:
+        total += 1
+        if _is_kept(t, anchor_chars, n_links, dropped):
+            texts.append(t)
+    return "\n".join(texts), {"blocks_total": total,
+                              "blocks_kept": len(texts)}
 
 
 # ---------------------------------------------------------------------------
@@ -504,15 +542,17 @@ def validate_text(text: str) -> tuple[bool, str | None]:
 # ---------------------------------------------------------------------------
 
 _GARBLED_RE = re.compile(r"[^\w\s]{5,}", re.UNICODE)
-_ASCII_NONLETTER_RE = re.compile(r"[^A-Za-z]+")
+_ASCII_LETTERS = string.ascii_letters.encode()
 
 
 def _count_letters(text: str) -> int:
-    """== sum(c.isalpha() for c in text); C-speed regex fast path for the
-    ~86% of documents that are pure ASCII (semantics must stay EXACTLY
-    isalpha — confidence feeds routing, routing feeds byte-identity)."""
+    """== sum(c.isalpha() for c in text); C-speed fast path for the ~86%
+    of documents that are pure ASCII, where the letters are exactly
+    A-Z/a-z (semantics must stay EXACTLY isalpha — confidence feeds
+    routing, routing feeds byte-identity)."""
     if text.isascii():
-        return len(_ASCII_NONLETTER_RE.sub("", text))
+        b = text.encode("ascii")
+        return len(b) - len(b.translate(None, _ASCII_LETTERS))
     # sum(map(...)) over the bound C method: no per-char generator
     # frame; bools sum as ints, value unchanged
     return sum(map(str.isalpha, text))

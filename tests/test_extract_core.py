@@ -11,6 +11,7 @@ import hashlib
 import itertools
 import json
 import random
+import time
 
 from perfbench.gen import HOSTILE_KINDS, hostile_payload
 from test_extract_identity import HOSTILE_MARKUP
@@ -102,3 +103,100 @@ def test_drop_class_attribute_name_is_case_insensitive():
                       f"</body></html>")
             assert "Sponsored" not in want
             assert got == want, (attr, got)
+
+
+def _best_time(payload: bytes, reps: int = 3) -> float:
+    best = float("inf")
+    for _ in range(reps):
+        t = time.perf_counter()
+        extract_document("https://hostile.example/x.html", payload)
+        best = min(best, time.perf_counter() - t)
+    return best
+
+
+def _growth(make, nbytes: int, reps: int = 3) -> tuple:
+    """(seconds at nbytes, seconds at 4·nbytes), best of ``reps``."""
+    return _best_time(make(nbytes), reps), _best_time(make(4 * nbytes), reps)
+
+
+def _repeat(unit: str, tail: str = ""):
+    return lambda nbytes: (unit * (nbytes // len(unit)) + tail).encode()
+
+
+LINEAR_INPUTS = {
+    **{kind: (lambda nbytes, k=kind: hostile_payload(k, nbytes))
+       for kind in HOSTILE_KINDS},
+    # quotes pair across the '<': every tag scan jumps to the end and fails
+    # on the last, unpaired quote — the '>' at the end defeats the check
+    # for "no '>' after this '<'"
+    "single_quoted": _repeat("'<a'", ">"),
+    "double_quoted": _repeat('"<a"', ">"),
+}
+
+
+def test_hostile_markup_extracts_in_linear_time():
+    """Unterminated tags, unpaired quotes and deep nesting: 4× the bytes
+    costs at most 6× the time, and 200 KB extracts in under 0.5 s (the
+    quadratic tokenizer took 43 s for 50 KB of ``<a ``)."""
+    for name, make in LINEAR_INPUTS.items():
+        small, big = _growth(make, 50_000)
+        assert big < 0.5, (name, big)
+        assert big / small <= 6, (name, small, big)
+
+
+def _primitive_necklaces(max_len: int):
+    """One rotation of each pattern that is not a power of a shorter one
+    (a repeated pattern and its rotations tokenize alike)."""
+    for pat in repeated_patterns(max_len):
+        k = len(pat)
+        if min(pat[i:] + pat[:i] for i in range(k)) != pat:
+            continue
+        if any(k % d == 0 and pat[:d] * (k // d) == pat
+               for d in range(1, k)):
+            continue
+        yield pat
+
+
+def test_no_superlinear_repeated_markup_pattern():
+    """Bounded search for super-linear inputs: every repeated pattern of
+    up to 4 characters of markup, with and without a trailing '>'. A
+    pattern whose time grows more than 8× for 4× the bytes in a quick
+    single-run probe is re-timed, best of 3 at 8× the size, and must
+    then stay within 8×."""
+    for pat in _primitive_necklaces(4):
+        for tail in ("", ">"):
+            make = _repeat(pat, tail)
+            small, big = _growth(make, 512, reps=1)
+            if big <= 8 * small:
+                continue
+            small, big = _growth(make, 4096)
+            assert big <= 8 * small, (pat + tail, small, big)
+
+
+def test_critical_families_cover_detector_keys():
+    """Lineage sums one column per ``CRITICAL_FAMILIES`` entry, so every
+    rule-hit key the detector can emit must be listed there."""
+    from ocr_devnagari_spark.extract_core import (
+        CRITICAL_FAMILIES,
+        detect_critical_full,
+    )
+    every = ("॥ 1 ॥ ॐ मन्त्र शिव यन्त्र def f(): return 1 "
+             "101 202 303 404 505 606")
+    assert set(detect_critical_full(every)["hits"]) == set(CRITICAL_FAMILIES)
+    for i in range(300):
+        text = extract_document("u", gen_page(i)["html"])["text"]
+        assert set(detect_critical_full(text)["hits"]) <= set(
+            CRITICAL_FAMILIES)
+
+
+def test_count_letters_ascii_matches_isalpha():
+    """The ASCII branch of ``_count_letters`` counts exactly what
+    ``str.isalpha`` does: all 128 code points, then seeded strings."""
+    from ocr_devnagari_spark.extract_core import _count_letters
+    for c in map(chr, range(128)):
+        assert _count_letters(c) == c.isalpha(), repr(c)
+    alphabet = "".join(map(chr, range(128)))
+    rng = random.Random(3)
+    for _ in range(2000):
+        t = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 80)))
+        assert _count_letters(t) == sum(map(str.isalpha, t)), repr(t)

@@ -24,8 +24,9 @@ Scale notes (the parts that must survive 1000 executors × 100 TB):
 - **Per-partition lineage, not per-row driver writes.** The reference
   JSON-dumps progress after EVERY page (``utils.py:41-56``, called per page
   at ``multi_processor.py:457``) — a driver-side bottleneck at any scale.
-  Here each task's stats become one lineage row (FIXTURES.md F3) aggregated
-  with a tiny shuffle of (partition_id, counters) tuples.
+  Here each task's stats become one lineage row (FIXTURES.md F3): one
+  aggregation by partition_id, a tiny shuffle of (partition_id, counters)
+  tuples.
 """
 
 from __future__ import annotations
@@ -37,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import DEFAULT_CONFIG, ExtractConfig
+from ..extract_core import CRITICAL_FAMILIES
 from ..operators.extract import EXTRACTED_SCHEMA, extract_fused
 from ..sources.icebox import IceboxTable
 
@@ -97,22 +99,21 @@ def rebalance(pages: DataFrame, cfg: ExtractConfig) -> DataFrame:
 
 def lineage_rows(extracted: DataFrame, snapshot_id: int) -> DataFrame:
     """Per-partition commit records (FIXTURES.md F3): row counts, url range,
-    failure counts, rule-hit histogram (map summed via explode→groupBy)."""
-    base = extracted.groupBy("partition_id").agg(
-        F.min("url").alias("url_min"),
-        F.max("url").alias("url_max"),
-        F.count("*").alias("row_count"),
-        F.sum(F.when(~F.col("success"), 1).otherwise(0)).alias("failed_count"),
-    )
-    hits = (extracted
-            .select("partition_id", F.explode_outer("rule_hits")
-                    .alias("rule", "n"))
-            .filter(F.col("rule").isNotNull())
-            .groupBy("partition_id", "rule").agg(F.sum("n").alias("n"))
-            .groupBy("partition_id")
-            .agg(F.map_from_entries(
-                F.collect_list(F.struct("rule", "n"))).alias("rule_hits")))
-    return (base.join(hits, "partition_id", "left")
+    failure counts and the rule-hit histogram — ONE aggregation by
+    partition_id. The histogram sums each critical family's hits (families
+    are a fixed set, ``CRITICAL_FAMILIES``) and keeps the families that
+    were hit; a partition without hits gets NULL."""
+    hits = F.map_filter(
+        F.create_map(*[x for fam in CRITICAL_FAMILIES for x in (
+            F.lit(fam), F.sum(F.col("rule_hits")[fam]))]),
+        lambda _, n: n.isNotNull())
+    return (extracted.groupBy("partition_id").agg(
+                F.min("url").alias("url_min"),
+                F.max("url").alias("url_max"),
+                F.count("*").alias("row_count"),
+                F.sum(F.when(~F.col("success"), 1).otherwise(0))
+                .alias("failed_count"),
+                F.when(F.size(hits) > 0, hits).alias("rule_hits"))
             .withColumn("snapshot_id", F.lit(snapshot_id).cast("long"))
             .withColumn("committed_at", F.current_timestamp())
             .select([f.name for f in LINEAGE_SCHEMA.fields]))
@@ -355,7 +356,8 @@ def run_extract_job(
             spark, out, files, prior)
 
     snap = out.commit_staged(files, n, job_token=job_token)
-    staged = spark.read.parquet(*files)
+    # the schema is known: reading with it skips the footer-inference job
+    staged = spark.read.schema(result.schema).parquet(*files)
     lin.append(lineage_rows(staged, snap),
                job_token=f"lineage-{job_token}" if job_token else None)
     # A2 cost accounting (gemini_backend.py:25-80 analog): dollar cost

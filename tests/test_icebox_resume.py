@@ -82,6 +82,62 @@ def test_lineage_partition_accounting(spark, corpus_dir, work_root):
     assert len(fams) >= 1
 
 
+def test_lineage_rows_match_python_recount(spark, corpus_dir, work_root):
+    """Every lineage row equals a recount of the committed rows of its
+    partition (url range, row and failure counts, summed rule hits); a
+    partition without rule hits records NULL."""
+    from collections import Counter
+
+    from ocr_devnagari_spark.plans.pipeline import lineage_rows
+
+    cfg = ExtractConfig(root_dir=work_root)
+    run_extract_job(spark, corpus_dir, cfg, job_token="t1",
+                    rebalance_mode="salted")
+    want: dict = {}
+    for r in IceboxTable(cfg.extracted_table).read(spark).collect():
+        w = want.setdefault(r.partition_id, {
+            "url_min": r.url, "url_max": r.url, "row_count": 0,
+            "failed_count": 0, "rule_hits": Counter()})
+        w["url_min"] = min(w["url_min"], r.url)
+        w["url_max"] = max(w["url_max"], r.url)
+        w["row_count"] += 1
+        w["failed_count"] += not r.success
+        w["rule_hits"].update(r.rule_hits)
+    got = {r.partition_id: {k: r[k] for k in (
+        "url_min", "url_max", "row_count", "failed_count", "rule_hits")}
+        for r in IceboxTable(cfg.lineage_table).read(spark).collect()}
+    for w in want.values():
+        w["rule_hits"] = dict(w["rule_hits"]) or None
+    assert len(want) > 1
+    assert got == want
+
+    rows = spark.createDataFrame(
+        [("a", True, {}, 0), ("b", False, {"code": 2}, 1),
+         ("c", True, {"code": 1, "verse": 3}, 1)],
+        "url string, success boolean, rule_hits map<string, bigint>, "
+        "partition_id int")
+    hits = {r.partition_id: r.rule_hits
+            for r in lineage_rows(rows, 1).collect()}
+    assert hits == {0: None, 1: {"code": 3, "verse": 3}}
+
+
+def test_fresh_run_job_budget(spark, corpus_dir, work_root):
+    """A fresh run costs 3 Spark jobs: the extraction write and the
+    lineage aggregation's two (its shuffle map stage and the write); the
+    staged files are read back with a known schema, so no
+    schema-inference job."""
+    sc = spark.sparkContext
+    cfg = ExtractConfig(root_dir=work_root)
+    sc.setJobGroup("fresh-run-budget", "fresh run_extract_job")
+    try:
+        r = run_extract_job(spark, corpus_dir, cfg, job_token="t1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert r["rows"] > 0
+    jobs = sc.statusTracker().getJobIdsForGroup("fresh-run-budget")
+    assert len(jobs) <= 3, sorted(jobs)
+
+
 def test_pending_pages_empty_checkpoint(spark, corpus_dir, work_root):
     cfg = ExtractConfig(root_dir=work_root)
     pages = read_pages(spark, corpus_dir)

@@ -1,4 +1,5 @@
-"""Per-document extraction core: pinned output bytes over a fixed corpus.
+"""Per-document extraction core: pinned output bytes, linear time on
+hostile markup, and the exactness of its scoring shortcuts.
 
 Every rewrite of ``extract_core`` must keep ``extract_document``'s output
 (and the tokenizer's events) byte-for-byte; the digest below was computed
@@ -18,8 +19,13 @@ from test_extract_identity import HOSTILE_MARKUP
 
 from ocr_devnagari_spark.corpus import gen_page
 from ocr_devnagari_spark.extract_core import (
+    CRITICAL_FAMILIES,
+    _count_letters,
+    detect_critical_full,
     extract_document,
+    fast_extract_html,
     materialize_events,
+    precise_extract_html,
 )
 
 # Markup alphabet of the super-linear search: a tag opener, attribute
@@ -88,10 +94,6 @@ def test_extract_document_pinned_digest():
 def test_drop_class_attribute_name_is_case_insensitive():
     """``ID=``/``CLASS=``/``Class=`` drop a block exactly like their
     lowercase forms, on the fast and the precise path."""
-    from ocr_devnagari_spark.extract_core import (
-        fast_extract_html,
-        precise_extract_html,
-    )
     body = ("<p>Main article paragraph with enough words to be kept.</p>"
             "<div {attr}>Sponsored offer text that must never be kept.</div>"
             "<p>Closing paragraph of the same article body here.</p>")
@@ -181,10 +183,6 @@ def test_no_superlinear_repeated_markup_pattern():
 def test_critical_families_cover_detector_keys():
     """Lineage sums one column per ``CRITICAL_FAMILIES`` entry, so every
     rule-hit key the detector can emit must be listed there."""
-    from ocr_devnagari_spark.extract_core import (
-        CRITICAL_FAMILIES,
-        detect_critical_full,
-    )
     every = ("॥ 1 ॥ ॐ मन्त्र शिव यन्त्र def f(): return 1 "
              "101 202 303 404 505 606")
     assert set(detect_critical_full(every)["hits"]) == set(CRITICAL_FAMILIES)
@@ -197,7 +195,6 @@ def test_critical_families_cover_detector_keys():
 def test_count_letters_ascii_matches_isalpha():
     """The ASCII branch of ``_count_letters`` counts exactly what
     ``str.isalpha`` does: all 128 code points, then seeded strings."""
-    from ocr_devnagari_spark.extract_core import _count_letters
     for c in map(chr, range(128)):
         assert _count_letters(c) == c.isalpha(), repr(c)
     alphabet = "".join(map(chr, range(128)))

@@ -400,36 +400,42 @@ def parse_tree(html_str_or_events) -> Node:
 _CANDIDATE_TAGS = frozenset("article main section div body".split())
 
 
+def _subtree_stats(node: Node, memo: dict) -> tuple[int, int]:
+    """(text_chars, anchor_chars) of a subtree, drop-sections zeroed.
+    ``memo`` keeps each candidate container's stats by ``id``, so a
+    subtree nested in many candidates is summed once: O(nodes) per
+    document, where re-summing cost O(nodes × depth)."""
+    cand = node.tag in _CANDIDATE_TAGS
+    if cand and id(node) in memo:
+        return memo[id(node)]
+    text_c = anchor_c = 0
+    if not (node.tag in SECTION_DROP_TAGS or _has_drop_class(node.attrs)):
+        for ch in node.children:
+            if isinstance(ch, str):
+                text_c += len(canon(ch))
+            else:
+                t, a = _subtree_stats(ch, memo)
+                text_c += t
+                if ch.tag == "a":
+                    a = t
+                anchor_c += a
+    if cand:
+        memo[id(node)] = text_c, anchor_c
+    return text_c, anchor_c
+
+
 def _best_content_root(root: Node) -> Node:
-    """Highest text_chars × (1 − link_density) among candidate containers
-    (first in a right-to-left preorder wins ties). Every subtree's
-    (text_chars, anchor_chars), drop-sections zeroed, comes from ONE
-    bottom-up pass — O(nodes), where a per-candidate subtree walk cost
-    O(nodes × depth)."""
-    order = []                     # preorder, last child first
+    """Highest text_chars × (1 − link_density) among candidate containers."""
+    best, best_score = root, -1.0
+    memo: dict = {}
     stack = [root]
     while stack:
         n = stack.pop()
-        order.append(n)
         for ch in n.children:
             if isinstance(ch, Node):
                 stack.append(ch)
-    stats: dict = {}               # id(node) -> (text_chars, anchor_chars)
-    for n in reversed(order):      # children before their parent
-        text_c = anchor_c = 0
-        if not (n.tag in SECTION_DROP_TAGS or _has_drop_class(n.attrs)):
-            for ch in n.children:
-                if isinstance(ch, str):
-                    text_c += len(canon(ch))
-                else:
-                    t, a = stats[id(ch)]
-                    text_c += t
-                    anchor_c += t if ch.tag == "a" else a
-        stats[id(n)] = (text_c, anchor_c)
-    best, best_score = root, -1.0
-    for n in order:
         if n.tag in _CANDIDATE_TAGS:
-            t, a = stats[id(n)]
+            t, a = _subtree_stats(n, memo)
             if t == 0:
                 continue
             score = t * (1.0 - min(1.0, a / t))

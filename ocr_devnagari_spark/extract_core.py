@@ -104,9 +104,9 @@ def _has_drop_class(attr_str: str | None) -> bool:
 # tokenizer IS the spec — byte-identity is preserved by construction.
 #
 # Cost is linear in the document's length, for every input:
-# - the tag name and attribute runs are possessive: the same matches as the
-#   earlier lazy pattern (its alternatives are disjoint on their first
-#   char), but a failed tag attempt never backtracks;
+# - the tag name and attribute runs are possessive: a lazy scan finds the
+#   same matches (the alternatives are disjoint on their first char), but
+#   a failed tag attempt never backtracks;
 # - the scan restarts only after a rawtext close tag — and, once a tag has
 #   failed, after each tag;
 # - a '<' that opens no tag costs amortized O(1): after the first failed

@@ -104,16 +104,18 @@ def _has_drop_class(attr_str: str | None) -> bool:
 # tokenizer IS the spec — byte-identity is preserved by construction.
 #
 # Cost is linear in the document's length, for every input:
-# - the tag name and attribute runs are possessive: a lazy scan finds the
-#   same matches (the alternatives are disjoint on their first char), but
-#   a failed tag attempt never backtracks;
+# - a failed tag attempt backtracks in linear time: the tag name and each
+#   unquoted attribute run must end where the run's characters end (the
+#   negative lookaheads), and the attribute alternatives are disjoint on
+#   their first char, so every giving-back step fails at once. A lazy scan
+#   finds the same matches. (Possessive quantifiers would say this
+#   directly, but ``re`` only has them from Python 3.11.)
 # - the scan restarts only after a rawtext close tag — and, once a tag has
 #   failed, after each tag;
 # - a '<' that opens no tag costs amortized O(1): after the first failed
 #   tag the scan continues without the tag alternative and each later '<'
-#   is checked first — past the document's last '>' no tag can match, and
-#   before it a right-to-left table (``_attr_reach``, built once) says
-#   whether the attribute scan from there reaches an unquoted '>'.
+#   is checked first: a right-to-left table (``_attr_reach``, built once)
+#   says whether the attribute scan from there reaches an unquoted '>'.
 #   Without the check every unterminated ``<a `` re-scanned the rest of the
 #   document (quadratic; ``test_extract_core.py`` pins the linear growth).
 # ---------------------------------------------------------------------------
@@ -129,8 +131,9 @@ _NOT_TAG = (r"|([^<]+)|<!--(?:.*?-->|.*)|<[!?][^>]*>?"
 # Tag groups: 1 '/' of a close tag, 2 name, 3 raw attribute string (quoted
 # values may hold '>'), 4 '/' of a self-closing tag.
 _TOKEN_RE = re.compile(
-    r"<(/?)([a-zA-Z][a-zA-Z0-9\-]*+)"
-    r"((?:[^>\"'/]++|/(?!>)|\"[^\"]*+\"|'[^']*+')*+)(/?)>" + _NOT_TAG, re.S)
+    r"<(/?)([a-zA-Z][a-zA-Z0-9\-]*)(?![a-zA-Z0-9\-])"
+    r"((?:[^>\"'/]+(?![^>\"'/])|/(?!>)|\"[^\"]*\"|'[^']*')*)(/?)>"
+    + _NOT_TAG, re.S)
 # The scan after the first failed tag: no tag alternative, same group
 # numbers.
 _GUARDED_RE = re.compile(r"(?!)()()()()" + _NOT_TAG, re.S)
@@ -183,7 +186,6 @@ def materialize_events(html_str: str) -> list:
     emit = out.append
     html = html_str
     n = len(html)
-    last_gt = html.rfind(">")       # no tag can end after it
     scanner = _TOKEN_RE
     stops = ok = None               # _attr_reach, once a tag has failed
     pos = 0
@@ -203,11 +205,10 @@ def materialize_events(html_str: str) -> list:
                     if scanner is _TOKEN_RE:    # the first failed tag
                         emit((DATA, "<"))
                         scanner = _GUARDED_RE
-                        if lt < last_gt:
-                            stops, ok = _attr_reach(html, lt)
+                        stops, ok = _attr_reach(html, lt)
                         pos = lt + 1
                         break
-                    if not (lt < last_gt and ok[bisect_left(stops, lt)]):
+                    if not ok[bisect_left(stops, lt)]:
                         emit((DATA, "<"))
                         continue
                     m = _TOKEN_RE.match(html, lt)   # cannot fail

@@ -8,15 +8,18 @@ before the linear-time tokenizer and the streaming fast path landed.
 
 from __future__ import annotations
 
+import gc
 import hashlib
 import itertools
 import json
 import random
+import re
 import time
 
 from perfbench.gen import HOSTILE_KINDS, hostile_payload
 from test_extract_identity import HOSTILE_MARKUP
 
+from ocr_devnagari_spark import extract_core
 from ocr_devnagari_spark.corpus import gen_page
 from ocr_devnagari_spark.extract_core import (
     CRITICAL_FAMILIES,
@@ -108,17 +111,39 @@ def test_drop_class_attribute_name_is_case_insensitive():
 
 
 def _best_time(payload: bytes, reps: int = 3) -> float:
+    """CPU seconds of one extraction, best of ``reps``. Timed like
+    ``timeit``: CPU time, so waiting for a core on a busy host does not
+    count, and the cyclic collector off, so collecting whatever else the
+    test process holds (a full run holds a lot) does not count either."""
     best = float("inf")
-    for _ in range(reps):
-        t = time.perf_counter()
-        extract_document("https://hostile.example/x.html", payload)
-        best = min(best, time.perf_counter() - t)
+    gc.disable()
+    try:
+        for _ in range(reps):
+            t = time.process_time()
+            extract_document("https://hostile.example/x.html", payload)
+            best = min(best, time.process_time() - t)
+    finally:
+        gc.enable()
     return best
 
 
 def _growth(make, nbytes: int, reps: int = 3) -> tuple:
     """(seconds at nbytes, seconds at 4·nbytes), best of ``reps``."""
     return _best_time(make(nbytes), reps), _best_time(make(4 * nbytes), reps)
+
+
+def _assert_linear(name, make, nbytes: int, ratio: float,
+                   limit: float = float("inf")) -> None:
+    """4× the bytes costs at most ``ratio``× the time and 4·nbytes takes
+    under ``limit`` seconds. A miss is re-timed once (best of both rounds
+    per size) before it fails, so one burst of cache or memory contention
+    from other processes does not fail the test."""
+    small, big = _growth(make, nbytes)
+    if big >= limit or big > ratio * small:
+        small2, big2 = _growth(make, nbytes)
+        small, big = min(small, small2), min(big, big2)
+    assert big < limit, (name, big)
+    assert big <= ratio * small, (name, small, big)
 
 
 def _repeat(unit: str, tail: str = ""):
@@ -129,8 +154,8 @@ LINEAR_INPUTS = {
     **{kind: (lambda nbytes, k=kind: hostile_payload(k, nbytes))
        for kind in HOSTILE_KINDS},
     # quotes pair across the '<': every tag scan jumps to the end and fails
-    # on the last, unpaired quote — the '>' at the end defeats the check
-    # for "no '>' after this '<'"
+    # on the last, unpaired quote — and the '>' at the end means a '>'
+    # follows every '<', so only the quote-aware check rules the tags out
     "single_quoted": _repeat("'<a'", ">"),
     "double_quoted": _repeat('"<a"', ">"),
 }
@@ -141,9 +166,7 @@ def test_hostile_markup_extracts_in_linear_time():
     costs at most 6× the time, and 200 KB extracts in under 0.5 s (the
     quadratic tokenizer took 43 s for 50 KB of ``<a ``)."""
     for name, make in LINEAR_INPUTS.items():
-        small, big = _growth(make, 50_000)
-        assert big < 0.5, (name, big)
-        assert big / small <= 6, (name, small, big)
+        _assert_linear(name, make, 50_000, ratio=6, limit=0.5)
 
 
 def test_escalated_deep_nest_is_linear():
@@ -155,9 +178,7 @@ def test_escalated_deep_nest_is_linear():
     def make(nbytes):
         k = nbytes // 11
         return ("<div>" * k + "x" + "</div>" * k).encode()
-    small, big = _growth(make, 50_000)
-    assert big < 0.5, big
-    assert big / small <= 8, (small, big)
+    _assert_linear("deep_nest", make, 50_000, ratio=8, limit=0.5)
 
 
 def _primitive_necklaces(max_len: int):
@@ -177,16 +198,27 @@ def test_no_superlinear_repeated_markup_pattern():
     """Bounded search for super-linear inputs: every repeated pattern of
     up to 4 characters of markup, with and without a trailing '>'. A
     pattern whose time grows more than 8× for 4× the bytes in a quick
-    single-run probe is re-timed, best of 3 at 8× the size, and must
-    then stay within 8×."""
+    single-run probe is re-timed, best of 3 at 8× the size (twice on a
+    miss), and must then stay within 8×."""
     for pat in _primitive_necklaces(4):
         for tail in ("", ">"):
             make = _repeat(pat, tail)
             small, big = _growth(make, 512, reps=1)
             if big <= 8 * small:
                 continue
-            small, big = _growth(make, 4096)
-            assert big <= 8 * small, (pat + tail, small, big)
+            _assert_linear(pat + tail, make, 4096, ratio=8)
+
+
+def test_patterns_compile_on_python_3_10():
+    """The package supports Python 3.10, whose ``re`` rejects possessive
+    quantifiers and atomic groups (both new in 3.11): at import, every
+    module importing ``extract_core`` would fail there."""
+    pats = [v for v in vars(extract_core).values()
+            if isinstance(v, re.Pattern)]
+    pats += extract_core._RAWTEXT_CLOSE.values()
+    assert extract_core._TOKEN_RE in pats
+    for rx in pats:
+        assert not re.search(r"[*+?}]\+|\(\?>", rx.pattern), rx.pattern
 
 
 def test_critical_families_cover_detector_keys():

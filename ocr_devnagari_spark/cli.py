@@ -162,7 +162,8 @@ def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="ocrds", description="PySpark web-text extraction engine")
     p.add_argument("--cores", type=int, default=None,
-                   help="local[N] cores (default: $SPARK_GRAFT_CPUS or 32)")
+                   help="local[N] cores (default: $SPARK_GRAFT_CPUS, else the "
+                   "CPUs this process may run on)")
     sub = p.add_subparsers(dest="command", required=True)
 
     v = sub.add_parser("validate", help="corpus sanity report")

@@ -16,24 +16,25 @@ from dataclasses import dataclass, field
 class ExtractConfig:
     """All knobs of the extraction pipeline.
 
-    Thresholds mirror the reference's semantics:
-
     - ``confidence_threshold`` = 0.85: rows below it escalate to the precise
-      path (``hybrid_backend.py:45``, hard-coded twice at ``base.py:34-37``).
-    - ``min_valid_length`` = 20: the response-validation floor
-      (``gemini_backend.py:115`` MIN_VALID_LENGTH).
-    - ``salt_buckets`` / ``size_tiers``: skew handling required by the north
-      rule (heavy-tailed hosts and document sizes), no reference analog.
+      path, as in the reference (``hybrid_backend.py:45``, hard-coded twice
+      at ``base.py:34-37``).
+    - ``num_partitions`` / ``salt_buckets`` / ``size_tier_bytes``: skew
+      handling required by the north rule (heavy-tailed hosts and document
+      sizes), no reference analog.
+
+    Not knobs: the response-validation floor is
+    ``extract_core.MIN_VALID_LENGTH`` (20, the reference's
+    ``gemini_backend.py:115``) and the Arrow batch size is set once by
+    ``session.get_spark``.
     """
 
     confidence_threshold: float = 0.85
-    min_valid_length: int = 20
 
     # Physical / partitioning knobs.
     num_partitions: int = 32
     salt_buckets: int = 8           # per-host salt fan-out for hot hosts
     size_tier_bytes: tuple = (4_096, 65_536, 1_048_576)  # html-size tier edges
-    arrow_max_records_per_batch: int = 2_000
 
     # Paths (tables live under ``root_dir``).
     root_dir: str = field(default_factory=lambda: os.environ.get(

@@ -180,7 +180,8 @@ def exact_dedup_mark(staged: DataFrame,
 
 
 def mark_staged_duplicates(spark: SparkSession, out: IceboxTable,
-                           files: list, prior: DataFrame | None
+                           files: list, schema: T.StructType,
+                           prior: DataFrame | None
                            ) -> tuple[list, int, int]:
     """Single-write dedup commit: annotate duplicates by REWRITING ONLY
     the staged files that contain a to-be-marked row (Iceberg
@@ -190,6 +191,9 @@ def mark_staged_duplicates(spark: SparkSession, out: IceboxTable,
     entire write I/O to annotate a few-% minority of rows; here bytes
     written ≈ 1× + dup-fraction.
 
+    ``schema`` is the staged files' schema: both reads below use it, so
+    neither pays a footer-inference job.
+
     Returns (files_for_commit, n_marked_rows, n_files_rewritten). All
     planning shuffles carry (fingerprint, url, file) triples only; the
     payload moves once, inside the rewrite of affected files.
@@ -198,7 +202,7 @@ def mark_staged_duplicates(spark: SparkSession, out: IceboxTable,
 
     from ..operators.dedup import _materialize
 
-    staged = spark.read.parquet(*files)
+    staged = spark.read.schema(schema).parquet(*files)
     # materialize the keeper map once: it is consumed three times below
     # (affected-file probe, broadcast-gate count, mark join), and each
     # un-truncated consumer would re-run the full staged scan +
@@ -223,7 +227,8 @@ def mark_staged_duplicates(spark: SparkSession, out: IceboxTable,
                  for r in hits}
     affected = [f for f in files if os.path.basename(f) in aff_names]
     untouched = [f for f in files if os.path.basename(f) not in aff_names]
-    marked = exact_dedup_mark(spark.read.parquet(*affected), keepers=keepers)
+    marked = exact_dedup_mark(spark.read.schema(schema).parquet(*affected),
+                              keepers=keepers)
     marked_files, _ = out.stage(marked)
     for f in affected:                     # superseded, never committed
         os.remove(f)
@@ -353,7 +358,7 @@ def run_extract_job(
                          .filter(F.col("duplicate_of").isNull())
                          .select("fingerprint", "url"))
         files, n_marked, files_rewritten = mark_staged_duplicates(
-            spark, out, files, prior)
+            spark, out, files, result.schema, prior)
 
     snap = out.commit_staged(files, n, job_token=job_token)
     # the schema is known: reading with it skips the footer-inference job

@@ -1,17 +1,26 @@
 """SparkSession factory tuned for the extraction workload.
 
-Local-mode defaults match the sandbox (``local[N]`` threads, single JVM);
+Local-mode defaults match the host (``local[N]`` threads, single JVM);
 every setting here is also the right default on a real multi-executor
 cluster at 10^12-document scale:
 
+- Sized to the host: ``cores`` defaults to ``$SPARK_GRAFT_CPUS``, else the
+  CPUs this process may run on; ``spark.driver.memory`` defaults to
+  ``$OCRDS_DRIVER_MEM``, else a quarter of physical memory (or of the
+  cgroup v2 ``memory.max`` limit, if lower), at least 1g.  A quarter is
+  the JVM's own default-heap rule; it leaves the rest of the host to the
+  Python workers and the page cache.
 - AQE on: runtime partition coalescing + skew-join splitting cover the
-  escalation join-back whose selectivity (~8-15% of rows, see
-  ``docs/HYBRID_ARCHITECTURE.md`` in the reference) is only known at runtime.
+  resume anti-join and the dedup keeper-map join, whose selectivities
+  (how much of a batch is already committed or duplicated) are only
+  known at runtime.
 - Arrow on + bounded batch size: the extraction UDFs are Arrow-batched
   ``mapInPandas`` stages; big HTML payloads need smaller record batches so a
   batch's working set stays bounded (the reference's 26.4 GB → <4 GB memory
   incident, ``docs/RESILIENT_OCR_PLAN.md``, is exactly an unbounded-batch bug).
 - UTC session timezone: no wall-clock leaks into output bytes.
+- Python workers fork from stock ``pyspark.daemon``; the package reaches
+  them through ``addPyFile(package_zip())``, whatever the driver's cwd.
 """
 
 from __future__ import annotations
@@ -57,6 +66,21 @@ def package_zip(out_dir: str = "/tmp") -> str:
     return zpath
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``$OCRDS_DRIVER_MEM`` if set, else a quarter
+    of physical memory or of the cgroup v2 limit, whichever is lower,
+    with a floor of 1g."""
+    if os.environ.get("OCRDS_DRIVER_MEM"):
+        return os.environ["OCRDS_DRIVER_MEM"]
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            total = min(total, int(f.read()))
+    except (OSError, ValueError):   # no cgroup v2, or the limit is "max"
+        pass
+    return f"{max(total // 4 // 2**20, 1024)}m"
+
+
 def get_spark(
     app_name: str = "ocr_devnagari_spark",
     cores: int | None = None,
@@ -64,39 +88,10 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS",
+                                   len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
-    # Pre-warmed Python-worker daemon (guide §4.5): forked workers
-    # inherit pandas/pyarrow/numpy + the extraction core via
-    # copy-on-write instead of importing them per worker (~0.6 s each,
-    # and N cold workers otherwise stampede the same cores with
-    # duplicate imports).  ON by default because this factory only
-    # builds local-mode sessions, where the JVM child inherits this
-    # process's PYTHONPATH (set below) and the daemon module import is
-    # guaranteed.  PySpark has NO fallback when a configured daemon
-    # module fails to import on an executor — when submitting against
-    # a real cluster, ship the package AND set
-    # spark.executorEnv.PYTHONPATH, or disable with
-    # OCRDS_WORKER_DAEMON=0 (see daemon.py).
-    use_daemon = os.environ.get("OCRDS_WORKER_DAEMON", "1") != "0"
-    if use_daemon:
-        # the PYTHONPATH export below only reaches the worker daemon if
-        # the JVM launches AFTER this function patches the environment —
-        # a JVM gateway already launched by some other session factory
-        # froze its env snapshot without the repo root, and a daemon
-        # module that fails to import kills every Python task (no
-        # fallback).  With a live gateway, fall back to the stock daemon.
-        from pyspark import SparkContext
-        if SparkContext._gateway is not None:
-            use_daemon = False
-    if use_daemon:
-        pkg_parent = os.path.dirname(
-            os.path.dirname(os.path.abspath(__file__)))
-        pp = os.environ.get("PYTHONPATH", "")
-        if pkg_parent not in pp.split(os.pathsep):
-            os.environ["PYTHONPATH"] = (
-                pkg_parent + (os.pathsep + pp if pp else ""))
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -108,7 +103,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2000")
-        .config("spark.driver.memory", os.environ.get("OCRDS_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # reliable checkpoint files (the _materialize cluster path) are
         # NOT removed by default; with the cleaner on, a checkpointed
@@ -118,9 +113,6 @@ def get_spark(
         .config("spark.cleaner.referenceTracking.cleanCheckpoints",
                 "true")
     )
-    if use_daemon:
-        builder = builder.config("spark.python.daemon.module",
-                                 "ocr_devnagari_spark.daemon")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -7,6 +7,7 @@ job is a no-op; resume N times = same table state.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ocr_devnagari_spark.config import ExtractConfig
 from ocr_devnagari_spark.plans.pipeline import (
@@ -136,6 +137,39 @@ def test_fresh_run_job_budget(spark, corpus_dir, work_root):
     assert r["rows"] > 0
     jobs = sc.statusTracker().getJobIdsForGroup("fresh-run-budget")
     assert len(jobs) <= 3, sorted(jobs)
+
+
+def test_dedup_run_job_budget(spark, corpus_dir, work_root, tmp_path):
+    """A fresh dedup='exact' run that marks rows costs 12 Spark jobs; both
+    reads of the staged files (the keeper-map scan and the affected-file
+    rewrite) use the known schema, so neither pays a schema-inference
+    job (14 with the two inferring reads)."""
+    import glob
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    dup_dir = str(tmp_path / "budgetcorpus")
+    shutil.copytree(corpus_dir, dup_dir)
+    src = glob.glob(f"{dup_dir}/pages.parquet")[0]
+    t = pq.read_table(src)
+    clones = t.slice(0, 50).set_column(
+        0, "url", pa.array(["zzz-" + u for u in
+                            t.column("url").to_pylist()[:50]]))
+    pq.write_table(pa.concat_tables([t, clones]), src)
+
+    sc = spark.sparkContext
+    cfg = ExtractConfig(root_dir=work_root)
+    sc.setJobGroup("dedup-run-budget", "dedup run_extract_job")
+    try:
+        r = run_extract_job(spark, dup_dir, cfg, job_token="d",
+                            dedup="exact")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert r["dedup_marked"] >= 50
+    jobs = sc.statusTracker().getJobIdsForGroup("dedup-run-budget")
+    assert len(jobs) <= 12, sorted(jobs)
 
 
 def test_pending_pages_empty_checkpoint(spark, corpus_dir, work_root):
@@ -370,7 +404,7 @@ def test_dedup_commit_rewrites_only_affected_files(spark, tmp_path):
     assert len(files) == 4
 
     final, n_marked, n_rewritten = mark_staged_duplicates(
-        spark, out, files, prior=None)
+        spark, out, files, T.StructType.fromDDL(schema), prior=None)
     assert n_marked == 2 and n_rewritten == 2
     # the two clean files survive by reference — same physical paths —
     # and contain exactly the all-unique url groups (u1-*, u3-*)

@@ -5,11 +5,9 @@ every setting here is also the right default on a real multi-executor
 cluster at 10^12-document scale:
 
 - Sized to the host: ``cores`` defaults to ``$SPARK_GRAFT_CPUS``, else the
-  CPUs this process may run on; ``spark.driver.memory`` defaults to
-  ``$OCRDS_DRIVER_MEM``, else a quarter of physical memory (or of the
-  cgroup v2 ``memory.max`` limit, if lower), at least 1g.  A quarter is
-  the JVM's own default-heap rule; it leaves the rest of the host to the
-  Python workers and the page cache.
+  CPUs this process may run on; the driver heap to ``driver_memory()``, a
+  quarter of memory (the JVM's own default-heap rule), which leaves the
+  rest to the Python workers and the page cache.
 - AQE on: runtime partition coalescing + skew-join splitting cover the
   resume anti-join and the dedup keeper-map join, whose selectivities
   (how much of a batch is already committed or duplicated) are only
@@ -19,8 +17,6 @@ cluster at 10^12-document scale:
   batch's working set stays bounded (the reference's 26.4 GB → <4 GB memory
   incident, ``docs/RESILIENT_OCR_PLAN.md``, is exactly an unbounded-batch bug).
 - UTC session timezone: no wall-clock leaks into output bytes.
-- Python workers fork from stock ``pyspark.daemon``; the package reaches
-  them through ``addPyFile(package_zip())``, whatever the driver's cwd.
 """
 
 from __future__ import annotations

@@ -18,6 +18,26 @@ from ocr_devnagari_spark.plans.pipeline import (
 from ocr_devnagari_spark.sources.icebox import IceboxTable
 
 
+def _corpus_with_clones(corpus_dir, dst, n):
+    """Copy the corpus to ``dst`` and append byte copies of its first ``n``
+    pages under new urls (``zzz-`` + url, sorting after the originals);
+    returns the original page count."""
+    import glob
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    shutil.copytree(corpus_dir, dst)
+    src = glob.glob(f"{dst}/pages.parquet")[0]
+    t = pq.read_table(src)
+    clones = t.slice(0, n).set_column(
+        0, "url", pa.array(["zzz-" + u for u in
+                            t.column("url").to_pylist()[:n]]))
+    pq.write_table(pa.concat_tables([t, clones]), src)
+    return t.num_rows
+
+
 def test_partial_run_then_resume(spark, corpus_dir, work_root):
     cfg = ExtractConfig(root_dir=work_root)
     total = read_pages(spark, corpus_dir).count()
@@ -144,21 +164,8 @@ def test_dedup_run_job_budget(spark, corpus_dir, work_root, tmp_path):
     reads of the staged files (the keeper-map scan and the affected-file
     rewrite) use the known schema, so neither pays a schema-inference
     job (14 with the two inferring reads)."""
-    import glob
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     dup_dir = str(tmp_path / "budgetcorpus")
-    shutil.copytree(corpus_dir, dup_dir)
-    src = glob.glob(f"{dup_dir}/pages.parquet")[0]
-    t = pq.read_table(src)
-    clones = t.slice(0, 50).set_column(
-        0, "url", pa.array(["zzz-" + u for u in
-                            t.column("url").to_pylist()[:50]]))
-    pq.write_table(pa.concat_tables([t, clones]), src)
-
+    _corpus_with_clones(corpus_dir, dup_dir, 50)
     sc = spark.sparkContext
     cfg = ExtractConfig(root_dir=work_root)
     sc.setJobGroup("dedup-run-budget", "dedup run_extract_job")
@@ -182,26 +189,14 @@ def test_pending_pages_empty_checkpoint(spark, corpus_dir, work_root):
 def test_in_job_exact_dedup(spark, corpus_dir, work_root, tmp_path):
     """dedup='exact' MARKS duplicate extracted texts inside the job
     (duplicate_of = the lexicographically-first url per fingerprint)."""
-    import glob
-    import shutil
-
     # corpus with planted duplicate pages (same html, new urls)
     dup_dir = str(tmp_path / "dupcorpus")
-    shutil.copytree(corpus_dir, dup_dir)
-    import pyarrow.parquet as pq
-    src = glob.glob(f"{dup_dir}/pages.parquet")[0]
-    t = pq.read_table(src)
-    import pyarrow as pa
-    clones = t.slice(0, 50).set_column(
-        0, "url", pa.array(["zzz-" + u for u in
-                            t.column("url").to_pylist()[:50]]))
-    pq.write_table(pa.concat_tables([t, clones]), src)
+    n_docs = _corpus_with_clones(corpus_dir, dup_dir, 50)
 
     cfg = ExtractConfig(root_dir=work_root)
     r = run_extract_job(spark, dup_dir, cfg, job_token="d",
                         dedup="exact")
     out = IceboxTable(cfg.extracted_table).read(spark)
-    n_docs = t.num_rows
     # mark-don't-drop: every url commits (resume convergence preserved)
     assert r["rows"] == n_docs + 50 == out.count()
     assert r["dedup_marked"] >= 50           # clones + natural empty dups
@@ -258,19 +253,9 @@ def test_in_job_dedup_keeper_map_reliable_checkpoints(
     the dedup-module `_materialize` discipline), and the marked output
     is identical to the localCheckpoint path."""
     import glob
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     dup_dir = str(tmp_path / "ckcorpus")
-    shutil.copytree(corpus_dir, dup_dir)
-    src = glob.glob(f"{dup_dir}/pages.parquet")[0]
-    t = pq.read_table(src)
-    clones = t.slice(0, 40).set_column(
-        0, "url", pa.array(["zzz-" + u for u in
-                            t.column("url").to_pylist()[:40]]))
-    pq.write_table(pa.concat_tables([t, clones]), src)
+    _corpus_with_clones(corpus_dir, dup_dir, 40)
 
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None

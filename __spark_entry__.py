@@ -81,7 +81,7 @@ def _spread(df: DataFrame) -> DataFrame:
     aggregates) keep the single-task plan, which is faster than paying
     an exchange.  Results are partitioning-independent by design
     (SURVEY.md §7.3 purity), which the oracle gate re-checks."""
-    from ocr_devnagari_spark.operators.dedup import compact_input
+    from ocr_devnagari_spark.gates import compact_input
     if not compact_input(df):
         return df          # big/unknown input → leave the scan as-is
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
@@ -1413,8 +1413,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         corpus = d.filter(F.col("doc_id") % 101 != 0)
         # prefilter='bloom' exercises the broadcast-bitset scale path in
         # the gate; results are exact, so the oracle SQL is unchanged
-        return ngram_contamination(corpus, ev, n=8, broadcast_eval=True,
-                                   prefilter="bloom")
+        return ngram_contamination(corpus, ev, n=8, prefilter="bloom")
     q["decontaminate"] = decontaminate
 
     # ---- anchor-text top terms per destination host ----

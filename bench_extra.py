@@ -16,8 +16,8 @@ no Spark — so a cross-phase comparison of bench numbers can be
 normalized for the documented hypervisor stalls (5× run-to-run variance
 on identical plans).  Record it next to any bench sample you cite.
 
-Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (same contract as bench.py),
-OCRDS_BENCH_REPS (default 3).
+Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: the CPUs this
+process may run on, as ``get_spark``), OCRDS_BENCH_REPS (default 3).
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from ocr_devnagari_spark.session import get_spark  # noqa: E402
+from ocr_devnagari_spark.session import default_cores, get_spark  # noqa: E402
 
 BENCH_QUERIES = (
     "tpch_q1", "tpch_q3_top10", "dedup_minhash",
@@ -55,7 +55,7 @@ def _spark(cpus: int):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cores()
     reps = int(os.environ.get("OCRDS_BENCH_REPS", "3"))
     mode = sys.argv[1] if len(sys.argv) > 1 else "time"
 

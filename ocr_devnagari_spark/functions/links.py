@@ -22,7 +22,7 @@ the outlink graph anyway for frontier expansion.
 Scale notes: the rank table is (host, double) — tiny next to the
 corpus — and each iteration is one shuffle on dst plus a broadcastable
 outdeg join. Iterative lineage is truncated per round via the shared
-``_materialize`` (reliable checkpoints on clusters), the
+``gates.materialize`` (reliable checkpoints on clusters), the
 ``connected_components`` discipline.
 """
 
@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.dedup import _materialize
+from ..gates import materialize
 from .url import AUTHORITY_RE, strip_host
 
 HREF_RE = r"(?i)<a\s[^>]*href\s*=\s*[\"']([^\"'<>\s]+)"
@@ -177,8 +177,8 @@ def pagerank(edges: DataFrame, iterations: int = 10,
                      F.col(dst_col).alias("dst")).distinct()
     if not self_loops:
         e = e.filter(F.col("src") != F.col("dst"))
-    e = _materialize(e)
-    nodes = _materialize(
+    e = materialize(e)
+    nodes = materialize(
         e.select(F.col("src").alias("host"))
         .union(e.select("dst")).distinct())
     n = nodes.count()
@@ -194,7 +194,7 @@ def pagerank(edges: DataFrame, iterations: int = 10,
                            (F.col("pr") / F.col("outdeg"))
                            .alias("c")))
         summed = contrib.groupBy("host").agg(F.sum("c").alias("s"))
-        ranks = _materialize(
+        ranks = materialize(
             nodes.join(summed, "host", "left")
             .select("host",
                     F.round(F.lit(base)

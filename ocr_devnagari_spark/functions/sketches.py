@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..gates import broadcast_if_small, materialize
+
 HASH_SPACE = float(1 << 32)
 
 
@@ -146,18 +148,7 @@ def _mg_update(counters: dict, weighted_items, capacity: int) -> dict:
     return counters
 
 
-# candidate sets under this row count broadcast into the recount
-# left-semi join (the keeper-map / eval-gram counted-gate discipline);
-# past it — MG candidates are <= k * n_partitions, so a 100 TB input at
-# 10^5-10^6 splits CAN exceed any sane broadcast — the recount falls
-# back to a plain (non-broadcast) left-semi join and AQE picks the
-# strategy.  The result is identical either way; only the plan changes.
-BROADCAST_CANDIDATE_LIMIT = 5_000_000
-
-
-def heavy_hitters(df: DataFrame, col: str, k: int = 100,
-                  broadcast_limit: int = BROADCAST_CANDIDATE_LIMIT
-                  ) -> DataFrame:
+def heavy_hitters(df: DataFrame, col: str, k: int = 100) -> DataFrame:
     """EXACT heavy hitters: every value of ``col`` whose frequency is
     strictly greater than n/(k+1) (n = non-NULL rows), with its exact
     count — ``(value, cnt)``.
@@ -174,29 +165,20 @@ def heavy_hitters(df: DataFrame, col: str, k: int = 100,
     cnt·(k+1) > n`` oracle hash-matches."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    from ..operators.dedup import _materialize
     rows = df.filter(F.col(col).isNotNull()).select(F.col(col).cast("string"))
     # one MG pass yields candidates AND per-partition row counts; it is
     # materialized (tiny: ≤ k·partitions + partitions rows) so that
     # consuming it twice below does not re-scan the input — the whole
     # operator costs exactly TWO passes over the data (MG + recount)
-    mg = _materialize(_mg_candidates(rows, col, k))
+    mg = materialize(_mg_candidates(rows, col, k))
     cand = mg.filter(F.col(col).isNotNull()).select(col).distinct()
-    # broadcast gate with an a-priori bound first: MG emits ≤ k
-    # counters per partition, so ``k · n_partitions`` bounds the
-    # candidate set WITHOUT running a job — on any sanely-split input
-    # that settles the broadcast decision for free.  Only when the
-    # bound is inconclusive (crawl-scale split counts: 10^5-10^6
-    # partitions × k outgrows any broadcast budget) does the counted
-    # gate run, and it reads the tiny CHECKPOINTED candidate table,
-    # never the input.  Past the limit the recount semi join runs
-    # un-hinted (shuffle / AQE's choice) — the result is identical
-    # either way; only the plan changes.
-    bound = k * max(mg.rdd.getNumPartitions(), 1)
-    if (bound <= broadcast_limit
-            or cand.limit(broadcast_limit + 1).count()
-            <= broadcast_limit):
-        cand = F.broadcast(cand)
+    # MG emits ≤ k counters per partition, so ``k · n_partitions``
+    # bounds the candidate set WITHOUT running a job — on any sanely-
+    # split input that settles the broadcast decision for free.  At
+    # crawl-scale split counts (10^5-10^6 partitions × k) the gate's
+    # count reads the tiny CHECKPOINTED candidate table, never the input.
+    cand = broadcast_if_small(
+        cand, bound=k * max(mg.rdd.getNumPartitions(), 1))
     total = mg.agg(F.sum("_pn").alias("_n"))
     counts = (rows.join(cand, on=col, how="left_semi")
               .groupBy(col).agg(F.count(F.lit(1)).alias("cnt")))

@@ -419,20 +419,6 @@ def dominant_script(col: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Fingerprinting
-# ---------------------------------------------------------------------------
-
-def fingerprint_md5(col: Column) -> Column:
-    """Exact-dup fingerprint (md5 hex — identical in DuckDB)."""
-    return F.md5(col)
-
-
-def fingerprint_xx(col: Column) -> Column:
-    """64-bit engine-side fingerprint (xxhash64; Spark-only, no oracle)."""
-    return F.xxhash64(col)
-
-
-# ---------------------------------------------------------------------------
 # P1 — print-dialog range predicate (utils.py:75-141 parse_page_range)
 # ---------------------------------------------------------------------------
 

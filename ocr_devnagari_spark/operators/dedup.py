@@ -26,98 +26,13 @@ published MinHash-dedup literature (e.g. the C4/RefinedWeb pipelines).
 from __future__ import annotations
 
 import logging
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..gates import materialize as _materialize
+
 log = logging.getLogger(__name__)
-
-
-def _materialize(df: DataFrame, reliable: bool | None = None) -> DataFrame:
-    """Truncate lineage by checkpointing, choosing checkpoint RELIABILITY
-    the way ``connected_components`` does: when ``sc.setCheckpointDir`` is
-    configured the blocks go to the shared store (``checkpoint``), so an
-    executor loss recomputes nothing and kills nothing; otherwise fall
-    back to ``localCheckpoint`` (fine on local[N], where executor ==
-    driver JVM). Every multi-consumer intermediate in this module routes
-    through here so the cluster-safety decision lives in ONE place."""
-    sc = df.sparkSession.sparkContext
-    if reliable is None:
-        reliable = sc.getCheckpointDir() is not None
-    if reliable and sc.getCheckpointDir() is None:
-        raise ValueError("reliable=True needs sc.setCheckpointDir(...)")
-    if not reliable:
-        return df.localCheckpoint(eager=True)
-    # persist-before-checkpoint (the Spark docs' rule): reliable RDD
-    # checkpointing runs a SECOND job to write the checkpoint files
-    # after the eager count, recomputing the whole lineage unless the
-    # blocks are cached.  The checkpoint files carry the data from here
-    # on, so the cache is dropped immediately after.
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        return df.checkpoint(eager=True)
-    finally:
-        df.unpersist()
-
-
-def _conf_bytes(v: str) -> int:
-    """Parse a Spark byte-size conf value ('4194304', '128m', '1g')."""
-    v = v.strip().lower()
-    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    for suf, m in mult.items():
-        if v.endswith(suf + "b"):
-            return int(float(v[:-2]) * m)
-        if v.endswith(suf):
-            return int(float(v[:-1]) * m)
-    if v.endswith("b"):
-        v = v[:-1]
-    return int(v)
-
-
-def compact_input(df: DataFrame, amplification: float = 1.0) -> bool:
-    """True iff ``df``'s file inputs cannot split into ≥ cores scan
-    tasks at the session's ``maxPartitionBytes`` — the shared gate for
-    SMALL-INPUT mitigations (scan-parallelism repartition, cheap
-    materialization of a twice-consumed stage).  At real corpus scale
-    this returns False, so gated mitigations are guaranteed no-ops
-    there; unknown/non-local inputs also return False (no listing →
-    assume big, the conservative direction).
-
-    ``amplification``: when the thing the caller wants to materialize
-    is LARGER than the input (e.g. a per-token window table at ~8× the
-    text bytes), pass the blow-up factor so the budget applies to the
-    MATERIALIZED size, not the input size — otherwise a default-conf
-    session (128 MB splits × 32 cores = a 4 GB "compact" budget) could
-    judge a multi-GB input compact and eagerly checkpoint tens of GB.
-
-    Known imprecision, deliberate: ``inputFiles`` lists each leaf file
-    once even when the plan scans it several times (self-union /
-    self-join), so the byte budget can err low by that scan factor.
-    The gate guards a cost trade-off, not correctness — a ≤2× budget
-    miss changes wall-clock, never results."""
-    spark = df.sparkSession
-    try:
-        split = _conf_bytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes"))
-        files = df.inputFiles()
-        if not files:
-            # non-file-backed input (LocalRelation, JDBC, views over
-            # non-FS sources): size unknown → assume big, same as the
-            # exception path — an empty listing must NOT read as
-            # "compact" or the mitigations would fire on an unbounded
-            # source
-            return False
-        total = 0
-        for f in files:
-            p = f[len("file:"):] if f.startswith("file:") else f
-            total += os.path.getsize(p)
-    except Exception:
-        return False
-    return (total * max(amplification, 1.0)
-            < spark.sparkContext.defaultParallelism * split)
 
 
 def tokens_col(text_col: str = "text"):
@@ -403,30 +318,20 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     GraphX/GraphFrames use. The checkpointed state is only (id, label)
     longs, the algorithm's irreducible working set.
 
-    Checkpoint RELIABILITY is auto-detected (override with ``reliable``):
-    when ``sc.setCheckpointDir`` is configured, rounds use reliable
-    ``checkpoint(eager=True)`` — blocks land on the shared store, so an
+    Checkpoint RELIABILITY is ``gates.materialize``'s rule (override with
+    ``reliable``): when ``sc.setCheckpointDir`` is configured, rounds use
+    reliable checkpoints — blocks land on the shared store, so an
     executor loss mid-iteration recomputes nothing and kills nothing.
     ``localCheckpoint`` (the local-mode default) stores blocks on
     executors: non-recomputable lineage, one lost executor fails the job
     — fine on local[N], wrong on a 1000-executor cluster.
     """
-    sc = pairs.sparkSession.sparkContext
-    if reliable is None:
-        reliable = sc.getCheckpointDir() is not None
-    if reliable and sc.getCheckpointDir() is None:
-        raise ValueError("reliable=True needs sc.setCheckpointDir(...)")
-
-    def ckpt(df: DataFrame) -> DataFrame:
-        return (df.checkpoint(eager=True) if reliable
-                else df.localCheckpoint(eager=True))
-
     edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     sym = edges.union(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    sym = ckpt(sym)
-    labels = ckpt(sym.select(F.col("a").alias("id")).distinct()
-                  .withColumn("component", F.col("id")))
+    sym = _materialize(sym, reliable)
+    labels = _materialize(sym.select(F.col("a").alias("id")).distinct()
+                          .withColumn("component", F.col("id")), reliable)
     for _ in range(max_iter):
         nbr = (sym.join(labels.withColumnRenamed("id", "b"), "b")
                .select(F.col("a").alias("id"), "component"))
@@ -437,9 +342,10 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         # always itself a node id, so the self-join always hits)
         jump = prop.select(F.col("id").alias("component"),
                            F.col("component").alias("jumped"))
-        new_labels = ckpt(prop.join(jump, "component")
-                          .select("id", F.least("component", "jumped")
-                                  .alias("component")))
+        new_labels = _materialize(
+            prop.join(jump, "component")
+            .select("id", F.least("component", "jumped").alias("component")),
+            reliable)
         changed = (labels.withColumnRenamed("component", "old")
                    .join(new_labels, "id")
                    .filter(F.col("old") != F.col("component"))

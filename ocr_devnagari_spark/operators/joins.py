@@ -38,6 +38,8 @@ import logging
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..gates import materialize
+
 log = logging.getLogger(__name__)
 
 
@@ -192,15 +194,13 @@ def range_join(points: DataFrame, intervals: DataFrame,
         raise ValueError("bucket_width must be positive")
     if max_buckets < 1:
         raise ValueError("max_buckets must be >= 1")
-    from .dedup import _materialize
-
     # materialize once: the intervals lineage is consumed up to three
     # times below (narrow bucket join, wide counted gate, wide
     # broadcast join) — for a derived/expensive intervals DF each
     # un-truncated consumer would re-run the full upstream plan.  This
     # also makes the counted gate's eager job a cheap limit over
     # materialized blocks rather than a full re-evaluation.
-    intervals = _materialize(intervals)
+    intervals = materialize(intervals)
     if bucket_width is None:
         # median POSITIVE interval length (point intervals excluded —
         # with them in the sketch a point-dominated mix would yield 0

@@ -32,12 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.repetition import word_ngrams
+from ..gates import broadcast_if_small
 
 PARA_SEP = "\n"
-
-# eval gram sets below this row count are broadcast to the corpus-side
-# join (same order of magnitude as plans/pipeline.py's keeper-map gate)
-BROADCAST_GRAM_LIMIT = 5_000_000
 
 
 def paragraph_rows(df: DataFrame, id_col: str = "doc_id",
@@ -185,7 +182,7 @@ def _bloom_prefilter(doc_grams: DataFrame, eval_grams: DataFrame,
     budget (8-grams average >50 bytes each) while the bitset stays
     ``m/64`` longs — 16 bits/gram ≈ 2 bytes/gram, a 25×+ broadcast
     shrink — so the corpus-side explode is filtered with a broadcast
-    join even when ``broadcast_eval`` had to fall back to a shuffle."""
+    join even when the gram strings themselves fall back to a shuffle."""
     m_bits = BLOOM_MIN_BITS
     while m_bits < min(BLOOM_MAX_BITS, n_eval * BLOOM_BITS_PER_GRAM):
         m_bits <<= 1
@@ -208,7 +205,6 @@ def ngram_contamination(docs: DataFrame, eval_df: DataFrame, n: int = 8,
                         id_col: str = "doc_id", text_col: str = "text",
                         eval_text_col: str = "text",
                         min_hits: int = 1,
-                        broadcast_eval: bool | None = None,
                         prefilter: str | None = None) -> DataFrame:
     """Flag training documents sharing word ``n``-grams with an eval set.
 
@@ -216,10 +212,9 @@ def ngram_contamination(docs: DataFrame, eval_df: DataFrame, n: int = 8,
     — ``hits`` = number of DISTINCT eval n-grams the document contains,
     ``contaminated`` = ``hits >= min_hits``.
 
-    ``broadcast_eval=None`` counts the distinct eval gram set and
-    broadcasts it when it is under ``BROADCAST_GRAM_LIMIT`` rows (the
-    counted-threshold gate used by the exact-dedup keeper map);
-    True/False forces the choice without the counting job.
+    The distinct eval gram set broadcasts when it is under
+    ``gates.BROADCAST_ROWS`` rows (``gates.broadcast_if_small``, the gate
+    of the exact-dedup keeper map).
 
     ``prefilter='bloom'`` inserts a broadcast Bloom-bitset membership
     test on the corpus gram explode before the exact join (see
@@ -232,26 +227,21 @@ def ngram_contamination(docs: DataFrame, eval_df: DataFrame, n: int = 8,
                   .select(F.explode(
                       word_ngrams(F.col(eval_text_col), n)).alias("gram"))
                   .distinct())
-    n_eval = None
-    if broadcast_eval is None:
-        # counted gate WITHOUT persist: a persist here would leak cached
-        # blocks for the session lifetime (the returned DF is lazy, so
-        # there is no safe point to unpersist before the caller runs it).
-        # The eval set is small by definition, so re-running the
-        # explode+distinct lineage once more in the final join is the
-        # cheaper trade in a long-running pipeline.
-        n_eval = eval_grams.count()
-        broadcast_eval = n_eval <= BROADCAST_GRAM_LIMIT
-    if broadcast_eval:
-        eval_grams = F.broadcast(eval_grams)
+    # counted gate WITHOUT persist: a persist here would leak cached
+    # blocks for the session lifetime (the returned DF is lazy, so there
+    # is no safe point to unpersist before the caller runs it).  The
+    # eval set is small by definition, so re-running the explode+distinct
+    # lineage once more in the final join is the cheaper trade in a
+    # long-running pipeline.  The Bloom path sizes its bitset from the
+    # exact count, which then also settles the gate with no second job.
+    n_eval = eval_grams.count() if prefilter == "bloom" else None
+    eval_grams = broadcast_if_small(eval_grams, bound=n_eval)
     doc_grams = (docs
                  .select(F.col(id_col),
                          F.explode(word_ngrams(F.col(text_col), n))
                          .alias("gram"))
                  .distinct())
     if prefilter == "bloom":
-        if n_eval is None:
-            n_eval = eval_grams.count()
         doc_grams = _bloom_prefilter(doc_grams, eval_grams, max(n_eval, 1))
     hit_counts = (doc_grams
                   .join(eval_grams, on="gram", how="inner")

@@ -44,11 +44,9 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-log = logging.getLogger(__name__)
+from ..gates import broadcast_if_small
 
-# weight/model tables under this row count broadcast onto the corpus
-# join (the keeper-map / eval-gram counted-gate discipline)
-BROADCAST_MODEL_LIMIT = 5_000_000
+log = logging.getLogger(__name__)
 
 TOKEN_SEP = r"\s+"
 
@@ -62,9 +60,7 @@ def _tokens(text_col: str):
 
 def linear_quality_score(df: DataFrame, weights, bias: float = 0.0,
                          id_col: str = "doc_id", text_col: str = "text",
-                         threshold: float = 0.5,
-                         broadcast_weights: bool | None = None
-                         ) -> DataFrame:
+                         threshold: float = 0.5) -> DataFrame:
     """Apply a bag-of-words linear classifier to every document.
 
     ``weights`` is the trained model: a ``(term string, w double)``
@@ -76,10 +72,9 @@ def linear_quality_score(df: DataFrame, weights, bias: float = 0.0,
     ``score = sigmoid(bias + Σ w)`` rounded to 6 d.p., ``keep = score
     >= threshold`` (the FineWeb-Edu-style filter verdict).
 
-    ``broadcast_weights=None`` counts the model table and broadcasts it
-    under ``BROADCAST_MODEL_LIMIT`` rows; real vocabularies are 10^4-
-    10^6 terms, so the broadcast path is the norm — past the limit the
-    join falls back to a shuffle hash join on the term.
+    The model table broadcasts under ``gates.BROADCAST_ROWS`` rows; real
+    vocabularies are 10^4-10^6 terms, so the broadcast path is the norm
+    — past the limit the join falls back to a shuffle join on the term.
 
     Malformed ids: one row per DISTINCT ``id_col`` comes out.  Rows
     sharing an id aggregate into one (their tokens pool into one bag),
@@ -87,21 +82,15 @@ def linear_quality_score(df: DataFrame, weights, bias: float = 0.0,
     from :func:`dsir_weights`/:func:`lm_cross_entropy`, which score
     row by row.
     """
-    spark = df.sparkSession
+    bound = None
     if not isinstance(weights, DataFrame):
         weights = list(weights)
-        if broadcast_weights is None:
-            # local model list: the row count is known driver-side, so
-            # the counted gate needs NO Spark job
-            broadcast_weights = len(weights) <= BROADCAST_MODEL_LIMIT
-        weights = spark.createDataFrame(
+        # local model list: the row count is known driver-side, so the
+        # gate needs NO Spark job
+        bound = len(weights)
+        weights = df.sparkSession.createDataFrame(
             weights, "term string, w double")
-    if broadcast_weights is None:
-        broadcast_weights = (
-            weights.limit(BROADCAST_MODEL_LIMIT + 1).count()
-            <= BROADCAST_MODEL_LIMIT)
-    if broadcast_weights:
-        weights = F.broadcast(weights)
+    weights = broadcast_if_small(weights, bound=bound)
     # LEFT join the model onto the exploded tokens and aggregate ALL
     # documents in the one doc-keyed aggregation (count(w)/sum(w) skip
     # the NULL non-matches) instead of inner-join + left join-back onto

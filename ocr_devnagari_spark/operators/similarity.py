@@ -25,6 +25,8 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..gates import materialize
+
 log = logging.getLogger(__name__)
 
 
@@ -580,14 +582,12 @@ def semdedup(emb: DataFrame, tau: float = 0.8,
                         v.alias("v"))
     joinable = e
     if max_cluster is not None:
-        from .dedup import _materialize
-
         # one (cluster → size) aggregate (map-side partial: tiny
         # result), materialized so the oversize count and the semi
         # join below read checkpoint blocks instead of re-running the
         # assignment lineage
-        sizes = _materialize(e.groupBy("cluster")
-                             .agg(F.count(F.lit(1)).alias("_csize")))
+        sizes = materialize(e.groupBy("cluster")
+                            .agg(F.count(F.lit(1)).alias("_csize")))
         n_over = sizes.filter(F.col("_csize") > max_cluster).count()
         if n_over:
             log.warning(

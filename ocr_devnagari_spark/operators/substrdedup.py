@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..gates import compact_input, materialize
+
 
 def _py_rebuild(text, starts, min_len: int):
     """One document's (n_tokens, n_removed, text_clean) from the sorted
@@ -148,7 +150,7 @@ def exact_substring_dedup(docs: DataFrame, min_len: int = 50,
     Arrow stage runs once; the small-input broadcast regime would
     recompute it, so ``materialize_windows=None`` (auto) checkpoints
     the window table exactly when the input is compact
-    (``dedup.compact_input`` — measured ~35% at sf0.1) and leaves it
+    (``gates.compact_input`` — measured ~35% at sf0.1) and leaves it
     lazy at scale, where a corpus-tokens-sized checkpoint write is the
     wrong trade and the exchange reuse already covers it.
 
@@ -160,7 +162,6 @@ def exact_substring_dedup(docs: DataFrame, min_len: int = 50,
         raise ValueError("min_len must be >= 2 tokens")
     wins = _window_hash_stage(docs, min_len, id_col, text_col)
     if materialize_windows is None:
-        from .dedup import compact_input
         # the window table is ~8× the input text bytes (one
         # (id, int, 16-byte digest) row per token), so the compact
         # budget must apply to the MATERIALIZED size — without the
@@ -168,8 +169,7 @@ def exact_substring_dedup(docs: DataFrame, min_len: int = 50,
         # a ~4 GB input "compact" and eagerly checkpoint ~30 GB
         materialize_windows = compact_input(docs, amplification=8.0)
     if materialize_windows:
-        from .dedup import _materialize
-        wins = _materialize(wins)
+        wins = materialize(wins)
     dup_h = (wins.groupBy("h")
              .agg(F.count(F.lit(1)).alias("c"))
              .filter(F.col("c") >= 2)

@@ -34,10 +34,7 @@ from pyspark.sql import functions as F
 from ..functions.repetition import repetition_pass_expr
 from ..functions.splits import split_assign
 from ..functions.text import gopher_pass, token_count
-
-# host-pagerank tables under this row count broadcast onto the corpus
-# join; larger graphs (a real crawl has 10^8+ hosts) shuffle instead
-BROADCAST_HOST_LIMIT = 5_000_000
+from ..gates import broadcast_if_small, compact_input, materialize
 
 
 def curate_docs(df: DataFrame, id_col: str = "doc_id",
@@ -78,7 +75,6 @@ def curate_docs(df: DataFrame, id_col: str = "doc_id",
         gate = gate & blocklist_pass(text, blockterms)
     gated = df.filter(gate)
     if para_max_docs is not None:
-        from ..operators.dedup import _materialize, compact_input
         from ..operators.paragraphs import paragraph_dedup
         # host rides THROUGH the dedup (carry_cols) instead of a
         # join-back against `gated` — the join-back form consumed the
@@ -96,7 +92,7 @@ def curate_docs(df: DataFrame, id_col: str = "doc_id",
         # corpus to a table first (the ANN-index amortization pattern).
         gated = gated.select(id_col, text_col, host_col)
         if compact_input(df):
-            gated = _materialize(gated)
+            gated = materialize(gated)
         rewritten = paragraph_dedup(
             gated, id_col=id_col,
             text_col=text_col, max_docs=para_max_docs,
@@ -137,20 +133,17 @@ def authority_weighted_mix(docs: DataFrame, edges: DataFrame,
     """
     from ..functions.links import pagerank
     from ..functions.splits import WHEEL, hash_bucket
-    from ..operators.dedup import _materialize
 
     tiers = tiers or [(0.05, 1.0), (0.01, 0.5), (-1.0, 0.1)]
     # materialize: consumed twice (gate count + join), and the lineage
     # is `iterations` chained joins — re-running it would double the
     # whole pagerank computation
-    pr = _materialize(pagerank(edges, iterations=iterations)
-                      .withColumnRenamed("host", "_h"))
-    # counted broadcast gate (the keeper-map / eval-gram discipline): a
-    # real crawl's host table can run to hundreds of millions of rows —
-    # forcing the broadcast there would blow the driver; past the limit
-    # the join falls back to a shuffle hash join on the host key.
-    if pr.limit(BROADCAST_HOST_LIMIT + 1).count() <= BROADCAST_HOST_LIMIT:
-        pr = F.broadcast(pr)
+    pr = materialize(pagerank(edges, iterations=iterations)
+                     .withColumnRenamed("host", "_h"))
+    # a real crawl's host table can run to hundreds of millions of rows
+    # — forcing the broadcast there would blow the driver; past the
+    # gate's limit the join falls back to a shuffle join on the host key.
+    pr = broadcast_if_small(pr)
     joined = docs.join(pr, F.col(host_col) == F.col("_h"), "left")
     prv = F.coalesce(F.col("pr"), F.lit(0.0))
     tier = F.lit(len(tiers) - 1)

@@ -39,6 +39,7 @@ from pyspark.sql import types as T
 
 from ..config import DEFAULT_CONFIG, ExtractConfig
 from ..extract_core import CRITICAL_FAMILIES
+from ..gates import broadcast_if_small, materialize
 from ..operators.extract import EXTRACTED_SCHEMA, extract_fused
 from ..sources.icebox import IceboxTable
 
@@ -144,8 +145,7 @@ def keeper_map(pairs: DataFrame, prior: DataFrame | None = None) -> DataFrame:
 
 def exact_dedup_mark(staged: DataFrame,
                      prior: DataFrame | None = None,
-                     keepers: DataFrame | None = None,
-                     keeper_broadcast_rows: int = 5_000_000) -> DataFrame:
+                     keepers: DataFrame | None = None) -> DataFrame:
     """In-job exact dedup — MARK, don't drop: every url still commits (so
     resume converges to zero pending); non-canonical copies carry
     ``duplicate_of`` = the canonical url for their fingerprint. Consumers
@@ -156,19 +156,18 @@ def exact_dedup_mark(staged: DataFrame,
     Join strategy is GATED, not forced: the keeper map is dup-fraction-
     sized, which is usually broadcastable but NOT always — re-crawl-heavy
     corpora run 20-30%+ exact dups, and a forced broadcast of a
-    billion-row map kills the driver. The map is counted first (a
-    column-pruned pass over (fingerprint, url) hashes only); at or below
-    ``keeper_broadcast_rows`` it broadcasts (and no Exchange carries the
-    payload — ``test_dedup_mark_shuffles_no_payload``), above it the hint
-    is omitted and AQE plans a shuffled join (0 = never broadcast, skips
-    the count). Pass a precomputed ``keepers`` to reuse a global map while
-    marking a subset of files (the single-write commit path below).
+    billion-row map kills the driver. ``gates.broadcast_if_small``
+    counts the map first (a bounded, column-pruned pass over
+    (fingerprint, url) hashes only); under its limit the map broadcasts
+    (and no Exchange carries the payload —
+    ``test_dedup_mark_shuffles_no_payload``), above it the hint is
+    omitted and AQE plans a shuffled join. Pass a precomputed ``keepers``
+    to reuse a global map while marking a subset of files (the
+    single-write commit path below).
     """
     if keepers is None:
         keepers = keeper_map(staged, prior)
-    if keeper_broadcast_rows > 0 and \
-            keepers.count() <= keeper_broadcast_rows:
-        keepers = F.broadcast(keepers)
+    keepers = broadcast_if_small(keepers)
     return (staged.drop("duplicate_of")
             .join(keepers, "fingerprint", "left")
             .withColumn(
@@ -200,17 +199,15 @@ def mark_staged_duplicates(spark: SparkSession, out: IceboxTable,
     """
     from urllib.parse import unquote, urlparse
 
-    from ..operators.dedup import _materialize
-
     staged = spark.read.schema(schema).parquet(*files)
     # materialize the keeper map once: it is consumed three times below
     # (affected-file probe, broadcast-gate count, mark join), and each
     # un-truncated consumer would re-run the full staged scan +
-    # fingerprint groupBy — the dominant planning cost.  _materialize
+    # fingerprint groupBy — the dominant planning cost.  materialize
     # picks reliable checkpoints when sc.setCheckpointDir is configured
     # (cluster: survives executor loss) and localCheckpoint otherwise
-    # (local[N]: executor == driver JVM) — the dedup-module discipline.
-    keepers = _materialize(keeper_map(staged, prior))
+    # (local[N]: executor == driver JVM).
+    keepers = materialize(keeper_map(staged, prior))
     hits = (staged.select("fingerprint", "url")
             .withColumn("_file", F.input_file_name())
             .join(keepers, "fingerprint")

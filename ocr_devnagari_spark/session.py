@@ -77,6 +77,13 @@ def driver_memory() -> str:
     return f"{max(total // 4 // 2**20, 1024)}m"
 
 
+def default_cores() -> int:
+    """``local[N]`` width: ``$SPARK_GRAFT_CPUS`` if set, else the CPUs this
+    process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
+
+
 def get_spark(
     app_name: str = "ocr_devnagari_spark",
     cores: int | None = None,
@@ -84,8 +91,7 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS",
-                                   len(os.sched_getaffinity(0))))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     builder = (
@@ -101,7 +107,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2000")
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
-        # reliable checkpoint files (the _materialize cluster path) are
+        # reliable checkpoint files (the gates.materialize cluster path) are
         # NOT removed by default; with the cleaner on, a checkpointed
         # intermediate whose DataFrame goes out of scope also releases
         # its files — long-lived sessions that construct gate queries

@@ -243,19 +243,12 @@ class IceboxTable:
         if not m["files"]:
             raise FileNotFoundError(
                 f"snapshot {snapshot_id} in {self.path} is reachable "
-                "but empty (zero data files); use read_or_empty for a "
-                "typed empty DataFrame")
+                "but empty (zero data files)")
         gone = [f for f in m["files"] if not os.path.exists(f)]
         if gone:
             raise FileNotFoundError(
                 f"snapshot {snapshot_id} data expired in {self.path} "
                 f"({len(gone)}/{len(m['files'])} files collected)")
-        return spark.read.parquet(*m["files"])
-
-    def read_or_empty(self, spark: SparkSession, schema) -> DataFrame:
-        m = self.current_manifest()
-        if m is None or not m["files"]:
-            return spark.createDataFrame([], schema)
         return spark.read.parquet(*m["files"])
 
     # -- maintenance (K5 cache-GC analog: cache.py:228-254) ------------------

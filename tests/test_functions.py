@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_devnagari_spark import gates
 from ocr_devnagari_spark.extract_core import (
     detect_critical,
     estimate_confidence,
@@ -272,7 +273,7 @@ def test_heavy_hitters_plan_shape(spark):
     assert "Cartesian" not in plan
 
 
-def test_heavy_hitters_gated_shuffle_path(spark):
+def test_heavy_hitters_gated_shuffle_path(spark, monkeypatch):
     """Counted broadcast gate: forcing a zero broadcast budget must
     route the recount through a NON-broadcast semi join (AQE's pick)
     with IDENTICAL results — at crawl scale the MG candidate set
@@ -285,7 +286,8 @@ def test_heavy_hitters_gated_shuffle_path(spark):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        forced = heavy_hitters(df, "w", k=4, broadcast_limit=0)
+        monkeypatch.setattr(gates, "BROADCAST_ROWS", 0)
+        forced = heavy_hitters(df, "w", k=4)
         # with auto-broadcast off AND the gate refusing the hint, the
         # candidate semi join must plan as a non-broadcast join — the
         # hinted path would broadcast regardless of this conf

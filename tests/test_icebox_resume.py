@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ocr_devnagari_spark import gates
 from ocr_devnagari_spark.config import ExtractConfig
 from ocr_devnagari_spark.plans.pipeline import (
     pending_pages,
@@ -322,7 +323,8 @@ def test_dedup_mark_shuffles_no_payload(spark, tmp_path):
             assert "text#" not in block, f"payload in shuffle:\n{block}"
 
 
-def test_dedup_mark_large_keeper_map_not_broadcast(spark, tmp_path):
+def test_dedup_mark_large_keeper_map_not_broadcast(spark, tmp_path,
+                                                   monkeypatch):
     """Above the keeper-broadcast gate the join must plan WITHOUT a
     broadcast of the keeper map (a forced broadcast of a billion-row map
     OOMs the driver on re-crawl-heavy corpora) — and produce identical
@@ -337,7 +339,7 @@ def test_dedup_mark_large_keeper_map_not_broadcast(spark, tmp_path):
     df.write.parquet(staged_dir)
     staged = spark.read.parquet(staged_dir)
 
-    # keeper_broadcast_rows=0 removes the hint; with auto-broadcast off
+    # a zero broadcast limit removes the hint; with auto-broadcast off
     # (emulating a keeper map too big for the thresholds) the join MUST
     # plan shuffled — the old forced F.broadcast() ignored both knobs
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -346,7 +348,9 @@ def test_dedup_mark_large_keeper_map_not_broadcast(spark, tmp_path):
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        shuffled = exact_dedup_mark(staged, keeper_broadcast_rows=0)
+        with monkeypatch.context() as m:
+            m.setattr(gates, "BROADCAST_ROWS", 0)
+            shuffled = exact_dedup_mark(staged)
         got = {(r.url, r.duplicate_of) for r in shuffled.collect()}
         plan = shuffled._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" not in plan

@@ -180,3 +180,42 @@ def test_no_twin_implementation_selectors():
                     for p in inspect.signature(fn).parameters
                     if p == "impl" or p.endswith("_impl")]
     assert not offenders, offenders
+
+
+def test_gates_live_in_one_module():
+    """Size-driven plan decisions have one home, ``gates.py``: no other
+    package module checkpoints a DataFrame or runs a
+    ``.limit(x + 1).count()`` gate.  The one exemption is the range
+    join's wide-interval cap, which raises instead of choosing a plan."""
+    import ast
+    import pathlib
+
+    import ocr_devnagari_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    exempt = {("operators/joins.py", "wide_limit")}
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "gates.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)):
+                continue
+            where = f"{rel}:{node.lineno}"
+            if node.func.attr in ("localCheckpoint", "checkpoint"):
+                offenders.append(f"{where} .{node.func.attr}(")
+            inner = node.func.value
+            if (node.func.attr == "count"
+                    and isinstance(inner, ast.Call)
+                    and isinstance(inner.func, ast.Attribute)
+                    and inner.func.attr == "limit" and inner.args
+                    and isinstance(inner.args[0], ast.BinOp)
+                    and isinstance(inner.args[0].op, ast.Add)
+                    and isinstance(inner.args[0].right, ast.Constant)
+                    and inner.args[0].right.value == 1
+                    and (rel, ast.unparse(inner.args[0].left))
+                    not in exempt):
+                offenders.append(f"{where} counted gate")
+    assert not offenders, offenders

@@ -8,6 +8,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_devnagari_spark import gates
 from ocr_devnagari_spark.operators.scoring import (
     ccnet_tier,
     dsir_bucket_logratios,
@@ -53,12 +54,11 @@ def test_linear_score_matches_brute_force(spark):
     assert got[2]["score"] == 0.5 and got[2]["keep"] is True
 
 
-def test_linear_score_broadcast_gate_paths_agree(spark):
+def test_linear_score_broadcast_gate_paths_agree(spark, monkeypatch):
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
-    a = sorted(linear_quality_score(
-        df, WEIGHTS, broadcast_weights=True).collect())
-    b = sorted(linear_quality_score(
-        df, WEIGHTS, broadcast_weights=False).collect())
+    a = sorted(linear_quality_score(df, WEIGHTS).collect())
+    monkeypatch.setattr(gates, "BROADCAST_ROWS", 0)
+    b = sorted(linear_quality_score(df, WEIGHTS).collect())
     assert a == b
 
 

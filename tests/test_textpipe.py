@@ -9,6 +9,7 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_devnagari_spark import gates
 from ocr_devnagari_spark.functions import pii
 from ocr_devnagari_spark.functions.links import anchor_rows, anchor_term_stats
 from ocr_devnagari_spark.functions.repetition import (
@@ -236,16 +237,16 @@ def test_paragraph_sep_is_literal_not_regex(spark):
 # decontamination
 # ---------------------------------------------------------------------------
 
-def test_ngram_contamination_bruteforce(spark):
+def test_ngram_contamination_bruteforce(spark, monkeypatch):
     docs = [(i, " ".join(f"w{(i * 7 + j) % 23}" for j in range(30)))
             for i in range(40)]
     evals = [(0, docs[5][1]), (1, docs[11][1][:60])]
     ddf = _pdf(spark, docs)
     edf = spark.createDataFrame(evals, "id long, text string")
-    for bc in (True, False):
+    for rows in (gates.BROADCAST_ROWS, 0):     # broadcast, then shuffle
+        monkeypatch.setattr(gates, "BROADCAST_ROWS", rows)
         got = {r["doc_id"]: (r["hits"], r["contaminated"])
-               for r in ngram_contamination(
-                   ddf, edf, n=5, broadcast_eval=bc).collect()}
+               for r in ngram_contamination(ddf, edf, n=5).collect()}
         egrams = set()
         for _, t in evals:
             w = t.split(" ")
@@ -263,7 +264,7 @@ def test_contamination_spine_covers_all_docs(spark):
     ddf = _pdf(spark, [(0, "a b c"), (1, "totally unrelated words here")])
     edf = _pdf(spark, [(9, "a b c")])
     got = {r["doc_id"]: r["hits"] for r in ngram_contamination(
-        ddf, edf, n=3, broadcast_eval=True).collect()}
+        ddf, edf, n=3).collect()}
     assert got == {0: 1, 1: 0}
 
 
@@ -502,18 +503,18 @@ def test_lang_confidence_share(spark):
     assert got[2] == ("und", 0.0)
 
 
-def test_ngram_contamination_bloom_parity(spark):
+def test_ngram_contamination_bloom_parity(spark, monkeypatch):
     from ocr_devnagari_spark.operators.paragraphs import _bloom_prefilter
     docs = [(i, " ".join(f"w{(i * 7 + j) % 23}" for j in range(30)))
             for i in range(40)]
     evals = [(0, docs[5][1]), (1, docs[11][1][:60])]
     ddf = _pdf(spark, docs)
     edf = spark.createDataFrame(evals, "id long, text string")
+    monkeypatch.setattr(gates, "BROADCAST_ROWS", 0)
     plain = sorted(map(tuple, ngram_contamination(
-        ddf, edf, n=5, broadcast_eval=False).collect()))
+        ddf, edf, n=5).collect()))
     bloom = sorted(map(tuple, ngram_contamination(
-        ddf, edf, n=5, broadcast_eval=False,
-        prefilter="bloom").collect()))
+        ddf, edf, n=5, prefilter="bloom").collect()))
     assert plain == bloom
     # no false negatives by construction: every eval gram passes its
     # own membership test even at a deliberately tiny bitset

@@ -4,7 +4,14 @@ from __future__ import annotations
 
 import os
 
-from ocr_devnagari_spark.session import driver_memory
+from ocr_devnagari_spark.session import default_cores, driver_memory
+
+
+def test_default_cores_env_then_affinity(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cores() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert default_cores() == len(os.sched_getaffinity(0))
 
 
 def test_driver_memory_override_wins(monkeypatch):

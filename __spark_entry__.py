@@ -21,6 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ocr_devnagari_spark.extract_core import CONFIDENCE_THRESHOLD
 from ocr_devnagari_spark.functions.text import (
     BPE_ISH_RE,
     bpe_ish_count,
@@ -638,8 +639,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # single-row-group input the whole query would run on one core
         d = _spread(_t(spark, sf_dir, "documents")).withColumn(
             "t2", _spiked_text())
+        conf = confidence_expr(F.col("t2"))
         route = (F.when(~validation_ok(F.col("t2"))
-                        | (confidence_expr(F.col("t2")) < 0.85)
+                        | (conf < CONFIDENCE_THRESHOLD)
                         | critical_flag(F.col("t2")),
                         F.lit("fast+precise"))
                  .otherwise(F.lit("fast")))
@@ -655,7 +657,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         d = _t(spark, sf_dir, "documents").withColumn("t2", _spiked_text())
         esc = (~validation_ok(F.col("t2"))
-               | (confidence_expr(F.col("t2")) < 0.85)
+               | (confidence_expr(F.col("t2")) < CONFIDENCE_THRESHOLD)
                | critical_flag(F.col("t2"))).cast("long")
         c_fast = backend_cost_per_page("fast")
         c_precise = backend_cost_per_page("precise")
@@ -1230,6 +1232,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["events_sessionize"] = events_sessionize
 
     # ---- multimodal plumbing (rows-only) ----
+    # Text bytes are no image format, so every row shows the stage's
+    # never-die contract: NULL width/height/phash, real n_bytes.
     def multimodal_features(spark, sf_dir):
         _ensure_shipped(spark)
         d = _t(spark, sf_dir, "documents")
@@ -1237,7 +1241,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.concat(F.lit("m"), F.col("doc_id")).alias("media_id"),
             F.lit("image").alias("kind"),
             F.col("text").cast("binary").alias("payload"),
-            F.lit("image/fake").alias("mime"))
+            F.lit("text/plain").alias("mime"))
         return image_feature_stage(media).select(
             "media_id", "width", "height", "n_bytes", "phash")
     q["multimodal_features"] = multimodal_features
@@ -1278,7 +1282,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                     recs, columns=[f.name for f in MEDIA_SCHEMA.fields])
 
         media = d.mapInPandas(to_media, MEDIA_SCHEMA)
-        return image_feature_stage(media, fake=False).select(
+        return image_feature_stage(media).select(
             "media_id", "width", "height", "n_bytes", "phash")
     q["multimodal_real_decode"] = multimodal_real_decode
 
@@ -1357,8 +1361,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                     recs, columns=[f.name for f in MEDIA_SCHEMA.fields])
 
         media = d.mapInPandas(to_mp4, MEDIA_SCHEMA)
-        return frame_sample_stage(media, every_ms=400, max_frames=3,
-                                  fake=False)
+        return frame_sample_stage(media, every_ms=400, max_frames=3)
     q["multimodal_video_sample"] = multimodal_video_sample
 
     # ---- Gopher A1.1 repetition signals (within-doc n-gram stats) ----
@@ -1981,9 +1984,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # in-window; window_latest_order keeps its both-SF pytest oracle
         "events_sessionize", "token_quantiles", "tpch_q5_region",
         # multimodal_video_sample (real ISO BMFF parse) takes the slot
-        # of multimodal_features, whose fake-decoder plumbing is the
-        # least informative of the family now that all three real
-        # decode paths exist; features keeps its both-SF pytest row
+        # of multimodal_features, which feeds text bytes to the image
+        # decoder and so reads all-NULL features: the least informative
+        # of the family; features keeps its both-SF pytest row
         "multimodal_video_sample", "multimodal_real_decode",
         "multimodal_audio_decode", "warc_roundtrip", "warc_cdx",
         "crawl_diff_report", "robots_sitemaps",

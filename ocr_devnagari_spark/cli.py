@@ -80,30 +80,36 @@ def cmd_extract(args) -> int:
     return 0
 
 
-def _bench_level(cores: int, corpus: str, reps: int) -> dict:
-    """One sweep level: fresh session at local[cores], warm the Python
-    workers, best-of-reps fused extraction."""
-    from pyspark.sql import functions as F
-
+def _timed_extract(spark, corpus: str, reps: int) -> dict:
+    """Best-of-``reps`` fused extraction over the corpus."""
     from .operators.extract import extract_fused
     from .plans.pipeline import read_pages
-    from .session import get_spark
-    spark = get_spark(f"ocrds-bench-{cores}", cores=cores,
-                      shuffle_partitions=cores)
     pages = read_pages(spark, corpus)
-    warm = F.pandas_udf(lambda s: s, "long")
-    spark.range(cores * 4, numPartitions=cores * 4).select(
-        warm("id")).count()
     runs = []
     n = 0
     for _ in range(max(reps, 1)):
         t0 = time.monotonic()
         n = extract_fused(pages).count()
         runs.append(round(time.monotonic() - t0, 3))
-    spark.stop()
     best = min(runs)
-    return {"workers": cores, "docs": n, "runs_sec": runs,
-            "best_sec": best, "docs_per_sec": round(n / best, 1)}
+    return {"docs": n, "runs_sec": runs, "best_sec": best,
+            "docs_per_sec": round(n / best, 1)}
+
+
+def _bench_level(cores: int, corpus: str, reps: int) -> dict:
+    """One sweep level: fresh session at local[cores], warm the Python
+    workers, best-of-reps fused extraction."""
+    from pyspark.sql import functions as F
+
+    from .session import get_spark
+    spark = get_spark(f"ocrds-bench-{cores}", cores=cores,
+                      shuffle_partitions=cores)
+    warm = F.pandas_udf(lambda s: s, "long")
+    spark.range(cores * 4, numPartitions=cores * 4).select(
+        warm("id")).count()
+    result = _timed_extract(spark, corpus, reps)
+    spark.stop()
+    return {"workers": cores, **result}
 
 
 def cmd_bench(args) -> int:
@@ -126,21 +132,10 @@ def cmd_bench(args) -> int:
                           "optimal_workers": best["workers"],
                           "optimal_docs_per_sec": best["docs_per_sec"]}))
         return 0
-    from .operators.extract import extract_fused
-    from .plans.pipeline import read_pages
     spark = _spark(args)
-    pages = read_pages(spark, args.corpus)
-    runs = []
-    n = 0
-    for _ in range(max(args.reps, 1)):
-        t0 = time.monotonic()
-        n = extract_fused(pages).count()
-        runs.append(round(time.monotonic() - t0, 3))
-    best = min(runs)
-    print(json.dumps({"command": "bench", "docs": n, "runs_sec": runs,
-                      "best_sec": best,
-                      "docs_per_sec": round(n / best, 1),
-                      "cores": args.cores}))
+    print(json.dumps({"command": "bench",
+                      **_timed_extract(spark, args.corpus, args.reps),
+                      "cores": spark.sparkContext.defaultParallelism}))
     return 0
 
 

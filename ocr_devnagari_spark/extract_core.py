@@ -42,7 +42,10 @@ from html import unescape
 # Shared constants
 # ---------------------------------------------------------------------------
 
-CONFIDENCE_THRESHOLD = 0.85      # hybrid_backend.py:45 / base.py:34-37
+# Rows whose fast-path confidence is below this escalate to the precise
+# path. The one definition: the reference carries it twice
+# (``hybrid_backend.py:45`` and ``base.py:34-37``).
+CONFIDENCE_THRESHOLD = 0.85
 MIN_VALID_LENGTH = 20            # gemini_backend.py:115
 
 PDF_MAGIC = b"FPDF1\n"
@@ -716,7 +719,6 @@ RESULT_FIELDS = ("url", "text", "success", "confidence", "error",
 
 
 def extract_document(url: str, payload: bytes,
-                     threshold: float = CONFIDENCE_THRESHOLD,
                      primary=None, precise=None) -> dict:
     """The per-row pure function: route → extract → validate → escalate.
 
@@ -753,7 +755,7 @@ def extract_document(url: str, payload: bytes,
     ok, err = validate_text(fast_text)
     conf = estimate_confidence(fast_text)
     critical, _cscore, hits = detect_critical(fast_text)
-    escalate = (not ok) or (conf < threshold) or critical
+    escalate = (not ok) or (conf < CONFIDENCE_THRESHOLD) or critical
 
     if not escalate:
         return {

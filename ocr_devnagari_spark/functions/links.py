@@ -163,21 +163,18 @@ def host_edges(df: DataFrame, src_host_col: str = "host",
 
 
 def pagerank(edges: DataFrame, iterations: int = 10,
-             damping: float = 0.85,
-             src_col: str = "src_host", dst_col: str = "dst_host",
-             self_loops: bool = False) -> DataFrame:
+             damping: float = 0.85, src_col: str = "src_host",
+             dst_col: str = "dst_host") -> DataFrame:
     """(host, pr) after ``iterations`` rounds of damped power iteration
     over the DISTINCT edge set (parallel edges count once — PageRank is
-    defined on the graph, not the multigraph). Nodes = union of sources
-    and destinations; dangling nodes contribute nothing (mass dropped,
-    see module docstring). Every iteration rounds pr to 6 decimals —
+    defined on the graph, not the multigraph), self-loops dropped.
+    Nodes = union of sources and destinations; dangling nodes contribute
+    nothing (mass dropped, see module docstring). Every iteration rounds pr to 6 decimals —
     that is what makes the result reproducible across engines and
     partitionings (float addition is not associative)."""
     e = edges.select(F.col(src_col).alias("src"),
                      F.col(dst_col).alias("dst")).distinct()
-    if not self_loops:
-        e = e.filter(F.col("src") != F.col("dst"))
-    e = materialize(e)
+    e = materialize(e.filter(F.col("src") != F.col("dst")))
     nodes = materialize(
         e.select(F.col("src").alias("host"))
         .union(e.select("dst")).distinct())

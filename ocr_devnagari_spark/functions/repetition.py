@@ -20,8 +20,6 @@ stated precisely so the DuckDB oracle can mirror it bit-for-bit:
 - dup fraction  = ``sum((cnt - 1) * length(gram)) / length(text)`` over
   grams with cnt ≥ 2, capped at 1 (the first occurrence is "legitimate",
   repeats are the duplicated mass — overlapping repeats count multiply).
-- ``top_gram`` tie-break: highest char mass, then lexicographically
-  greatest gram (struct max), part of the spec.
 
 Scale notes: a per-document statistic never needs to leave its row,
 so the signals are a shuffle-free single projection.  The gate and the
@@ -30,9 +28,7 @@ Counter over Arrow batches — measured ~12× a pure-Catalyst in-row
 construction, because Spark evaluates lambda higher-order functions
 per element WITHOUT whole-stage codegen.  They follow the HALF_UP
 6-d.p. rounding rule (Python's banker's round diverges on exact ties)
-and match the DuckDB oracle.  ``ngram_stats`` stays pure Catalyst
-(grams in the array domain, sorted in-row, one ``F.aggregate``
-run-length pass) because it also reports the tie-broken top gram.
+and match the DuckDB oracle.
 
 No counterpart in the reference (an OCR orchestrator); this family is
 part of the engine's web-corpus surface alongside functions/text.py's
@@ -63,77 +59,6 @@ def word_ngrams(col: Column, n: int) -> Column:
         F.array().cast("array<string>"))
 
 
-def _run_stats(sorted_grams: Column) -> Column:
-    """struct(top, dup, topg) from a SORTED gram array via one
-    ``F.aggregate`` pass over run-lengths — per-document repetition is
-    a per-ROW statistic, so it never needs to leave the row: no
-    explode, no shuffle.
-
-    ``top`` = max over runs of run·len(gram) (ties: the ``>=`` update
-    on the ascending-sorted array keeps the lexicographically GREATEST
-    gram, the documented tie rule); ``dup`` = Σ (run−1)·len(gram) over
-    runs ≥ 2.  The "" sentinel is safe:
-    an n≥2 gram always contains the join space, and for n=1 an empty
-    first gram simply extends the zero-length initial run (counted
-    correctly from run=0).
-    """
-    zero = F.lit(0).cast("long")
-    init = F.struct(F.lit("").alias("prev"), zero.alias("run"),
-                    zero.alias("top"), zero.alias("dup"),
-                    F.lit("").alias("topg"))
-
-    def _closed(acc):
-        # stats of the run that just ended (acc.prev × acc.run)
-        mass = acc["run"] * F.length(acc["prev"])
-        better = (acc["run"] > 0) & (mass >= acc["top"])
-        return {"top": F.when(better, mass).otherwise(acc["top"]),
-                "dup": F.when(acc["run"] >= 2,
-                              acc["dup"] + (acc["run"] - 1)
-                              * F.length(acc["prev"]))
-                .otherwise(acc["dup"]),
-                "topg": F.when(better, acc["prev"]).otherwise(acc["topg"])}
-
-    def step(acc, g):
-        same = acc["prev"] == g
-        c = _closed(acc)
-        return F.struct(
-            g.alias("prev"),
-            F.when(same, acc["run"] + F.lit(1).cast("long"))
-            .otherwise(F.lit(1).cast("long")).alias("run"),
-            *[F.when(same, acc[k]).otherwise(c[k]).alias(k)
-              for k in ("top", "dup", "topg")])
-
-    def finish(acc):
-        c = _closed(acc)
-        return F.struct(*[c[k].alias(k) for k in ("top", "dup", "topg")])
-
-    return F.aggregate(sorted_grams, init, step, finish)
-
-
-def ngram_stats(df: DataFrame, n: int, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """Per-document n-gram repetition stats.
-
-    Returns ``(id_col, top_gram, top_frac, dup_frac)`` with the
-    definitions in the module docstring, fractions rounded to 6 d.p.
-    Documents with fewer than ``n`` words yield no row (callers
-    left-join and treat NULL as "cannot repeat").
-    """
-    grams = word_ngrams(F.col(text_col), n)
-    st = _run_stats(F.array_sort(grams))
-    frac = lambda c: F.round(  # noqa: E731
-        F.least(F.lit(1.0), c.cast("double") / F.col("_total")), 6)
-    return (df.select(F.col(id_col),
-                      F.length(F.col(text_col)).alias("_total"),
-                      F.size(grams).alias("_ng"),
-                      st.alias("_st"))
-            .filter(F.col("_ng") > 0)
-            .select(F.col(id_col),
-                    F.col("_st.topg").alias("top_gram"),
-                    frac(F.col("_st.top")).alias("top_frac"),
-                    frac(F.col("_st.dup")).alias("dup_frac")))
-
-
 def _round6(x: float) -> float:
     """HALF_UP to 6 d.p. over the float's SHORTEST-DECIMAL repr —
     ``Decimal(repr(x))`` mirrors Java ``BigDecimal.valueOf(double)``
@@ -150,7 +75,7 @@ def _round6(x: float) -> float:
 
 def _py_signals(text: str, specs: tuple):
     """One document's signals for ``specs`` = ((n, want_top), ...) —
-    the SAME mass/round definitions as ``ngram_stats`` (gram chars =
+    the mass/round definitions of the module docstring (gram chars =
     sum(word lens) + n−1 = len(' '.join(gram)))."""
     from collections import Counter
     if text is None:

@@ -16,15 +16,14 @@ A compliant training-data pipeline drops pages whose authors opted out:
   in SQL for the oracle.
 - ``crawl_delays(df)`` — per-host politeness: ``Crawl-delay`` seconds
   for the ``*`` group (non-standard but ubiquitous; fractional allowed).
-- ``match_disallowed(urls, rules)`` — URL × rule prefix match via a
-  broadcast join (the rules table is tiny next to a crawl frontier).
+- ``match_policy(urls, policies)`` — URL × rule match via a broadcast
+  join (the rules table is tiny next to a crawl frontier).
 
 ``Allow`` precedence is implemented per RFC 9309 §2.2.2: among all
 rules whose prefix matches the URL path, the LONGEST wins; on a length
 tie Allow beats Disallow (``parse_robots_policies`` +
 ``match_policy`` — the argmax is an integer ``2·len + is_allow`` max,
-portable to the DuckDB oracle). ``match_disallowed`` keeps the
-conservative Disallow-only reading for callers that want it.
+portable to the DuckDB oracle).
 
 ``match_policy`` supports the ``*`` and end-anchor ``$`` wildcards
 (RFC 9309 §2.2.3, crawlers SHOULD implement them) by compiling each
@@ -32,8 +31,7 @@ rule row into an anchored regex COLUMN — regex specials escaped via a
 constant replace chain, ``*`` → ``.*``, a trailing ``$`` anchors —
 mirrored operation-for-operation in the SQL oracle. Rule "length" for
 precedence is the raw rule string's length, wildcards included (the
-RFC's octet count). ``wildcards=False`` restores plain prefix
-matching.
+RFC's octet count).
 
 Documented simplification: agent-specific groups other than ``*`` are
 ignored (a trainer's crawler should follow the generic group unless it
@@ -162,24 +160,20 @@ def rule_regex(prefix: Column) -> Column:
 
 def match_policy(urls: DataFrame, policies: DataFrame,
                  host_col: str = "host",
-                 path_col: str = "path",
-                 wildcards: bool = True) -> DataFrame:
+                 path_col: str = "path") -> DataFrame:
     """urls + ``disallowed`` under RFC 9309 precedence: among matching
     rules the longest wins, Allow beating Disallow on a length tie.
     The argmax is ``max(2·len(rule) + is_allow)`` — a plain integer
-    max, so the DuckDB oracle states the identical formula. With
-    ``wildcards`` (default), rules compile to anchored regexes
-    (``rule_regex``) and match via RLIKE-with-column-pattern; without,
-    plain prefix matching. Same broadcast shape as
-    ``match_disallowed``; duplicate input rows are preserved 1:1."""
+    max, so the DuckDB oracle states the identical formula. Rules
+    compile to anchored regexes (``rule_regex``) and match via
+    RLIKE-with-column-pattern. The policies side is tiny (one
+    robots.txt per host) → BROADCAST, so a 10^12-row frontier never
+    shuffles; duplicate input rows are preserved 1:1."""
     tagged = _tag_rows(urls)
     r = policies.select(F.col("host").alias(host_col),
                         F.col("prefix").alias(_PFX),
                         F.col("allow").alias(_ALW))
-    if wildcards:
-        hit = F.rlike(F.col(path_col), rule_regex(F.col(_PFX)))
-    else:
-        hit = F.col(path_col).startswith(F.col(_PFX))
+    hit = F.rlike(F.col(path_col), rule_regex(F.col(_PFX)))
     score = F.when(F.col(_PFX).isNotNull() & hit,
                    F.length(_PFX) * 2 + F.col(_ALW).cast("int"))
     j = (tagged.join(F.broadcast(r), host_col, "left")
@@ -258,23 +252,3 @@ def _tag_rows(urls: DataFrame) -> DataFrame:
         raise ValueError(
             f"reserved column name(s) {sorted(clash)} in input")
     return urls.withColumn(_RID, F.monotonically_increasing_id())
-
-
-def match_disallowed(urls: DataFrame, rules: DataFrame,
-                     host_col: str = "host",
-                     path_col: str = "path") -> DataFrame:
-    """urls + ``disallowed`` flag: TRUE when any of the host's Disallow
-    prefixes is a prefix of the path. The rules side is tiny (one
-    robots.txt per host) → BROADCAST, so a 10^12-row frontier never
-    shuffles; per-URL cost is a hash probe + startswith over the host's
-    few rules. Duplicate input rows are preserved 1:1."""
-    tagged = _tag_rows(urls)
-    r = rules.select(F.col("host").alias(host_col),
-                     F.col("prefix").alias(_PFX))
-    hit = (tagged.join(F.broadcast(r), host_col, "left")
-           .withColumn(_SCORE,
-                       F.col(_PFX).isNotNull()
-                       & F.col(path_col).startswith(F.col(_PFX))))
-    return (hit.groupBy(_RID, *urls.columns)
-            .agg(F.max(_SCORE).alias("disallowed"))
-            .drop(_RID))

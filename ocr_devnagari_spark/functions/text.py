@@ -8,8 +8,9 @@ pruned and codegen'd by Catalyst for free (SURVEY.md §4 scorecard):
 - ``validation_ok``      → P2  (``gemini_backend.py:364-398``)
 - ``confidence_expr``    → P5  (``marker_backend.py:208-233``)
 - ``critical_score``     → M6  (``mantra_detector.py:133-238``)
-- ``cheap_critical``     → M7  (the 4× duplicated substring pre-check,
-                           deduplicated into ONE expression)
+- ``DEVA_GATE_RE``       → M7  (the 4× duplicated pre-check, one
+                           Devanagari-block ``rlike`` in front of
+                           ``critical_score`` and its siblings)
 - lang-ID / quality / token counts / fingerprints → the training-data
   pipeline text-analysis surface (driver brief), built only from functions
   with exact DuckDB equivalents so every one is oracle-checkable.
@@ -77,12 +78,6 @@ VERSE_RE = r"॥\s*\d+\s*॥"
 BIJA_RE = r"(ॐ|स्वाहा|श्लोक)"
 CODE_RE = r"(def |return |function\s*\(|;\s*\}|class\s+\w+\s*[:{])"
 NUM_RE = r"\b\d{3,}\b"
-
-
-def cheap_critical(col: Column) -> Column:
-    """M7: one shared pre-check expression (the reference duplicates this
-    substring scan in 4 backends)."""
-    return col.rlike(f"({VERSE_RE}|{BIJA_RE.strip('()')})")
 
 
 DEITY_ALT_RE = "(" + "|".join(DEITY_TERMS) + ")"

@@ -40,9 +40,8 @@ for real-world http(s) URLs):
 Registrable-domain extraction follows public-suffix-list semantics
 (``PSL_SNAPSHOT`` — an embedded subset of publicsuffix.org covering the
 high-traffic multi-label registries plus wildcard/exception rule kinds);
-the full upstream list plugs into the same functions, either compiled
-into the expression or as a broadcast suffix-table join
-(``registrable_domains``) at cluster scale.
+the full upstream list plugs into the same functions through their
+``rules`` parameter and compiles into the expression.
 """
 
 from __future__ import annotations
@@ -213,8 +212,7 @@ def registrable_domain(col: Column, rules=None) -> Column:
     ``regexp_extract`` uses for a no-match, and identical in both
     engines.  Default rules = the embedded ``PSL_SNAPSHOT``; pass the
     full upstream list for production crawls (it compiles to longer IN
-    lists, still one codegen'd expression — or use
-    ``registrable_domains`` for the broadcast-join form)."""
+    lists, still one codegen'd expression)."""
     host = url_host(col)
     plan = psl_plan(rules)
     ps = F.lit(1)
@@ -245,51 +243,6 @@ def psl_domain_sql(host_sql: str, rules=None) -> str:
     return "CASE " + " ".join(
         f"WHEN ({ps}) = {n} THEN {lastk(n + 1)}"
         for n in sorted({n for _, _, n in plan} | {1})) + " ELSE '' END"
-
-
-def registrable_domains(df, host_col: str = "host", rules=None,
-                        out_col: str = "domain"):
-    """Broadcast-join form for FULL-size rule tables at cluster scale:
-    explode each host's last-``k``-label suffix candidates, equi-join
-    the (small, broadcast) compiled-plan table, keep the best-priority
-    match per host.  Same semantics as the expression form (shared
-    ``psl_plan``), but the rule list never inflates the query plan —
-    the 9k-rule upstream PSL is a ~200 KB broadcast.
-
-    ``df`` rows must be DISTINCT: the candidate explode is re-grouped
-    by the full input row, so exact-duplicate rows collapse to one
-    (host tables are keyed in practice; carry a row id otherwise)."""
-    plan = psl_plan(rules)
-    host = F.col(host_col)
-    if not plan:
-        # an empty compiled plan (rules that all collapse into the PSL
-        # default rule, e.g. ["com"]) must mean "default rule for every
-        # host", exactly like the expression form — NOT an empty result
-        # (explode over a zero-element candidate array drops all rows)
-        return df.select(*df.columns,
-                         _last_labels(host, 2).alias(out_col))
-    spark = df.sparkSession
-    rows = [(s, c, i, n)
-            for i, (c, sfxs, n) in enumerate(plan) for s in sfxs]
-    rdf = spark.createDataFrame(
-        rows, "sfx string, match_c int, prio int, ps int")
-    ks = sorted({c for c, _, _ in plan})
-    cand = df.withColumn(
-        "_cand", F.explode(F.array(*[
-            F.struct(_last_labels(host, k).alias("sfx"),
-                     F.lit(k).alias("match_c")) for k in ks])))
-    hit = (cand.join(F.broadcast(rdf),
-                     (F.col("_cand.sfx") == F.col("sfx"))
-                     & (F.col("_cand.match_c") == F.col("match_c")),
-                     "left")
-           .groupBy(*df.columns)
-           .agg(F.min(F.when(F.col("prio").isNotNull(),
-                             F.struct("prio", "ps"))).alias("_m")))
-    ps = F.coalesce(F.col("_m.ps"), F.lit(1))
-    out = F.lit("")
-    for n in sorted({n for _, _, n in plan} | {1}):
-        out = F.when(ps == n, _last_labels(host, n + 1)).otherwise(out)
-    return hit.select(*df.columns, out.alias(out_col))
 
 
 def resolve_dot_segments(path: Column) -> Column:

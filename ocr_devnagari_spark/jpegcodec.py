@@ -1,7 +1,7 @@
 """Baseline JPEG codec from the public spec (ITU-T T.81 / ISO 10918-1),
 pure stdlib + numpy — closes the engine's last env-blocked media format:
-web images are overwhelmingly JPEG, and ``image_feature_stage(fake=
-False)`` previously NULL-fell-back on all of them.
+web images are overwhelmingly JPEG, and ``image_feature_stage``
+previously NULL-fell-back on all of them.
 
 Decoder subset: the "baseline sequential DCT, Huffman" process every
 web JPEG supports — SOF0, 8-bit samples, 1 or 3 components, any h/v

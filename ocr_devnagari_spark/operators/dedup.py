@@ -40,15 +40,12 @@ def tokens_col(text_col: str = "text"):
 
 
 def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-             n: int = 3, distinct: bool = True) -> DataFrame:
-    """(id, shingle) — word n-grams per document; JVM-side only
-    (split / sequence / transform / explode: no Python workers).
+             n: int = 3) -> DataFrame:
+    """(id, shingle) — the distinct word n-grams per document; JVM-side
+    only (split / sequence / transform / explode: no Python workers).
 
-    ``distinct=True`` (set semantics, needed for exact Jaccard) costs a
-    full shuffle of the exploded shingles. Consumers whose aggregate is
-    duplicate-insensitive (MinHash: ``min``) pass ``distinct=False`` and
-    skip that shuffle entirely — map-side partial aggregation collapses
-    duplicates for free."""
+    Set semantics are what exact Jaccard needs; they cost a full shuffle
+    of the exploded shingles."""
     toks = tokens_col(text_col)
     grams = F.when(
         F.size(toks) >= n,
@@ -59,7 +56,7 @@ def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     ).otherwise(F.array())
     out = df.select(F.col(id_col).alias("id"),
                     F.explode(grams).alias("shingle"))
-    return out.distinct() if distinct else out
+    return out.distinct()
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str = "doc_id",
@@ -211,23 +208,18 @@ def _expand_bucket_pairs(grp: DataFrame) -> DataFrame:
 
 
 def lsh_candidate_pairs(sig: DataFrame, bands: int = 8,
-                        rows: int = 4, distinct: bool = True,
+                        rows: int = 4,
                         max_bucket: int | None = 5_000) -> DataFrame:
     """Band the signature (bands × rows = k) and emit candidate pairs
     from ONE aggregation per band bucket (groupBy → collect_set →
     in-bucket pair expansion), replacing the earlier bucket self-join —
     one shuffle of bands × (band_hash, id) rows instead of two scans of
     the banded table. Bucket capping and materialization:
-    ``_lsh_buckets``.
-
-    ``distinct=False`` skips the cross-band pair dedup (one full shuffle
-    of the pair set) — for consumers whose downstream is
-    duplicate-insensitive (``minhash_dedup``'s exact mode: the verified
-    left-semi join dedups for free).
+    ``_lsh_buckets``. A pair that shares several bands is emitted once
+    (the cross-band dedup is one shuffle of the pair set).
     """
-    pairs = _expand_bucket_pairs(_lsh_buckets(sig, bands, rows,
-                                              max_bucket))
-    return pairs.distinct() if distinct else pairs
+    return _expand_bucket_pairs(_lsh_buckets(sig, bands, rows,
+                                             max_bucket)).distinct()
 
 
 def minhash_dedup(df: DataFrame, id_col: str = "doc_id",

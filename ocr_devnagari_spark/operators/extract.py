@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..extract_core import CONFIDENCE_THRESHOLD, extract_document
+from ..extract_core import extract_document
 
 # Output schema — FIXTURES.md F3 ``extracted`` + partition provenance.
 EXTRACTED_SCHEMA = T.StructType([
@@ -51,7 +51,7 @@ def _pid() -> int:
 # Fused stage
 # ---------------------------------------------------------------------------
 
-def _fused_batches(batches: Iterator[pd.DataFrame], threshold: float,
+def _fused_batches(batches: Iterator[pd.DataFrame],
                    primary, precise) -> Iterator[pd.DataFrame]:
     pid = _pid()
     # Resolve backends executor-side; lifecycle hooks run ONCE per task
@@ -87,7 +87,7 @@ def _fused_batches(batches: Iterator[pd.DataFrame], threshold: float,
                     raise RuntimeError(f"backend initialize failed: {msg}")
             inited.append(spec)
         for pdf in batches:
-            rows = [extract_document(u, h, threshold, p_fn, pr_fn)
+            rows = [extract_document(u, h, p_fn, pr_fn)
                     for u, h in zip(pdf["url"], pdf["html"])]
             out = pd.DataFrame.from_records(rows)
             out["partition_id"] = pid
@@ -109,7 +109,6 @@ def _fused_batches(batches: Iterator[pd.DataFrame], threshold: float,
 
 
 def extract_fused(pages: DataFrame,
-                  threshold: float = CONFIDENCE_THRESHOLD,
                   primary=None,
                   precise=None) -> DataFrame:
     """scan(url, html) → one narrow Arrow-batched map → extracted rows.
@@ -125,7 +124,7 @@ def extract_fused(pages: DataFrame,
     """
     src = pages.select("url", "html")
     return src.mapInPandas(
-        lambda it: _fused_batches(it, threshold, primary, precise),
+        lambda it: _fused_batches(it, primary, precise),
         schema=EXTRACTED_SCHEMA)
 
 

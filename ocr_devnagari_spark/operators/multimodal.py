@@ -2,19 +2,16 @@
 
 The Spark-side contract is fully real — schemas, Arrow batch shapes,
 partitioning, the ``mapInPandas`` stage signatures — and so are the
-codecs: ``fake=False`` decodes PNG (zlib + scanline filters,
-``codecs.decode_png``), baseline + progressive JPEG (from-scratch ITU
-T.81, ``jpegcodec.decode_jpeg``), WAV (``wave``) for real
-dimensions / aHash / histogram / RMS features, and parses MP4
-containers (from-scratch ISO/IEC 14496-12, ``mp4box.py``) for real
-keyframe byte-range sampling. Only compressed VIDEO/AUDIO bitstream
-pixel/pcm decode genuinely needs external libs; those payloads yield
-NULL feature columns with a real ``n_bytes`` — a 100-TB job must not
-die on the first exotic payload — and the clearly-marked plug-in
-point is where PIL/torchvision/pyav slot in on a cluster that ships
-them.
-``fake=True`` keeps the deterministic content-hash decoder for tests
-that need stable values on arbitrary bytes.
+codecs: PNG (zlib + scanline filters, ``codecs.decode_png``), baseline +
+progressive JPEG (from-scratch ITU T.81, ``jpegcodec.decode_jpeg``) and
+WAV (``wave``) decode to real dimensions / aHash / histogram / RMS
+features, and MP4 containers parse (from-scratch ISO/IEC 14496-12,
+``mp4box.py``) for real keyframe byte-range sampling. Only compressed
+VIDEO/AUDIO bitstream pixel/pcm decode genuinely needs external libs;
+those payloads yield NULL feature columns with a real ``n_bytes`` — a
+100-TB job must not die on the first exotic payload — and the
+clearly-marked plug-in point is where PIL/torchvision/pyav slot in on a
+cluster that ships them.
 
 Pattern notes for 100 TB of media: payload bytes must cross into Python
 exactly once (one fused decode+featurize stage), batches must be SMALL
@@ -61,27 +58,14 @@ FRAME_SAMPLE_SCHEMA = T.StructType([
 FEATURE_DIM = 16
 
 
-def _fake_decode_image(payload: bytes) -> dict:
-    """Deterministic stand-in: dimensions/phash/features derived from the
-    content digest, so tests exercise real Arrow plumbing with stable data."""
-    d = hashlib.blake2b(payload or b"", digest_size=32).digest()
-    width = 64 + d[0] * 8
-    height = 64 + d[1] * 8
-    phash = int.from_bytes(d[2:10], "little", signed=True)
-    feats = [round(b / 255.0, 6) for b in d[10:10 + FEATURE_DIM]]
-    return {"width": width, "height": height, "phash": phash,
-            "features": feats}
-
-
-def image_feature_stage(media: DataFrame, fake: bool = True) -> DataFrame:
+def image_feature_stage(media: DataFrame) -> DataFrame:
     """decode → resize → featurize, fused into one Arrow-batched stage.
 
-    ``fake=False`` = the REAL path: PNG and baseline-JPEG payloads
-    decode with the from-scratch codecs (``codecs.image_features`` —
-    true width/height, 8×8 average-hash, grayscale histogram).
-    Out-of-subset payloads emit NULL feature columns (n_bytes stays
-    real); exotic formats plug in at the marked point when
-    PIL/torchvision exist on the cluster."""
+    PNG and JPEG payloads decode with the from-scratch codecs
+    (``codecs.image_features`` — true width/height, 8×8 average-hash,
+    grayscale histogram). Out-of-subset payloads emit NULL feature
+    columns (n_bytes stays real); exotic formats plug in at the marked
+    point when PIL/torchvision exist on the cluster."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..codecs import UnsupportedMediaError, image_features
@@ -89,17 +73,14 @@ def image_feature_stage(media: DataFrame, fake: bool = True) -> DataFrame:
             recs = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 n_bytes = len(payload or b"")
-                if fake:
-                    f = _fake_decode_image(payload)
-                else:
-                    try:
-                        f = image_features(bytes(payload or b""),
-                                           n_features=FEATURE_DIM)
-                    except UnsupportedMediaError:
-                        # plug-in point: PIL/torchvision decode for JPEG
-                        # etc. goes here on clusters that ship the libs
-                        f = {"width": None, "height": None,
-                             "phash": None, "features": None}
+                try:
+                    f = image_features(bytes(payload or b""),
+                                       n_features=FEATURE_DIM)
+                except UnsupportedMediaError:
+                    # plug-in point: PIL/torchvision decode for other
+                    # formats goes here on clusters that ship the libs
+                    f = {"width": None, "height": None,
+                         "phash": None, "features": None}
                 recs.append(dict(media_id=mid, n_bytes=n_bytes, **f))
             out = pd.DataFrame.from_records(recs)
             yield out[[c.name for c in IMAGE_FEATURES_SCHEMA.fields]]
@@ -203,22 +184,20 @@ def audio_feature_stage(media: DataFrame) -> DataFrame:
 
 
 def frame_sample_stage(media: DataFrame, every_ms: int = 1000,
-                       max_frames: int = 8, fake: bool = True) -> DataFrame:
+                       max_frames: int = 8) -> DataFrame:
     """Video frame sampling — a one-to-many (UDTF-shaped) stage: each input
     row yields ≤ ``max_frames`` frame rows (the engine's explode-after-decode
     pattern, same shape as the reference's ``_split_by_pages``,
     marker_backend.py:185-206).
 
-    ``fake=False`` parses the REAL ISO BMFF container (from-scratch
-    ISO/IEC 14496-12, ``mp4box.py``): keyframes are the track's sync
-    samples, timestamps come from the stts table, and each emitted
-    row's hash is over the actual frame byte range sliced out of mdat —
-    so only selected keyframe bytes (not whole videos) would cross into
-    a pixel codec, which remains the documented plug-in for compressed
-    bitstream decode.  Non-BMFF/damaged payloads emit zero rows rather
-    than failing the job.  ``fake=True`` keeps the deterministic
-    content-hash sampler for tests needing stable values on arbitrary
-    bytes."""
+    Payloads parse as ISO BMFF containers (from-scratch ISO/IEC 14496-12,
+    ``mp4box.py``): keyframes are the track's sync samples, timestamps
+    come from the stts table, and each emitted row's hash is over the
+    actual frame byte range sliced out of mdat — so only selected keyframe
+    bytes (not whole videos) would cross into a pixel codec, which remains
+    the documented plug-in for compressed bitstream decode.
+    Non-BMFF/damaged payloads emit zero rows rather than failing the
+    job."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..codecs import UnsupportedMediaError
@@ -226,32 +205,20 @@ def frame_sample_stage(media: DataFrame, every_ms: int = 1000,
         for pdf in batches:
             recs = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if not fake:
-                    try:
-                        picked = video_keyframes(
-                            bytes(payload or b""), every_ms=every_ms,
-                            max_frames=max_frames)
-                    except (UnsupportedMediaError, struct_error,
-                            IndexError, OverflowError):
-                        continue          # hostile/foreign payload
-                    for s in picked:
-                        fh = hashlib.blake2b(
-                            s["data"], digest_size=8).digest()
-                        recs.append(dict(
-                            media_id=mid, frame_idx=s["sample_idx"],
-                            ts_ms=s["ts_ms"],
-                            frame_phash=int.from_bytes(
-                                fh, "little", signed=True)))
-                    continue
-                d = hashlib.blake2b(payload or b"", digest_size=32).digest()
-                n = 1 + d[0] % max_frames
-                for i in range(n):
-                    fh = hashlib.blake2b(d + bytes([i]),
-                                         digest_size=8).digest()
+                try:
+                    picked = video_keyframes(
+                        bytes(payload or b""), every_ms=every_ms,
+                        max_frames=max_frames)
+                except (UnsupportedMediaError, struct_error,
+                        IndexError, OverflowError):
+                    continue          # hostile/foreign payload
+                for s in picked:
+                    fh = hashlib.blake2b(s["data"], digest_size=8).digest()
                     recs.append(dict(
-                        media_id=mid, frame_idx=i, ts_ms=i * every_ms,
-                        frame_phash=int.from_bytes(fh, "little",
-                                                   signed=True)))
+                        media_id=mid, frame_idx=s["sample_idx"],
+                        ts_ms=s["ts_ms"],
+                        frame_phash=int.from_bytes(
+                            fh, "little", signed=True)))
             out = pd.DataFrame.from_records(recs)
             if out.empty:
                 out = pd.DataFrame(

@@ -10,7 +10,7 @@
   Deterministic planes seeded per index; query probes its own bucket plus
   all Hamming-1 neighbours (multi-probe), exact cosine re-rank inside the
   candidate set. At 10^12 rows the bucket join touches a
-  ~2^{-p}·multiprobe fraction of the table instead of all of it.
+  ~(1+p)·2^{-p} fraction of the table instead of all of it.
 
 - ``knn_self_join`` — all-pairs k-NN within LSH buckets (embedding-cosine
   near-dup detection for training-data curation).
@@ -103,7 +103,7 @@ def _python_bucket(vec, planes) -> int:
 
 def lsh_bucket_topk(emb: DataFrame, query_vec, k: int = 10,
                     n_planes: int | None = 12, seed: int = 42,
-                    multiprobe: bool = True, id_col: str = "vec_id",
+                    id_col: str = "vec_id",
                     vec_col: str = "embedding",
                     target_bucket_rows: int = 1024) -> DataFrame:
     """ANN: restrict to the query's LSH bucket (+ Hamming-1 probes), then
@@ -120,8 +120,7 @@ def lsh_bucket_topk(emb: DataFrame, query_vec, k: int = 10,
         n_planes = derive_n_planes(emb.count(), target_bucket_rows)
     planes = hyperplanes(len(query_vec), n_planes, seed)
     qb = _python_bucket(query_vec, planes)
-    probes = [qb] + ([qb ^ (1 << i) for i in range(n_planes)]
-                     if multiprobe else [])
+    probes = [qb] + [qb ^ (1 << i) for i in range(n_planes)]
     v = F.col(vec_col).cast("array<double>")
     bucketed = emb.withColumn("bucket", bucket_col(v, planes))
     cand = bucketed.filter(F.col("bucket").isin(probes))
@@ -301,8 +300,8 @@ def build_ann_index(emb: DataFrame, index_dir: str,
     return meta
 
 
-def ann_index_topk(spark, index_dir: str, query_vec, k: int = 10,
-                   multiprobe: bool = True) -> DataFrame:
+def ann_index_topk(spark, index_dir: str, query_vec,
+                   k: int = 10) -> DataFrame:
     """Query a ``build_ann_index`` table: probe the query's bucket (+
     Hamming-1 neighbours), exact cosine re-rank inside the candidates.
     ``bucket`` is a hive partition column, so the probe filter is a
@@ -334,8 +333,7 @@ def ann_index_topk(spark, index_dir: str, query_vec, k: int = 10,
     index_dir = vdir
     planes = hyperplanes(meta["dim"], meta["n_planes"], meta["seed"])
     qb = _python_bucket(query_vec, planes)
-    probes = [qb] + ([qb ^ (1 << i) for i in range(meta["n_planes"])]
-                     if multiprobe else [])
+    probes = [qb] + [qb ^ (1 << i) for i in range(meta["n_planes"])]
     df = spark.read.parquet(os.path.join(index_dir, "data"))
     cand = df.filter(F.col("bucket").isin(probes))
     v = F.col(meta["vec_col"]).cast("array<double>")

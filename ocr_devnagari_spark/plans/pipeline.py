@@ -78,23 +78,30 @@ def pending_pages(pages: DataFrame, extracted: IceboxTable,
     return pages.join(done, "url", "left_anti")
 
 
-def rebalance(pages: DataFrame, cfg: ExtractConfig) -> DataFrame:
+# Shape of the salted rebalance: output partitions, per-host salt fan-out
+# for hot hosts, and the html-size tier edges in bytes.
+REBALANCE_PARTITIONS = 32
+SALT_BUCKETS = 8
+SIZE_TIER_BYTES = (4_096, 65_536, 1_048_576)
+
+
+def rebalance(pages: DataFrame) -> DataFrame:
     """Optional skew-breaking shuffle: (size-tier, host, salt) keys.
 
     Size tier = log2 bucket of payload bytes keeps giant documents from
     convoying small ones in one task; the salt (hash of the full url) splits
-    hot hosts across ``salt_buckets`` partitions (north-rule skew handling;
+    hot hosts across ``SALT_BUCKETS`` partitions (north-rule skew handling;
     Common-Crawl host and size distributions are heavy-tailed).
     """
     sz = F.length(F.col("html"))
-    tier = (F.when(sz < cfg.size_tier_bytes[0], 0)
-             .when(sz < cfg.size_tier_bytes[1], 1)
-             .when(sz < cfg.size_tier_bytes[2], 2)
+    tier = (F.when(sz < SIZE_TIER_BYTES[0], 0)
+             .when(sz < SIZE_TIER_BYTES[1], 1)
+             .when(sz < SIZE_TIER_BYTES[2], 2)
              .otherwise(3))
     host = F.parse_url(F.col("url"), F.lit("HOST"))
-    salt = F.pmod(F.xxhash64(F.col("url")), F.lit(cfg.salt_buckets))
+    salt = F.pmod(F.xxhash64(F.col("url")), F.lit(SALT_BUCKETS))
     return pages.repartition(
-        cfg.num_partitions, tier.alias("size_tier"),
+        REBALANCE_PARTITIONS, tier.alias("size_tier"),
         F.xxhash64(host).alias("host_hash"), salt.alias("salt"))
 
 
@@ -303,12 +310,11 @@ def run_extract_job(
     if limit_pending is not None:
         pending = pending.limit(limit_pending)
     if rebalance_mode == "salted":
-        pending = rebalance(pending, cfg)
+        pending = rebalance(pending)
 
     # ``primary``/``precise`` select engines by registry name (the
     # reference CLI's engine whitelist); None = the built-in defaults.
-    result = extract_fused(pending, cfg.confidence_threshold,
-                           primary=primary, precise=precise)
+    result = extract_fused(pending, primary=primary, precise=precise)
 
     # In-flight metrics via observe() — the Spark-native analog of the
     # reference's TokenUsage accumulator monoid (gemini_backend.py:25-80):

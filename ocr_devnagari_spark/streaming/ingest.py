@@ -22,7 +22,6 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from ..config import DEFAULT_CONFIG, ExtractConfig
 from ..operators.extract import extract_fused
 from ..plans.pipeline import PAGES_SCHEMA
 
@@ -32,8 +31,6 @@ def stream_extract_available_now(
     input_glob: str,
     output_dir: str,
     checkpoint_dir: str,
-    cfg: ExtractConfig = DEFAULT_CONFIG,
-    max_files_per_trigger: int | None = None,
 ) -> int:
     """Drain all currently-available new files through extraction.
 
@@ -43,14 +40,10 @@ def stream_extract_available_now(
     counterpart of the reference's resume idempotency,
     ``docs/RESILIENT_OCR_PLAN.md:412-415``).
     """
-    reader = (spark.readStream.schema(PAGES_SCHEMA)
-              .option("pathGlobFilter", "*.parquet"))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    pages = reader.parquet(input_glob)
+    pages = (spark.readStream.schema(PAGES_SCHEMA)
+             .option("pathGlobFilter", "*.parquet").parquet(input_glob))
 
-    out = extract_fused(pages, cfg.confidence_threshold).drop("partition_id")
+    out = extract_fused(pages).drop("partition_id")
 
     n_batches = 0
 

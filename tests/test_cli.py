@@ -58,6 +58,15 @@ def test_cli_extract_resume_bench(spark, tiny_corpus, tmp_path, capsys):
     assert rc == 0 and out["docs"] == 60 and out["docs_per_sec"] > 0
 
 
+def test_cli_bench_reports_session_cores(spark, tiny_corpus, capsys):
+    """Without --cores the single-level bench reports the cores its
+    session runs on, not null."""
+    rc, out = _run(capsys, ["bench", "--corpus", tiny_corpus,
+                            "--reps", "1"])
+    assert rc == 0 and out["docs"] == 60
+    assert out["cores"] == spark.sparkContext.defaultParallelism
+
+
 def test_cli_backends(capsys):
     rc, out = _run(capsys, ["backends"])
     assert rc == 0

@@ -1,5 +1,5 @@
 """ISO BMFF parser — encoder roundtrips, hand-built box edge cases,
-and the real (fake=False) frame-sampling stage."""
+and the frame-sampling stage."""
 
 from __future__ import annotations
 
@@ -131,8 +131,7 @@ def test_frame_stage_real_path(spark):
             ("bad", "video", bytearray(b"not a container"), None)]
     media = spark.createDataFrame(
         rows, "media_id string, kind string, payload binary, mime string")
-    got = (frame_sample_stage(media, every_ms=400, max_frames=3,
-                              fake=False)
+    got = (frame_sample_stage(media, every_ms=400, max_frames=3)
            .orderBy("media_id", "frame_idx").collect())
     assert [r["media_id"] for r in got] == ["v1"] * 3
     assert [r["ts_ms"] for r in got] == [0, 400, 800]

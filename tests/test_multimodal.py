@@ -1,4 +1,4 @@
-"""Multimodal plumbing: schema, batch shape, determinism, stub gating."""
+"""Multimodal plumbing: schema, batch shape, determinism, NULL fallback."""
 
 from __future__ import annotations
 
@@ -21,39 +21,60 @@ def media(spark):
         .cache()
 
 
-def test_image_features_schema_and_determinism(spark, media):
-    out1 = {r.media_id: r for r in image_feature_stage(media).collect()}
+@pytest.fixture(scope="module")
+def png_media(spark):
+    from ocr_devnagari_spark.codecs import encode_png
+    rows = []
+    for i in range(40):
+        w, h = 4 + i % 9, 3 + i % 7
+        px = [((i * 31 + j * 7) % 256,) for j in range(w * h)]
+        rows.append((f"m{i}", "image", encode_png(px, w, h, 1), "image/png"))
+    return spark.createDataFrame(rows, MEDIA_SCHEMA).cache()
+
+
+def test_image_features_schema_and_determinism(spark, png_media):
+    payloads = {r.media_id: r.payload for r in png_media.collect()}
+    out1 = {r.media_id: r for r in image_feature_stage(png_media).collect()}
     out2 = {r.media_id: r for r in
-            image_feature_stage(media.repartition(5)).collect()}
+            image_feature_stage(png_media.repartition(5)).collect()}
     assert len(out1) == 40
     for mid, r in out1.items():
+        i = int(mid[1:])
+        assert (r.width, r.height) == (4 + i % 9, 3 + i % 7)
         assert len(r.features) == FEATURE_DIM
-        assert r.n_bytes == len(bytes([int(mid[1:]) % 251])) * (
-            100 + int(mid[1:]) * 37)
+        assert r.n_bytes == len(payloads[mid])
         r2 = out2[mid]
         assert (r.width, r.height, r.phash) == (r2.width, r2.height, r2.phash)
         assert r.features == r2.features
 
 
-def test_frame_sampling_one_to_many(spark, media):
+def test_frame_sampling_one_to_many(spark):
+    from ocr_devnagari_spark.mp4box import encode_mp4
+    # clip i: 1 + i % 20 frames at 10 fps, every frame a keyframe
+    rows = [(f"m{i}", "video",
+             encode_mp4([bytes([i, j]) * 8 for j in range(1 + i % 20)],
+                        fps=10, sync_every=1), "video/mp4")
+            for i in range(40)]
+    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     frames = frame_sample_stage(media, every_ms=500, max_frames=4).collect()
     by_id = {}
     for f in frames:
         by_id.setdefault(f.media_id, []).append(f)
     assert set(by_id) == {f"m{i}" for i in range(40)}
     for mid, fs in by_id.items():
-        assert 1 <= len(fs) <= 4
-        idxs = sorted(f.frame_idx for f in fs)
-        assert idxs == list(range(len(fs)))
+        n_clip = 1 + int(mid[1:]) % 20
+        assert len(fs) == min(4, -(-n_clip // 5))
+        assert sorted(f.ts_ms for f in fs) == [k * 500 for k in
+                                               range(len(fs))]
         for f in fs:
-            assert f.ts_ms == f.frame_idx * 500
+            assert f.ts_ms == f.frame_idx * 100
 
 
 def test_real_decode_nulls_unsupported_formats(spark, media):
-    """fake=False on non-PNG bytes must NOT kill the job — feature
+    """Non-image bytes must NOT kill the job — feature
     columns are NULL, n_bytes stays real (a 100-TB corpus always
     contains payloads the stdlib codec can't read)."""
-    rows = image_feature_stage(media, fake=False).collect()
+    rows = image_feature_stage(media).collect()
     assert len(rows) == media.count()
     for r in rows:
         assert r.width is None and r.phash is None and r.features is None
@@ -61,7 +82,7 @@ def test_real_decode_nulls_unsupported_formats(spark, media):
 
 
 def test_real_png_decode_in_stage(spark):
-    """fake=False with PNG payloads: the stage returns TRUE dimensions
+    """PNG payloads: the stage returns TRUE dimensions
     and an aHash that is identical for identical images and differs for
     different ones — a real decoder, not a content-hash fake."""
     from ocr_devnagari_spark.codecs import encode_png
@@ -76,7 +97,7 @@ def test_real_png_decode_in_stage(spark):
             ("j", "image", b"\xff\xd8\xff\xe0 not decodable", "image/jpeg")]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     got = {r.media_id: r for r in
-           image_feature_stage(media, fake=False).collect()}
+           image_feature_stage(media).collect()}
     assert (got["a"].width, got["a"].height) == (20, 10)
     assert (got["b"].width, got["b"].height) == (33, 7)
     assert got["a"].phash == got["a2"].phash

@@ -157,7 +157,8 @@ def test_failed_second_init_cleans_up_first(spark, corpus_dir, tmp_path):
 def test_no_twin_implementation_selectors():
     """One implementation per operator: no public or private function in
     the package takes an ``impl``/``*_impl`` parameter that selects a
-    second code path."""
+    second code path, or a ``fake`` parameter that swaps a stand-in in
+    for the real one."""
     import importlib
     import inspect
     import pkgutil
@@ -178,7 +179,7 @@ def test_no_twin_implementation_selectors():
                 offenders += [
                     f"{mod.__name__}.{fn.__qualname__}({p})"
                     for p in inspect.signature(fn).parameters
-                    if p == "impl" or p.endswith("_impl")]
+                    if p in ("impl", "fake") or p.endswith("_impl")]
     assert not offenders, offenders
 
 

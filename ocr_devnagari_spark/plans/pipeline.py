@@ -27,6 +27,11 @@ Scale notes (the parts that must survive 1000 executors × 100 TB):
   Here each task's stats become one lineage row (FIXTURES.md F3): one
   aggregation by partition_id, a tiny shuffle of (partition_id, counters)
   tuples.
+
+``extract_and_commit`` holds everything from the backend pre-flight to
+the lineage append and is the one commit path: ``run_extract_job`` calls
+it for a batch run and for a resume, and ``streaming/ingest.py`` calls it
+once per micro-batch.
 """
 
 from __future__ import annotations
@@ -266,6 +271,38 @@ def run_extract_job(
     The predicate is a Catalyst filter, so it composes with the resume
     anti-join: ``--pages`` + resume converges exactly like a full run.
     """
+    src_pages = read_pages(spark, corpus_dir)
+    if pages is not None and pages.strip().lower() != "all":
+        from ..functions.text import range_predicate
+        # try_cast: under ANSI (Spark 4 default) a >19-digit url tail
+        # would make a plain cast throw and abort the run; such rows are
+        # simply outside any selectable range
+        seq = F.regexp_extract(F.col("url"), r"(\d+)[^\d]*$", 1) \
+            .try_cast("long")
+        src_pages = src_pages.filter(
+            seq.isNotNull() & range_predicate(seq, pages))
+    return extract_and_commit(spark, src_pages, cfg, job_token,
+                              rebalance_mode, limit_pending, dedup,
+                              primary, precise)
+
+
+def extract_and_commit(
+    spark: SparkSession,
+    src_pages: DataFrame,
+    cfg: ExtractConfig = DEFAULT_CONFIG,
+    job_token: str | None = None,
+    rebalance_mode: str = "none",
+    limit_pending: int | None = None,
+    dedup: str = "none",
+    primary: str | None = None,
+    precise: str | None = None,
+) -> dict:
+    """Extract the pages of ``src_pages`` that are not yet committed and
+    commit them as one icebox snapshot plus its lineage rows — the one
+    commit path of the batch job, its resume and the stream
+    (``streaming/ingest.py``). A ``job_token`` already applied is a
+    no-op that only heals a missing lineage append. Arguments are
+    ``run_extract_job``'s."""
     # Pre-flight the backend selection DRIVER-SIDE: a mistyped name must
     # fail here, not executor-side mid-stage (or worse, at the cost lookup
     # AFTER the snapshot commit — losing the summary of a job that
@@ -296,16 +333,6 @@ def run_extract_job(
                                  m["snapshot_id"]), job_token=lin_token)
         return {"snapshot_id": out.snapshot_id(), "rows": 0, "resumed": True}
 
-    src_pages = read_pages(spark, corpus_dir)
-    if pages is not None and pages.strip().lower() != "all":
-        from ..functions.text import range_predicate
-        # try_cast: under ANSI (Spark 4 default) a >19-digit url tail
-        # would make a plain cast throw and abort the run; such rows are
-        # simply outside any selectable range
-        seq = F.regexp_extract(F.col("url"), r"(\d+)[^\d]*$", 1) \
-            .try_cast("long")
-        src_pages = src_pages.filter(
-            seq.isNotNull() & range_predicate(seq, pages))
     pending = pending_pages(src_pages, out, spark)
     if limit_pending is not None:
         pending = pending.limit(limit_pending)

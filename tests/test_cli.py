@@ -154,13 +154,14 @@ def test_cli_bench_sweep_subprocess(tiny_corpus):
     import subprocess
     import sys
 
+    checkout = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ)
-    env["PYTHONPATH"] = "/root/repo"
+    env["PYTHONPATH"] = checkout
     p = subprocess.run(
         [sys.executable, "-m", "ocr_devnagari_spark.cli", "bench",
          "--corpus", tiny_corpus, "--reps", "1", "--sweep", "2,4"],
         capture_output=True, text=True, timeout=420, env=env,
-        cwd="/root/repo")
+        cwd=checkout)
     assert p.returncode == 0, p.stderr[-2000:]
     out = _json.loads(p.stdout.strip().splitlines()[-1])
     assert out["optimal_workers"] in (2, 4)

@@ -247,13 +247,17 @@ def test_in_job_dedup_marks_cross_run_duplicates(spark, corpus_dir,
 
 
 def test_in_job_dedup_keeper_map_reliable_checkpoints(
-        spark, corpus_dir, work_root, tmp_path):
+        spark, corpus_dir, work_root, tmp_path, monkeypatch):
     """With a checkpoint dir configured, the keeper-map materialization
     inside mark_staged_duplicates rides RELIABLE checkpoints (shared
     store — the mark phase survives executor loss on a real cluster,
     the dedup-module `_materialize` discipline), and the marked output
-    is identical to the localCheckpoint path."""
+    is identical to the localCheckpoint path.  The checkpoint files are
+    checked right after ``materialize`` returns, while the keeper map is
+    alive: Spark's cleaner may delete them once it is collected."""
     import glob
+
+    from ocr_devnagari_spark.plans import pipeline
 
     dup_dir = str(tmp_path / "ckcorpus")
     _corpus_with_clones(corpus_dir, dup_dir, 40)
@@ -262,6 +266,16 @@ def test_in_job_dedup_keeper_map_reliable_checkpoints(
     assert sc.getCheckpointDir() is None
     ckdir = str(tmp_path / "ck")
     sc.setCheckpointDir(ckdir)
+    materialized = []
+    orig_materialize = pipeline.materialize
+
+    def materialize_and_check(df, *args, **kwargs):
+        out = orig_materialize(df, *args, **kwargs)
+        materialized.append(
+            glob.glob(f"{ckdir}/**/rdd-*", recursive=True))
+        return out
+
+    monkeypatch.setattr(pipeline, "materialize", materialize_and_check)
     try:
         cfg = ExtractConfig(root_dir=work_root)
         r = run_extract_job(spark, dup_dir, cfg, job_token="ck",
@@ -270,7 +284,7 @@ def test_in_job_dedup_keeper_map_reliable_checkpoints(
         out = IceboxTable(cfg.extracted_table).read(spark)
         assert out.filter(out.url.startswith("zzz-")
                           & F.col("duplicate_of").isNull()).count() == 0
-        assert glob.glob(f"{ckdir}/**/rdd-*", recursive=True), \
+        assert len(materialized) == 1 and materialized[0], \
             "keeper map did not write reliable checkpoint data"
     finally:
         scala_none = getattr(getattr(sc._jvm.scala, "None$"), "MODULE$")

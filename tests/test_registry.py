@@ -220,3 +220,37 @@ def test_gates_live_in_one_module():
                     not in exempt):
                 offenders.append(f"{where} counted gate")
     assert not offenders, offenders
+
+
+def test_one_commit_path():
+    """Extracted rows reach storage through one path: only the icebox
+    and the pipeline's ``extract_and_commit`` call ``commit_staged``,
+    and no streaming module writes a DataFrame itself (its micro-batches
+    commit through the pipeline)."""
+    import ast
+    import pathlib
+
+    import ocr_devnagari_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    committers = {"sources/icebox.py", "plans/pipeline.py"}
+    sinks = {"format", "parquet", "save", "toTable", "csv", "json", "orc",
+             "text"}
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Attribute):
+                continue
+            where = f"{rel}:{node.lineno}"
+            if node.attr == "commit_staged" and rel not in committers:
+                offenders.append(f"{where} .commit_staged")
+            if not rel.startswith("streaming/"):
+                continue
+            if node.attr == "write":
+                offenders.append(f"{where} .write")
+            if node.attr in sinks and "writeStream" in {
+                    n.attr for n in ast.walk(node.value)
+                    if isinstance(n, ast.Attribute)}:
+                offenders.append(f"{where} .writeStream….{node.attr}")
+    assert not offenders, offenders

@@ -99,61 +99,6 @@ AUDIO_FEATURES_SCHEMA = T.StructType([
 ])
 
 
-VIDEO_FEATURES_SCHEMA = T.StructType([
-    T.StructField("media_id", T.StringType(), False),
-    T.StructField("n_bytes", T.LongType(), False),
-    T.StructField("duration_ms", T.LongType(), True),
-    T.StructField("width", T.IntegerType(), True),
-    T.StructField("height", T.IntegerType(), True),
-    T.StructField("codec", T.StringType(), True),
-    T.StructField("n_samples", T.IntegerType(), True),
-    T.StructField("n_keyframes", T.IntegerType(), True),
-])
-
-
-def video_feature_stage(media: DataFrame) -> DataFrame:
-    """Real video container metadata: ISO BMFF payloads parse with the
-    from-scratch box walker (``mp4box.parse_mp4``) — duration, first
-    video track's dimensions/codec fourcc, sample and keyframe counts.
-    Non-BMFF payloads emit NULL feature columns with a real
-    ``n_bytes`` (same never-die contract as the other stages);
-    bitstream pixel decode stays the pyav/ffmpeg plug-in."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from struct import error as _serr
-
-        from ..codecs import UnsupportedMediaError
-        from ..mp4box import parse_mp4
-        nulls = {"duration_ms": None, "width": None, "height": None,
-                 "codec": None, "n_samples": None, "n_keyframes": None}
-        for pdf in batches:
-            recs = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload or b"")
-                rec = {"media_id": mid, "n_bytes": len(raw), **nulls}
-                try:
-                    info = parse_mp4(raw)
-                    vid = next((t for t in info["tracks"]
-                                if t["handler"] == "vide"), None)
-                    rec["duration_ms"] = info["duration_ms"]
-                    if vid is not None:
-                        rec.update(
-                            width=vid["width"], height=vid["height"],
-                            codec=vid["codec"],
-                            n_samples=len(vid["samples"]),
-                            n_keyframes=sum(
-                                1 for s in vid["samples"] if s["sync"]))
-                except (UnsupportedMediaError, _serr, IndexError,
-                        OverflowError):
-                    pass
-                recs.append(rec)
-            out = pd.DataFrame.from_records(recs)
-            yield out[[c.name for c in VIDEO_FEATURES_SCHEMA.fields]]
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, VIDEO_FEATURES_SCHEMA)
-
-
 def audio_feature_stage(media: DataFrame) -> DataFrame:
     """Real audio featurize: 16-bit-PCM WAV payloads decode with the
     stdlib ``wave`` codec (``codecs.audio_features`` — channels, sample

@@ -341,9 +341,8 @@ def dsir_weights(docs: DataFrame, target: DataFrame, n: int = 2,
     the deterministic keep.
 
     Pass a precomputed ``ratios`` table (``dsir_bucket_logratios``) to
-    amortize the model over many corpora — the ``build_ann_index``
-    discipline.  The ratio table is ``n_buckets`` rows and always
-    broadcasts.
+    amortize the model over many corpora (build it once, score many).
+    The ratio table is ``n_buckets`` rows and always broadcasts.
 
     Each document scores in one narrow Arrow pass against the
     broadcast ratio map — zero shuffles, no per-gram rows (measured ~2×

@@ -7,7 +7,7 @@
   sort, no full shuffle. This is the correctness baseline.
 
 - ``lsh_bucket_topk`` — the scale path: random-hyperplane (sign) LSH.
-  Deterministic planes seeded per index; query probes its own bucket plus
+  Deterministic planes from ``seed``; the query probes its own bucket plus
   all Hamming-1 neighbours (multi-probe), exact cosine re-rank inside the
   candidate set. At 10^12 rows the bucket join touches a
   ~(1+p)·2^{-p} fraction of the table instead of all of it.
@@ -41,7 +41,13 @@ def _norm(a: Column) -> Column:
 
 
 def cosine_col(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    """Cosine of two ``array<double>`` columns. An all-zero vector has no
+    direction, so its cosine is NULL (``try_divide``: under ANSI mode a
+    plain ``/`` would abort the whole query on one such row). A NULL
+    sorts last under ``desc``, fails every ``>=`` threshold and so forms
+    no k-NN or SemDeDup pair: a zero row is never a neighbour and is
+    always kept."""
+    return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
 
 
 def _query_lit(query_vec) -> Column:
@@ -108,14 +114,14 @@ def lsh_bucket_topk(emb: DataFrame, query_vec, k: int = 10,
                     target_bucket_rows: int = 1024) -> DataFrame:
     """ANN: restrict to the query's LSH bucket (+ Hamming-1 probes), then
     exact cosine re-rank. Bucket ids are computable at the parquet scan, so
-    at scale you PARTITION the index table by bucket and this becomes
-    partition pruning — the scan reads ~(1+p)/2^p of the files.
+    at scale a table stored PARTITIONED by ``bucket_col`` turns the probe
+    into partition pruning — the scan reads ~(1+p)/2^p of the files.
 
     ``n_planes=None`` derives the plane count from the table size so the
     probed candidate set stays ≈ (1+planes)·``target_bucket_rows`` rows —
     an opt-in, NOT the default, because it costs a full ``count()`` per
-    lookup; on the query path size the index ONCE (``derive_n_planes``)
-    when you build/partition it, and pass that constant here."""
+    lookup; on the query path derive the count ONCE (``derive_n_planes``)
+    and pass that constant here."""
     if n_planes is None:
         n_planes = derive_n_planes(emb.count(), target_bucket_rows)
     planes = hyperplanes(len(query_vec), n_planes, seed)
@@ -129,221 +135,6 @@ def lsh_bucket_topk(emb: DataFrame, query_vec, k: int = 10,
             .orderBy(F.desc("_cos"), F.col(id_col))
             .limit(k)
             .select(F.col(id_col), F.round("_cos", 6).alias("cosine")))
-
-
-def _hfs(spark, path: str):
-    """(FileSystem, Path, jvm) for ``path`` via the Hadoop FileSystem
-    API — the same storage layer Spark itself reads/writes through, so
-    every pointer/marker operation below works identically on ``file://``,
-    ``hdfs://`` and ``s3a://`` (a driver-local ``open()`` would break the
-    moment ``index_dir`` is an object-store URI)."""
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(sc._jsc.hadoopConfiguration()), p, jvm
-
-
-_COMMITS = "_commits"
-
-
-def _list_commit_markers(fs, jvm, root) -> list:
-    """Sorted marker names under ``index_dir/_commits`` (ascending —
-    last is the committed version). Filtered to the ``<seq>-<version>``
-    shape: the local Hadoop FS writes ``.crc`` checksum sidecars next to
-    every file, which must be invisible to commit resolution and GC."""
-    cdir = jvm.org.apache.hadoop.fs.Path(root, _COMMITS)
-    if not fs.exists(cdir):
-        return []
-    names = (s.getPath().getName() for s in fs.listStatus(cdir))
-    return sorted(n for n in names
-                  if len(n) > 21 and n[:20].isdigit() and n[20] == "-")
-
-
-def _commit_version(spark, index_dir: str, version: str,
-                    keep_versions: int = 2) -> None:
-    """THE atomic commit point: create a zero-byte marker
-    ``_commits/<seq>-<version>``; the committed version is the
-    highest-named marker. A marker is a brand-new object (never an
-    overwrite or rename of a shared one), so the commit is atomic on
-    POSIX create and S3 PUT alike — ``os.replace`` semantics, which the
-    previous pointer-file design leaned on, don't exist on object
-    stores. Two concurrent builds write distinct marker names (seq +
-    uuid); name order picks the winner deterministically and the loser's
-    version is GC'd as superseded.
-
-    Superseded versions are RETAINED for ``keep_versions`` builds (an
-    in-flight query that resolved the old marker keeps reading live
-    files — the grace window) and garbage-collected lazily when their
-    marker falls off the tail. A pre-marker ``_current`` pointer file
-    (the round-3 layout) is folded in as marker seq 1 on first commit so
-    its version joins the normal retention/GC lifecycle."""
-    fs, root, jvm = _hfs(spark, index_dir)
-    hpath = jvm.org.apache.hadoop.fs.Path
-
-    def mk_marker(name: str) -> None:
-        try:
-            fs.create(hpath(root, f"{_COMMITS}/{name}"), False).close()
-        except Exception:
-            # two concurrent first-migration builds race on the
-            # identical legacy seq-1 marker: losing the create is fine
-            # exactly when the marker (same content) already exists
-            if not fs.exists(hpath(root, f"{_COMMITS}/{name}")):
-                raise
-
-    markers = _list_commit_markers(fs, jvm, root)
-    legacy_cp = hpath(root, "_current")
-    if not markers and fs.exists(legacy_cp):
-        stream = fs.open(legacy_cp)
-        try:
-            legacy = jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8").strip()
-        finally:
-            stream.close()
-        if legacy and legacy != version:
-            fs.mkdirs(hpath(root, _COMMITS))
-            mk_marker(f"{1:020d}-{legacy}")
-            markers = _list_commit_markers(fs, jvm, root)
-    seq = int(markers[-1].split("-", 1)[0]) + 1 if markers else 1
-    fs.mkdirs(hpath(root, _COMMITS))
-    mk_marker(f"{seq:020d}-{version}")
-    # retire the legacy pointer only AFTER markers exist — readers fall
-    # back to it when the marker log is empty, so deleting it first
-    # would open a no-committed-index window (worse for an
-    # empty/corrupt pointer, which folds into no marker at all)
-    if fs.exists(legacy_cp):
-        fs.delete(legacy_cp, False)
-    # lazy GC: markers older than the keep window → version dir + marker
-    expired = _list_commit_markers(fs, jvm, root)[:-max(keep_versions, 1)]
-    for name in expired:
-        old = name.split("-", 1)[1]
-        fs.delete(hpath(root, old), True)
-        fs.delete(hpath(root, f"{_COMMITS}/{name}"), False)
-
-
-def _index_version_dir(spark, index_dir: str) -> str:
-    """Resolve the committed index version: newest ``_commits`` marker,
-    falling back to the round-3 ``_current`` pointer file, then to the
-    pre-versioned bare ``data/`` layout — all via the Hadoop FS API so
-    resolution works on the same storage layer as the data."""
-    fs, root, jvm = _hfs(spark, index_dir)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    markers = _list_commit_markers(fs, jvm, root)
-    if markers:
-        return f"{index_dir.rstrip('/')}/{markers[-1].split('-', 1)[1]}"
-    cp = hpath(root, "_current")
-    if fs.exists(cp):
-        stream = fs.open(cp)
-        try:
-            version = jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8").strip()
-        finally:
-            stream.close()
-        return f"{index_dir.rstrip('/')}/{version}"
-    if fs.exists(hpath(root, "data")):
-        return index_dir
-    raise FileNotFoundError(f"no committed ANN index in {index_dir}")
-
-
-def build_ann_index(emb: DataFrame, index_dir: str,
-                    n_planes: int | None = None, seed: int = 42,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    target_bucket_rows: int = 1024,
-                    keep_versions: int = 2) -> dict:
-    """Materialize the ANN index as a bucket-PARTITIONED parquet table —
-    the scale path ``lsh_bucket_topk``'s docstring promises: bucket
-    membership is computed ONCE at build time, so a query is partition
-    pruning (the scan opens ~(1+planes)/2^planes of the files) instead of
-    recomputing every row's bucket per lookup. Plane count derives from
-    the table size at build time (one count, amortized over all queries);
-    plane geometry is persisted alongside the data so queries replay the
-    exact same hash family.
-
-    The build is ATOMIC: data + meta land in a fresh ``v-<uuid>`` dir and
-    become visible only when a ``_commits`` marker lands (see
-    ``_commit_version`` — a new-object create via the Hadoop FS API, so
-    the commit works on object stores where rename/replace isn't
-    atomic). Writing data then meta in place could crash in between and
-    leave NEW bucket assignments under OLD plane geometry — queries
-    would silently probe the wrong buckets. A crashed build leaves only
-    an invisible orphan dir; the previous version keeps serving.
-    Superseded versions are retained for ``keep_versions`` builds (grace
-    window for in-flight readers) then GC'd lazily."""
-    import json
-    import os
-    import uuid
-
-    head = emb.agg(F.count(F.lit(1)).alias("n"),
-                   F.first(F.size(vec_col)).alias("dim")).first()
-    if not head["n"]:
-        raise ValueError("cannot index an empty embedding table")
-    if n_planes is None:
-        n_planes = derive_n_planes(head["n"], target_bucket_rows)
-    planes = hyperplanes(head["dim"], n_planes, seed)
-    v = F.col(vec_col).cast("array<double>")
-    version = f"v-{uuid.uuid4().hex}"
-    vdir = os.path.join(index_dir, version)
-    (emb.select(F.col(id_col), F.col(vec_col),
-                bucket_col(v, planes).alias("bucket"))
-     .write.mode("overwrite").partitionBy("bucket")
-     .parquet(os.path.join(vdir, "data")))
-    meta = {"dim": int(head["dim"]), "n_planes": int(n_planes),
-            "seed": int(seed), "id_col": id_col, "vec_col": vec_col,
-            "n_rows": int(head["n"])}
-    # meta rides the SAME storage layer as the data (a one-row parquet
-    # via Spark) — a driver-local open() would break the moment
-    # index_dir is s3a://... while the parquet half succeeded
-    (emb.sparkSession.createDataFrame(
-        [(json.dumps(meta),)], "meta string")
-     .coalesce(1).write.mode("overwrite")
-     .parquet(os.path.join(vdir, "meta")))
-    _commit_version(emb.sparkSession, index_dir, version, keep_versions)
-    return meta
-
-
-def ann_index_topk(spark, index_dir: str, query_vec,
-                   k: int = 10) -> DataFrame:
-    """Query a ``build_ann_index`` table: probe the query's bucket (+
-    Hamming-1 neighbours), exact cosine re-rank inside the candidates.
-    ``bucket`` is a hive partition column, so the probe filter is a
-    PartitionFilter — non-probed files are never opened (asserted by
-    ``test_ann_index_partition_pruning``).
-
-    Pointer resolution retries once: if a build raced the EAGER meta
-    read here, re-resolving lands on the freshly committed version.
-    LIFETIME BOUNDARY (by design): the returned DataFrame reads the
-    resolved version's data files lazily, so it must be consumed before
-    ``keep_versions`` further builds retire that version — a held-open
-    query older than the grace window fails (loudly, FileNotFound) at
-    action time. Long-lived readers should raise ``keep_versions`` on
-    the builder; time-based retention would need wall-clock state the
-    commit log deliberately avoids."""
-    import json
-    import os
-
-    vdir = _index_version_dir(spark, index_dir)
-    try:
-        meta = json.loads(
-            spark.read.parquet(os.path.join(vdir, "meta"))
-            .first()["meta"])
-    except Exception:
-        vdir = _index_version_dir(spark, index_dir)
-        meta = json.loads(
-            spark.read.parquet(os.path.join(vdir, "meta"))
-            .first()["meta"])
-    index_dir = vdir
-    planes = hyperplanes(meta["dim"], meta["n_planes"], meta["seed"])
-    qb = _python_bucket(query_vec, planes)
-    probes = [qb] + [qb ^ (1 << i) for i in range(meta["n_planes"])]
-    df = spark.read.parquet(os.path.join(index_dir, "data"))
-    cand = df.filter(F.col("bucket").isin(probes))
-    v = F.col(meta["vec_col"]).cast("array<double>")
-    q = _query_lit(query_vec)
-    return (cand.select(F.col(meta["id_col"]),
-                        cosine_col(v, q).alias("_cos"))
-            .orderBy(F.desc("_cos"), F.col(meta["id_col"]))
-            .limit(k)
-            .select(F.col(meta["id_col"]),
-                    F.round("_cos", 6).alias("cosine")))
 
 
 def kmeans_centroids(emb: DataFrame, k: int = 16, iterations: int = 5,
@@ -360,8 +151,6 @@ def kmeans_centroids(emb: DataFrame, k: int = 16, iterations: int = 5,
     explode→groupBy(cluster, dim) mean; k·dim aggregate rows come back
     to the driver per iteration, never data rows. An empty cluster
     keeps its previous centroid (the standard fallback)."""
-    import numpy as np
-
     init = (emb.orderBy(id_col).limit(k)
             .select(vec_col).collect())
     cents = [list(map(float, r[0])) for r in init]
@@ -418,10 +207,10 @@ def ivf_topk(emb: DataFrame, query_vec, k: int = 10,
     re-rank inside the probed cells (the FAISS IVF-Flat construction,
     on DataFrames). Complements ``lsh_bucket_topk``: IVF adapts its
     partitioning to the data distribution where LSH planes are
-    data-oblivious. At scale, build ``centroids`` ONCE (pass the list —
-    the train cost amortizes over all queries, the ``build_ann_index``
-    discipline) and materialize ``cluster`` as a partition column so a
-    query prunes to nprobe/n_centroids of the files."""
+    data-oblivious. At scale, train ``centroids`` ONCE and pass the list
+    (the train cost amortizes over all queries), and materialize
+    ``cluster`` as a partition column so a query prunes to
+    nprobe/n_centroids of the files."""
     if centroids is None:
         centroids = kmeans_centroids(emb, n_centroids, iterations,
                                      id_col, vec_col)
@@ -546,8 +335,7 @@ def semdedup(emb: DataFrame, tau: float = 0.8,
     precomputed partition — IVF cell, LSH bucket, label); rows whose
     cluster is NULL join nothing and are always kept.  Otherwise
     k-means (``kmeans_centroids``) assigns one, with ``centroids``
-    accepted precomputed to amortize training (the ``build_ann_index``
-    discipline).
+    accepted precomputed to amortize training over many calls.
 
     Returns ``(id_col, cluster, keep)`` for EVERY input row.  The
     within-cluster self-join shuffles on the cluster key — a skewed

@@ -45,7 +45,7 @@ from pyspark.sql import types as T
 from ..config import DEFAULT_CONFIG, ExtractConfig
 from ..extract_core import CRITICAL_FAMILIES
 from ..gates import broadcast_if_small, materialize
-from ..operators.extract import EXTRACTED_SCHEMA, extract_fused
+from ..operators.extract import extract_fused
 from ..sources.icebox import IceboxTable
 
 PAGES_SCHEMA = T.StructType([

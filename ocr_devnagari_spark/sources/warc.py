@@ -292,8 +292,6 @@ def warc_cdx_index(spark: SparkSession, path: str,
     layout would make them compressed offsets — documented difference).
     Same scale shape as ``read_warc_pages``: one task per archive,
     streamed decompression, bounded output chunks."""
-    import pandas as pd
-
     from pyspark.sql.types import (
         IntegerType,
         LongType,

@@ -103,25 +103,6 @@ def test_keyframes_skip_out_of_range_samples():
     assert [p["sample_idx"] for p in picked] == list(range(len(FRAMES) - 1))
 
 
-def test_video_feature_stage(spark):
-    from ocr_devnagari_spark.operators.multimodal import (
-        video_feature_stage,
-    )
-    raw = encode_mp4(FRAMES, fps=10, width=64, height=48, sync_every=4)
-    rows = [("v1", "video", bytearray(raw), "video/mp4"),
-            ("bad", "video", bytearray(b"\x00" * 32), None)]
-    media = spark.createDataFrame(
-        rows, "media_id string, kind string, payload binary, mime string")
-    got = {r["media_id"]: r
-           for r in video_feature_stage(media).collect()}
-    v = got["v1"]
-    assert (v["duration_ms"], v["width"], v["height"]) == (1200, 64, 48)
-    assert (v["codec"], v["n_samples"], v["n_keyframes"]) == ("mp4v", 12, 3)
-    b = got["bad"]
-    assert b["n_bytes"] == 32 and b["codec"] is None
-    assert b["n_samples"] is None
-
-
 def test_frame_stage_real_path(spark):
     from ocr_devnagari_spark.operators.multimodal import (
         frame_sample_stage,

@@ -254,3 +254,35 @@ def test_one_commit_path():
                     if isinstance(n, ast.Attribute)}:
                 offenders.append(f"{where} .writeStream….{node.attr}")
     assert not offenders, offenders
+
+
+def test_one_commit_protocol():
+    """A table has one commit protocol, the icebox manifest plus the
+    ``os.replace`` swap of its ``_current`` pointer: no other module
+    names a pointer or marker-log file or renames files into place.
+    ``session.py`` is exempt: ``package_zip`` swaps in a build artifact,
+    not a table."""
+    import ast
+    import pathlib
+
+    import ocr_devnagari_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "sources/icebox.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            where = f"{rel}:{getattr(node, 'lineno', '?')}"
+            if (isinstance(node, ast.Constant)
+                    and node.value in ("_current", "_commits")):
+                offenders.append(f"{where} {node.value!r}")
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("replace", "rename")
+                    and isinstance(node.func.value, ast.Name)
+                    and node.func.value.id == "os"
+                    and rel != "session.py"):
+                offenders.append(f"{where} os.{node.func.attr}")
+    assert not offenders, offenders

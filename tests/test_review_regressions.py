@@ -203,38 +203,3 @@ def test_pages_filter_survives_huge_url_numbers(spark, tmp_path):
     cfg = ExtractConfig(root_dir=str(tmp_path / "t"))
     r = run_extract_job(spark, str(tmp_path / "c"), cfg, pages="0-3")
     assert r["rows"] == 4          # huge-number url is simply not selected
-
-
-def test_ann_index_legacy_layout_still_served(spark, tmp_path):
-    """Indexes built before the versioned layout (data/ + meta/ directly
-    under index_dir) must stay readable — no forced rebuild."""
-    import json
-    import os
-    import shutil
-
-    from ocr_devnagari_spark.operators.similarity import (
-        ann_index_topk,
-        build_ann_index,
-    )
-    emb = spark.createDataFrame(
-        [(i, [float((i * 7 + j) % 13) - 6.0 for j in range(8)])
-         for i in range(50)],
-        "vec_id long, embedding array<float>")
-    idx = str(tmp_path / "newidx")
-    build_ann_index(emb, idx, n_planes=4, seed=3)
-    q = emb.filter("vec_id = 1").first()["embedding"]
-    want = [(r.vec_id, r.cosine)
-            for r in ann_index_topk(spark, idx, q, k=5).collect()]
-
-    # reconstruct the legacy layout from the versioned dir
-    from ocr_devnagari_spark.operators.similarity import _index_version_dir
-    legacy = str(tmp_path / "oldidx")
-    vdir = _index_version_dir(spark, idx)
-    os.makedirs(legacy)
-    shutil.copytree(os.path.join(vdir, "data"),
-                    os.path.join(legacy, "data"))
-    shutil.copytree(os.path.join(vdir, "meta"),
-                    os.path.join(legacy, "meta"))
-    got = [(r.vec_id, r.cosine)
-           for r in ann_index_topk(spark, legacy, q, k=5).collect()]
-    assert got == want and len(got) == 5

@@ -131,150 +131,6 @@ def test_knn_self_join_auto_planes_recall_unchanged(spark):
         assert found >= n_clones       # every clone pair recovered
 
 
-def test_ann_index_equals_inline_lsh(spark, emb, tmp_path):
-    """A materialized index query returns EXACTLY the inline LSH result
-    (same plane family/seed → same candidates → same exact re-rank)."""
-    from ocr_devnagari_spark.operators.similarity import (
-        ann_index_topk,
-        build_ann_index,
-    )
-    idx = str(tmp_path / "annidx")
-    meta = build_ann_index(emb, idx, n_planes=6, seed=42)
-    assert meta["n_planes"] == 6 and meta["dim"] == 64
-
-    q = emb.filter("vec_id = 7").first()["embedding"]
-    want = [(r.vec_id, r.cosine)
-            for r in lsh_bucket_topk(emb, q, k=10, n_planes=6,
-                                     seed=42).collect()]
-    got = [(r.vec_id, r.cosine)
-           for r in ann_index_topk(spark, idx, q, k=10).collect()]
-    assert got == want and len(got) > 0
-
-
-def test_ann_index_partition_pruning(spark, emb, tmp_path):
-    """The probe filter must reach the scan as a PartitionFilter — the
-    property that makes the index O(probed buckets), not O(table)."""
-    import io
-    from contextlib import redirect_stdout
-
-    from ocr_devnagari_spark.operators.similarity import (
-        ann_index_topk,
-        build_ann_index,
-    )
-    idx = str(tmp_path / "annidx2")
-    build_ann_index(emb, idx, n_planes=5, seed=1)
-    q = emb.filter("vec_id = 3").first()["embedding"]
-    df = ann_index_topk(spark, idx, q, k=5)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan
-    # the bucket probe appears inside the partition filters, so non-probed
-    # bucket directories are never opened
-    pf_line = next(line for line in plan.splitlines()
-                   if "PartitionFilters" in line)
-    assert "bucket" in pf_line and "dynamicpruning" not in pf_line
-
-
-def test_ann_index_build_crash_keeps_old_version(spark, emb, tmp_path,
-                                                 monkeypatch):
-    """A rebuild that dies before its commit marker lands must leave
-    queries on the OLD index — data and meta can never be served from
-    different plane geometries (the wrong-bucket silent-recall
-    failure)."""
-    import os
-
-    from ocr_devnagari_spark.operators import similarity as sim
-
-    idx = str(tmp_path / "annidx3")
-    sim.build_ann_index(emb, idx, n_planes=6, seed=42)
-    q = emb.filter("vec_id = 7").first()["embedding"]
-    before = [(r.vec_id, r.cosine)
-              for r in sim.ann_index_topk(spark, idx, q, k=10).collect()]
-
-    def boom(*a, **kw):
-        raise OSError("simulated crash before commit marker")
-
-    monkeypatch.setattr(sim, "_commit_version", boom)
-    import pytest as _pytest
-    with _pytest.raises(OSError, match="simulated crash"):
-        # different geometry: served buckets would be wrong if any of
-        # this rebuild's output became visible
-        sim.build_ann_index(emb, idx, n_planes=4, seed=99)
-    monkeypatch.undo()
-
-    after = [(r.vec_id, r.cosine)
-             for r in sim.ann_index_topk(spark, idx, q, k=10).collect()]
-    assert after == before
-    # and a subsequent SUCCESSFUL rebuild swaps cleanly
-    sim.build_ann_index(emb, idx, n_planes=4, seed=99)
-    import json
-    vdir = sim._index_version_dir(spark, idx)
-    meta = json.loads(
-        spark.read.parquet(os.path.join(vdir, "meta")).first()["meta"])
-    assert meta["n_planes"] == 4 and meta["seed"] == 99
-
-
-def test_ann_index_grace_retention_and_gc(spark, emb, tmp_path):
-    """Superseded versions stay readable for ``keep_versions`` builds (an
-    in-flight reader that resolved the old marker keeps working), then
-    fall off the tail and are GC'd with their markers."""
-    import os
-
-    from ocr_devnagari_spark.operators import similarity as sim
-
-    idx = str(tmp_path / "annidx_grace")
-    sim.build_ann_index(emb, idx, n_planes=6, seed=42)
-    v1 = sim._index_version_dir(spark, idx)
-    sim.build_ann_index(emb, idx, n_planes=5, seed=7)
-    v2 = sim._index_version_dir(spark, idx)
-    assert v2 != v1
-    # grace window: the superseded v1 data is still on disk and readable
-    assert os.path.isdir(os.path.join(v1, "data"))
-    q = emb.filter("vec_id = 7").first()["embedding"]
-    assert len(sim.ann_index_topk(spark, idx, q, k=5).collect()) == 5
-    # a third build pushes v1 past keep_versions=2 -> GC'd, v2 retained
-    sim.build_ann_index(emb, idx, n_planes=4, seed=9)
-    assert not os.path.exists(v1)
-    assert os.path.isdir(os.path.join(v2, "data"))
-    markers = [m for m in os.listdir(os.path.join(idx, "_commits"))
-               if not m.startswith(".")]          # skip .crc sidecars
-    assert len(markers) == 2
-
-
-def test_ann_index_legacy_pointer_migrates(spark, emb, tmp_path):
-    """A round-3 index (``_current`` pointer file, no ``_commits``) is
-    served as-is, and the first new-style build folds the legacy version
-    into the marker log so it gets the same grace/GC lifecycle."""
-    import os
-
-    from ocr_devnagari_spark.operators import similarity as sim
-
-    idx = str(tmp_path / "annidx_legacy")
-    sim.build_ann_index(emb, idx, n_planes=6, seed=42)
-    vdir = sim._index_version_dir(spark, idx)
-    version = os.path.basename(vdir)
-    # rewrite the commit as the round-3 layout: pointer file, no markers
-    import shutil
-    shutil.rmtree(os.path.join(idx, "_commits"))
-    with open(os.path.join(idx, "_current"), "w") as f:
-        f.write(version)
-    assert sim._index_version_dir(spark, idx) == vdir
-    q = emb.filter("vec_id = 7").first()["embedding"]
-    want = [(r.vec_id, r.cosine)
-            for r in sim.ann_index_topk(spark, idx, q, k=5).collect()]
-    # new-style rebuild: legacy version becomes marker 1, new one wins,
-    # pointer file is retired; legacy data survives the grace window
-    sim.build_ann_index(emb, idx, n_planes=4, seed=99)
-    assert not os.path.exists(os.path.join(idx, "_current"))
-    markers = sorted(m for m in os.listdir(os.path.join(idx, "_commits"))
-                     if not m.startswith("."))    # skip .crc sidecars
-    assert len(markers) == 2 and markers[0].endswith(version)
-    assert os.path.isdir(os.path.join(vdir, "data"))
-    assert len(want) == 5
-
-
 def test_ivf_topk_recall_and_exact_rerank(spark, emb, emb_np):
     """IVF: probed-cell candidates, exact cosine re-rank — every
     returned score equals brute force, recall has a sane floor, and
@@ -312,3 +168,41 @@ def test_kmeans_centroids_deterministic_and_shaped(spark, emb):
     # deterministic across runs up to float-sum noise in the JVM means
     import numpy as np
     assert np.allclose(np.array(a), np.array(b), atol=1e-9)
+
+
+def test_zero_vector_gets_null_cosine(spark):
+    """One all-zero embedding has no direction: its cosine is NULL, so it
+    ranks last in every top-k, forms no k-NN pair and is kept by
+    semdedup — instead of one row aborting the query with
+    DIVIDE_BY_ZERO under ANSI mode."""
+    from pyspark.sql import functions as F
+
+    from ocr_devnagari_spark.operators.similarity import (
+        hyperplanes,
+        ivf_topk,
+        semdedup,
+    )
+
+    # a and its near-clone lie on the negative side of the one seeded
+    # plane, so all three rows share LSH bucket 0 with the zero vector
+    # (whose every sign bit is 0) and the zero row meets every join
+    a = [-x for x in hyperplanes(3, 1, 42)[0]]
+    rows = [(0, [0.0, 0.0, 0.0]), (1, a), (2, a[:2] + [a[2] * 1.01])]
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>").withColumn(
+            "c", F.lit(0))
+
+    want_ids = [1, 2, 0]
+    for df in (cosine_topk(emb, a, k=3),
+               lsh_bucket_topk(emb, a, k=3, n_planes=1),
+               ivf_topk(emb, a, k=3, nprobe=2,
+                        centroids=[[0.0, 0.0, 0.0], a])):
+        got = df.collect()
+        assert [r.vec_id for r in got] == want_ids
+        assert got[-1].cosine is None
+        assert all(r.cosine > 0.99 for r in got[:2])
+    pairs = knn_self_join(emb, threshold=0.9, n_planes=1, bands=1)
+    assert [(r.id_a, r.id_b) for r in pairs.collect()] == [(1, 2)]
+    keep = {r.vec_id: r.keep
+            for r in semdedup(emb, tau=0.9, cluster_col="c").collect()}
+    assert keep == {0: True, 1: True, 2: False}

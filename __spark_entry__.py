@@ -11,6 +11,23 @@ DataFrame with column names aligned to ``oracle_sql()``.
 (MinHash/SimHash/LSH/multimodal) use hash families DuckDB doesn't share;
 they are rows-only here and verified against brute-force Python oracles in
 ``tests/``.
+
+Each synthetic column input (spiked text, messy URLs, linky HTML, …) has
+ONE definition: a ``_*_SQL`` expression over a ``documents`` row.  The
+Spark query evaluates it with ``F.expr`` and the oracle interpolates the
+same string.  The expressions keep to SQL that Spark 4.1 and DuckDB
+evaluate identically:
+
+- ``CAST(… AS STRING)``, never a bare ``VARCHAR`` (Spark 4.1 rejects it
+  with ``DATATYPE_MISSING_SIZE``);
+- ``chr(n)`` only for n < 256 (Spark's ``chr`` wraps modulo 256, so
+  ``chr(769)`` is ``'\\x01'``); combining marks are literal characters;
+- ``||``, ``CASE``, ``lpad``, ``upper(hex(…))`` and ``md5`` agree.
+
+``tests/test_entry_contract.py::test_fixture_sql_same_on_both_engines``
+checks every such expression on both engines.  Inputs that are whole
+DataFrames (``_wrapped_pages``, ``_dupful_docs``, the robots corpora)
+keep a Spark builder next to their SQL form.
 """
 
 from __future__ import annotations
@@ -127,7 +144,7 @@ def _gate_fixture_base(spark: SparkSession, name: str, entry: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Shared constructions (mirrored 1:1 in the oracle SQL)
+# Shared constructions
 # ---------------------------------------------------------------------------
 
 # linear quality classifier demo model (terms from the synthetic corpus
@@ -166,33 +183,6 @@ def _wrapped_pages(spark, sf_dir) -> DataFrame:
                  ).cast("binary").alias("html"))
 
 
-def _spiked_text() -> F.Column:
-    """Deterministically spike critical patterns into 'documents.text' so
-    every detector family (verse, code, section, deity+yantra, triple-bija
-    → high_priority) has signal on the driver corpus."""
-    return (F.when(F.col("doc_id") % 5 == 0,
-                   F.concat(F.col("text"), F.lit(" ॥ "),
-                            (F.col("doc_id") % 20).cast("string"),
-                            F.lit(" ॥")))
-            .when(F.col("doc_id") % 7 == 0,
-                  F.concat(F.col("text"), F.lit(" def f(x): return 42")))
-            .when(F.col("doc_id") % 11 == 0,
-                  F.concat(F.col("text"), F.lit(" मन्त्र विनियोग जप")))
-            .when(F.col("doc_id") % 13 == 0,
-                  F.concat(F.col("text"), F.lit(" शिव श्रीचक्र")))
-            .when(F.col("doc_id") % 17 == 0,
-                  F.concat(F.col("text"), F.lit(" ॐ ॐ ॐ")))
-            .otherwise(F.col("text")))
-
-_SPIKED_SQL = ("CASE WHEN doc_id % 5 = 0 THEN text || ' ॥ ' || "
-               "CAST(doc_id % 20 AS VARCHAR) || ' ॥' "
-               "WHEN doc_id % 7 = 0 THEN text || ' def f(x): return 42' "
-               "WHEN doc_id % 11 = 0 THEN text || ' मन्त्र विनियोग जप' "
-               "WHEN doc_id % 13 = 0 THEN text || ' शिव श्रीचक्र' "
-               "WHEN doc_id % 17 = 0 THEN text || ' ॐ ॐ ॐ' "
-               "ELSE text END")
-
-
 def _dupful_docs(spark, sf_dir, source: str | None = None) -> DataFrame:
     """documents ∪ planted clones (doc_id%97==0, shifted ids) — gives the
     dedup operators real duplicate groups on the driver corpus.
@@ -211,121 +201,212 @@ _DUPFUL_SQL = ("SELECT doc_id, text FROM documents UNION ALL "
                "WHERE doc_id % 97 = 0")
 
 
-def _messy_url() -> F.Column:
-    """Deterministic messy URLs over doc_id — every canonicalization rule
-    (case, default ports, tracking params, param order, fragments,
-    userinfo, non-URL passthrough) has signal on the driver corpus."""
-    sid = F.col("doc_id").cast("string")
-    return (F.when(F.col("doc_id") % 7 == 0,
-                   F.concat(F.lit("HTTP://WWW.Example.COM:80/a/"), sid,
-                            F.lit("?utm_source=x&b=2&a=1#frag")))
-            .when(F.col("doc_id") % 7 == 1,
-                  F.concat(F.lit("https://News.site.org:443/p/"), sid,
-                           F.lit("/")))
-            .when(F.col("doc_id") % 7 == 2,
-                  F.concat(F.lit("https://user@Sub.Example.com/x/"), sid))
-            .when(F.col("doc_id") % 7 == 3,
-                  F.concat(F.lit("http://example.com:8080/y?z=1&gclid="),
-                           sid, F.lit("&y=2")))
-            .when(F.col("doc_id") % 7 == 4,
-                  F.concat(F.lit("https://example.com/p%61th/%7e"), sid,
-                           F.lit("?q=%41%3f")))
-            .when(F.col("doc_id") % 7 == 5,
-                  F.concat(F.lit("https://example.com/a/./b/../"), sid))
-            .otherwise(F.concat(F.lit("not a url "), sid)))
+# ---------------------------------------------------------------------------
+# Synthetic column inputs: each is ONE SQL expression over a
+# ``documents`` row.  The Spark query reads it through ``F.expr(<CONST>)``
+# and the DuckDB oracle interpolates the same string, so the engine's
+# input and the oracle's input cannot drift apart.  Module docstring:
+# the SQL subset both engines evaluate identically.
+# ---------------------------------------------------------------------------
 
-def _psl_url() -> F.Column:
-    """Deterministic URLs exercising every PSL rule kind over doc_id:
-    second-level registries, wildcard, exception, default, no-host."""
-    sid = (F.col("doc_id") % 5).cast("string")
-    return (F.when(F.col("doc_id") % 7 == 0,
-                   F.concat(F.lit("https://site"), sid, F.lit(".co.uk/p")))
-            .when(F.col("doc_id") % 7 == 1,
-                  F.concat(F.lit("https://sub.site"), sid,
-                           F.lit(".com.au/x")))
-            .when(F.col("doc_id") % 7 == 2,
-                  F.concat(F.lit("http://shop"), sid, F.lit(".example.com")))
-            .when(F.col("doc_id") % 7 == 3, F.lit("https://a.www.ck/"))
-            .when(F.col("doc_id") % 7 == 4,
-                  F.concat(F.lit("https://host"), sid, F.lit(".b.ck/y")))
-            .when(F.col("doc_id") % 7 == 5, F.lit("http://b.ck/"))
-            .otherwise(F.concat(F.lit("not a url "), sid)))
+# Deterministically spike critical patterns into 'documents.text' so
+# every detector family (verse, code, section, deity+yantra, triple-bija
+# → high_priority) has signal on the driver corpus.
+_SPIKED_SQL = ("CASE WHEN doc_id % 5 = 0 THEN text || ' ॥ ' || "
+               "CAST(doc_id % 20 AS STRING) || ' ॥' "
+               "WHEN doc_id % 7 = 0 THEN text || ' def f(x): return 42' "
+               "WHEN doc_id % 11 = 0 THEN text || ' मन्त्र विनियोग जप' "
+               "WHEN doc_id % 13 = 0 THEN text || ' शिव श्रीचक्र' "
+               "WHEN doc_id % 17 = 0 THEN text || ' ॐ ॐ ॐ' "
+               "ELSE text END")
 
+# Deterministic messy URLs over doc_id — every canonicalization rule
+# (case, default ports, tracking params, param order, fragments,
+# userinfo, non-URL passthrough) has signal on the driver corpus.
+_MESSY_URL_SQL = (
+    "CASE WHEN doc_id % 7 = 0 THEN 'HTTP://WWW.Example.COM:80/a/' || "
+    "CAST(doc_id AS STRING) || '?utm_source=x&b=2&a=1#frag' "
+    "WHEN doc_id % 7 = 1 THEN 'https://News.site.org:443/p/' || "
+    "CAST(doc_id AS STRING) || '/' "
+    "WHEN doc_id % 7 = 2 THEN 'https://user@Sub.Example.com/x/' || "
+    "CAST(doc_id AS STRING) "
+    "WHEN doc_id % 7 = 3 THEN 'http://example.com:8080/y?z=1&gclid=' || "
+    "CAST(doc_id AS STRING) || '&y=2' "
+    "WHEN doc_id % 7 = 4 THEN 'https://example.com/p%61th/%7e' || "
+    "CAST(doc_id AS STRING) || '?q=%41%3f' "
+    "WHEN doc_id % 7 = 5 THEN 'https://example.com/a/./b/../' || "
+    "CAST(doc_id AS STRING) "
+    "ELSE 'not a url ' || CAST(doc_id AS STRING) END")
 
-def _synthetic_html() -> F.Column:
-    """Deterministic HTML wrappers over doc_id: robots-noindex in both
-    attribute orders, nofollow-only (must NOT gate), and plain pages."""
-    sid = F.col("doc_id").cast("string")
-    return (F.when(F.col("doc_id") % 7 == 0,
-                   F.concat(F.lit('<html><head><meta name="ROBOTS" '
-                                  'content="NOINDEX, nofollow"></head>'
-                                  '<body>'), sid, F.lit("</body>")))
-            .when(F.col("doc_id") % 7 == 1,
-                  F.concat(F.lit("<head><meta content='noindex' "
-                                 "name=robots></head><p>"), sid))
-            .when(F.col("doc_id") % 7 == 2,
-                  F.concat(F.lit('<head><meta name="robots" '
-                                 'content="nofollow"></head>'), sid))
-            .otherwise(F.concat(F.lit("<html><body>page "), sid,
-                                F.lit(" noindex mentioned in prose"))))
+# Deterministic URLs exercising every PSL rule kind over doc_id:
+# second-level registries, wildcard, exception, default, no-host.
+_PSL_URL_SQL = (
+    "CASE WHEN doc_id % 7 = 0 THEN 'https://site' || "
+    "CAST(doc_id % 5 AS STRING) || '.co.uk/p' "
+    "WHEN doc_id % 7 = 1 THEN 'https://sub.site' || "
+    "CAST(doc_id % 5 AS STRING) || '.com.au/x' "
+    "WHEN doc_id % 7 = 2 THEN 'http://shop' || "
+    "CAST(doc_id % 5 AS STRING) || '.example.com' "
+    "WHEN doc_id % 7 = 3 THEN 'https://a.www.ck/' "
+    "WHEN doc_id % 7 = 4 THEN 'https://host' || "
+    "CAST(doc_id % 5 AS STRING) || '.b.ck/y' "
+    "WHEN doc_id % 7 = 5 THEN 'http://b.ck/' "
+    "ELSE 'not a url ' || CAST(doc_id % 5 AS STRING) END")
 
-
+# Deterministic HTML wrappers over doc_id: robots-noindex in both
+# attribute orders, nofollow-only (must NOT gate), and plain pages.
 _SYNTHETIC_HTML_SQL = (
     "CASE WHEN doc_id % 7 = 0 THEN '<html><head><meta name=\"ROBOTS\" "
     "content=\"NOINDEX, nofollow\"></head><body>' || "
-    "CAST(doc_id AS VARCHAR) || '</body>' "
+    "CAST(doc_id AS STRING) || '</body>' "
     "WHEN doc_id % 7 = 1 THEN '<head><meta content=''noindex'' "
-    "name=robots></head><p>' || CAST(doc_id AS VARCHAR) "
+    "name=robots></head><p>' || CAST(doc_id AS STRING) "
     "WHEN doc_id % 7 = 2 THEN '<head><meta name=\"robots\" "
-    "content=\"nofollow\"></head>' || CAST(doc_id AS VARCHAR) "
-    "ELSE '<html><body>page ' || CAST(doc_id AS VARCHAR) || "
+    "content=\"nofollow\"></head>' || CAST(doc_id AS STRING) "
+    "ELSE '<html><body>page ' || CAST(doc_id AS STRING) || "
     "' noindex mentioned in prose' END")
 
-
-def _synthetic_path() -> F.Column:
-    sid = F.col("doc_id").cast("string")
-    return (F.when(F.col("doc_id") % 4 == 0,
-                   F.concat(F.lit("/private/p"), sid))
-            .when(F.col("doc_id") % 4 == 1,
-                  F.concat(F.lit("/admin/a"), sid))
-            .when(F.col("doc_id") % 4 == 2,
-                  F.concat(F.lit("/public/c"), sid))
-            .otherwise(F.lit("/tmp")))
-
-
 _SYNTHETIC_PATH_SQL = (
-    "CASE WHEN doc_id % 4 = 0 THEN '/private/p' || CAST(doc_id AS VARCHAR) "
-    "WHEN doc_id % 4 = 1 THEN '/admin/a' || CAST(doc_id AS VARCHAR) "
-    "WHEN doc_id % 4 = 2 THEN '/public/c' || CAST(doc_id AS VARCHAR) "
+    "CASE WHEN doc_id % 4 = 0 THEN '/private/p' || CAST(doc_id AS STRING) "
+    "WHEN doc_id % 4 = 1 THEN '/admin/a' || CAST(doc_id AS STRING) "
+    "WHEN doc_id % 4 = 2 THEN '/public/c' || CAST(doc_id AS STRING) "
     "ELSE '/tmp' END")
 
+# one of the robots corpus's hosts h0…h5 per doc
+_HOST6_SQL = "'h' || CAST(doc_id % 6 AS STRING)"
 
-def _linky_html() -> F.Column:
-    """Deterministic HTML with outlinks: one absolute, one
-    protocol-relative, one relative href per doc; hosts derived from
-    doc_id so the host graph has real in/out-degree structure."""
-    sid = F.col("doc_id").cast("string")
-    h1 = (F.col("doc_id") % 9).cast("string")
-    h2 = ((F.col("doc_id") * 3 + 1) % 9).cast("string")
-    return F.concat(
-        F.lit('<html><body><a href="https://h'), h1,
-        F.lit('.example.com/p/'), sid,
-        F.lit('">l1</a> <a href="//h'), h2,
-        F.lit('.example.com/q">l2</a> <a href="/local/'), sid,
-        F.lit('">l3</a></body></html>'))
+_HOST97_SQL = "'h' || CAST(doc_id % 97 AS STRING)"
 
-
+# Deterministic HTML with outlinks: one absolute, one protocol-relative,
+# one relative href per doc; hosts derived from doc_id so the host graph
+# has real in/out-degree structure.
 _LINKY_HTML_SQL = (
-    "'<html><body><a href=\"https://h' || CAST(doc_id % 9 AS VARCHAR) || "
-    "'.example.com/p/' || CAST(doc_id AS VARCHAR) || "
-    "'\">l1</a> <a href=\"//h' || CAST((doc_id * 3 + 1) % 9 AS VARCHAR) "
+    "'<html><body><a href=\"https://h' || CAST(doc_id % 9 AS STRING) || "
+    "'.example.com/p/' || CAST(doc_id AS STRING) || "
+    "'\">l1</a> <a href=\"//h' || CAST((doc_id * 3 + 1) % 9 AS STRING) "
     "|| '.example.com/q\">l2</a> <a href=\"/local/' || "
-    "CAST(doc_id AS VARCHAR) || '\">l3</a></body></html>'")
+    "CAST(doc_id AS STRING) || '\">l3</a></body></html>'")
+
+# the already-crawled set of the frontier query: the absolute link of
+# every _LINKY_HTML_SQL page
+_CRAWLED_URL_SQL = ("'https://h' || CAST(doc_id % 9 AS STRING) || "
+                    "'.example.com/p/' || CAST(doc_id AS STRING)")
+
+# Deterministic PII spikes over documents.text — every detector family
+# (email / phone / IPv4) gets signal on the driver corpus, plus an
+# untouched residue class.
+_PII_TEXT_SQL = (
+    "CASE WHEN doc_id % 4 = 0 THEN text || ' contact user' || "
+    "CAST(doc_id AS STRING) || '@example.com now' "
+    "WHEN doc_id % 4 = 1 THEN text || ' call +12 345-67' || "
+    "lpad(CAST(doc_id % 100 AS STRING), 2, '0') || ' ok' "
+    "WHEN doc_id % 4 = 2 THEN text || ' from 10.0.' || "
+    "CAST(doc_id % 256 AS STRING) || '.7 logged' "
+    "ELSE text END")
+
+# documents.text extended to a 3-paragraph page: unique body +
+# per-source boilerplate + global footer — the shape paragraph-dedup
+# exists for.
+_PARA_TEXT_SQL = ("text || chr(10) || 'subscribe to ' || source || "
+                  "' updates' || chr(10) || 'copyright footer'")
+
+# Deterministic anchor tags WITH visible text: one absolute link (host
+# from doc_id) with nested markup in the anchor, one relative link —
+# exercises inner-tag stripping, whitespace collapsing and dst-host
+# resolution.
+_ANCHOR_HTML_SQL = (
+    "'<html><a href=\"https://h' || CAST(doc_id % 9 AS STRING) || "
+    "'.example.com/p/' || CAST(doc_id AS STRING) || "
+    "'\">Read  <b>more</b> news ' || CAST(doc_id % 3 AS STRING) || "
+    "'</a> <a href=\"/local/' || CAST(doc_id AS STRING) || "
+    "'\">home page</a></html>'")
+
+# sitemap XML per doc: one plain <loc>, one padded with newlines and
+# spaces that the extractor must trim
+_SITEMAP_XML_SQL = (
+    "'<urlset><url><loc>https://s' || CAST(doc_id % 5 AS STRING) || "
+    "'.example.com/p/' || CAST(doc_id AS STRING) || "
+    "'</loc></url><url><loc>' || chr(10) || '  https://mirror.org/' || "
+    "CAST(doc_id AS STRING) || '  ' || chr(10) || "
+    "'</loc></url></urlset>'")
+
+# content-sniffing signatures: PNG, JPEG, RIFF/WAVE, HTML doctype and
+# unknown magic, each followed by a doc-specific hex tail
+_SNIFF_TAIL_SQL = "lpad(upper(hex(doc_id)), 8, '0')"
+_SNIFF_HEX_SQL = (
+    f"CASE WHEN doc_id % 5 = 0 THEN '89504E470D0A1A0A' || {_SNIFF_TAIL_SQL} "
+    f"WHEN doc_id % 5 = 1 THEN 'FFD8FFE0' || {_SNIFF_TAIL_SQL} "
+    f"WHEN doc_id % 5 = 2 THEN '52494646' || {_SNIFF_TAIL_SQL} "
+    "|| '57415645' "
+    f"WHEN doc_id % 5 = 3 THEN '3C21444F43545950' || {_SNIFF_TAIL_SQL} "
+    f"ELSE {_SNIFF_TAIL_SQL} END")
+
+_V2_DIGEST_SQL = ("md5(CASE WHEN doc_id % 3 = 0 THEN text || ' v2' "
+                  "ELSE text END)")
+
+_SUBSTR_SPIKED_SQL = ("CASE WHEN doc_id % 10 = 0 THEN text || "
+                      f"' {SUBSTR_BOILER}' ELSE text END")
+
+# hosts of the authority-weighted mix: a third on the linky corpus's
+# h* hosts, a third on its s* source hosts, a third on no ranked host
+_MIX_HOST_SQL = (
+    "CASE WHEN doc_id % 3 = 0 THEN 'h' || CAST(doc_id % 9 AS STRING) "
+    "|| '.example.com' "
+    "WHEN doc_id % 3 = 1 THEN 's' || CAST(doc_id % 5 AS STRING) "
+    "|| '.example.com' ELSE 'nowhere.net' END")
+
+_MIX_RATES = {"en": 0.5, "hi": 0.2, "zh": 0.05}
+_MIX_TIERS = [(0.015, 1.0), (0.0105, 0.5), (-1.0, 0.1)]
+
+# synthetic blocklist — the OPERATOR is list-parameterized; these are
+# placeholder tokens planted into the driver corpus, not a real list
+_BLOCKTERMS = ["badword", "casino bonus", "xxspam"]
+
+# blocklist spikes: a case-folded hit, a multi-term hit and a
+# substring-only near miss
+_BLOCKSPIKE_SQL = (
+    "CASE WHEN doc_id % 6 = 0 THEN text || ' BadWord here' "
+    "WHEN doc_id % 6 = 1 THEN text || ' win casino bonus now xxspam' "
+    "WHEN doc_id % 6 = 2 THEN text || ' notbadword suffix' "
+    "ELSE text END")
+
+# crawler-trap URLs: a repeating path, a calendar with session ids, a
+# plain page and a deep query string
+_TRAP_URL_SQL = (
+    "CASE WHEN doc_id % 4 = 0 THEN 'https://t.com/a/b/a/b/' || "
+    "CAST(doc_id AS STRING) "
+    "WHEN doc_id % 4 = 1 THEN 'https://t.com/2024/01/' || "
+    "CAST(doc_id % 28 AS STRING) || '/e?page=' || "
+    "CAST(doc_id AS STRING) || '&sid=' || CAST(doc_id AS STRING) "
+    "WHEN doc_id % 4 = 2 THEN 'https://t.com/p' || "
+    "CAST(doc_id AS STRING) "
+    "ELSE 'https://t.com/x/y/z?a=1&b=2&c=3' END")
+
+# Deterministic per-script spikes so every SCRIPT_RANGES family has
+# signal on the (Latin-only) driver corpus.
+_SCRIPT_TEXT_SQL = (
+    "CASE WHEN doc_id % 5 = 0 THEN text || ' देवनागरी पाठ' "
+    "WHEN doc_id % 5 = 1 THEN text || ' 中文内容' "
+    "WHEN doc_id % 5 = 2 THEN text || ' نص عربي' "
+    "WHEN doc_id % 5 = 3 THEN text || ' русский текст' "
+    "ELSE text END")
+
+# Deterministic denormalized-unicode spikes: decomposed accents
+# (e+U+0301, n+U+0303), a C0 control char, and tab/space runs.  The
+# combining marks are literal characters: Spark's chr() wraps at 256.
+_UNNORM_TEXT_SQL = (
+    "CASE WHEN doc_id % 3 = 0 THEN text || ' cafe\u0301   pin\u0303a' "
+    "WHEN doc_id % 3 = 1 THEN text || chr(7) || 'bell' || chr(9) || "
+    "chr(9) || 'end ' ELSE text END")
 
 
-# one synthetic robots.txt corpus, shared verbatim by the Spark query
-# (createDataFrame) and the DuckDB oracle (VALUES) — group semantics,
-# CRLF, comments, empty-Disallow and non-star groups all have signal
+# ---------------------------------------------------------------------------
+# Synthetic robots.txt corpora: DataFrames on the Spark side
+# (createDataFrame), the same rows as a VALUES list in the oracle
+# ---------------------------------------------------------------------------
+
+# group semantics, CRLF, comments, empty-Disallow and non-star groups
+# all have signal
 _ROBOTS_CORPUS = [
     ("h0", "User-agent: *\nDisallow: /private\nDisallow: /tmp\n"
            "Allow: /private/p1\nCrawl-delay: 2"),
@@ -337,86 +418,6 @@ _ROBOTS_CORPUS = [
     ("h5", "User-agent: *\nDisallow: /x\n\nUser-agent: bing\n"
            "Disallow: /bing-only\n\nUser-agent: *\nDisallow: /y"),
 ]
-
-
-def _robots_corpus_df(spark):
-    return spark.createDataFrame(_ROBOTS_CORPUS,
-                                 "host string, robots_txt string")
-
-
-def _robots_corpus_sql() -> str:
-    rows = ", ".join(
-        "('" + h + "', '" + b.replace("'", "''") + "')"
-        for h, b in _ROBOTS_CORPUS)
-    return f"(VALUES {rows}) AS _r(host, robots_txt)"
-
-
-def _pii_text() -> F.Column:
-    """Deterministic PII spikes over documents.text — every detector
-    family (email / phone / IPv4) gets signal on the driver corpus,
-    plus an untouched residue class."""
-    sid = F.col("doc_id").cast("string")
-    return (F.when(F.col("doc_id") % 4 == 0,
-                   F.concat(F.col("text"), F.lit(" contact user"), sid,
-                            F.lit("@example.com now")))
-            .when(F.col("doc_id") % 4 == 1,
-                  F.concat(F.col("text"), F.lit(" call +12 345-67"),
-                           F.lpad((F.col("doc_id") % 100).cast("string"),
-                                  2, "0"),
-                           F.lit(" ok")))
-            .when(F.col("doc_id") % 4 == 2,
-                  F.concat(F.col("text"), F.lit(" from 10.0."),
-                           (F.col("doc_id") % 256).cast("string"),
-                           F.lit(".7 logged")))
-            .otherwise(F.col("text")))
-
-
-_PII_TEXT_SQL = (
-    "CASE WHEN doc_id % 4 = 0 THEN text || ' contact user' || "
-    "CAST(doc_id AS VARCHAR) || '@example.com now' "
-    "WHEN doc_id % 4 = 1 THEN text || ' call +12 345-67' || "
-    "lpad(CAST(doc_id % 100 AS VARCHAR), 2, '0') || ' ok' "
-    "WHEN doc_id % 4 = 2 THEN text || ' from 10.0.' || "
-    "CAST(doc_id % 256 AS VARCHAR) || '.7 logged' "
-    "ELSE text END")
-
-
-def _para_text() -> F.Column:
-    """documents.text extended to a 3-paragraph page: unique body +
-    per-source boilerplate + global footer — the shape paragraph-dedup
-    exists for."""
-    return F.concat(F.col("text"), F.lit("\nsubscribe to "),
-                    F.col("source"), F.lit(" updates"),
-                    F.lit("\ncopyright footer"))
-
-
-_PARA_TEXT_SQL = ("text || chr(10) || 'subscribe to ' || source || "
-                  "' updates' || chr(10) || 'copyright footer'")
-
-
-def _anchor_html() -> F.Column:
-    """Deterministic anchor tags WITH visible text: one absolute link
-    (host from doc_id) with nested markup in the anchor, one relative
-    link — exercises inner-tag stripping, whitespace collapsing and
-    dst-host resolution."""
-    sid = F.col("doc_id").cast("string")
-    h1 = (F.col("doc_id") % 9).cast("string")
-    return F.concat(
-        F.lit('<html><a href="https://h'), h1,
-        F.lit('.example.com/p/'), sid,
-        F.lit('">Read  <b>more</b> news '),
-        (F.col("doc_id") % 3).cast("string"),
-        F.lit('</a> <a href="/local/'), sid,
-        F.lit('">home page</a></html>'))
-
-
-_ANCHOR_HTML_SQL = (
-    "'<html><a href=\"https://h' || CAST(doc_id % 9 AS VARCHAR) || "
-    "'.example.com/p/' || CAST(doc_id AS VARCHAR) || "
-    "'\">Read  <b>more</b> news ' || CAST(doc_id % 3 AS VARCHAR) || "
-    "'</a> <a href=\"/local/' || CAST(doc_id AS VARCHAR) || "
-    "'\">home page</a></html>'")
-
 
 # robots Sitemap: discovery corpus — global directive semantics (inside
 # a non-* group, duplicated, case-insensitive, trailing comment)
@@ -432,131 +433,14 @@ _SITEMAP_CORPUS = [
 ]
 
 
-def _sitemap_corpus_sql() -> str:
+def _corpus_df(spark, corpus):
+    return spark.createDataFrame(corpus, "host string, robots_txt string")
+
+
+def _corpus_values_sql(corpus, alias: str) -> str:
     rows = ", ".join(
-        "('" + h + "', '" + b.replace("'", "''") + "')"
-        for h, b in _SITEMAP_CORPUS)
-    return f"(VALUES {rows}) AS _s(host, robots_txt)"
-
-
-_MIX_RATES = {"en": 0.5, "hi": 0.2, "zh": 0.05}
-_MIX_TIERS = [(0.015, 1.0), (0.0105, 0.5), (-1.0, 0.1)]
-
-# synthetic blocklist — the OPERATOR is list-parameterized; these are
-# placeholder tokens planted into the driver corpus, not a real list
-_BLOCKTERMS = ["badword", "casino bonus", "xxspam"]
-
-
-def _blockspike_text() -> F.Column:
-    return (F.when(F.col("doc_id") % 6 == 0,
-                   F.concat(F.col("text"), F.lit(" BadWord here")))
-            .when(F.col("doc_id") % 6 == 1,
-                  F.concat(F.col("text"),
-                           F.lit(" win casino bonus now xxspam")))
-            .when(F.col("doc_id") % 6 == 2,
-                  F.concat(F.col("text"), F.lit(" notbadword suffix")))
-            .otherwise(F.col("text")))
-
-
-_BLOCKSPIKE_SQL = (
-    "CASE WHEN doc_id % 6 = 0 THEN text || ' BadWord here' "
-    "WHEN doc_id % 6 = 1 THEN text || ' win casino bonus now xxspam' "
-    "WHEN doc_id % 6 = 2 THEN text || ' notbadword suffix' "
-    "ELSE text END")
-
-
-def _trap_url() -> F.Column:
-    sid = F.col("doc_id").cast("string")
-    return (F.when(F.col("doc_id") % 4 == 0,
-                   F.concat(F.lit("https://t.com/a/b/a/b/"), sid))
-            .when(F.col("doc_id") % 4 == 1,
-                  F.concat(F.lit("https://t.com/2024/01/"),
-                           (F.col("doc_id") % 28).cast("string"),
-                           F.lit("/e?page="), sid, F.lit("&sid="), sid))
-            .when(F.col("doc_id") % 4 == 2,
-                  F.concat(F.lit("https://t.com/p"), sid))
-            .otherwise(F.lit("https://t.com/x/y/z?a=1&b=2&c=3")))
-
-
-_TRAP_URL_SQL = (
-    "CASE WHEN doc_id % 4 = 0 THEN 'https://t.com/a/b/a/b/' || "
-    "CAST(doc_id AS VARCHAR) "
-    "WHEN doc_id % 4 = 1 THEN 'https://t.com/2024/01/' || "
-    "CAST(doc_id % 28 AS VARCHAR) || '/e?page=' || "
-    "CAST(doc_id AS VARCHAR) || '&sid=' || CAST(doc_id AS VARCHAR) "
-    "WHEN doc_id % 4 = 2 THEN 'https://t.com/p' || "
-    "CAST(doc_id AS VARCHAR) "
-    "ELSE 'https://t.com/x/y/z?a=1&b=2&c=3' END")
-
-
-def _script_text() -> F.Column:
-    """Deterministic per-script spikes so every SCRIPT_RANGES family has
-    signal on the (Latin-only) driver corpus."""
-    return (F.when(F.col("doc_id") % 5 == 0,
-                   F.concat(F.col("text"), F.lit(" देवनागरी पाठ")))
-            .when(F.col("doc_id") % 5 == 1,
-                  F.concat(F.col("text"), F.lit(" 中文内容")))
-            .when(F.col("doc_id") % 5 == 2,
-                  F.concat(F.col("text"), F.lit(" نص عربي")))
-            .when(F.col("doc_id") % 5 == 3,
-                  F.concat(F.col("text"), F.lit(" русский текст")))
-            .otherwise(F.col("text")))
-
-
-_SCRIPT_TEXT_SQL = (
-    "CASE WHEN doc_id % 5 = 0 THEN text || ' देवनागरी पाठ' "
-    "WHEN doc_id % 5 = 1 THEN text || ' 中文内容' "
-    "WHEN doc_id % 5 = 2 THEN text || ' نص عربي' "
-    "WHEN doc_id % 5 = 3 THEN text || ' русский текст' "
-    "ELSE text END")
-
-
-def _unnorm_text() -> F.Column:
-    """Deterministic denormalized-unicode spikes: decomposed accents
-    (e+U+0301, n+U+0303), a C0 control char, and tab/space runs."""
-    return (F.when(F.col("doc_id") % 3 == 0,
-                   F.concat(F.col("text"), F.lit(" café   piña")))
-            .when(F.col("doc_id") % 3 == 1,
-                  F.concat(F.col("text"), F.lit("bell\t\tend ")))
-            .otherwise(F.col("text")))
-
-
-_UNNORM_TEXT_SQL = (
-    "CASE WHEN doc_id % 3 = 0 THEN text || ' cafe' || chr(769) || "
-    "'   pin' || chr(771) || 'a' "
-    "WHEN doc_id % 3 = 1 THEN text || chr(7) || 'bell' || chr(9) || "
-    "chr(9) || 'end ' ELSE text END")
-
-
-_MESSY_URL_SQL = (
-    "CASE WHEN doc_id % 7 = 0 THEN 'HTTP://WWW.Example.COM:80/a/' || "
-    "CAST(doc_id AS VARCHAR) || '?utm_source=x&b=2&a=1#frag' "
-    "WHEN doc_id % 7 = 1 THEN 'https://News.site.org:443/p/' || "
-    "CAST(doc_id AS VARCHAR) || '/' "
-    "WHEN doc_id % 7 = 2 THEN 'https://user@Sub.Example.com/x/' || "
-    "CAST(doc_id AS VARCHAR) "
-    "WHEN doc_id % 7 = 3 THEN 'http://example.com:8080/y?z=1&gclid=' || "
-    "CAST(doc_id AS VARCHAR) || '&y=2' "
-    "WHEN doc_id % 7 = 4 THEN 'https://example.com/p%61th/%7e' || "
-    "CAST(doc_id AS VARCHAR) || '?q=%41%3f' "
-    "WHEN doc_id % 7 = 5 THEN 'https://example.com/a/./b/../' || "
-    "CAST(doc_id AS VARCHAR) "
-    "ELSE 'not a url ' || CAST(doc_id AS VARCHAR) END")
-
-
-_PSL_URL_SQL = (
-    "CASE WHEN doc_id % 7 = 0 THEN 'https://site' || "
-    "CAST(doc_id % 5 AS VARCHAR) || '.co.uk/p' "
-    "WHEN doc_id % 7 = 1 THEN 'https://sub.site' || "
-    "CAST(doc_id % 5 AS VARCHAR) || '.com.au/x' "
-    "WHEN doc_id % 7 = 2 THEN 'http://shop' || "
-    "CAST(doc_id % 5 AS VARCHAR) || '.example.com' "
-    "WHEN doc_id % 7 = 3 THEN 'https://a.www.ck/' "
-    "WHEN doc_id % 7 = 4 THEN 'https://host' || "
-    "CAST(doc_id % 5 AS VARCHAR) || '.b.ck/y' "
-    "WHEN doc_id % 7 = 5 THEN 'http://b.ck/' "
-    "ELSE 'not a url ' || CAST(doc_id % 5 AS VARCHAR) END")
-
+        "('" + h + "', '" + b.replace("'", "''") + "')" for h, b in corpus)
+    return f"(VALUES {rows}) AS {alias}(host, robots_txt)"
 
 # ---------------------------------------------------------------------------
 # entry
@@ -605,7 +489,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ---- M6 critical-pattern scoring cascade ----
     def m6_critical(spark, sf_dir):
-        d = _t(spark, sf_dir, "documents").withColumn("t2", _spiked_text())
+        d = _t(spark, sf_dir, "documents").withColumn(
+            "t2", F.expr(_SPIKED_SQL))
         return d.select(
             "doc_id",
             F.round(critical_score(F.col("t2")), 6).alias("crit_score"))
@@ -614,7 +499,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ---- M6 tri-state recommendation (mantra_detector.py:224-230) ----
     def m6_recommendation(spark, sf_dir):
         from ocr_devnagari_spark.functions.text import detector_recommendation
-        d = _t(spark, sf_dir, "documents").withColumn("t2", _spiked_text())
+        d = _t(spark, sf_dir, "documents").withColumn(
+            "t2", F.expr(_SPIKED_SQL))
         return (d.select(detector_recommendation(F.col("t2"))
                          .alias("recommendation"))
                 .groupBy("recommendation")
@@ -624,7 +510,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ---- O3 budgeted-escalation ranking: top-k by detector priority ----
     def o3_priority_topk(spark, sf_dir):
         from ocr_devnagari_spark.functions.text import priority_score
-        d = _t(spark, sf_dir, "documents").withColumn("t2", _spiked_text())
+        d = _t(spark, sf_dir, "documents").withColumn(
+            "t2", F.expr(_SPIKED_SQL))
         scored = d.select(
             "doc_id", F.round(priority_score(F.col("t2")), 6)
             .alias("priority"))
@@ -638,7 +525,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # and the partial aggregate keeps everything pre-shuffle — on a
         # single-row-group input the whole query would run on one core
         d = _spread(_t(spark, sf_dir, "documents")).withColumn(
-            "t2", _spiked_text())
+            "t2", F.expr(_SPIKED_SQL))
         conf = confidence_expr(F.col("t2"))
         route = (F.when(~validation_ok(F.col("t2"))
                         | (conf < CONFIDENCE_THRESHOLD)
@@ -655,7 +542,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from ocr_devnagari_spark.operators.registry import (
             backend_cost_per_page,
         )
-        d = _t(spark, sf_dir, "documents").withColumn("t2", _spiked_text())
+        d = _t(spark, sf_dir, "documents").withColumn(
+            "t2", F.expr(_SPIKED_SQL))
         esc = (~validation_ok(F.col("t2"))
                | (confidence_expr(F.col("t2")) < CONFIDENCE_THRESHOLD)
                | critical_flag(F.col("t2"))).cast("long")
@@ -774,7 +662,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from ocr_devnagari_spark.functions.url import canonicalize_url
         d = _t(spark, sf_dir, "documents")
         return d.select("doc_id",
-                        canonicalize_url(_messy_url()).alias("canonical"))
+                        canonicalize_url(F.expr(_MESSY_URL_SQL))
+                        .alias("canonical"))
     q["url_canonicalize"] = url_canonicalize
 
     def url_domain_stats(spark, sf_dir):
@@ -784,7 +673,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # exception (!www.ck), and the default rule.
         from ocr_devnagari_spark.functions.url import registrable_domain
         d = _t(spark, sf_dir, "documents")
-        return (d.select(registrable_domain(_psl_url()).alias("domain"))
+        return (d.select(registrable_domain(F.expr(_PSL_URL_SQL))
+                         .alias("domain"))
                 .groupBy("domain").agg(F.count("*").alias("n_urls")))
     q["url_domain_stats"] = url_domain_stats
 
@@ -793,13 +683,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from ocr_devnagari_spark.functions.robots import meta_robots_noindex
         d = _t(spark, sf_dir, "documents")
         return d.select("doc_id",
-                        meta_robots_noindex(_synthetic_html())
+                        meta_robots_noindex(F.expr(_SYNTHETIC_HTML_SQL))
                         .alias("noindex"))
     q["robots_noindex"] = robots_noindex
 
     def robots_rules(spark, sf_dir):
         from ocr_devnagari_spark.functions.robots import parse_robots_rules
-        return parse_robots_rules(_robots_corpus_df(spark))
+        return parse_robots_rules(_corpus_df(spark, _ROBOTS_CORPUS))
     q["robots_rules"] = robots_rules
 
     def robots_gate_stats(spark, sf_dir):
@@ -808,12 +698,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             parse_robots_policies,
         )
         d = _t(spark, sf_dir, "documents")
-        urls = d.select("doc_id",
-                        F.concat(F.lit("h"),
-                                 (F.col("doc_id") % 6).cast("string"))
-                        .alias("host"),
-                        _synthetic_path().alias("path"))
-        policies = parse_robots_policies(_robots_corpus_df(spark))
+        urls = d.select("doc_id", F.expr(_HOST6_SQL).alias("host"),
+                        F.expr(_SYNTHETIC_PATH_SQL).alias("path"))
+        policies = parse_robots_policies(_corpus_df(spark, _ROBOTS_CORPUS))
         m = match_policy(urls, policies)
         return (m.groupBy("host")
                 .agg(F.count("*").alias("n_urls"),
@@ -823,14 +710,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def robots_crawl_delays(spark, sf_dir):
         from ocr_devnagari_spark.functions.robots import crawl_delays
-        return crawl_delays(_robots_corpus_df(spark))
+        return crawl_delays(_corpus_df(spark, _ROBOTS_CORPUS))
     q["robots_crawl_delays"] = robots_crawl_delays
 
     # ---- link graph (beyond-ref: frontier expansion + host authority) --
     def link_extract(spark, sf_dir):
         from ocr_devnagari_spark.functions.links import link_rows
         d = _t(spark, sf_dir, "documents").select(
-            "doc_id", _linky_html().alias("html"),
+            "doc_id", F.expr(_LINKY_HTML_SQL).alias("html"),
             F.concat(F.lit("doc://"), F.col("doc_id")).alias("url"))
         return link_rows(d).withColumnRenamed("url", "src_url")
     q["link_extract"] = link_extract
@@ -841,7 +728,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "doc_id",
             F.concat(F.lit("s"), (F.col("doc_id") % 5).cast("string"),
                      F.lit(".example.com")).alias("host"),
-            _linky_html().alias("html"))
+            F.expr(_LINKY_HTML_SQL).alias("html"))
         return host_edges(d)
 
     def link_host_edges(spark, sf_dir):
@@ -865,26 +752,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             politeness_schedule,
         )
         d = _t(spark, sf_dir, "documents")
-        urls = d.select(F.concat(F.lit("h"),
-                                 (F.col("doc_id") % 6).cast("string"))
-                        .alias("host"),
-                        _synthetic_path().alias("path"))
-        delays = crawl_delays(_robots_corpus_df(spark))
+        urls = d.select(F.expr(_HOST6_SQL).alias("host"),
+                        F.expr(_SYNTHETIC_PATH_SQL).alias("path"))
+        delays = crawl_delays(_corpus_df(spark, _ROBOTS_CORPUS))
         return politeness_schedule(urls, delays)
     q["politeness_schedule"] = politeness_schedule_q
 
     def sitemap_extract(spark, sf_dir):
         from ocr_devnagari_spark.functions.links import sitemap_locs
         d = _t(spark, sf_dir, "documents")
-        sid = F.col("doc_id").cast("string")
-        xml = F.concat(
-            F.lit("<urlset><url><loc>https://s"),
-            (F.col("doc_id") % 5).cast("string"),
-            F.lit(".example.com/p/"), sid,
-            F.lit("</loc></url><url><loc>\n  https://mirror.org/"), sid,
-            F.lit("  \n</loc></url></urlset>"))
-        return d.select("doc_id",
-                        F.explode(sitemap_locs(xml)).alias("loc"))
+        return d.select("doc_id", F.explode(
+            sitemap_locs(F.expr(_SITEMAP_XML_SQL))).alias("loc"))
     q["sitemap_extract"] = sitemap_extract
 
     # ---- frontier expansion: links → canonicalize → anti-join the
@@ -896,18 +774,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             url_host,
         )
         d = _t(spark, sf_dir, "documents")
-        pages = d.select("doc_id", _linky_html().alias("html"),
+        pages = d.select("doc_id", F.expr(_LINKY_HTML_SQL).alias("html"),
                          F.lit("x").alias("url"))
         cand = (link_rows(pages)
                 .filter(F.col("href").startswith("https://"))
                 .select(canonicalize_url(F.col("href")).alias("curl"))
                 .distinct())
         crawled = (d.filter(F.col("doc_id") % 2 == 0)
-                   .select(canonicalize_url(F.concat(
-                       F.lit("https://h"),
-                       (F.col("doc_id") % 9).cast("string"),
-                       F.lit(".example.com/p/"),
-                       F.col("doc_id").cast("string"))).alias("curl")))
+                   .select(canonicalize_url(F.expr(_CRAWLED_URL_SQL))
+                           .alias("curl")))
         frontier = cand.join(crawled, "curl", "left_anti")
         return (frontier.select(url_host(F.col("curl")).alias("host"))
                 .groupBy("host").agg(F.count("*").alias("n_new")))
@@ -917,18 +792,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def sniff_mime_hex(spark, sf_dir):
         from ocr_devnagari_spark.functions.sniff import classify_hex
         d = _t(spark, sf_dir, "documents")
-        tail = F.lpad(F.upper(F.hex(F.col("doc_id"))), 8, "0")
-        sig = (F.when(F.col("doc_id") % 5 == 0,
-                      F.concat(F.lit("89504E470D0A1A0A"), tail))
-               .when(F.col("doc_id") % 5 == 1,
-                     F.concat(F.lit("FFD8FFE0"), tail))
-               .when(F.col("doc_id") % 5 == 2,
-                     F.concat(F.lit("52494646"), tail,
-                              F.lit("57415645")))
-               .when(F.col("doc_id") % 5 == 3,
-                     F.concat(F.lit("3C21444F43545950"), tail))
-               .otherwise(tail))
-        return d.select("doc_id", classify_hex(sig).alias("mime"))
+        return d.select("doc_id",
+                        classify_hex(F.expr(_SNIFF_HEX_SQL)).alias("mime"))
     q["sniff_mime_hex"] = sniff_mime_hex
 
     # ---- content sniffing over REAL payloads (rows-only; pytest
@@ -1381,7 +1246,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def pii_scrub(spark, sf_dir):
         from ocr_devnagari_spark.functions import pii
         d = _t(spark, sf_dir, "documents")
-        t = _pii_text()
+        t = F.expr(_PII_TEXT_SQL)
         return d.select(
             "doc_id",
             pii.email_count(t).alias("n_email"),
@@ -1394,7 +1259,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def para_dedup(spark, sf_dir):
         from ocr_devnagari_spark.operators.paragraphs import paragraph_dedup
         d = _t(spark, sf_dir, "documents")
-        docs = d.select("doc_id", _para_text().alias("text"))
+        docs = d.select("doc_id", F.expr(_PARA_TEXT_SQL).alias("text"))
         return paragraph_dedup(docs, max_docs=1)
     q["para_dedup"] = para_dedup
 
@@ -1402,7 +1267,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def para_dedup_first(spark, sf_dir):
         from ocr_devnagari_spark.operators.paragraphs import paragraph_dedup
         d = _t(spark, sf_dir, "documents")
-        docs = d.select("doc_id", _para_text().alias("text"))
+        docs = d.select("doc_id", F.expr(_PARA_TEXT_SQL).alias("text"))
         return paragraph_dedup(docs, keep="first")
     q["para_dedup_first"] = para_dedup_first
 
@@ -1426,7 +1291,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pages = d.select(
             F.concat(F.lit("u"), F.col("doc_id").cast("string"))
             .alias("url"),
-            _anchor_html().alias("html"),
+            F.expr(_ANCHOR_HTML_SQL).alias("html"),
             F.concat(F.lit("src"), (F.col("doc_id") % 4).cast("string"),
                      F.lit(".net")).alias("host"))
         return anchor_term_stats(pages, k=2)
@@ -1436,7 +1301,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def split_counts(spark, sf_dir):
         from ocr_devnagari_spark.functions.splits import split_assign
         d = _t(spark, sf_dir, "documents")
-        host = F.concat(F.lit("h"), (F.col("doc_id") % 97).cast("string"))
+        host = F.expr(_HOST97_SQL)
         return (d.select(split_assign(host).alias("split"), host.alias("h"))
                 .groupBy("split")
                 .agg(F.count(F.lit(1)).alias("n_docs"),
@@ -1456,7 +1321,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         _ensure_shipped(spark)
         from ocr_devnagari_spark.functions.normalize import normalize_text
         d = _t(spark, sf_dir, "documents")
-        return d.select("doc_id", normalize_text(_unnorm_text())
+        return d.select("doc_id", normalize_text(F.expr(_UNNORM_TEXT_SQL))
                         .alias("norm"))
     q["normalize_docs"] = normalize_docs
 
@@ -1465,9 +1330,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         _ensure_shipped(spark)   # repetition gate's Arrow path
         from ocr_devnagari_spark.plans.curation import curation_report
         d = _t(spark, sf_dir, "documents").select(
-            "doc_id", "text",
-            F.concat(F.lit("h"), (F.col("doc_id") % 97).cast("string"))
-            .alias("host"))
+            "doc_id", "text", F.expr(_HOST97_SQL).alias("host"))
         return curation_report(d)
     q["curate_report"] = curate_report
 
@@ -1480,16 +1343,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # gopher/blocklist regexes + Arrow repetition pass) dominates
         # and runs pre-shuffle — single-core on this input otherwise
         d = _spread(_t(spark, sf_dir, "documents"))
-        spiked = (d.select("doc_id", "source", _pii_text().alias("text"))
+        spiked = (d.select("doc_id", "source",
+                           F.expr(_PII_TEXT_SQL).alias("text"))
                   .select("doc_id", "source",
-                          _blockspike_text().alias("text")))
-        docs = spiked.select(
-            "doc_id",
-            F.concat(F.col("text"), F.lit("\nsubscribe to "),
-                     F.col("source"), F.lit(" updates"),
-                     F.lit("\ncopyright footer")).alias("text"),
-            F.concat(F.lit("h"), (F.col("doc_id") % 97).cast("string"))
-            .alias("host"))
+                          F.expr(_BLOCKSPIKE_SQL).alias("text")))
+        docs = spiked.select("doc_id",
+                             F.expr(_PARA_TEXT_SQL).alias("text"),
+                             F.expr(_HOST97_SQL).alias("host"))
         return curation_report(docs, blockterms=_BLOCKTERMS,
                                pii_scrub=True, para_max_docs=1)
     q["curate_full_report"] = curate_full_report
@@ -1497,9 +1357,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ---- robots Sitemap: discovery (global directive, RFC 9309 §2.3)
     def robots_sitemaps(spark, sf_dir):
         from ocr_devnagari_spark.functions.robots import sitemap_urls
-        df = spark.createDataFrame(_SITEMAP_CORPUS,
-                                   "host string, robots_txt string")
-        return sitemap_urls(df)
+        return sitemap_urls(_corpus_df(spark, _SITEMAP_CORPUS))
     q["robots_sitemaps"] = robots_sitemaps
 
     # ---- token-budget shard packing (two-level prefix sum) ----
@@ -1529,7 +1387,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             script_ratios,
         )
         d = _t(spark, sf_dir, "documents")
-        t = _script_text()
+        t = F.expr(_SCRIPT_TEXT_SQL)
         ratios = script_ratios(t)
         return d.select(
             "doc_id",
@@ -1546,9 +1404,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                .select(url.alias("url"), F.md5("text").alias("digest")))
         new = (d.filter(F.col("doc_id") % 7 != 1)
                .select(url.alias("url"),
-                       F.md5(F.when(F.col("doc_id") % 3 == 0,
-                                    F.concat(F.col("text"), F.lit(" v2")))
-                             .otherwise(F.col("text"))).alias("digest")))
+                       F.expr(_V2_DIGEST_SQL).alias("digest")))
         return (crawl_diff(old, new).groupBy("change")
                 .agg(F.count(F.lit(1)).alias("n_urls")))
     q["crawl_diff_report"] = crawl_diff_report
@@ -1596,7 +1452,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             blocklist_pass,
         )
         d = _t(spark, sf_dir, "documents")
-        t = _blockspike_text()
+        t = F.expr(_BLOCKSPIKE_SQL)
         return d.select(
             "doc_id",
             blocklist_hits(t, _BLOCKTERMS).alias("hits"),
@@ -1607,7 +1463,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def url_spam(spark, sf_dir):
         from ocr_devnagari_spark.functions.url import url_spam_signals
         d = _t(spark, sf_dir, "documents")
-        sig = url_spam_signals(_trap_url())
+        sig = url_spam_signals(F.expr(_TRAP_URL_SQL))
         return d.select("doc_id",
                         *[sig[k].alias(k) for k in sorted(sig)])
     q["url_spam"] = url_spam
@@ -1729,17 +1585,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from ocr_devnagari_spark.plans.curation import (
             authority_weighted_mix,
         )
-        host = (F.when(F.col("doc_id") % 3 == 0,
-                       F.concat(F.lit("h"),
-                                (F.col("doc_id") % 9).cast("string"),
-                                F.lit(".example.com")))
-                .when(F.col("doc_id") % 3 == 1,
-                      F.concat(F.lit("s"),
-                               (F.col("doc_id") % 5).cast("string"),
-                               F.lit(".example.com")))
-                .otherwise(F.lit("nowhere.net")))
         d = _t(spark, sf_dir, "documents").select(
-            "doc_id", "text", host.alias("host"))
+            "doc_id", "text", F.expr(_MIX_HOST_SQL).alias("host"))
         return authority_weighted_mix(d, _edges_df(spark, sf_dir),
                                       tiers=_MIX_TIERS)
     q["authority_mix"] = authority_mix
@@ -1905,11 +1752,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # _spread: the Arrow window-hash stage runs pre-shuffle on the
         # raw text — single-task on a single-row-group input otherwise
         d = _spread(_t(spark, sf_dir, "documents"))
-        spiked = d.select(
-            "doc_id",
-            F.when(F.col("doc_id") % 10 == 0,
-                   F.concat(F.col("text"), F.lit(" " + SUBSTR_BOILER)))
-            .otherwise(F.col("text")).alias("text"))
+        spiked = d.select("doc_id",
+                          F.expr(_SUBSTR_SPIKED_SQL).alias("text"))
         return exact_substring_dedup(spiked, min_len=8)
     q["exact_substr"] = exact_substr
 
@@ -2243,7 +2087,7 @@ def _robots_grp_sql() -> str:
     from ocr_devnagari_spark.functions.robots import UA_LINE_RE
     ua = _sq(UA_LINE_RE)
     return f"""
-_robots AS (SELECT * FROM {_robots_corpus_sql()}),
+_robots AS (SELECT * FROM {_corpus_values_sql(_ROBOTS_CORPUS, '_r')}),
 _lines AS (
   SELECT host, u.i AS pos,
          trim(regexp_replace(sp[u.i], '#.*$', '')) AS line
@@ -2321,8 +2165,7 @@ def _robots_gate_sql() -> str:
     return f"""
 WITH {_robots_body_sql()},
 _urls AS (
-  SELECT doc_id, 'h' || CAST(doc_id % 6 AS VARCHAR) AS host,
-         {_SYNTHETIC_PATH_SQL} AS path
+  SELECT doc_id, {_HOST6_SQL} AS host, {_SYNTHETIC_PATH_SQL} AS path
   FROM documents),
 _m AS (
   SELECT u.doc_id, u.host,
@@ -2433,8 +2276,7 @@ _delays AS (
   WHERE s.star AND regexp_matches(g.line, '{cd}')
   GROUP BY g.host),
 _urls AS (
-  SELECT 'h' || CAST(doc_id % 6 AS VARCHAR) AS host,
-         {_SYNTHETIC_PATH_SQL} AS path
+  SELECT {_HOST6_SQL} AS host, {_SYNTHETIC_PATH_SQL} AS path
   FROM documents)
 SELECT u.host, u.path,
        round((row_number() OVER (PARTITION BY u.host ORDER BY u.path)
@@ -2446,14 +2288,9 @@ FROM _urls u LEFT JOIN _delays d ON d.host = u.host
 
 def _sitemap_sql() -> str:
     from ocr_devnagari_spark.functions.links import SITEMAP_LOC_RE
-    xml = ("'<urlset><url><loc>https://s' || "
-           "CAST(doc_id % 5 AS VARCHAR) || '.example.com/p/' || "
-           "CAST(doc_id AS VARCHAR) || '</loc></url><url><loc>' || "
-           "chr(10) || '  https://mirror.org/' || "
-           "CAST(doc_id AS VARCHAR) || '  ' || chr(10) || "
-           "'</loc></url></urlset>'")
     return (f"SELECT doc_id, t.loc FROM (SELECT doc_id, "
-            f"regexp_extract_all({xml}, '{_sq(SITEMAP_LOC_RE)}', 1) "
+            f"regexp_extract_all({_SITEMAP_XML_SQL}, "
+            f"'{_sq(SITEMAP_LOC_RE)}', 1) "
             f"AS ls FROM documents), LATERAL unnest(ls) AS t(loc)")
 
 
@@ -2462,8 +2299,6 @@ def _frontier_sql() -> str:
     anti-join against the crawled set → per-host new-frontier counts,
     each stage the same generated SQL the standalone oracles use."""
     from ocr_devnagari_spark.functions.links import HREF_RE
-    crawled_u = ("('https://h' || CAST(doc_id % 9 AS VARCHAR) || "
-                 "'.example.com/p/' || CAST(doc_id AS VARCHAR))")
     return f"""
 WITH _pages AS (SELECT doc_id, {_LINKY_HTML_SQL} AS html FROM documents),
 _links AS (SELECT t.href
@@ -2472,7 +2307,7 @@ _links AS (SELECT t.href
                 LATERAL unnest(hs) AS t(href)),
 _cand AS (SELECT DISTINCT {_url_canon_sql('href')} AS curl
           FROM _links WHERE starts_with(href, 'https://')),
-_crawled AS (SELECT {_url_canon_sql(crawled_u)} AS curl
+_crawled AS (SELECT {_url_canon_sql(f'({_CRAWLED_URL_SQL})')} AS curl
              FROM documents WHERE doc_id % 2 = 0),
 _frontier AS (SELECT curl FROM _cand
               WHERE curl NOT IN (SELECT curl FROM _crawled))
@@ -2483,18 +2318,11 @@ FROM _frontier GROUP BY host
 
 
 def _sniff_hex_sql() -> str:
-    """DuckDB mirror of the sniff_mime_hex driver query — hex synth via
-    upper(to_hex)+lpad, classifier generated from the same
-    MAGIC_TABLE."""
+    """DuckDB mirror of the sniff_mime_hex driver query — classifier
+    generated from the same MAGIC_TABLE."""
     from ocr_devnagari_spark.functions.sniff import classify_hex_sql
-    tail = "lpad(upper(to_hex(doc_id)), 8, '0')"
-    sig = (f"CASE WHEN doc_id % 5 = 0 THEN '89504E470D0A1A0A' || {tail} "
-           f"WHEN doc_id % 5 = 1 THEN 'FFD8FFE0' || {tail} "
-           f"WHEN doc_id % 5 = 2 THEN '52494646' || {tail} || '57415645' "
-           f"WHEN doc_id % 5 = 3 THEN '3C21444F43545950' || {tail} "
-           f"ELSE {tail} END")
-    return (f"SELECT doc_id, {classify_hex_sql(f'({sig})')} AS mime "
-            f"FROM documents")
+    return (f"SELECT doc_id, {classify_hex_sql(f'({_SNIFF_HEX_SQL})')} "
+            "AS mime FROM documents")
 
 
 def _robots_noindex_sql() -> str:
@@ -2648,8 +2476,7 @@ def _curate_sql() -> str:
         f"SELECT {split_assign_sql('h')} AS split, "
         "count(*) AS n_docs, "
         f"CAST(sum({toks}) AS BIGINT) AS total_tokens FROM ("
-        "SELECT 'h' || CAST(doc_id % 97 AS VARCHAR) AS h, text "
-        "FROM ded) GROUP BY 1")
+        f"SELECT {_HOST97_SQL} AS h, text FROM ded) GROUP BY 1")
 
 
 def _curate_full_sql() -> str:
@@ -2669,9 +2496,8 @@ def _curate_full_sql() -> str:
         "FROM documents), "
         f"p2 AS (SELECT doc_id, source, {_BLOCKSPIKE_SQL} AS text "
         "FROM p1), "
-        "corpus AS (SELECT doc_id, text || chr(10) || 'subscribe to ' "
-        "|| source || ' updates' || chr(10) || 'copyright footer' "
-        "AS text, 'h' || CAST(doc_id % 97 AS VARCHAR) AS h FROM p2), "
+        f"corpus AS (SELECT doc_id, {_PARA_TEXT_SQL} AS text, "
+        f"{_HOST97_SQL} AS h FROM p2), "
         + ", ".join(_rep_ctes("corpus")) + ", "
         "sigj AS (SELECT d.doc_id, d.text, d.h, " + _REP_PASS_EXPR
         + " AS rep_pass " + _rep_joins("corpus") + "), "
@@ -2814,8 +2640,8 @@ def _crawl_diff_sql() -> str:
         "WITH o AS (SELECT 'doc://' || CAST(doc_id AS VARCHAR) AS url, "
         "md5(text) AS old_digest FROM documents WHERE doc_id % 7 <> 0), "
         "n AS (SELECT 'doc://' || CAST(doc_id AS VARCHAR) AS url, "
-        "md5(CASE WHEN doc_id % 3 = 0 THEN text || ' v2' ELSE text END) "
-        "AS new_digest FROM documents WHERE doc_id % 7 <> 1) "
+        f"{_V2_DIGEST_SQL} AS new_digest "
+        "FROM documents WHERE doc_id % 7 <> 1) "
         "SELECT change, count(*) AS n_urls FROM ("
         "SELECT CASE WHEN old_digest IS NULL THEN 'new' "
         "WHEN new_digest IS NULL THEN 'gone' "
@@ -2866,11 +2692,7 @@ def _authority_mix_sql() -> str:
     return (
         f"WITH {_host_edges_sql()}, {_pagerank_sql(10, final=False)}, "
         "ranks AS (SELECT host, pr FROM r10), "
-        "docs2 AS (SELECT doc_id, text, CASE "
-        "WHEN doc_id % 3 = 0 THEN 'h' || CAST(doc_id % 9 AS VARCHAR) "
-        "|| '.example.com' "
-        "WHEN doc_id % 3 = 1 THEN 's' || CAST(doc_id % 5 AS VARCHAR) "
-        "|| '.example.com' ELSE 'nowhere.net' END AS h "
+        f"docs2 AS (SELECT doc_id, text, {_MIX_HOST_SQL} AS h "
         "FROM documents), "
         "j AS (SELECT doc_id, text, coalesce(r.pr, 0.0) AS pr "
         "FROM docs2 LEFT JOIN ranks r ON r.host = docs2.h), "
@@ -3025,8 +2847,7 @@ def _exact_substr_sql(min_len: int = 8) -> str:
     COALESCE('') on the left join."""
     n1 = min_len - 1
     return (
-        "WITH spiked AS (SELECT doc_id, CASE WHEN doc_id % 10 = 0 "
-        f"THEN text || ' {SUBSTR_BOILER}' ELSE text END AS text "
+        f"WITH spiked AS (SELECT doc_id, {_SUBSTR_SPIKED_SQL} AS text "
         "FROM documents), "
         "toks AS (SELECT doc_id, string_split(text, ' ') AS ws "
         "FROM spiked), "
@@ -3338,9 +3159,8 @@ def oracle_sql() -> dict[str, str]:
         "anchor_terms": _anchor_terms_sql(2),
         "split_counts": (
             f"SELECT {_split_sql} AS split, count(*) AS n_docs, "
-            "count(DISTINCT h) AS n_hosts FROM (SELECT 'h' || "
-            "CAST(doc_id % 97 AS VARCHAR) AS h FROM documents) "
-            "GROUP BY 1"),
+            f"count(DISTINCT h) AS n_hosts FROM (SELECT {_HOST97_SQL} "
+            "AS h FROM documents) GROUP BY 1"),
         "det_sample": (
             f"SELECT doc_id, lang FROM documents WHERE {_sample_sql}"),
         "normalize_docs": (
@@ -3353,7 +3173,7 @@ def oracle_sql() -> dict[str, str]:
             "'(?i)^sitemap\\s*:\\s*(\\S+)', 1) AS sitemap_url FROM ("
             "SELECT host, trim(regexp_replace(unnest(string_split_regex("
             "robots_txt, '\\r?\\n')), '#.*$', '')) AS line FROM "
-            + _sitemap_corpus_sql() + ") "
+            + _corpus_values_sql(_SITEMAP_CORPUS, "_s") + ") "
             "WHERE regexp_matches(line, '(?i)^sitemap\\s*:\\s*\\S+')"),
         "shard_manifest": (
             "WITH t AS (SELECT doc_id, "

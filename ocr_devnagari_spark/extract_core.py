@@ -731,7 +731,18 @@ def extract_document(url: str, payload: bytes,
     3. Escalate iff invalid OR low-confidence OR critical → precise extract.
     4. Escalated rows take the precise text when it validates, else fall back
        to the fast text (hybrid_backend.py:207-211 — here deterministic).
+
+    A NULL payload (``sources/warc.py::read_wet_pages`` emits one by
+    design) costs its row, never the job: it returns a flagged row with
+    empty text, ``success=False``, ``error='null_payload'`` and
+    ``backend_used='none'``, which lineage counts in ``failed_count``.
     """
+    if payload is None:
+        return {
+            "url": url, "text": "", "success": False, "confidence": 0.0,
+            "error": "null_payload", "backend_used": "none",
+            "needs_verification": False, "rule_hits": {},
+        }
     if is_pdf_payload(payload):
         text = extract_pdf(payload)
         ok, err = validate_text(text)

@@ -83,6 +83,48 @@ def test_query_vs_oracle(spark, sf_duck, name):
         assert g == w, f"{name}: first differing row {g} vs {w}"
 
 
+# Every synthetic column input the Spark queries read through F.expr —
+# the one definition each query and its oracle share.
+FIXTURE_SQL = (
+    "_SPIKED_SQL", "_MESSY_URL_SQL", "_PSL_URL_SQL", "_SYNTHETIC_HTML_SQL",
+    "_SYNTHETIC_PATH_SQL", "_HOST6_SQL", "_HOST97_SQL", "_LINKY_HTML_SQL",
+    "_CRAWLED_URL_SQL", "_PII_TEXT_SQL", "_PARA_TEXT_SQL",
+    "_ANCHOR_HTML_SQL", "_SITEMAP_XML_SQL", "_SNIFF_HEX_SQL",
+    "_V2_DIGEST_SQL", "_SUBSTR_SPIKED_SQL", "_MIX_HOST_SQL",
+    "_BLOCKSPIKE_SQL", "_TRAP_URL_SQL", "_SCRIPT_TEXT_SQL",
+    "_UNNORM_TEXT_SQL",
+)
+
+
+@pytest.mark.parametrize("const", FIXTURE_SQL)
+def test_fixture_sql_same_on_both_engines(spark, const):
+    """A shared fixture expression gives the same value for every
+    sf0.01 ``documents`` row in DuckDB and in Spark (``F.expr``) — the
+    dialect rules of the ``__spark_entry__`` docstring, checked."""
+    from pyspark.sql import functions as F
+    sql = getattr(entrymod, const)
+    path = f"{SF_DIRS[0]}/documents.parquet"
+    con = duckdb.connect()
+    try:
+        want = dict(con.sql(f"SELECT doc_id, {sql} FROM "
+                            f"read_parquet('{path}')").fetchall())
+    finally:
+        con.close()
+    got = dict(spark.read.parquet(path)
+               .select("doc_id", F.expr(sql)).collect())
+    assert len(got) == 500
+    assert got == want
+
+
+def test_fixture_sql_list_is_complete():
+    """FIXTURE_SQL names every constant a driver query reads via F.expr."""
+    import inspect
+    import re
+    used = set(re.findall(r"F\.expr\((_[A-Z0-9_]+_SQL)\)",
+                          inspect.getsource(entrymod)))
+    assert used == set(FIXTURE_SQL)
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     rows = df.collect()

@@ -143,6 +143,54 @@ def test_lineage_rows_match_python_recount(spark, corpus_dir, work_root):
     assert hits == {0: None, 1: {"code": 3, "verse": 3}}
 
 
+def test_null_payload_flags_one_row(spark, corpus_dir, golden_path,
+                                    work_root, tmp_path):
+    """A page with a NULL ``html`` (``read_wet_pages`` emits them by
+    design) costs its row, never the job: every url commits, exactly that
+    row is flagged ``null_payload``, lineage counts one failure, and the
+    golden extractor gives the same row."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from ocr_devnagari_spark.goldenref import golden_extract_corpus
+
+    # pages the golden extractor accepts, so the NULL row is the only
+    # failure; the 8th of them loses its payload
+    gold = pq.read_table(golden_path)
+    ok_urls = pc.filter(gold.column("url"), gold.column("success"))
+    pages = pq.read_table(os.path.join(corpus_dir, "pages.parquet"))
+    pages = pages.filter(pc.is_in(pages.column("url"), ok_urls))
+    null_url = pages.column("url")[7].as_py()
+    html = pages.column("html").to_pylist()
+    html[7] = None
+    pages = pages.set_column(pages.schema.get_field_index("html"), "html",
+                             pa.array(html, pa.binary()))
+    src = tmp_path / "nullcorpus"
+    src.mkdir()
+    pq.write_table(pages, src / "pages.parquet")
+
+    cfg = ExtractConfig(root_dir=work_root)
+    r = run_extract_job(spark, str(src), cfg, job_token="n")
+    out = IceboxTable(cfg.extracted_table).read(spark)
+    assert r["rows"] == pages.num_rows == out.count()
+    flagged = [(x.url, x.text, x.success, x.confidence, x.error,
+                x.backend_used, x.needs_verification, x.rule_hits)
+               for x in out.filter(~F.col("success")).collect()]
+    assert flagged == [(null_url, "", False, 0.0, "null_payload", "none",
+                        False, {})]
+    lin = IceboxTable(cfg.lineage_table).read(spark)
+    assert lin.agg(F.sum("failed_count")).first()[0] == 1
+
+    golden = pq.read_table(golden_extract_corpus(
+        str(src), str(tmp_path / "golden.parquet"))).to_pylist()
+    assert [g for g in golden if not g["success"]] == [
+        {"url": null_url, "text": "", "backend_used": "none",
+         "success": False}]
+
+
 def test_fresh_run_job_budget(spark, corpus_dir, work_root):
     """A fresh run costs 3 Spark jobs: the extraction write and the
     lineage aggregation's two (its shuffle map stage and the write); the

@@ -5,6 +5,10 @@ shuffle-free, and the escalation join-back broadcasts its small side."""
 
 from __future__ import annotations
 
+import os
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from ocr_devnagari_spark.operators.extract import (
@@ -17,6 +21,21 @@ from ocr_devnagari_spark.plans.pipeline import read_pages
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("sf", ["sf0.01", "sf0.1"])
+def test_tpch_plan_shapes(spark, sf_dir, sf):
+    """Initial plans of two driver TPC-H queries: Q3 broadcasts both of
+    its joins (customer by hint, orders under the size threshold) and
+    never sort-merges; Q1 is a join-free aggregate with one shuffle."""
+    import __spark_entry__ as em
+    tables = os.path.join(os.path.dirname(sf_dir), sf)
+    q3 = _plan(em.queries()["tpch_q3_top10"](spark, tables))
+    assert q3.count("BroadcastHashJoin") == 2, q3
+    assert "SortMergeJoin" not in q3, q3
+    q1 = _plan(em.queries()["tpch_q1"](spark, tables))
+    assert "Join" not in q1, q1
+    assert len(re.findall(r"\bExchange\b", q1)) == 1, q1
 
 
 def test_fused_pipeline_is_shuffle_free(spark, corpus_dir):

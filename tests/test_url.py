@@ -1,9 +1,8 @@
-"""URL canonicalization — rule-by-rule pins plus the Spark↔DuckDB
-oracle agreement for the driver pair."""
+"""URL canonicalization — rule-by-rule pins.  The Spark↔DuckDB oracle
+agreement of the driver pair is ``tests/test_entry_contract.py``'s."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from ocr_devnagari_spark.functions.url import (
@@ -119,24 +118,6 @@ def test_psl_custom_rules_parameterized(spark):
     assert got == {0: "a.custom.zz", 1: "x.b.wild", 2: "keep.wild",
                    3: "plain.example",
                    4: "bkt.s3.dualstack.eu-west-1.amazonaws.com"}
-
-
-@pytest.mark.parametrize("name", ["url_canonicalize", "url_domain_stats"])
-def test_url_oracle_agreement(spark, name):
-    """Spark result ≡ the generated DuckDB oracle at sf0.01 (value-level,
-    the driver gate's comparison)."""
-    import duckdb
-
-    import __spark_entry__ as em
-    got = sorted(tuple(r) for r in
-                 em.queries()[name](spark, "/root/testdata/sf0.01")
-                 .collect())
-    con = duckdb.connect()
-    con.execute("CREATE VIEW documents AS SELECT * FROM "
-                "read_parquet('/root/testdata/sf0.01/documents.parquet')")
-    want = sorted(tuple(r) for r in con.sql(em.oracle_sql()[name])
-                  .fetchall())
-    assert got == want
 
 
 def test_percent_normalization_rules(spark):

@@ -177,7 +177,7 @@ SUBSTR_BOILER = ("all rights reserved terms of service apply "
 def _wrapped_pages(spark, sf_dir) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     return d.select(
-        F.concat(F.lit("doc://"), F.col("doc_id")).alias("url"),
+        F.expr(_DOC_URL_SQL).alias("url"),
         F.concat(F.lit("<html><body><article><p>"), F.col("text"),
                  F.lit("</p></article></body></html>")
                  ).cast("binary").alias("html"))
@@ -274,6 +274,15 @@ _SYNTHETIC_PATH_SQL = (
 
 # one of the robots corpus's hosts h0…h5 per doc
 _HOST6_SQL = "'h' || CAST(doc_id % 6 AS STRING)"
+
+# a document's url in the link, crawl-diff and wrapped-page inputs
+_DOC_URL_SQL = "'doc://' || CAST(doc_id AS STRING)"
+
+# source hosts of the link graph (5), of the anchor pages (4) and the
+# domains of the per-domain dashboard (7)
+_EDGE_HOST_SQL = "'s' || CAST(doc_id % 5 AS STRING) || '.example.com'"
+_ANCHOR_HOST_SQL = "'src' || CAST(doc_id % 4 AS STRING) || '.net'"
+_DOMAIN7_SQL = "'d' || CAST(doc_id % 7 AS STRING) || '.org'"
 
 _HOST97_SQL = "'h' || CAST(doc_id % 97 AS STRING)"
 
@@ -718,16 +727,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from ocr_devnagari_spark.functions.links import link_rows
         d = _t(spark, sf_dir, "documents").select(
             "doc_id", F.expr(_LINKY_HTML_SQL).alias("html"),
-            F.concat(F.lit("doc://"), F.col("doc_id")).alias("url"))
+            F.expr(_DOC_URL_SQL).alias("url"))
         return link_rows(d).withColumnRenamed("url", "src_url")
     q["link_extract"] = link_extract
 
     def _edges_df(spark, sf_dir):
         from ocr_devnagari_spark.functions.links import host_edges
         d = _t(spark, sf_dir, "documents").select(
-            "doc_id",
-            F.concat(F.lit("s"), (F.col("doc_id") % 5).cast("string"),
-                     F.lit(".example.com")).alias("host"),
+            "doc_id", F.expr(_EDGE_HOST_SQL).alias("host"),
             F.expr(_LINKY_HTML_SQL).alias("html"))
         return host_edges(d)
 
@@ -1292,8 +1299,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.concat(F.lit("u"), F.col("doc_id").cast("string"))
             .alias("url"),
             F.expr(_ANCHOR_HTML_SQL).alias("html"),
-            F.concat(F.lit("src"), (F.col("doc_id") % 4).cast("string"),
-                     F.lit(".net")).alias("host"))
+            F.expr(_ANCHOR_HOST_SQL).alias("host"))
         return anchor_term_stats(pages, k=2)
     q["anchor_terms"] = anchor_terms
 
@@ -1399,7 +1405,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def crawl_diff_report(spark, sf_dir):
         from ocr_devnagari_spark.sources.warc import crawl_diff
         d = _t(spark, sf_dir, "documents")
-        url = F.concat(F.lit("doc://"), F.col("doc_id").cast("string"))
+        url = F.expr(_DOC_URL_SQL)
         old = (d.filter(F.col("doc_id") % 7 != 0)
                .select(url.alias("url"), F.md5("text").alias("digest")))
         new = (d.filter(F.col("doc_id") % 7 != 1)
@@ -1426,8 +1432,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from ocr_devnagari_spark.functions.text import quality_score
         from pyspark.sql import Window
         d = _t(spark, sf_dir, "documents")
-        domain = F.concat(F.lit("d"), (F.col("doc_id") % 7).cast("string"),
-                          F.lit(".org"))
+        domain = F.expr(_DOMAIN7_SQL)
         base = d.select(domain.alias("domain"), "lang",
                         token_count(F.col("text")).alias("toks"),
                         quality_score(F.col("text")).alias("q"))
@@ -2198,7 +2203,7 @@ GROUP BY g.host
 
 def _link_extract_sql() -> str:
     from ocr_devnagari_spark.functions.links import HREF_RE
-    return (f"SELECT 'doc://' || CAST(doc_id AS VARCHAR) AS src_url, "
+    return (f"SELECT {_DOC_URL_SQL} AS src_url, "
             f"t.href FROM (SELECT doc_id, regexp_extract_all("
             f"{_LINKY_HTML_SQL}, '{_sq(HREF_RE)}', 1) AS hs "
             f"FROM documents), LATERAL unnest(hs) AS t(href)")
@@ -2220,9 +2225,8 @@ def _host_edges_sql() -> str:
            f"WHEN {rel} != '' THEN {host_of(rel)} "
            f"ELSE src_host END")
     return f"""
-_docs AS (SELECT doc_id,
-                 's' || CAST(doc_id % 5 AS VARCHAR) || '.example.com'
-                 AS host, {_LINKY_HTML_SQL} AS html FROM documents),
+_docs AS (SELECT doc_id, {_EDGE_HOST_SQL} AS host,
+                 {_LINKY_HTML_SQL} AS html FROM documents),
 _links AS (SELECT host AS src_host, t.href
            FROM (SELECT host, regexp_extract_all(html,
                  '{_sq(HREF_RE)}', 1) AS hs FROM _docs),
@@ -2594,8 +2598,7 @@ def _anchor_terms_sql(k: int = 2) -> str:
     pat = _sq(ANCHOR_RE)
     return (
         "WITH pages AS (SELECT doc_id, " + _ANCHOR_HTML_SQL + " AS html, "
-        "'src' || CAST(doc_id % 4 AS VARCHAR) || '.net' AS src_host "
-        "FROM documents), "
+        + _ANCHOR_HOST_SQL + " AS src_host FROM documents), "
         "a AS (SELECT src_host, "
         f"unnest(regexp_extract_all(html, '{pat}', 1)) AS href, "
         f"unnest(regexp_extract_all(html, '{pat}', 2)) AS raw FROM pages), "
@@ -2637,9 +2640,9 @@ def _script_matrix_sql() -> str:
 
 def _crawl_diff_sql() -> str:
     return (
-        "WITH o AS (SELECT 'doc://' || CAST(doc_id AS VARCHAR) AS url, "
+        f"WITH o AS (SELECT {_DOC_URL_SQL} AS url, "
         "md5(text) AS old_digest FROM documents WHERE doc_id % 7 <> 0), "
-        "n AS (SELECT 'doc://' || CAST(doc_id AS VARCHAR) AS url, "
+        f"n AS (SELECT {_DOC_URL_SQL} AS url, "
         f"{_V2_DIGEST_SQL} AS new_digest "
         "FROM documents WHERE doc_id % 7 <> 1) "
         "SELECT change, count(*) AS n_urls FROM ("
@@ -2938,7 +2941,7 @@ def oracle_sql() -> dict[str, str]:
              f"THEN 'fast+precise' ELSE 'fast' END")
     return {
         "extract_wrapped": (
-            "SELECT 'doc://' || CAST(doc_id AS VARCHAR) AS url, "
+            f"SELECT {_DOC_URL_SQL} AS url, "
             "trim(regexp_replace(text, '\\s+', ' ', 'g')) AS text, "
             "'fast' AS backend_used, true AS success FROM documents"),
         "p2_validate": (
@@ -3250,8 +3253,7 @@ def oracle_sql() -> dict[str, str]:
             "SELECT len(regexp_extract_all(text, '\\S+')) AS toks "
             "FROM documents) GROUP BY 1"),
         "domain_report": (
-            "WITH base AS (SELECT 'd' || CAST(doc_id % 7 AS VARCHAR) "
-            "|| '.org' AS domain, lang, "
+            f"WITH base AS (SELECT {_DOMAIN7_SQL} AS domain, lang, "
             "len(regexp_extract_all(text, '\\S+')) AS toks, "
             f"{_quality_expr('text')} AS q FROM documents), "
             "stats AS (SELECT domain, count(*) AS n_docs, "

@@ -507,19 +507,29 @@ def is_pdf_payload(payload: bytes) -> bool:
     return payload[: len(PDF_MAGIC)] == PDF_MAGIC
 
 
-def extract_pdf(payload: bytes) -> str:
-    """Column detection (x-quantized) + reading order (col → y), per page."""
+def extract_pdf(payload: bytes) -> str | None:
+    """Column detection (x-quantized) + reading order (col → y), per page.
+
+    None when the JSON parses but does not have the layout's shape (a
+    root or page that is not an object, ``pages``/``blocks`` that are
+    not lists of objects, a non-numeric ``x``, a non-string ``text``,
+    page numbers or ``y`` values that do not compare): such a payload
+    costs its row, never the job."""
     try:
         doc = json.loads(payload[len(PDF_MAGIC):].decode("utf-8"))
     except Exception:
         return ""
     lines: list[str] = []
-    for page in sorted(doc.get("pages", []), key=lambda p: p.get("page", 0)):
-        blocks = page.get("blocks", [])
-        ordered = sorted(
-            blocks, key=lambda b: (int(b.get("x", 0)) // COLUMN_QUANTUM,
-                                   b.get("y", 0)))
-        lines.extend(canon(b.get("text", "")) for b in ordered)
+    try:
+        for page in sorted(doc.get("pages", []),
+                           key=lambda p: p.get("page", 0)):
+            blocks = page.get("blocks", [])
+            ordered = sorted(
+                blocks, key=lambda b: (int(b.get("x", 0)) // COLUMN_QUANTUM,
+                                       b.get("y", 0)))
+            lines.extend(canon(b.get("text", "")) for b in ordered)
+    except (AttributeError, TypeError, ValueError, OverflowError):
+        return None
     return "\n".join(t for t in lines if t)
 
 
@@ -736,6 +746,9 @@ def extract_document(url: str, payload: bytes,
     design) costs its row, never the job: it returns a flagged row with
     empty text, ``success=False``, ``error='null_payload'`` and
     ``backend_used='none'``, which lineage counts in ``failed_count``.
+    A PDF payload whose JSON does not fit the layout shape
+    (``extract_pdf`` returns None) is flagged the same way with
+    ``error='bad_layout'`` and ``backend_used='pdf'``.
     """
     if payload is None:
         return {
@@ -745,6 +758,13 @@ def extract_document(url: str, payload: bytes,
         }
     if is_pdf_payload(payload):
         text = extract_pdf(payload)
+        if text is None:
+            return {
+                "url": url, "text": "", "success": False,
+                "confidence": 0.5, "error": "bad_layout",
+                "backend_used": "pdf", "needs_verification": False,
+                "rule_hits": {},
+            }
         ok, err = validate_text(text)
         return {
             "url": url, "text": text, "success": ok,

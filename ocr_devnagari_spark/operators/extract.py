@@ -129,13 +129,10 @@ def extract_fused(pages: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# Route-split helpers (Catalyst-native PDF detection on the binary column)
+# Route predicate (Catalyst-native PDF detection on the binary column)
 # ---------------------------------------------------------------------------
 
 def is_pdf_col():
+    """``is_pdf_payload`` as a JVM-side Column: pushes to the scan, never
+    enters a Python worker.  NULL for a NULL ``html``."""
     return F.expr(f"startswith(html, x'{PDF_MAGIC_HEX}')")
-
-
-def split_routes(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(html_rows, pdf_rows) — predicate stays JVM-side, pushes to the scan."""
-    return pages.filter(~is_pdf_col()), pages.filter(is_pdf_col())

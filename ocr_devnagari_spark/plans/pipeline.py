@@ -38,14 +38,14 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import DEFAULT_CONFIG, ExtractConfig
 from ..extract_core import CRITICAL_FAMILIES
 from ..gates import broadcast_if_small, materialize
-from ..operators.extract import extract_fused
+from ..operators.extract import EXTRACTED_SCHEMA, extract_fused
 from ..sources.icebox import IceboxTable
 
 PAGES_SCHEMA = T.StructType([
@@ -54,6 +54,17 @@ PAGES_SCHEMA = T.StructType([
     T.StructField("html", T.BinaryType(), True),
     T.StructField("text", T.StringType(), True),
     T.StructField("lang", T.StringType(), True),
+])
+
+# The extracted table's schema, the same for every dedup mode: the
+# extraction output plus ``fingerprint`` (md5 of the text) and
+# ``duplicate_of`` (NULL unless an in-job dedup marks the row).  Every
+# read of the table or of its staged files passes it, so no read pays a
+# schema-inference job; a file written without the last two columns
+# reads them as NULL.
+TABLE_SCHEMA = T.StructType(EXTRACTED_SCHEMA.fields + [
+    T.StructField("fingerprint", T.StringType(), True),
+    T.StructField("duplicate_of", T.StringType(), True),
 ])
 
 LINEAGE_SCHEMA = T.StructType([
@@ -79,7 +90,7 @@ def pending_pages(pages: DataFrame, extracted: IceboxTable,
     LEFT ANTI join on url. With no checkpoint, everything is pending."""
     if not extracted.exists():
         return pages
-    done = extracted.read(spark).select("url")
+    done = extracted.read(spark, TABLE_SCHEMA).select("url")
     return pages.join(done, "url", "left_anti")
 
 
@@ -133,31 +144,41 @@ def lineage_rows(extracted: DataFrame, snapshot_id: int) -> DataFrame:
 
 
 def keeper_map(pairs: DataFrame, prior: DataFrame | None = None) -> DataFrame:
-    """(fingerprint, keep_url) for every fingerprint that is duplicated in
-    this batch or already committed: the canonical url per fingerprint.
-    ``pairs`` = the batch's (fingerprint, url) columns only — parquet
-    column pruning keeps the groupBy shuffle at ~48-byte pairs, never the
-    text. ``prior`` = (fingerprint, url) of canonical rows from committed
-    snapshots; they take precedence, so resumed / incremental runs mark
-    cross-run duplicates too."""
-    grp = (pairs.select("fingerprint", "url")
-           .groupBy("fingerprint")
-           .agg(F.min("url").alias("new_min"), F.count("*").alias("cnt")))
-    if prior is None:
-        grp = grp.withColumn("prior_url", F.lit(None).cast("string"))
-    else:
-        grp = grp.join(
-            prior.groupBy("fingerprint").agg(F.min("url").alias("prior_url")),
-            "fingerprint", "left")
-    return (grp
-            .filter((F.col("cnt") > 1) | F.col("prior_url").isNotNull())
-            .select("fingerprint",
-                    F.coalesce("prior_url", "new_min").alias("keep_url")))
+    """The rows of ``pairs`` to MARK, each with ``keep_url``, the
+    canonical url of its fingerprint: the minimum url among the ``prior``
+    rows of that fingerprint (committed canonical rows take precedence,
+    so resumed / incremental runs mark cross-run duplicates too), else,
+    when the fingerprint occurs more than once in ``pairs``, the minimum
+    url of the batch.  A row whose url is the keeper is not returned.
+
+    ``pairs`` = the batch's (fingerprint, url) columns plus any small
+    per-row tags (``mark_staged_duplicates`` adds the row's file) —
+    parquet column pruning keeps the text out of the shuffle.  ``prior``
+    = (fingerprint, url) of canonical committed rows.  Both meet in ONE
+    window over ``fingerprint`` (one shuffle, one scan of each side), so
+    every fingerprint's batch and committed urls are compared without a
+    join.  A NULL fingerprint (a file written before the column existed)
+    never marks and never keeps."""
+    is_prior = F.col("_prior")
+    rows = pairs.withColumn("_prior", F.lit(False))
+    if prior is not None:
+        rows = rows.unionByName(
+            prior.select("fingerprint", "url", F.lit(True).alias("_prior")),
+            allowMissingColumns=True)
+    by_fp = Window.partitionBy("fingerprint")
+    prior_url = F.min(F.when(is_prior, F.col("url"))).over(by_fp)
+    new_min = F.min(F.when(~is_prior, F.col("url"))).over(by_fp)
+    n_new = F.count(F.when(~is_prior, F.lit(1))).over(by_fp)
+    keep = F.coalesce(prior_url, F.when(n_new > 1, new_min))
+    return (rows.filter(F.col("fingerprint").isNotNull())
+            .select(*pairs.columns, "_prior", keep.alias("keep_url"))
+            .filter(~is_prior & (F.col("url") != F.col("keep_url")))
+            .drop("_prior"))
 
 
 def exact_dedup_mark(staged: DataFrame,
-                     prior: DataFrame | None = None,
-                     keepers: DataFrame | None = None) -> DataFrame:
+                     marks: DataFrame | None = None,
+                     bound: int | None = None) -> DataFrame:
     """In-job exact dedup — MARK, don't drop: every url still commits (so
     resume converges to zero pending); non-canonical copies carry
     ``duplicate_of`` = the canonical url for their fingerprint. Consumers
@@ -165,28 +186,29 @@ def exact_dedup_mark(staged: DataFrame,
     dropped urls pending forever and re-commit them as duplicates on the
     next resume.
 
-    Join strategy is GATED, not forced: the keeper map is dup-fraction-
-    sized, which is usually broadcastable but NOT always — re-crawl-heavy
-    corpora run 20-30%+ exact dups, and a forced broadcast of a
-    billion-row map kills the driver. ``gates.broadcast_if_small``
-    counts the map first (a bounded, column-pruned pass over
-    (fingerprint, url) hashes only); under its limit the map broadcasts
-    (and no Exchange carries the payload —
-    ``test_dedup_mark_shuffles_no_payload``), above it the hint is
-    omitted and AQE plans a shuffled join. Pass a precomputed ``keepers``
-    to reuse a global map while marking a subset of files (the
-    single-write commit path below).
+    ``staged`` joins the marks (``keeper_map`` rows, one per
+    (fingerprint, url)) on (fingerprint, url).  Join strategy is GATED,
+    not forced: the marks are dup-fraction-sized, which is usually
+    broadcastable but NOT always — re-crawl-heavy corpora run 20-30%+
+    exact dups, and a forced broadcast of a billion-row side kills the
+    driver.  ``gates.broadcast_if_small`` decides: with a job-free
+    ``bound`` on the marks' row count (``mark_staged_duplicates`` passes
+    the count it observed) it settles the choice without a job, else it
+    runs one bounded count.  Under its limit the marks broadcast (and no
+    Exchange carries the payload — ``test_dedup_mark_shuffles_no_payload``),
+    above it the hint is omitted and AQE plans a shuffled join.  Without
+    ``marks``, ``staged`` is marked against itself; pass precomputed
+    ``marks`` to mark a subset of files against the marks of the whole
+    batch and the committed table (the single-write commit path below).
     """
-    if keepers is None:
-        keepers = keeper_map(staged, prior)
-    keepers = broadcast_if_small(keepers)
+    if marks is None:
+        marks = keeper_map(staged.select("fingerprint", "url")) \
+            .dropDuplicates(["fingerprint", "url"])
+    marks = broadcast_if_small(
+        marks.select("fingerprint", "url", "keep_url"), bound=bound)
     return (staged.drop("duplicate_of")
-            .join(keepers, "fingerprint", "left")
-            .withColumn(
-                "duplicate_of",
-                F.when(F.col("keep_url").isNotNull()
-                       & (F.col("url") != F.col("keep_url")),
-                       F.col("keep_url")).cast("string"))
+            .join(marks, ["fingerprint", "url"], "left")
+            .withColumn("duplicate_of", F.col("keep_url"))
             .select(*staged.columns))
 
 
@@ -205,43 +227,52 @@ def mark_staged_duplicates(spark: SparkSession, out: IceboxTable,
     ``schema`` is the staged files' schema: both reads below use it, so
     neither pays a footer-inference job.
 
+    One pass decides everything: the marks — (fingerprint, url, _file,
+    keep_url) for exactly the rows to mark — are materialized once, and
+    an ``observe`` on that same pass yields the marked-row count and the
+    set of affected files, so no further job asks either question.  The
+    count then bounds the marks for the broadcast gate (no count job),
+    and the affected files join the marks on (fingerprint, url).  A url
+    staged twice keeps one marks row per (fingerprint, url), so the join
+    never multiplies rows.
+
     Returns (files_for_commit, n_marked_rows, n_files_rewritten). All
-    planning shuffles carry (fingerprint, url, file) triples only; the
+    planning shuffles carry (fingerprint, url, file) tuples only; the
     payload moves once, inside the rewrite of affected files.
     """
     from urllib.parse import unquote, urlparse
 
-    staged = spark.read.schema(schema).parquet(*files)
-    # materialize the keeper map once: it is consumed three times below
-    # (affected-file probe, broadcast-gate count, mark join), and each
-    # un-truncated consumer would re-run the full staged scan +
-    # fingerprint groupBy — the dominant planning cost.  materialize
-    # picks reliable checkpoints when sc.setCheckpointDir is configured
-    # (cluster: survives executor loss) and localCheckpoint otherwise
-    # (local[N]: executor == driver JVM).
-    keepers = materialize(keeper_map(staged, prior))
-    hits = (staged.select("fingerprint", "url")
-            .withColumn("_file", F.input_file_name())
-            .join(keepers, "fingerprint")
-            .filter(F.col("url") != F.col("keep_url"))
-            .groupBy("_file").agg(F.count("*").alias("n"))
-            .collect())
-    if not hits:
+    pairs = (spark.read.schema(schema).parquet(*files)
+             .select("fingerprint", "url")
+             .withColumn("_file", F.input_file_name()))
+    obs = Observation("dedup_marks")
+    # The rewrite can only be planned once the observed files are known,
+    # so the marks are checkpointed by that same job: the rewrite reads
+    # them back instead of rerunning the scans and the window.
+    # materialize picks reliable checkpoints when sc.setCheckpointDir is
+    # configured (cluster: survives executor loss) and localCheckpoint
+    # otherwise (local[N]: executor == driver JVM).
+    marks = materialize(
+        keeper_map(pairs, prior)
+        .observe(obs, F.count(F.lit(1)).alias("n"),
+                 F.collect_set("_file").alias("files"))
+        .dropDuplicates(["fingerprint", "url"]))
+    seen = obs.get
+    if not seen["n"]:
         return files, 0, 0
-    n_marked = sum(r["n"] for r in hits)
     # input_file_name yields a URI (file:/... or s3a://...); staged file
     # names (part-<n>-<uuid>) are unique within the staging dir, so match
     # on the decoded basename.
-    aff_names = {os.path.basename(unquote(urlparse(r["_file"]).path))
-                 for r in hits}
+    aff_names = {os.path.basename(unquote(urlparse(f).path))
+                 for f in seen["files"]}
     affected = [f for f in files if os.path.basename(f) in aff_names]
     untouched = [f for f in files if os.path.basename(f) not in aff_names]
     marked = exact_dedup_mark(spark.read.schema(schema).parquet(*affected),
-                              keepers=keepers)
+                              marks=marks, bound=seen["n"])
     marked_files, _ = out.stage(marked)
     for f in affected:                     # superseded, never committed
         os.remove(f)
-    return untouched + marked_files, n_marked, len(affected)
+    return untouched + marked_files, seen["n"], len(affected)
 
 
 def run_extract_job(
@@ -329,7 +360,8 @@ def extract_and_commit(
             m = out.snapshot_for_token(job_token)
             if m and m.get("added_files"):
                 lin.append(
-                    lineage_rows(spark.read.parquet(*m["added_files"]),
+                    lineage_rows(spark.read.schema(TABLE_SCHEMA)
+                                 .parquet(*m["added_files"]),
                                  m["snapshot_id"]), job_token=lin_token)
         return {"snapshot_id": out.snapshot_id(), "rows": 0, "resumed": True}
 
@@ -346,7 +378,6 @@ def extract_and_commit(
     # In-flight metrics via observe() — the Spark-native analog of the
     # reference's TokenUsage accumulator monoid (gemini_backend.py:25-80):
     # commutative aggregates collected DURING the job, no extra pass.
-    from pyspark.sql import Observation
     obs = Observation("extract_metrics")
     result = result.observe(
         obs,
@@ -382,17 +413,14 @@ def extract_and_commit(
     if dedup == "exact":
         prior = None
         if out.exists():
-            committed = out.read(spark)
-            if "fingerprint" in committed.columns:
-                prior = (committed
-                         .filter(F.col("duplicate_of").isNull())
-                         .select("fingerprint", "url"))
+            prior = (out.read(spark, TABLE_SCHEMA)
+                     .filter(F.col("duplicate_of").isNull())
+                     .select("fingerprint", "url"))
         files, n_marked, files_rewritten = mark_staged_duplicates(
-            spark, out, files, result.schema, prior)
+            spark, out, files, TABLE_SCHEMA, prior)
 
     snap = out.commit_staged(files, n, job_token=job_token)
-    # the schema is known: reading with it skips the footer-inference job
-    staged = spark.read.schema(result.schema).parquet(*files)
+    staged = spark.read.schema(TABLE_SCHEMA).parquet(*files)
     lin.append(lineage_rows(staged, snap),
                job_token=f"lineage-{job_token}" if job_token else None)
     # A2 cost accounting (gemini_backend.py:25-80 analog): dollar cost

@@ -29,6 +29,7 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class IceboxTable:
@@ -173,11 +174,17 @@ class IceboxTable:
         return self._commit(files, rows, job_token)
 
     # -- read path ----------------------------------------------------------
-    def read(self, spark: SparkSession) -> DataFrame:
+    def read(self, spark: SparkSession,
+             schema: StructType | None = None) -> DataFrame:
+        """The current snapshot.  With the table's ``schema`` the read
+        runs no job (without it Spark infers the schema from a file
+        footer, one job); a file lacking a column of ``schema`` reads it
+        as NULL."""
         m = self.current_manifest()
         if m is None or not m["files"]:
             raise FileNotFoundError(f"no current snapshot in {self.path}")
-        return spark.read.parquet(*m["files"])
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*m["files"])
 
     # -- time travel (Iceberg ``VERSION AS OF`` parity) ----------------------
     def _walk_snapshots(self):

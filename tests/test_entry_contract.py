@@ -92,7 +92,8 @@ FIXTURE_SQL = (
     "_ANCHOR_HTML_SQL", "_SITEMAP_XML_SQL", "_SNIFF_HEX_SQL",
     "_V2_DIGEST_SQL", "_SUBSTR_SPIKED_SQL", "_MIX_HOST_SQL",
     "_BLOCKSPIKE_SQL", "_TRAP_URL_SQL", "_SCRIPT_TEXT_SQL",
-    "_UNNORM_TEXT_SQL",
+    "_UNNORM_TEXT_SQL", "_DOC_URL_SQL", "_EDGE_HOST_SQL", "_ANCHOR_HOST_SQL",
+    "_DOMAIN7_SQL",
 )
 
 

@@ -92,11 +92,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from ocr_devnagari_spark.corpus import gen_page
-from ocr_devnagari_spark.operators.extract import (
-    extract_fused,
-    split_routes,
-)
-from ocr_devnagari_spark.plans.pipeline import read_pages
+from ocr_devnagari_spark.operators.extract import extract_fused, is_pdf_col
+from ocr_devnagari_spark.plans.pipeline import PAGES_SCHEMA, read_pages
 
 
 def _golden_map(golden_path):
@@ -147,16 +144,19 @@ def test_partitioning_invariance(spark, corpus_dir, golden_path):
 
 
 def test_route_split_predicate(spark, corpus_dir):
-    """Catalyst-native PDF-magic predicate agrees with the Python check."""
-    pages = read_pages(spark, corpus_dir)
-    html_df, pdf_df = split_routes(pages)
-    n_pdf = pdf_df.count()
-    n_html = html_df.count()
-    assert n_pdf + n_html == pages.count()
-    routed = extract_fused(pages).filter(
-        F.col("backend_used") == "pdf").count()
-    assert routed == n_pdf
-    assert n_pdf > 0
+    """Catalyst-native PDF-magic predicate agrees with the Python check,
+    NULL payload included: the predicate is NULL there (neither route),
+    and ``extract_fused`` flags that row with ``backend_used='none'``."""
+    pages = read_pages(spark, corpus_dir).unionByName(spark.createDataFrame(
+        [("null-payload", None, None, None, None)], PAGES_SCHEMA))
+    route = {r.pdf: r["count"] for r in pages.groupBy(
+        is_pdf_col().alias("pdf")).count().collect()}
+    assert route[None] == 1
+    assert route[True] + route[False] + 1 == pages.count()
+    routed = {r.backend_used: r["count"] for r in extract_fused(pages)
+              .groupBy("backend_used").count().collect()}
+    assert routed["pdf"] == route[True] > 0
+    assert routed["none"] == 1
 
 
 def test_escalation_fraction_sane(spark, corpus_dir):

@@ -12,6 +12,7 @@ from pyspark.sql import types as T
 from ocr_devnagari_spark import gates
 from ocr_devnagari_spark.config import ExtractConfig
 from ocr_devnagari_spark.plans.pipeline import (
+    TABLE_SCHEMA,
     pending_pages,
     read_pages,
     run_extract_job,
@@ -191,41 +192,226 @@ def test_null_payload_flags_one_row(spark, corpus_dir, golden_path,
          "success": False}]
 
 
+def test_poison_pdf_layouts_flag_their_rows(spark, corpus_dir, golden_path,
+                                            work_root, tmp_path):
+    """A PDF-magic payload whose JSON parses but does not fit the layout
+    shape costs its row, never the job: every url commits, exactly the
+    five poison rows are flagged ``bad_layout`` on the ``pdf`` backend,
+    lineage counts five failures, and the golden extractor agrees."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from ocr_devnagari_spark.extract_core import PDF_MAGIC
+    from ocr_devnagari_spark.goldenref import golden_extract_corpus
+
+    poison = {
+        "pdf-root-list": [1, 2],
+        "pdf-pages-string": {"pages": "abc"},
+        "pdf-x-not-number": {"pages": [{"page": 1, "blocks": [
+            {"x": "left", "y": 1, "text": "a block of words"}]}]},
+        "pdf-text-not-string": {"pages": [{"page": 1, "blocks": [
+            {"x": 1, "y": 1, "text": 42}]}]},
+        "pdf-mixed-page-types": {"pages": [
+            {"page": 1, "blocks": []}, {"page": "2", "blocks": []}]},
+    }
+    gold = pq.read_table(golden_path)
+    ok_urls = pc.filter(gold.column("url"), gold.column("success"))
+    pages = pq.read_table(os.path.join(corpus_dir, "pages.parquet"))
+    pages = pages.filter(pc.is_in(pages.column("url"), ok_urls))
+    bad = pa.Table.from_pylist(
+        [{"url": u, "html": PDF_MAGIC + json.dumps(doc).encode()}
+         for u, doc in poison.items()],
+        schema=pa.schema([("url", pa.string()), ("html", pa.binary())]))
+    pages = pa.concat_tables(
+        [pages, bad.select(["url", "html"]).cast(
+            pages.select(["url", "html"]).schema)],
+        promote_options="default")
+    src = tmp_path / "poisoncorpus"
+    src.mkdir()
+    pq.write_table(pages, src / "pages.parquet")
+
+    cfg = ExtractConfig(root_dir=work_root)
+    r = run_extract_job(spark, str(src), cfg, job_token="p")
+    out = IceboxTable(cfg.extracted_table).read(spark)
+    assert r["rows"] == pages.num_rows == out.count()
+    flagged = sorted((x.url, x.text, x.error, x.backend_used)
+                     for x in out.filter(~F.col("success")).collect())
+    assert flagged == sorted((u, "", "bad_layout", "pdf") for u in poison)
+    lin = IceboxTable(cfg.lineage_table).read(spark)
+    assert lin.agg(F.sum("failed_count")).first()[0] == len(poison)
+
+    golden = pq.read_table(golden_extract_corpus(
+        str(src), str(tmp_path / "golden.parquet"))).to_pylist()
+    assert sorted((g["url"], g["text"], g["backend_used"])
+                  for g in golden if not g["success"]) == sorted(
+        (u, "", "pdf") for u in poison)
+
+
+def _job_count(spark, fn):
+    """Run ``fn()`` in a job group of its own; return its result and the
+    ids of the Spark jobs it ran."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        res = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return res, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_fresh_run_job_budget(spark, corpus_dir, work_root):
     """A fresh run costs 3 Spark jobs: the extraction write and the
     lineage aggregation's two (its shuffle map stage and the write); the
     staged files are read back with a known schema, so no
     schema-inference job."""
-    sc = spark.sparkContext
     cfg = ExtractConfig(root_dir=work_root)
-    sc.setJobGroup("fresh-run-budget", "fresh run_extract_job")
-    try:
-        r = run_extract_job(spark, corpus_dir, cfg, job_token="t1")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    r, jobs = _job_count(spark, lambda: run_extract_job(
+        spark, corpus_dir, cfg, job_token="t1"))
     assert r["rows"] > 0
-    jobs = sc.statusTracker().getJobIdsForGroup("fresh-run-budget")
-    assert len(jobs) <= 3, sorted(jobs)
+    assert len(jobs) <= 3, jobs
 
 
 def test_dedup_run_job_budget(spark, corpus_dir, work_root, tmp_path):
-    """A fresh dedup='exact' run that marks rows costs 12 Spark jobs; both
-    reads of the staged files (the keeper-map scan and the affected-file
-    rewrite) use the known schema, so neither pays a schema-inference
-    job (14 with the two inferring reads)."""
+    """A fresh dedup='exact' run that marks rows costs 7 Spark jobs: the
+    extraction write, the marks (the window's shuffle map stage and the
+    checkpoint, whose observe also yields the marked count and the
+    affected files), the rewrite of the affected files (the marks'
+    broadcast, settled by the observed count, and the write) and the
+    lineage's two."""
     dup_dir = str(tmp_path / "budgetcorpus")
     _corpus_with_clones(corpus_dir, dup_dir, 50)
-    sc = spark.sparkContext
     cfg = ExtractConfig(root_dir=work_root)
-    sc.setJobGroup("dedup-run-budget", "dedup run_extract_job")
-    try:
-        r = run_extract_job(spark, dup_dir, cfg, job_token="d",
-                            dedup="exact")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    r, jobs = _job_count(spark, lambda: run_extract_job(
+        spark, dup_dir, cfg, job_token="d", dedup="exact"))
     assert r["dedup_marked"] >= 50
-    jobs = sc.statusTracker().getJobIdsForGroup("dedup-run-budget")
-    assert len(jobs) <= 12, sorted(jobs)
+    assert len(jobs) <= 7, jobs
+
+
+def test_dedup_resume_call_job_budget(spark, corpus_dir, work_root,
+                                      tmp_path):
+    """A dedup='exact' resume call over a committed history costs 8
+    Spark jobs: the fresh dedup run's 7 plus the resume anti-join's
+    broadcast.  Both reads of the committed table pass its schema (no
+    schema-inference job), and the committed canonical rows enter the
+    batch's window in the same shuffle (no join, no extra stage)."""
+    dup_dir = str(tmp_path / "resumecorpus")
+    _corpus_with_clones(corpus_dir, dup_dir, 50)
+    cfg = ExtractConfig(root_dir=work_root)
+    run_extract_job(spark, dup_dir, cfg, job_token="r1", dedup="exact",
+                    limit_pending=300)
+    r, jobs = _job_count(spark, lambda: run_extract_job(
+        spark, dup_dir, cfg, job_token="r2", dedup="exact"))
+    assert r["rows"] > 0 and r["dedup_marked"] >= 50
+    assert len(jobs) <= 8, jobs
+
+
+def test_dedup_marks_match_python_replay(spark, corpus_dir, work_root,
+                                         tmp_path):
+    """The marks of a dedup resume call equal a Python replay of the
+    keeper-map rule: a fingerprint's canonical url is the minimum url
+    among the committed canonical rows, else, when the batch holds the
+    fingerprint more than once, the batch's minimum url; every other
+    row of it is marked.  The history holds a file written without
+    ``fingerprint`` and ``duplicate_of`` (its rows read them as NULL, so
+    they neither keep nor mark); the batch holds in-batch clones, clones
+    of committed pages of both commits and many empty texts (one
+    md5(''))."""
+    import hashlib
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{corpus_dir}/pages.parquet")
+    urls = t.column("url").to_pylist()
+    blank = b"<html><body></body></html>"
+
+    def part(lo, hi, prefix=""):
+        idx = list(range(lo, hi))
+        return t.take(idx).set_column(0, "url", pa.array(
+            [prefix + urls[i] for i in idx]))
+
+    def blanks(tag, k):
+        b = t.take(list(range(k)))
+        return (b.set_column(0, "url", pa.array(
+                    [f"blank-{tag}-{i}" for i in range(k)]))
+                .set_column(b.schema.get_field_index("html"), "html",
+                            pa.array([blank] * k, pa.binary())))
+
+    def corpus(name, tables):
+        d = tmp_path / name
+        d.mkdir()
+        pq.write_table(pa.concat_tables(tables), d / "pages.parquet")
+        return str(d)
+
+    cfg = ExtractConfig(root_dir=work_root)
+    out = IceboxTable(cfg.extracted_table)
+    a = [part(0, 150), blanks("a", 5)]
+    run_extract_job(spark, corpus("a", a), cfg, job_token="r1",
+                    dedup="exact")
+    # the first commit becomes a file of an older writer: no fingerprint,
+    # no duplicate_of (and no stale Hadoop checksum beside it)
+    for f in out.current_manifest()["files"]:
+        pq.write_table(pq.read_table(f).drop_columns(
+            ["fingerprint", "duplicate_of"]), f)
+        crc = os.path.join(os.path.dirname(f),
+                           f".{os.path.basename(f)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+    b = a + [part(150, 300), part(0, 10, "b-"), blanks("b", 5)]
+    run_extract_job(spark, corpus("b", b), cfg, job_token="r2",
+                    dedup="exact")
+    before = out.current_manifest()["files"]
+    c = b + [part(300, len(urls)), part(0, 5, "c-"), part(150, 160, "c-"),
+             part(300, 310, "zzz-"), blanks("c", 5)]
+    r = run_extract_job(spark, corpus("c", c), cfg, job_token="r3",
+                        dedup="exact")
+
+    def md5(text):
+        return hashlib.md5(text.encode()).hexdigest()
+
+    prior: dict = {}
+    n_legacy = 0
+    for f in before:
+        tb = pq.read_table(f)
+        if "fingerprint" not in tb.column_names:
+            n_legacy += tb.num_rows
+            continue
+        for x in tb.select(["url", "fingerprint", "duplicate_of"]).to_pylist():
+            if x["duplicate_of"] is None:
+                fp = x["fingerprint"]
+                prior[fp] = min(prior.get(fp, x["url"]), x["url"])
+    assert n_legacy == 155
+    batch = pq.read_table(out.snapshot_for_token("r3")["added_files"],
+                          columns=["url", "text", "fingerprint",
+                                   "duplicate_of"]).to_pylist()
+    assert len(batch) == r["rows"]
+    assert all(x["fingerprint"] == md5(x["text"]) for x in batch)
+    by_fp: dict = {}
+    for x in batch:
+        by_fp.setdefault(x["fingerprint"], []).append(x["url"])
+    want = {}
+    for fp, us in by_fp.items():
+        keep = prior.get(fp, min(us) if len(us) > 1 else None)
+        want.update({u: keep if u != keep else None for u in us})
+    got = {x["url"]: x["duplicate_of"] for x in batch}
+    assert got == want
+    assert r["dedup_marked"] == sum(v is not None for v in want.values())
+    # every kind of duplicate occurs: in-batch clones, clones of both
+    # commits (a clone of a legacy row keeps the r2 clone "b-..."), and
+    # the empty texts of all three commits
+    assert any(got["zzz-" + urls[i]] == urls[i] for i in range(300, 310))
+    assert any(got["c-" + urls[i]] == urls[i] for i in range(150, 160))
+    assert any(got["c-" + urls[i]] == "b-" + urls[i] for i in range(5))
+    assert all(got[f"blank-c-{i}"] is not None for i in range(5))
 
 
 def test_pending_pages_empty_checkpoint(spark, corpus_dir, work_root):
@@ -348,7 +534,9 @@ def test_dedup_schema_stable_across_modes(spark, corpus_dir, work_root):
                     limit_pending=100, dedup="none")
     run_extract_job(spark, corpus_dir, cfg, job_token="b", dedup="exact")
     out = IceboxTable(cfg.extracted_table).read(spark)
-    assert {"fingerprint", "duplicate_of"} <= set(out.columns)
+    # the files carry exactly the schema every read of the table passes
+    assert [(f.name, f.dataType) for f in out.schema] == [
+        (f.name, f.dataType) for f in TABLE_SCHEMA]
     total = read_pages(spark, corpus_dir).count()
     assert out.count() == total
     # duplicate_of is queryable across ALL rows, including the non-dedup
@@ -473,6 +661,26 @@ def test_dedup_commit_rewrites_only_affected_files(spark, tmp_path):
     assert got.filter(F.col("duplicate_of").isNotNull()).count() == 2
     assert got.filter((F.col("fingerprint") == "dupfp0")
                       & F.col("duplicate_of").isNull()).count() == 1
+
+
+def test_dedup_mark_url_staged_twice(spark, tmp_path):
+    """A url staged twice (two captures of one page) whose fingerprint
+    another url keeps: both copies are marked, and the rewrite's join on
+    (fingerprint, url) neither drops nor multiplies rows."""
+    from ocr_devnagari_spark.plans.pipeline import mark_staged_duplicates
+
+    out = IceboxTable(str(tmp_path / "tbl"))
+    schema = "url string, text string, fingerprint string, duplicate_of string"
+    files, _ = out.stage(spark.createDataFrame(
+        [("a", "t", "fp", None), ("b", "t", "fp", None),
+         ("b", "t", "fp", None), ("c", "u", "fp2", None)], schema)
+        .coalesce(1))
+    final, n_marked, n_rewritten = mark_staged_duplicates(
+        spark, out, files, T.StructType.fromDDL(schema), prior=None)
+    got = sorted((r.url, r.duplicate_of)
+                 for r in spark.read.parquet(*final).collect())
+    assert got == [("a", None), ("b", "a"), ("b", "a"), ("c", None)]
+    assert (n_marked, n_rewritten) == (2, 1)
 
 
 def test_compact_small_files(spark, work_root):

@@ -11,11 +11,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_devnagari_spark.operators.extract import (
-    extract_fused,
-    is_pdf_col,
-    split_routes,
-)
+from ocr_devnagari_spark.operators.extract import extract_fused, is_pdf_col
 from ocr_devnagari_spark.plans.pipeline import read_pages
 
 
@@ -65,8 +61,8 @@ def test_filter_pushdown_to_scan(spark, corpus_dir):
 
 
 def test_pdf_route_predicate_is_jvm_side(spark, corpus_dir):
-    html_df, pdf_df = split_routes(read_pages(spark, corpus_dir))
-    for df in (html_df, pdf_df):
+    pages = read_pages(spark, corpus_dir)
+    for df in (pages.filter(~is_pdf_col()), pages.filter(is_pdf_col())):
         plan = _plan(df.select("url"))
         assert "EvalPython" not in plan     # startswith on binary: Catalyst
 

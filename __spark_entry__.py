@@ -38,7 +38,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ocr_devnagari_spark.extract_core import CONFIDENCE_THRESHOLD
+from ocr_devnagari_spark.extract_core import (
+    CONFIDENCE_THRESHOLD,
+    PRECISE_COST_PER_PAGE,
+)
 from ocr_devnagari_spark.functions.text import (
     BPE_ISH_RE,
     bpe_ish_count,
@@ -548,21 +551,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ---- A2 cost accounting: routing → estimated dollar cost ----
     def a2_cost_summary(spark, sf_dir):
-        from ocr_devnagari_spark.operators.registry import (
-            backend_cost_per_page,
-        )
         d = _t(spark, sf_dir, "documents").withColumn(
             "t2", F.expr(_SPIKED_SQL))
         esc = (~validation_ok(F.col("t2"))
                | (confidence_expr(F.col("t2")) < CONFIDENCE_THRESHOLD)
                | critical_flag(F.col("t2"))).cast("long")
-        c_fast = backend_cost_per_page("fast")
-        c_precise = backend_cost_per_page("precise")
         return (d.select(esc.alias("esc"))
                 .agg(F.count("*").alias("n_docs"),
                      F.sum("esc").alias("n_escalated"),
-                     F.round(F.count("*") * F.lit(c_fast)
-                             + F.sum("esc") * F.lit(c_precise), 6)
+                     F.round(F.sum("esc") * F.lit(PRECISE_COST_PER_PAGE), 6)
                      .alias("est_cost_usd")))
     q["a2_cost_summary"] = a2_cost_summary
 
@@ -2388,11 +2385,8 @@ WHERE comp.id IS NULL OR comp.component = d.doc_id
 
 
 def _a2_cost_sql() -> str:
-    # Unit costs pulled from the SAME registry metadata the Spark query
-    # uses — an edited cost constant diverges loudly, not silently.
-    from ocr_devnagari_spark.operators.registry import backend_cost_per_page
-    c_fast = backend_cost_per_page("fast")
-    c_precise = backend_cost_per_page("precise")
+    # The unit cost is the SAME constant the Spark query uses — an
+    # edited cost diverges loudly, not silently.
     t2 = f"({_SPIKED_SQL})"
     esc = (f"CAST(NOT ({_valid_sql('t2')}) "
            f"OR ({_conf_sql('t2')}) < 0.85 "
@@ -2402,9 +2396,8 @@ def _a2_cost_sql() -> str:
             # CAST AS DOUBLE: DuckDB float literals are DECIMAL, and
             # BIGINT×DECIMAL stays DECIMAL — a typed-hash mismatch vs
             # Spark's double even when the values agree.
-            f"round(count(*) * CAST({c_fast!r} AS DOUBLE) "
-            f"+ sum(esc) * CAST({c_precise!r} AS DOUBLE), 6) "
-            f"AS est_cost_usd FROM (SELECT {esc} AS esc FROM "
+            f"round(sum(esc) * CAST({PRECISE_COST_PER_PAGE!r} AS DOUBLE),"
+            f" 6) AS est_cost_usd FROM (SELECT {esc} AS esc FROM "
             f"(SELECT doc_id, {t2} AS t2 FROM documents))")
 
 

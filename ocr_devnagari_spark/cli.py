@@ -10,11 +10,13 @@ library calls the tests exercise — the CLI adds no semantics of its own.
     python -m ocr_devnagari_spark.cli validate  --corpus DIR
     python -m ocr_devnagari_spark.cli extract   --corpus DIR --root DIR \
         [--token T] [--limit N] [--pages "1-50,60"] [--dedup exact] \
-        [--rebalance salted] [--backend fast|naive] [--precise precise]
+        [--rebalance salted]
     python -m ocr_devnagari_spark.cli resume    --corpus DIR --root DIR
     python -m ocr_devnagari_spark.cli bench     --corpus DIR [--cores N] \
         [--sweep 2,8,32]
-    python -m ocr_devnagari_spark.cli backends
+
+There is one extraction engine, the built-in fast → precise route of
+``extract_core.extract_document``, so no subcommand or flag selects one.
 """
 
 from __future__ import annotations
@@ -59,8 +61,8 @@ def cmd_validate(args) -> int:
 
 def cmd_extract(args) -> int:
     """Run (or resume — the anti-join makes them the same verb) the
-    extraction job (``cli.py:134-251`` process / ``:415-504`` ocr analog;
-    ``--backend``/``--precise`` = the engine whitelist flags)."""
+    extraction job (``cli.py:134-251`` process / ``:415-504`` ocr
+    analog)."""
     from .config import ExtractConfig
     from .plans.pipeline import run_extract_job
     spark = _spark(args)
@@ -71,8 +73,6 @@ def cmd_extract(args) -> int:
         rebalance_mode=args.rebalance,
         limit_pending=args.limit,
         dedup=args.dedup,
-        primary=args.backend,
-        precise=args.precise,
         pages=args.pages,
     )
     summary["metrics"] = dict(summary.get("metrics") or {})
@@ -139,20 +139,6 @@ def cmd_bench(args) -> int:
     return 0
 
 
-def cmd_backends(args) -> int:
-    """List registered backends with cost metadata (the reference's
-    engine whitelist + ``is_free``/``cost_per_1000_pages`` surface)."""
-    from .operators.registry import available_backends, get_spec
-    out = []
-    for name in available_backends():
-        s = get_spec(name)
-        out.append({"name": name, "is_free": s.is_free,
-                    "cost_per_1000_pages": s.cost_per_1000_pages,
-                    "has_lifecycle": s.initialize is not None})
-    print(json.dumps({"command": "backends", "backends": out}))
-    return 0
-
-
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="ocrds", description="PySpark web-text extraction engine")
@@ -182,12 +168,6 @@ def build_parser() -> argparse.ArgumentParser:
         e.add_argument("--dedup", choices=["none", "exact"], default="none")
         e.add_argument("--rebalance", choices=["none", "salted"],
                        default="none")
-        e.add_argument("--backend", default=None,
-                       help="primary engine by registry name "
-                            "(default: built-in 'fast')")
-        e.add_argument("--precise", default=None,
-                       help="escalation engine by registry name "
-                            "(default: built-in 'precise')")
         e.set_defaults(fn=cmd_extract)
 
     b = sub.add_parser("bench", help="extraction throughput on a corpus")
@@ -197,9 +177,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="worker-count sweep, e.g. '2,8,32' — one fresh "
                         "local[N] session per level, reports the argmax")
     b.set_defaults(fn=cmd_bench)
-
-    k = sub.add_parser("backends", help="list backends + cost metadata")
-    k.set_defaults(fn=cmd_backends)
     return p
 
 

@@ -46,6 +46,11 @@ from html import unescape
 # path. The one definition: the reference carries it twice
 # (``hybrid_backend.py:45`` and ``base.py:34-37``).
 CONFIDENCE_THRESHOLD = 0.85
+# Dollar cost of one escalated page: the reference's paid precise engine
+# runs ~1000 input + 500 output tokens per page at $0.50/$3.00 per 1M
+# tokens, ~$2 per 1000 pages (``gemini_backend.py:146-158``).  The fast
+# engine is free, so a run's estimated cost is escalated rows × this.
+PRECISE_COST_PER_PAGE = 0.002
 MIN_VALID_LENGTH = 20            # gemini_backend.py:115
 
 PDF_MAGIC = b"FPDF1\n"
@@ -728,8 +733,7 @@ RESULT_FIELDS = ("url", "text", "success", "confidence", "error",
                  "backend_used", "needs_verification", "rule_hits")
 
 
-def extract_document(url: str, payload: bytes,
-                     primary=None, precise=None) -> dict:
+def extract_document(url: str, payload: bytes) -> dict:
     """The per-row pure function: route → extract → validate → escalate.
 
     Deterministic hybrid-route semantics (run per row by the distributed
@@ -741,6 +745,10 @@ def extract_document(url: str, payload: bytes,
     3. Escalate iff invalid OR low-confidence OR critical → precise extract.
     4. Escalated rows take the precise text when it validates, else fall back
        to the fast text (hybrid_backend.py:207-211 — here deterministic).
+
+    The fast/precise pair is the one extraction engine; there is no
+    engine argument.  Changing an engine is a change to this module,
+    and ``test_extract_document_pinned_digest`` pins its output bytes.
 
     A NULL payload (``sources/warc.py::read_wet_pages`` emits one by
     design) costs its row, never the job: it returns a flagged row with
@@ -773,16 +781,10 @@ def extract_document(url: str, payload: bytes,
             "rule_hits": {},
         }
 
-    html_str = payload.decode("utf-8", errors="replace")
-    # Default path tokenizes ONCE: the event list feeds the fast pass and,
-    # for the escalated minority, the precise DOM build — previously the
-    # tokenizer (the per-doc hot loop) ran twice on escalated rows. Custom
-    # backends take the raw string (registry contract: (html_str) -> str);
-    # with a custom PRIMARY, events are never pre-built — the default
-    # precise path tokenizes lazily, only for the escalated minority.
-    events = materialize_events(html_str) if primary is None else None
-    fast_text = primary(html_str) if primary else fast_extract_html(
-        events)[0]
+    # Tokenize ONCE: the event list feeds the fast pass and, for the
+    # escalated minority, the precise DOM build.
+    events = materialize_events(payload.decode("utf-8", errors="replace"))
+    fast_text = fast_extract_html(events)[0]
     ok, err = validate_text(fast_text)
     conf = estimate_confidence(fast_text)
     critical, _cscore, hits = detect_critical(fast_text)
@@ -795,9 +797,7 @@ def extract_document(url: str, payload: bytes,
             "needs_verification": False, "rule_hits": hits,
         }
 
-    precise_text = (precise(html_str) if precise
-                    else precise_extract_html(
-                        events if events is not None else html_str))
+    precise_text = precise_extract_html(events)
     p_ok, p_err = validate_text(precise_text)
     if p_ok:
         text, success, error = precise_text, True, None

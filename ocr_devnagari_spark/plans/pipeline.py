@@ -28,7 +28,7 @@ Scale notes (the parts that must survive 1000 executors × 100 TB):
   aggregation by partition_id, a tiny shuffle of (partition_id, counters)
   tuples.
 
-``extract_and_commit`` holds everything from the backend pre-flight to
+``extract_and_commit`` holds everything from the resume anti-join to
 the lineage append and is the one commit path: ``run_extract_job`` calls
 it for a batch run and for a resume, and ``streaming/ingest.py`` calls it
 once per micro-batch.
@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import DEFAULT_CONFIG, ExtractConfig
-from ..extract_core import CRITICAL_FAMILIES
+from ..extract_core import CRITICAL_FAMILIES, PRECISE_COST_PER_PAGE
 from ..gates import broadcast_if_small, materialize
 from ..operators.extract import EXTRACTED_SCHEMA, extract_fused
 from ..sources.icebox import IceboxTable
@@ -131,6 +131,8 @@ def lineage_rows(extracted: DataFrame, snapshot_id: int) -> DataFrame:
         F.create_map(*[x for fam in CRITICAL_FAMILIES for x in (
             F.lit(fam), F.sum(F.col("rule_hits")[fam]))]),
         lambda _, n: n.isNotNull())
+    stamps = {"snapshot_id": F.lit(snapshot_id).cast("long"),
+              "committed_at": F.current_timestamp()}
     return (extracted.groupBy("partition_id").agg(
                 F.min("url").alias("url_min"),
                 F.max("url").alias("url_max"),
@@ -138,9 +140,8 @@ def lineage_rows(extracted: DataFrame, snapshot_id: int) -> DataFrame:
                 F.sum(F.when(~F.col("success"), 1).otherwise(0))
                 .alias("failed_count"),
                 F.when(F.size(hits) > 0, hits).alias("rule_hits"))
-            .withColumn("snapshot_id", F.lit(snapshot_id).cast("long"))
-            .withColumn("committed_at", F.current_timestamp())
-            .select([f.name for f in LINEAGE_SCHEMA.fields]))
+            .select(*[stamps.get(f.name, F.col(f.name)).alias(f.name)
+                      for f in LINEAGE_SCHEMA.fields]))
 
 
 def keeper_map(pairs: DataFrame, prior: DataFrame | None = None) -> DataFrame:
@@ -160,7 +161,7 @@ def keeper_map(pairs: DataFrame, prior: DataFrame | None = None) -> DataFrame:
     join.  A NULL fingerprint (a file written before the column existed)
     never marks and never keeps."""
     is_prior = F.col("_prior")
-    rows = pairs.withColumn("_prior", F.lit(False))
+    rows = pairs.select("*", F.lit(False).alias("_prior"))
     if prior is not None:
         rows = rows.unionByName(
             prior.select("fingerprint", "url", F.lit(True).alias("_prior")),
@@ -173,12 +174,11 @@ def keeper_map(pairs: DataFrame, prior: DataFrame | None = None) -> DataFrame:
     return (rows.filter(F.col("fingerprint").isNotNull())
             .select(*pairs.columns, "_prior", keep.alias("keep_url"))
             .filter(~is_prior & (F.col("url") != F.col("keep_url")))
-            .drop("_prior"))
+            .select(*pairs.columns, "keep_url"))
 
 
-def exact_dedup_mark(staged: DataFrame,
-                     marks: DataFrame | None = None,
-                     bound: int | None = None) -> DataFrame:
+def exact_dedup_mark(staged: DataFrame, marks: DataFrame,
+                     bound: int) -> DataFrame:
     """In-job exact dedup — MARK, don't drop: every url still commits (so
     resume converges to zero pending); non-canonical copies carry
     ``duplicate_of`` = the canonical url for their fingerprint. Consumers
@@ -186,30 +186,27 @@ def exact_dedup_mark(staged: DataFrame,
     dropped urls pending forever and re-commit them as duplicates on the
     next resume.
 
-    ``staged`` joins the marks (``keeper_map`` rows, one per
-    (fingerprint, url)) on (fingerprint, url).  Join strategy is GATED,
-    not forced: the marks are dup-fraction-sized, which is usually
-    broadcastable but NOT always — re-crawl-heavy corpora run 20-30%+
-    exact dups, and a forced broadcast of a billion-row side kills the
-    driver.  ``gates.broadcast_if_small`` decides: with a job-free
-    ``bound`` on the marks' row count (``mark_staged_duplicates`` passes
-    the count it observed) it settles the choice without a job, else it
-    runs one bounded count.  Under its limit the marks broadcast (and no
+    ``staged`` joins ``marks`` (``keeper_map`` rows, one per
+    (fingerprint, url)) on (fingerprint, url).  ``mark_staged_duplicates``
+    passes the marks of the whole batch and the committed table, so a
+    subset of the staged files is marked against all of them.  Join
+    strategy is GATED, not forced: the marks are dup-fraction-sized,
+    which is usually broadcastable but NOT always — re-crawl-heavy
+    corpora run 20-30%+ exact dups, and a forced broadcast of a
+    billion-row side kills the driver.  ``gates.broadcast_if_small``
+    decides from ``bound``, an upper bound on the marks' row count
+    (``mark_staged_duplicates`` passes the count it observed): at or
+    under its limit the choice is settled without a job, else one
+    bounded count runs.  Under the limit the marks broadcast (and no
     Exchange carries the payload — ``test_dedup_mark_shuffles_no_payload``),
-    above it the hint is omitted and AQE plans a shuffled join.  Without
-    ``marks``, ``staged`` is marked against itself; pass precomputed
-    ``marks`` to mark a subset of files against the marks of the whole
-    batch and the committed table (the single-write commit path below).
+    above it the hint is omitted and AQE plans a shuffled join.
     """
-    if marks is None:
-        marks = keeper_map(staged.select("fingerprint", "url")) \
-            .dropDuplicates(["fingerprint", "url"])
     marks = broadcast_if_small(
         marks.select("fingerprint", "url", "keep_url"), bound=bound)
     return (staged.drop("duplicate_of")
             .join(marks, ["fingerprint", "url"], "left")
-            .withColumn("duplicate_of", F.col("keep_url"))
-            .select(*staged.columns))
+            .select(*[F.col("keep_url").alias(c) if c == "duplicate_of"
+                      else c for c in staged.columns]))
 
 
 def mark_staged_duplicates(spark: SparkSession, out: IceboxTable,
@@ -243,8 +240,8 @@ def mark_staged_duplicates(spark: SparkSession, out: IceboxTable,
     from urllib.parse import unquote, urlparse
 
     pairs = (spark.read.schema(schema).parquet(*files)
-             .select("fingerprint", "url")
-             .withColumn("_file", F.input_file_name()))
+             .select("fingerprint", "url",
+                     F.input_file_name().alias("_file")))
     obs = Observation("dedup_marks")
     # The rewrite can only be planned once the observed files are known,
     # so the marks are checkpointed by that same job: the rewrite reads
@@ -283,8 +280,6 @@ def run_extract_job(
     rebalance_mode: str = "none",
     limit_pending: int | None = None,
     dedup: str = "none",
-    primary: str | None = None,
-    precise: str | None = None,
     pages: str | None = None,
 ) -> dict:
     """Run (or resume) the extraction job. Returns summary counters.
@@ -313,8 +308,7 @@ def run_extract_job(
         src_pages = src_pages.filter(
             seq.isNotNull() & range_predicate(seq, pages))
     return extract_and_commit(spark, src_pages, cfg, job_token,
-                              rebalance_mode, limit_pending, dedup,
-                              primary, precise)
+                              rebalance_mode, limit_pending, dedup)
 
 
 def extract_and_commit(
@@ -325,8 +319,6 @@ def extract_and_commit(
     rebalance_mode: str = "none",
     limit_pending: int | None = None,
     dedup: str = "none",
-    primary: str | None = None,
-    precise: str | None = None,
 ) -> dict:
     """Extract the pages of ``src_pages`` that are not yet committed and
     commit them as one icebox snapshot plus its lineage rows — the one
@@ -334,21 +326,6 @@ def extract_and_commit(
     (``streaming/ingest.py``). A ``job_token`` already applied is a
     no-op that only heals a missing lineage append. Arguments are
     ``run_extract_job``'s."""
-    # Pre-flight the backend selection DRIVER-SIDE: a mistyped name must
-    # fail here, not executor-side mid-stage (or worse, at the cost lookup
-    # AFTER the snapshot commit — losing the summary of a job that
-    # succeeded). BackendSpec objects carry their own cost metadata.
-    from ..operators.registry import BackendSpec, get_spec
-
-    def _cost_per_page(sel, default_name: str) -> float:
-        if sel is None:
-            return get_spec(default_name).cost_per_1000_pages / 1000.0
-        if isinstance(sel, BackendSpec):
-            return sel.cost_per_1000_pages / 1000.0
-        return get_spec(sel).cost_per_1000_pages / 1000.0
-    cost_primary = _cost_per_page(primary, "fast")
-    cost_precise = _cost_per_page(precise, "precise")
-
     out = IceboxTable(cfg.extracted_table)
     lin = IceboxTable(cfg.lineage_table)
     if job_token and job_token in out.applied_tokens():
@@ -371,9 +348,7 @@ def extract_and_commit(
     if rebalance_mode == "salted":
         pending = rebalance(pending)
 
-    # ``primary``/``precise`` select engines by registry name (the
-    # reference CLI's engine whitelist); None = the built-in defaults.
-    result = extract_fused(pending, primary=primary, precise=precise)
+    result = extract_fused(pending)
 
     # In-flight metrics via observe() — the Spark-native analog of the
     # reference's TokenUsage accumulator monoid (gemini_backend.py:25-80):
@@ -395,9 +370,9 @@ def extract_and_commit(
     # ``duplicate_of`` (null unless an in-job dedup marks the row) are
     # always present, so a table mixing dedup and non-dedup commits never
     # has parquet files with divergent schemas.
-    result = (result
-              .withColumn("fingerprint", F.md5(F.col("text").cast("binary")))
-              .withColumn("duplicate_of", F.lit(None).cast("string")))
+    result = result.select(
+        "*", F.md5(F.col("text").cast("binary")).alias("fingerprint"),
+        F.lit(None).cast("string").alias("duplicate_of"))
 
     # ONE computation pass: extraction streams straight into staged parquet
     # files (task-level atomic; never through driver memory — a
@@ -424,12 +399,10 @@ def extract_and_commit(
     lin.append(lineage_rows(staged, snap),
                job_token=f"lineage-{job_token}" if job_token else None)
     # A2 cost accounting (gemini_backend.py:25-80 analog): dollar cost
-    # derived from the SAME in-flight observe counters — every row pays
-    # the fast backend's unit cost, escalated rows additionally pay the
-    # precise backend's (the hybrid's raison d'être is exactly this
-    # number: escalation fraction × paid-backend unit cost).
-    est_cost = (metrics["rows"] * cost_primary
-                + metrics["escalated"] * cost_precise)
+    # derived from the SAME in-flight observe counters — the fast engine
+    # is free, so only escalated rows pay (the hybrid's raison d'être is
+    # exactly this number: escalation fraction × precise unit cost).
+    est_cost = metrics["escalated"] * PRECISE_COST_PER_PAGE
     summary = {"snapshot_id": snap, "rows": n, "resumed": False,
                "metrics": metrics,
                "estimated_cost_usd": round(est_cost, 6)}

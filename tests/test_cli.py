@@ -8,6 +8,7 @@ import json
 import pytest
 
 from ocr_devnagari_spark.cli import main
+from ocr_devnagari_spark.extract_core import PRECISE_COST_PER_PAGE
 
 
 @pytest.fixture(scope="module")
@@ -40,7 +41,8 @@ def test_cli_extract_resume_bench(spark, tiny_corpus, tmp_path, capsys):
                             "--token", "c1", "--limit", "40",
                             "--dedup", "exact"])
     assert rc == 0 and out["rows"] == 40
-    assert out["estimated_cost_usd"] >= 0.0
+    assert out["estimated_cost_usd"] == round(
+        out["metrics"]["escalated"] * PRECISE_COST_PER_PAGE, 6)
 
     rc, out = _run(capsys, ["--cores", "4", "resume",
                             "--corpus", tiny_corpus, "--root", root,
@@ -65,32 +67,6 @@ def test_cli_bench_reports_session_cores(spark, tiny_corpus, capsys):
                             "--reps", "1"])
     assert rc == 0 and out["docs"] == 60
     assert out["cores"] == spark.sparkContext.defaultParallelism
-
-
-def test_cli_backends(capsys):
-    rc, out = _run(capsys, ["backends"])
-    assert rc == 0
-    names = {b["name"] for b in out["backends"]}
-    assert {"fast", "precise", "naive"} <= names
-    costs = {b["name"]: b["cost_per_1000_pages"] for b in out["backends"]}
-    assert costs["fast"] == 0.0 and costs["precise"] > 0.0
-
-
-def test_cli_backend_whitelist(spark, tiny_corpus, tmp_path, capsys):
-    """--backend selects the engine by registry name (the reference CLI's
-    whitelist flag); naive output differs from the default fast engine."""
-    root = str(tmp_path / "naive_tables")
-    rc, out = _run(capsys, ["--cores", "4", "extract",
-                            "--corpus", tiny_corpus, "--root", root,
-                            "--backend", "naive"])
-    assert rc == 0 and out["rows"] == 60
-
-    from pyspark.sql import functions as F
-
-    from ocr_devnagari_spark.sources.icebox import IceboxTable
-    got = IceboxTable(f"{root}/extracted").read(spark)
-    # the naive regex stripper keeps boilerplate (cookie banners etc.)
-    assert got.filter(F.lower("text").contains("cookie")).count() > 0
 
 
 def test_cli_validate_empty_corpus(spark, tmp_path, capsys):

@@ -1,14 +1,18 @@
-"""Property-based fuzzing of the extraction core: for ANY byte string the
-extractor must (a) not raise, (b) be deterministic, (c) keep its output
-invariants — because at 10^12 documents every corrupt byte sequence that
-exists on the web WILL be in the table."""
+"""Property-based fuzzing of the extraction core: for ANY payload — bytes,
+a PDF-magic layout of any JSON shape, or NULL — the extractor must (a) not
+raise, (b) be deterministic, (c) keep its output invariants — because at
+10^12 documents every corrupt byte sequence that exists on the web WILL be
+in the table."""
 
 from __future__ import annotations
+
+import json
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ocr_devnagari_spark.extract_core import (
+    PDF_MAGIC,
     detect_critical,
     estimate_confidence,
     extract_document,
@@ -23,14 +27,31 @@ _html_ish = st.one_of(
         fullmatch=True).map(lambda s: s.encode("utf-8", "ignore")),
 )
 
+# Any JSON value; objects favour the layout's own keys, so the payloads
+# reach every step of ``extract_pdf`` with values of the wrong shape.
+_json = st.recursive(
+    st.none() | st.booleans() | st.integers() | st.floats()
+    | st.text(max_size=20),
+    lambda kids: st.lists(kids, max_size=4) | st.dictionaries(
+        st.sampled_from(["pages", "page", "blocks", "x", "y", "text"])
+        | st.text(max_size=5), kids, max_size=4),
+    max_leaves=20)
 
-@settings(max_examples=300, deadline=None)
-@given(payload=_html_ish)
+_payload = st.one_of(
+    _html_ish,
+    st.none(),
+    st.binary(max_size=500).map(lambda b: PDF_MAGIC + b),
+    _json.map(lambda v: PDF_MAGIC + json.dumps(v).encode()),
+)
+
+
+@settings(max_examples=500, deadline=None)
+@given(payload=_payload)
 def test_extract_never_raises_and_is_deterministic(payload):
     r1 = extract_document("u", payload)
     r2 = extract_document("u", payload)
     assert r1 == r2
-    assert r1["backend_used"] in ("fast", "fast+precise", "pdf")
+    assert r1["backend_used"] in ("fast", "fast+precise", "pdf", "none")
     assert 0.0 <= r1["confidence"] <= 1.0
     assert isinstance(r1["text"], str)
     if r1["success"]:

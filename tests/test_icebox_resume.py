@@ -545,6 +545,14 @@ def test_dedup_schema_stable_across_modes(spark, corpus_dir, work_root):
     assert out.filter(F.col("fingerprint").isNull()).count() == 0
 
 
+def _self_marks(staged):
+    """The marks of ``staged`` against itself, one per (fingerprint,
+    url) — what ``mark_staged_duplicates`` builds for a fresh table."""
+    from ocr_devnagari_spark.plans.pipeline import keeper_map
+    return keeper_map(staged.select("fingerprint", "url")) \
+        .dropDuplicates(["fingerprint", "url"])
+
+
 def test_dedup_mark_shuffles_no_payload(spark, tmp_path):
     """No Exchange in the dedup-mark plan may carry the extracted text —
     the 100-TB property the keeper-map design exists for."""
@@ -559,7 +567,8 @@ def test_dedup_mark_shuffles_no_payload(spark, tmp_path):
     ).withColumn("duplicate_of", F.lit(None).cast("string"))
     staged_dir = str(tmp_path / "staged")
     df.write.parquet(staged_dir)
-    marked = exact_dedup_mark(spark.read.parquet(staged_dir))
+    staged = spark.read.parquet(staged_dir)
+    marked = exact_dedup_mark(staged, _self_marks(staged), bound=27)
     assert marked.filter(F.col("duplicate_of").isNotNull()).count() == 27
 
     buf = io.StringIO()
@@ -588,6 +597,7 @@ def test_dedup_mark_large_keeper_map_not_broadcast(spark, tmp_path,
     staged_dir = str(tmp_path / "staged")
     df.write.parquet(staged_dir)
     staged = spark.read.parquet(staged_dir)
+    marks = _self_marks(staged)
 
     # a zero broadcast limit removes the hint; with auto-broadcast off
     # (emulating a keeper map too big for the thresholds) the join MUST
@@ -600,7 +610,7 @@ def test_dedup_mark_large_keeper_map_not_broadcast(spark, tmp_path,
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
         with monkeypatch.context() as m:
             m.setattr(gates, "BROADCAST_ROWS", 0)
-            shuffled = exact_dedup_mark(staged)
+            shuffled = exact_dedup_mark(staged, marks, bound=33)
         got = {(r.url, r.duplicate_of) for r in shuffled.collect()}
         plan = shuffled._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" not in plan
@@ -612,7 +622,7 @@ def test_dedup_mark_large_keeper_map_not_broadcast(spark, tmp_path,
         else:
             spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold",
                            old_aqe)
-    broadcast = exact_dedup_mark(staged)      # default gate: broadcasts
+    broadcast = exact_dedup_mark(staged, marks, bound=33)   # broadcasts
     want = {(r.url, r.duplicate_of) for r in broadcast.collect()}
     assert got == want
     assert sum(1 for _, d in want if d is not None) == 40 - 7

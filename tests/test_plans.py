@@ -90,21 +90,3 @@ def test_is_pdf_col_matches_python(spark, corpus_dir):
     rows = pages.select("url", "html", is_pdf_col().alias("p")).collect()
     for r in rows[:200]:
         assert r.p == is_pdf_payload(r.html)
-
-
-def test_bad_backend_name_fails_before_any_write(spark, corpus_dir,
-                                                 work_root):
-    """A mistyped --backend must fail driver-side pre-flight — not
-    executor-side mid-stage, and never after the snapshot commit."""
-    import os
-
-    import pytest
-
-    from ocr_devnagari_spark.config import ExtractConfig
-    from ocr_devnagari_spark.plans.pipeline import run_extract_job
-    cfg = ExtractConfig(root_dir=work_root)
-    with pytest.raises(ValueError, match="unknown backend"):
-        run_extract_job(spark, corpus_dir, cfg, primary="tesseractt")
-    # nothing was staged or committed
-    assert not os.path.exists(
-        os.path.join(cfg.extracted_table, "_current"))

@@ -12,6 +12,7 @@ library calls the tests exercise — the CLI adds no semantics of its own.
         [--token T] [--limit N] [--pages "1-50,60"] [--dedup exact] \
         [--rebalance salted]
     python -m ocr_devnagari_spark.cli resume    --corpus DIR --root DIR
+    python -m ocr_devnagari_spark.cli maintain  --root DIR
     python -m ocr_devnagari_spark.cli bench     --corpus DIR [--cores N] \
         [--sweep 2,8,32]
 
@@ -77,6 +78,25 @@ def cmd_extract(args) -> int:
     )
     summary["metrics"] = dict(summary.get("metrics") or {})
     print(json.dumps({"command": "extract", **summary}))
+    return 0
+
+
+def cmd_maintain(args) -> int:
+    """Collect what commits left behind under ``--root``: superseded
+    manifests and data files, and the staged files of a crashed job,
+    once they are older than ``icebox.ORPHAN_GRACE_SECONDS``. Pure
+    filesystem work — no SparkSession starts."""
+    import os
+
+    from .config import ExtractConfig
+    from .sources.icebox import IceboxTable
+    cfg = ExtractConfig(root_dir=args.root)
+    removed = {}
+    for name, path in (("extracted", cfg.extracted_table),
+                       ("lineage", cfg.lineage_table)):
+        if os.path.isdir(path):
+            removed[name] = IceboxTable(path).expire_snapshots()
+    print(json.dumps({"command": "maintain", "removed": removed}))
     return 0
 
 
@@ -169,6 +189,12 @@ def build_parser() -> argparse.ArgumentParser:
         e.add_argument("--rebalance", choices=["none", "salted"],
                        default="none")
         e.set_defaults(fn=cmd_extract)
+
+    m = sub.add_parser("maintain", help="expire superseded snapshots "
+                       "and crash orphans")
+    m.add_argument("--root", required=True,
+                   help="table root (extracted + lineage live here)")
+    m.set_defaults(fn=cmd_maintain)
 
     b = sub.add_parser("bench", help="extraction throughput on a corpus")
     b.add_argument("--corpus", required=True)

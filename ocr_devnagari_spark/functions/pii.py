@@ -58,11 +58,6 @@ def phone_count(col: Column) -> Column:
     return F.regexp_count(masked, F.lit(PHONE_RE))
 
 
-def pii_count(col: Column) -> Column:
-    """Total redactable spans (= number of placeholder tokens)."""
-    return email_count(col) + ipv4_count(col) + phone_count(col)
-
-
 def redact_pii(col: Column) -> Column:
     """Replace every PII span with its placeholder token (email → IPv4 →
     phone, the documented order)."""

@@ -13,7 +13,7 @@ keep the k smallest points, and estimate
 The hash is the md5-prefix wheel the splits module uses (32 uniform
 bits, identical in Spark / Python / DuckDB).  Mergeability — union of
 two sketches = k smallest of the concatenation — is what makes it a
-sketch rather than a sample; ``kmv_merge`` demonstrates it.
+sketch rather than a sample.
 
 Scale shape: one ``TakeOrdered(k)``-style global bottom-k (Spark
 computes ``orderBy(h).limit(k)`` as per-partition partial top-k +
@@ -69,16 +69,6 @@ def kmv_estimate(df: DataFrame, col: str, k: int = 256) -> DataFrame:
                 .otherwise(F.round((F.col("k_used") - 1) / F.col("_uk"),
                                    4)).alias("n_est"),
                 F.col("k_used").cast("long").alias("k_used")))
-
-
-def kmv_merge(sketches: list[DataFrame], k: int = 256) -> DataFrame:
-    """Union sketches (each a ``p`` frame) into one: the k smallest of
-    the concatenation — the mergeability property that lets per-shard
-    sketches roll up without touching raw data."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.distinct().orderBy("p").limit(k)
 
 
 def kmv_estimate_sql(rel: str, col: str, k: int = 256) -> str:

@@ -167,9 +167,9 @@ def _lsh_buckets(sig: DataFrame, bands: int, rows: int,
     genuine NEAR-duplicate family larger than the cap (6k template
     pages differing only in a date), and those pairs are simply not
     found — exact dedup only removes the exactly-identical portion
-    first. If such families matter, raise ``max_bucket`` (cost grows
-    quadratically) or union with ``simhash_near_dups``, whose
-    pigeonhole join has no per-bucket collect."""
+    first. Raising ``max_bucket`` finds them at a cost that grows
+    quadratically; ROADMAP direction 5 tracks how the drop is
+    reported."""
     band_hashes = F.array(*[
         F.xxhash64(F.concat_ws(
             ",", *[F.col(f"h{b * rows + r}").cast("string")
@@ -348,14 +348,6 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     return labels
 
 
-def dedup_keep_list(pairs: DataFrame, all_ids: DataFrame,
-                    id_col: str = "doc_id") -> DataFrame:
-    """Ids to KEEP: drop any id that appears as the greater member of a
-    verified near-dup pair (min-id-wins canonicalization)."""
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return all_ids.join(losers, id_col, "left_anti")
-
-
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
@@ -400,32 +392,6 @@ def simhash_fingerprints(df: DataFrame, id_col: str = "doc_id",
     return (ids.join(signed, "id", "left")
             .select("id", F.coalesce("simhash", F.lit(0).cast("long"))
                     .alias("simhash")))
-
-
-def simhash_near_dups(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text",
-                      max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash) ≤ d via the pigeonhole chunk
-    join: split 64 bits into 4×16-bit chunks; any pair within d ≤ 3 agrees
-    on ≥1 chunk, so the join key is (chunk_idx, chunk_value) — never O(n²).
-    The Hamming filter afterwards is exact (bit_count(xor))."""
-    fp = simhash_fingerprints(df, id_col, text_col)
-    chunks = F.array(*[
-        F.shiftrightunsigned(F.col("simhash"), 16 * i).bitwiseAND(
-            F.lit(0xFFFF)).alias(f"c{i}")
-        for i in range(4)])
-    e = fp.select("id", "simhash",
-                  F.posexplode(chunks).alias("chunk_idx", "chunk_val"))
-    a = e.alias("a")
-    b = e.alias("b")
-    return (a.join(b, ["chunk_idx", "chunk_val"])
-            .filter(F.col("a.id") < F.col("b.id"))
-            .select(F.col("a.id").alias("id_a"),
-                    F.col("b.id").alias("id_b"),
-                    F.bit_count(F.col("a.simhash").bitwiseXOR(
-                        F.col("b.simhash"))).alias("hamming"))
-            .distinct()
-            .filter(F.col("hamming") <= max_hamming))
 
 
 # ---------------------------------------------------------------------------

@@ -119,8 +119,8 @@ def linear_quality_score(df: DataFrame, weights, bias: float = 0.0,
 
 def _check_model_params(n_buckets: int, alpha: float) -> None:
     if not 1 <= n_buckets <= 16_777_216:
-        # the model table is a driver-side list and must broadcast;
-        # 2^24 buckets ≈ 400 MB of rows is already past sensible —
+        # the model is a driver-side dict and must broadcast;
+        # 2^24 buckets ≈ 400 MB of entries is already past sensible —
         # DSIR/CCNet papers use 10^4-10^6
         raise ValueError("n_buckets must be in [1, 2^24]")
     if alpha <= 0:
@@ -231,36 +231,15 @@ def _micro6(x: float) -> int:
         Decimal(1), rounding=ROUND_HALF_UP))
 
 
-def dsir_bucket_logratios(target: DataFrame, raw: DataFrame,
-                          n: int = 2, n_buckets: int = 4096,
-                          alpha: float = 1.0,
-                          text_col: str = "text") -> DataFrame:
-    """(bucket, logratio_micro, logratio) — the DSIR importance model:
-    add-α-smoothed hashed-n-gram distributions of the TARGET and RAW
-    corpora, ``logratio = ln(p_target) - ln(p_raw)`` quantized HALF_UP
-    to integer micro-units (``logratio_micro``, 1e-6); the ``logratio``
-    double is exactly ``logratio_micro / 1e6`` for readability.
-
-    Exactly ``n_buckets`` rows come out (a bucket no gram hashed into
-    still carries its smoothed ratio), so the result broadcasts onto
-    any corpus.  Both inputs are counted in one Spark job of
-    per-batch partial histograms (``n_buckets`` final rows per side) —
-    at 10^12 rows that is the cheapest possible full-corpus
-    statistic."""
-    _check_model_params(n_buckets, alpha)
-    spark = target.sparkSession
-    micros = _dsir_micro_map(target, raw, n, n_buckets, alpha, text_col)
-    rows = [(b, m, m / 1e6) for b, m in sorted(micros.items())]
-    return spark.createDataFrame(
-        rows, "bucket long, logratio_micro long, logratio double")
-
-
 def _dsir_micro_map(target: DataFrame, raw: DataFrame, n: int,
                     n_buckets: int, alpha: float, text_col: str) -> dict:
-    """{bucket → logratio_micro} computed with ONE Spark job (the
-    tagged-union pair count): the model the Arrow scoring pass
-    broadcasts.  Same numbers as ``dsir_bucket_logratios`` — that
-    public table is just this map with the /1e6 readability column."""
+    """{bucket → logratio_micro} — the DSIR importance model: add-α-
+    smoothed hashed-n-gram distributions of the TARGET and RAW corpora,
+    ``ln(p_target) - ln(p_raw)`` quantized HALF_UP to integer
+    micro-units (1e-6).  Exactly ``n_buckets`` entries (a bucket no
+    gram hashed into still carries its smoothed ratio), computed with
+    ONE Spark job (the tagged-union pair count) of per-batch partial
+    histograms."""
     import math
 
     # totals ride the same tiny aggregates — no extra corpus pass
@@ -274,25 +253,17 @@ def _dsir_micro_map(target: DataFrame, raw: DataFrame, n: int,
             for b in range(n_buckets)}
 
 
-def _apply_bucket_model(docs: DataFrame, model, micro_col: str,
-                        n: int, n_buckets: int,
-                        id_col: str, text_col: str):
+def _apply_bucket_model(docs: DataFrame, model: dict, n: int,
+                        n_buckets: int, id_col: str, text_col: str):
     """Shared Arrow application of a tiny (bucket → integer-micro)
-    model: the model rows (a ``{bucket: micro}`` dict built driver-
-    side, or a model DataFrame collected here — ≤ ``n_buckets`` rows by
-    construction) ship as a Spark broadcast variable, and each document
-    scores in ONE narrow Arrow pass — ``(id, n_grams, micro_sum)`` with
-    exact Python-int accumulation, ZERO shuffles and no per-gram rows.
-    Grams whose bucket has no model row don't count.  Each input row
-    yields exactly one output row — ids are carried through, never
-    grouped."""
+    model: the ``{bucket: micro}`` dict, built driver-side with
+    ``n_buckets`` entries, ships as a Spark broadcast variable, and each
+    document scores in ONE narrow Arrow pass — ``(id, n_grams,
+    micro_sum)`` with exact Python-int accumulation, ZERO shuffles and
+    no per-gram rows.  Each input row yields exactly one output row —
+    ids are carried through, never grouped."""
     from pyspark.sql import types as T
-    if isinstance(model, dict):
-        rmap = model
-    else:
-        rmap = {r["bucket"]: r[micro_col]
-                for r in model.select("bucket", micro_col).collect()}
-    bc = docs.sparkSession.sparkContext.broadcast(rmap)
+    bc = docs.sparkSession.sparkContext.broadcast(model)
     id_type = docs.schema[id_col].dataType
     schema = T.StructType([
         T.StructField(id_col, id_type, True),
@@ -311,11 +282,8 @@ def _apply_bucket_model(docs: DataFrame, model, micro_col: str,
                 if text is not None:
                     ws = text.split(" ")
                     for i in range(len(ws) - n + 1):
-                        mv = m.get(bucket(" ".join(ws[i:i + n])))
-                        if mv is None:
-                            continue
                         cnt += 1
-                        s += mv
+                        s += m[bucket(" ".join(ws[i:i + n]))]
                 ids.append(did)
                 ngs.append(cnt)
                 mss.append(s)
@@ -326,8 +294,7 @@ def _apply_bucket_model(docs: DataFrame, model, micro_col: str,
 
 def dsir_weights(docs: DataFrame, target: DataFrame, n: int = 2,
                  n_buckets: int = 4096, alpha: float = 1.0,
-                 id_col: str = "doc_id", text_col: str = "text",
-                 ratios: DataFrame | None = None) -> DataFrame:
+                 id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Per-document DSIR importance weight over ``docs`` (the RAW
     corpus) against ``target``.
 
@@ -340,56 +307,33 @@ def dsir_weights(docs: DataFrame, target: DataFrame, n: int = 2,
     samples ∝ exp(weight)); compose with ``functions/splits.py`` for
     the deterministic keep.
 
-    Pass a precomputed ``ratios`` table (``dsir_bucket_logratios``) to
-    amortize the model over many corpora (build it once, score many).
-    The ratio table is ``n_buckets`` rows and always broadcasts.
-
-    Each document scores in one narrow Arrow pass against the
-    broadcast ratio map — zero shuffles, no per-gram rows (measured ~2×
+    The model (``_dsir_micro_map``) is ``n_buckets`` entries built
+    driver-side, and each document scores in one narrow Arrow pass
+    against the broadcast ratio map — zero shuffles, no per-gram rows (measured ~2×
     an explode→broadcast-join→sum plan at sf0.1, model build included).
 
     Malformed ids: ONE ROW PER INPUT ROW comes out — ids are carried
     through, not grouped.  Rows sharing an id each keep their own
     weight, and every NULL-id row keeps its own row.  This differs from
     :func:`linear_quality_score`, which groups by id."""
-    if ratios is None:
-        # build the micro map driver-side and skip the model-DataFrame
-        # round trip (createDataFrame + collect = one extra Spark job
-        # per scoring call); ``dsir_bucket_logratios`` emits the same
-        # numbers when a persistent/shareable model table is wanted
-        ratios = _dsir_micro_map(target, docs, n, n_buckets, alpha,
+    _check_model_params(n_buckets, alpha)
+    ratios = _dsir_micro_map(target, docs, n, n_buckets, alpha, text_col)
+    scored = _apply_bucket_model(docs, ratios, n, n_buckets, id_col,
                                  text_col)
-    scored = _apply_bucket_model(docs, ratios, "logratio_micro",
-                                 n, n_buckets, id_col, text_col)
     return scored.select(
         F.col(id_col), F.col("n_grams"),
         (F.col("_ms").cast("double") / F.lit(1000000.0)).alias("weight"))
 
 
-def lm_bucket_logprobs(target: DataFrame, n: int = 1,
-                       n_buckets: int = 4096, alpha: float = 1.0,
-                       text_col: str = "text") -> DataFrame:
-    """(bucket, logprob_micro, logprob) — a hashed-n-gram language
-    model trained on the TARGET corpus (the CCNet construction, Wenzek
-    et al. 2020, with hashed buckets standing in for the KenLM
-    vocabulary): add-α-smoothed bucket probability ``p(b) = (c(b) + α)
-    / (N + α·n_buckets)``, quantized HALF_UP to integer micro-units of
-    ``ln p`` (the scoring.py exact-sum parity discipline).
-
-    Exactly ``n_buckets`` rows come out, so the model broadcasts onto
-    any corpus; training is one counting job of per-batch partial
-    histograms."""
-    _check_model_params(n_buckets, alpha)
-    micros = _lm_micro_map(target, n, n_buckets, alpha, text_col)
-    rows = [(b, m, m / 1e6) for b, m in sorted(micros.items())]
-    return target.sparkSession.createDataFrame(
-        rows, "bucket long, logprob_micro long, logprob double")
-
-
 def _lm_micro_map(target: DataFrame, n: int, n_buckets: int,
                   alpha: float, text_col: str) -> dict:
-    """{bucket → logprob_micro} — the LM the Arrow scoring pass
-    broadcasts; one counting job, no model-DataFrame round trip."""
+    """{bucket → logprob_micro} — a hashed-n-gram language model
+    trained on the TARGET corpus (the CCNet construction, Wenzek et al.
+    2020, with hashed buckets standing in for the KenLM vocabulary):
+    add-α-smoothed bucket probability ``p(b) = (c(b) + α) / (N +
+    α·n_buckets)``, ``ln p`` quantized HALF_UP to integer micro-units.
+    Exactly ``n_buckets`` entries from one counting job of per-batch
+    partial histograms."""
     import math
     tc = _bucket_counts(target, n, n_buckets, text_col).collect()
     nt = sum(r["c"] for r in tc)
@@ -399,11 +343,10 @@ def _lm_micro_map(target: DataFrame, n: int, n_buckets: int,
             for b in range(n_buckets)}
 
 
-def lm_cross_entropy(docs: DataFrame, target: DataFrame | None = None,
-                     n: int = 1, n_buckets: int = 4096,
-                     alpha: float = 1.0, id_col: str = "doc_id",
-                     text_col: str = "text",
-                     logprobs: DataFrame | None = None) -> DataFrame:
+def lm_cross_entropy(docs: DataFrame, target: DataFrame, n: int = 1,
+                     n_buckets: int = 4096, alpha: float = 1.0,
+                     id_col: str = "doc_id",
+                     text_col: str = "text") -> DataFrame:
     """Per-document cross-entropy under the target LM — the CCNet
     perplexity filter (perplexity = ``exp(cross_entropy)`` is monotone
     in it, so the tier thresholds translate directly).
@@ -416,50 +359,22 @@ def lm_cross_entropy(docs: DataFrame, target: DataFrame | None = None,
     CCNet's tail).  Lower is better (closer to the target corpus);
     compose with :func:`ccnet_tier` for head/middle/tail routing.
 
-    Pass a precomputed ``logprobs`` (:func:`lm_bucket_logprobs`) to
-    amortize the model; otherwise ``target`` is required.
-
     Scores in one narrow Arrow pass against the broadcast logprob map
-    (zero shuffles — the ``dsir_weights`` construction).
+    (``_lm_micro_map``; zero shuffles — the ``dsir_weights``
+    construction).
 
     Malformed ids: ONE ROW PER INPUT ROW, exactly as
     :func:`dsir_weights` — duplicate and NULL ids are carried through,
     not grouped."""
-    if logprobs is None:
-        if target is None:
-            raise ValueError("either target or logprobs is required")
-        # driver-side micro map: skips the model-DataFrame round trip
-        # (createDataFrame + collect), same numbers
-        logprobs = _lm_micro_map(target, n, n_buckets, alpha, text_col)
-    scored = _apply_bucket_model(docs, logprobs, "logprob_micro",
-                                 n, n_buckets, id_col, text_col)
+    _check_model_params(n_buckets, alpha)
+    logprobs = _lm_micro_map(target, n, n_buckets, alpha, text_col)
+    scored = _apply_bucket_model(docs, logprobs, n, n_buckets, id_col,
+                                 text_col)
     ce = (-(F.col("_ms").cast("double") / F.lit(1000000.0))
           / F.col("n_grams").cast("double"))
     return scored.select(
         F.col(id_col), F.col("n_grams"),
         F.when(F.col("n_grams") > 0, ce).alias("cross_entropy"))
-
-
-def ccnet_tier_cuts(scored: DataFrame, ce_col: str = "cross_entropy",
-                    rel_err: float = 0.001) -> tuple[float, float]:
-    """Derive the head/middle/tail cutpoints as the corpus
-    cross-entropy TERCILES — CCNet's prescription (Wenzek et al. 2020
-    split their perplexity distribution in equal thirds per language).
-
-    Runs ONE ``approxQuantile`` pass (Greenwald-Khanna sketch:
-    map-side partials, driver gets two doubles — the corpus never
-    collects).  NULL cross-entropies (no-gram documents) are excluded,
-    matching :func:`ccnet_tier`'s explicit NULL→tail route.  The
-    sketch is deterministic for a fixed partitioning but NOT across
-    repartitionings at ``rel_err > 0`` — pin the returned constants
-    (the driver-gate discipline) for reproducible reruns."""
-    qs = scored.filter(F.col(ce_col).isNotNull()).approxQuantile(
-        ce_col, [1 / 3, 2 / 3], rel_err)
-    if len(qs) < 2:          # approxQuantile returns [] on no non-NULLs
-        raise ValueError(
-            f"no non-NULL {ce_col!r} values to derive terciles from "
-            "(empty corpus, or every document had zero n-grams)")
-    return qs[0], qs[1]
 
 
 def ccnet_tier(ce, head_max: float, middle_max: float):

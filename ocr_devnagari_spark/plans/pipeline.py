@@ -30,8 +30,7 @@ Scale notes (the parts that must survive 1000 executors × 100 TB):
 
 ``extract_and_commit`` holds everything from the resume anti-join to
 the lineage append and is the one commit path: ``run_extract_job`` calls
-it for a batch run and for a resume, and ``streaming/ingest.py`` calls it
-once per micro-batch.
+it for a batch run and for a resume.
 """
 
 from __future__ import annotations
@@ -322,10 +321,9 @@ def extract_and_commit(
 ) -> dict:
     """Extract the pages of ``src_pages`` that are not yet committed and
     commit them as one icebox snapshot plus its lineage rows — the one
-    commit path of the batch job, its resume and the stream
-    (``streaming/ingest.py``). A ``job_token`` already applied is a
-    no-op that only heals a missing lineage append. Arguments are
-    ``run_extract_job``'s."""
+    commit path of the batch job and its resume. A ``job_token`` already
+    applied is a no-op that only heals a missing lineage append.
+    Arguments are ``run_extract_job``'s."""
     out = IceboxTable(cfg.extracted_table)
     lin = IceboxTable(cfg.lineage_table)
     if job_token and job_token in out.applied_tokens():

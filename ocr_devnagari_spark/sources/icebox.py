@@ -16,20 +16,25 @@ from page granularity to snapshot granularity:
   files; a crash mid-commit leaves the previous snapshot fully intact.
 
 The engine only talks to this thin API, so a real Iceberg catalog
-(``spark.read.format("iceberg")``, ``MERGE INTO``, ``expire_snapshots``)
-drops in without touching the operators.
+(``spark.read.format("iceberg")``, ``expire_snapshots``) drops in
+without touching the operators.  Upserts need no ``MERGE INTO``:
+``plans/pipeline.py::extract_and_commit`` is idempotent through its
+url anti-join plus the job token.
 """
 
 from __future__ import annotations
 
 import glob
-import itertools
 import json
 import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+# Orphans younger than this survive ``expire_snapshots``: an in-flight
+# job's staged files may still be waiting for their commit.
+ORPHAN_GRACE_SECONDS = 3 * 24 * 3600.0
 
 
 class IceboxTable:
@@ -115,7 +120,7 @@ class IceboxTable:
 
     def append(self, df: DataFrame, job_token: str | None = None) -> int:
         """Append-commit. If ``job_token`` was already applied → no-op
-        (idempotent re-run; the MERGE-idempotence the north rule requires)."""
+        (an idempotent re-run)."""
         if job_token and job_token in self.applied_tokens():
             return self.snapshot_id()
         files, rows = self._stage_write(df)
@@ -125,7 +130,8 @@ class IceboxTable:
         """Materialize df as UNCOMMITTED immutable files (one computation
         pass, straight to parquet — never through driver memory). Pair with
         ``commit_staged``; a crash between the two leaves only invisible
-        orphans, which ``expire_snapshots`` collects."""
+        orphans, which ``expire_snapshots`` collects (run by ``cli
+        maintain``)."""
         return self._stage_write(df)
 
     def commit_staged(self, files: list, rows: int,
@@ -136,42 +142,6 @@ class IceboxTable:
         all_files = (cur["files"] if cur else []) + files
         total = (cur["row_count"] if cur else 0) + rows
         return self._commit(all_files, total, job_token)
-
-    def overwrite(self, df: DataFrame, job_token: str | None = None) -> int:
-        if job_token and job_token in self.applied_tokens():
-            return self.snapshot_id()
-        files, rows = self._stage_write(df)
-        return self._commit(files, rows, job_token)
-
-    def merge_upsert(self, spark: SparkSession, df: DataFrame, key: str,
-                     job_token: str | None = None) -> int:
-        """MERGE INTO emulation: new rows win on ``key`` (last-wins upsert —
-        the reference's ``{**existing, **new}`` at ``processor.py:358``).
-
-        Emulated as old LEFT ANTI new ∪ new, committed as a full snapshot.
-        Real Iceberg rewrites only matched files; at test scale a full
-        rewrite is fine and keeps the commit atomic.
-        """
-        if job_token and job_token in self.applied_tokens():
-            return self.snapshot_id()
-        if df.groupBy(key).count().filter("count > 1").limit(1).count():
-            raise ValueError(
-                f"merge_upsert: incoming batch has duplicate {key!r} values;"
-                " DataFrames are unordered so no deterministic last-wins"
-                " exists within a batch — dedupe upstream first")
-        if not self.exists():
-            return self.overwrite(df, job_token)
-        old = self.read(spark)
-        merged = old.join(df.select(key).distinct(), key, "left_anti") \
-                    .unionByName(df)
-        # No checkpoint/cache: _stage_write lands in a fresh snap-<uuid>
-        # directory, so the read-old / write-new paths never collide, and
-        # the merged frame streams task-by-task straight to parquet —
-        # nothing is materialized in executor or driver memory (a
-        # localCheckpoint here would pin the ENTIRE merged table in
-        # executor storage, impossible at 100 TB).
-        files, rows = self._stage_write(merged)
-        return self._commit(files, rows, job_token)
 
     # -- read path ----------------------------------------------------------
     def read(self, spark: SparkSession,
@@ -186,18 +156,16 @@ class IceboxTable:
         reader = spark.read if schema is None else spark.read.schema(schema)
         return reader.parquet(*m["files"])
 
-    # -- time travel (Iceberg ``VERSION AS OF`` parity) ----------------------
+    # -- snapshot chain ------------------------------------------------------
     def _walk_snapshots(self):
         """Lazy newest-first walk of the reachable snapshot chain.
 
-        Generator so early-stopping callers (``snapshot_for_token``
-        breaks at the first non-matching manifest, ``expire_snapshots``
-        takes ``keep_last``) read O(answer) manifest files, not
-        O(chain) — a long-grace table can retain hundreds of chained
-        manifests that GC may not remove yet.  A seen-id guard bounds
-        the walk if a corrupt/hand-edited ``parent_snapshot_id`` forms
-        a cycle: maintenance must terminate on exactly the damaged
-        tables it exists to clean up."""
+        Generator so ``snapshot_for_token``, which breaks at the first
+        non-matching manifest, reads O(answer) manifest files, not
+        O(chain) — a table within the expiry grace window can retain
+        hundreds of chained manifests.  A seen-id guard bounds the walk
+        if a corrupt/hand-edited ``parent_snapshot_id`` forms a cycle:
+        a resume must terminate on a damaged table too."""
         mdir = os.path.join(self.path, "manifests")
         seen, walk = set(), self.current_manifest()
         while walk is not None:
@@ -214,103 +182,33 @@ class IceboxTable:
             with open(ppath) as f:
                 walk = json.load(f)
 
-    def snapshots(self) -> list[dict]:
-        """The REACHABLE snapshot chain, newest first — the
-        ``table.history()`` analog.  Reachability from ``_current`` via
-        parent links (not filename order) defines membership, the same
-        liveness rule ``expire_snapshots`` collects by: a crashed
-        commit's orphan manifest was never visible and is not
-        history."""
-        return list(self._walk_snapshots())
-
-    def manifest_at(self, snapshot_id: int) -> dict | None:
-        """The manifest of ``snapshot_id`` if still reachable, else
-        None (expired snapshots are gone — Iceberg semantics)."""
-        for m in self._walk_snapshots():
-            if m["snapshot_id"] == snapshot_id:
-                return m
-        return None
-
-    def read_at(self, spark: SparkSession, snapshot_id: int) -> DataFrame:
-        """Time-travel read: the table exactly as of ``snapshot_id``
-        (``spark.read.option("snapshot-id", ...)`` parity).  Raises
-        ``FileNotFoundError`` for expired/unknown ids — including the
-        grace-window state where a young manifest survived
-        ``expire_snapshots`` but its (old) data files did not; the
-        file-existence check below turns that into the same clean
-        error instead of a deep scan failure.  Lineage rows record the
-        input snapshot id (plans/pipeline.py), so any past run's exact
-        input is re-readable until expiry — the reproducibility half
-        of the resume story."""
-        m = self.manifest_at(snapshot_id)
-        if m is None:
-            raise FileNotFoundError(
-                f"snapshot {snapshot_id} not reachable in {self.path} "
-                "(expired or never committed)")
-        if not m["files"]:
-            raise FileNotFoundError(
-                f"snapshot {snapshot_id} in {self.path} is reachable "
-                "but empty (zero data files)")
-        gone = [f for f in m["files"] if not os.path.exists(f)]
-        if gone:
-            raise FileNotFoundError(
-                f"snapshot {snapshot_id} data expired in {self.path} "
-                f"({len(gone)}/{len(m['files'])} files collected)")
-        return spark.read.parquet(*m["files"])
-
     # -- maintenance (K5 cache-GC analog: cache.py:228-254) ------------------
-    def compact(self, spark: SparkSession,
-                target_file_mb: int = 256) -> int:
-        """Small-file compaction (Iceberg ``rewrite_data_files`` parity).
-
-        Many incremental commits → many small files → scan overhead at
-        read time. Rewrites the current snapshot's data into files sized
-        ~``target_file_mb`` and commits it as a new snapshot; old files
-        become unreferenced and are collected by ``expire_snapshots``.
-        Returns the new snapshot id (no-op if already ≤1 file).
-        """
-        m = self.current_manifest()
-        if m is None or len(m["files"]) <= 1:
-            return self.snapshot_id()
-        total_bytes = sum(os.path.getsize(f) for f in m["files"])
-        n_out = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-        df = self.read(spark).coalesce(n_out)
-        files, rows = self._stage_write(df)
-        return self._commit(files, rows, token=None)
-    def expire_snapshots(self, keep_last: int = 1,
-                         grace_seconds: float = 3 * 24 * 3600.0) -> int:
-        """Drop manifests not reachable from ``_current`` (walking parent
-        links up to ``keep_last`` snapshots) and delete data files no
-        surviving manifest references. Reachability — NOT filename order —
-        defines liveness: a crashed commit may have left a manifest newer
-        than ``_current`` on disk; it was never visible and is an orphan,
+    def expire_snapshots(self) -> int:
+        """Keep only the current snapshot: drop every other manifest and
+        delete data files the current manifest does not reference.
+        Reachability from ``_current`` — NOT filename order — defines
+        liveness: a crashed commit may have left a manifest newer than
+        ``_current`` on disk; it was never visible and is an orphan,
         while the current snapshot must always survive.
 
-        ``grace_seconds`` (Iceberg orphan-file-removal style, default 3
-        days): files/manifests younger than the grace window are NEVER
-        collected, so maintenance running concurrently with an in-flight
-        job cannot delete freshly ``stage()``-d files whose
-        ``commit_staged`` hasn't landed yet. Returns #files removed."""
+        Files and manifests younger than ``ORPHAN_GRACE_SECONDS``
+        (Iceberg orphan-file-removal style) are NEVER collected, so
+        maintenance running concurrently with an in-flight job cannot
+        delete freshly ``stage()``-d files whose ``commit_staged`` hasn't
+        landed yet. Returns #files removed."""
         import time
-        cutoff = time.time() - max(grace_seconds, 0.0)
+        cutoff = time.time() - ORPHAN_GRACE_SECONDS
         mdir = os.path.join(self.path, "manifests")
-        manifests = sorted(glob.glob(os.path.join(mdir, "manifest-*.json")))
-        # liveness = the snapshots() reachability walk, ONE definition
-        # (lazy islice: reads keep_last manifests, not the whole chain)
-        live_manifests = list(itertools.islice(
-            self._walk_snapshots(), max(keep_last, 1)))
-        live = [os.path.join(
-                    mdir, f"manifest-{m['snapshot_id']:08d}.json")
-                for m in live_manifests]
-        referenced = set()
-        for m in live_manifests:
-            referenced.update(m["files"])
+        cur = self.current_manifest()
+        live = (os.path.join(mdir, f"manifest-{cur['snapshot_id']:08d}.json")
+                if cur else None)
+        referenced = set(cur["files"]) if cur else set()
         removed = 0
         for fp in glob.glob(os.path.join(self.path, "data", "*", "*.parquet")):
             if fp not in referenced and os.path.getmtime(fp) < cutoff:
                 os.remove(fp)
                 removed += 1
-        for mp in manifests:
-            if mp not in live and os.path.getmtime(mp) < cutoff:
+        for mp in glob.glob(os.path.join(mdir, "manifest-*.json")):
+            if mp != live and os.path.getmtime(mp) < cutoff:
                 os.remove(mp)
         return removed

@@ -379,21 +379,10 @@ def warc_bytes(records: list, compress: bool = True) -> bytes:
     return gzip.compress(data) if compress else data
 
 
-def write_warc(path: str, records: list, compress: bool | None = None
-               ) -> str:
-    """Write a minimal valid WARC file: ``records`` =
-    [(url, iso_ts, html_bytes, warc_type), ...]. Used by tests and the
-    corpus tooling; real crawls come from the crawler, not from here."""
-    if compress is None:
-        compress = path.endswith(".gz")
-    with open(path, "wb") as f:
-        f.write(warc_bytes(records, compress=compress))
-    return path
-
-
 def write_warc_fs(spark: SparkSession, path: str, records: list,
                   compress: bool | None = None) -> str:
-    """``write_warc`` through the Hadoop FileSystem API, so ``path`` may
+    """Write ``warc_bytes(records)`` (gzip-compressed when ``path`` ends
+    in ``.gz``) through the Hadoop FileSystem API, so ``path`` may
     live on whatever shared store the session resolves (HDFS/S3A/...);
     executors reading the file via ``binaryFile`` then see the same
     bytes the driver wrote — a plain ``open()`` on a real cluster would

@@ -60,6 +60,37 @@ def test_cli_extract_resume_bench(spark, tiny_corpus, tmp_path, capsys):
     assert rc == 0 and out["docs"] == 60 and out["docs_per_sec"] > 0
 
 
+def test_cli_maintain_collects_crash_orphans(spark, tiny_corpus, tmp_path,
+                                             capsys):
+    """``cli maintain`` removes the staged files of a crashed job once
+    they are past the grace window; the committed table still equals
+    golden."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from ocr_devnagari_spark.goldenref import golden_extract_corpus
+    from ocr_devnagari_spark.sources.icebox import IceboxTable
+
+    root = str(tmp_path / "tables")
+    rc, _ = _run(capsys, ["--cores", "4", "extract",
+                          "--corpus", tiny_corpus, "--root", root])
+    assert rc == 0
+    t = IceboxTable(os.path.join(root, "extracted"))
+    orphans, _ = t.stage(t.read(spark).limit(5))   # crash before commit
+    for f in orphans:
+        os.utime(f, (1, 1))                          # past the grace window
+    rc, out = _run(capsys, ["maintain", "--root", root])
+    assert rc == 0
+    assert out == {"command": "maintain",
+                   "removed": {"extracted": len(orphans), "lineage": 0}}
+    assert orphans and not any(os.path.exists(f) for f in orphans)
+    gold = pq.read_table(golden_extract_corpus(
+        tiny_corpus, str(tmp_path / "golden.parquet")))
+    assert sorted((r.url, r.text) for r in t.read(spark).collect()) == \
+        sorted(zip(gold["url"].to_pylist(), gold["text"].to_pylist()))
+
+
 def test_cli_bench_reports_session_cores(spark, tiny_corpus, capsys):
     """Without --cores the single-level bench reports the cores its
     session runs on, not null."""

@@ -14,7 +14,7 @@ from ocr_devnagari_spark.plans.curation import curate_docs, curation_report
 from ocr_devnagari_spark.sources.warc import (
     iter_warc_records,
     warc_cdx_index,
-    write_warc,
+    write_warc_fs,
 )
 
 GOOD = ("solid body text with plenty of distinct words " +
@@ -96,7 +96,7 @@ def test_curation_dedup_keeps_lowest_id(spark):
 def test_cdx_index_offsets_point_at_records(spark, tmp_path):
     body = b"<html><p>" + b"x" * 100 + b"</p></html>"
     p = str(tmp_path / "c.warc")
-    write_warc(p, [
+    write_warc_fs(spark, p, [
         ("http://ex.com/1", "2024-01-01T00:00:00Z", body, "response"),
         ("http://ex.com/skip", "2024-01-01T00:00:00Z",
          b"GET / HTTP/1.1\r\n\r\n", "request"),
@@ -122,8 +122,8 @@ def test_cdx_index_offsets_point_at_records(spark, tmp_path):
 def test_cdx_index_gz_uncompressed_offsets(spark, tmp_path):
     body = b"<html><p>gz offsets</p></html>"
     p = str(tmp_path / "d.warc.gz")
-    write_warc(p, [("http://ex.com/z", "2024-01-01T00:00:00Z",
-                    body, "response")])
+    write_warc_fs(spark, p, [("http://ex.com/z", "2024-01-01T00:00:00Z",
+                              body, "response")])
     rows = warc_cdx_index(spark, p).collect()
     assert len(rows) == 1
     raw = gzip.decompress(open(p, "rb").read())
@@ -135,10 +135,10 @@ def test_cdx_index_gz_uncompressed_offsets(spark, tmp_path):
 
 def test_cdx_spans_match_iterator(spark, tmp_path):
     p = str(tmp_path / "e.warc")
-    write_warc(p, [("http://ex.com/a", "2024-01-01T00:00:00Z",
-                    b"<html>a</html>", "response"),
-                   ("http://ex.com/b", "2024-01-01T00:00:01Z",
-                    b"<html>bb</html>", "response")])
+    write_warc_fs(spark, p, [("http://ex.com/a", "2024-01-01T00:00:00Z",
+                              b"<html>a</html>", "response"),
+                             ("http://ex.com/b", "2024-01-01T00:00:01Z",
+                              b"<html>bb</html>", "response")])
     raw = open(p, "rb").read()
     spans = [(off, ln) for _, _, off, ln in
              iter_warc_records(io.BytesIO(raw), with_spans=True)]

@@ -7,14 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_devnagari_spark.operators.dedup import (
-    dedup_keep_list,
     exact_dedup_groups,
     jaccard_pairs,
     lsh_candidate_pairs,
     minhash_dedup,
     minhash_signatures,
     shingles,
-    simhash_near_dups,
 )
 
 
@@ -97,34 +95,6 @@ def test_minhash_signatures_shape(spark, docs):
     assert sig.count() == 10
     cand = lsh_candidate_pairs(sig, bands=4, rows=4)
     assert cand.columns == ["id_a", "id_b"]
-
-
-def test_dedup_keep_list(spark, docs):
-    pairs = minhash_dedup(docs, threshold=0.5)
-    keep = dedup_keep_list(pairs, docs.select("doc_id"))
-    kept = {r.doc_id for r in keep.collect()}
-    assert all(i not in kept for i in range(10_000, 10_006))
-    assert all(i in kept for i in range(0, 6))
-
-
-def test_simhash_near_dups(spark, docs):
-    got = simhash_near_dups(docs, max_hamming=3)
-    pairs = {(r.id_a, r.id_b): r.hamming for r in got.collect()}
-    texts = {r.doc_id: r.text for r in docs.collect()}
-    # each planted exact clone is found at hamming 0 against its source
-    for pid in range(10_000, 10_006):
-        src = next(i for i in texts if i < 10_000 and texts[i] == texts[pid])
-        assert pairs.get((src, pid)) == 0
-    # pigeonhole join must agree with brute force at d<=3
-    from ocr_devnagari_spark.operators.dedup import simhash_fingerprints
-    fps = {r.id: r.simhash for r in simhash_fingerprints(docs).collect()}
-    ids = sorted(fps)
-    brute = set()
-    for i, a in enumerate(ids):
-        for b in ids[i + 1:]:
-            if bin(fps[a] ^ fps[b]).count("1") <= 3:
-                brute.add((a, b))
-    assert set(pairs) == brute
 
 
 def test_simhash_matches_bit_oracle(spark, docs):

@@ -1,5 +1,6 @@
 """Structure guards: one implementation per operator, one home for
-size-driven gates, one commit path and one commit protocol."""
+size-driven gates, one commit path, one commit protocol, and a
+production caller for every public function."""
 
 from __future__ import annotations
 
@@ -137,4 +138,60 @@ def test_one_commit_protocol():
                     and node.func.value.id == "os"
                     and rel != "session.py"):
                 offenders.append(f"{where} os.{node.func.attr}")
+    assert not offenders, offenders
+
+
+def test_every_public_function_has_a_production_caller():
+    """Every public package function and public method is referenced
+    outside its own body by production code: the package,
+    ``__spark_entry__.py``, ``submit_job.py``, ``bench*.py`` or
+    ``perfbench/`` (its tests excluded).  A reference is a name, an
+    attribute, an import or an identifier string (perfbench wraps
+    functions by name).  The one exemption is the golden test oracle."""
+    import ast
+    import collections
+    import pathlib
+
+    import ocr_devnagari_spark as pkg
+
+    allowed = {"goldenref.golden_extract_corpus"}
+    root = pathlib.Path(pkg.__file__).parent
+    repo = root.parent
+    prod = [*root.rglob("*.py"), repo / "__spark_entry__.py",
+            repo / "submit_job.py", *repo.glob("bench*.py"),
+            *(p for p in (repo / "perfbench").rglob("*.py")
+              if "tests" not in p.relative_to(repo).parts)]
+
+    def refs(tree):
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name):
+                yield n.id
+            elif isinstance(n, ast.Attribute):
+                yield n.attr
+            elif isinstance(n, ast.alias):
+                yield n.name.rsplit(".", 1)[-1]
+            elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
+                  and n.value.isidentifier()):
+                yield n.value
+
+    counts = collections.Counter()
+    for path in prod:
+        counts.update(refs(ast.parse(path.read_text())))
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        mod = path.relative_to(root).with_suffix("").as_posix()
+        mod = mod.replace("/", ".")
+        for node in ast.parse(path.read_text()).body:
+            defs = [(node.name, node)] if isinstance(
+                node, ast.FunctionDef) else []
+            if isinstance(node, ast.ClassDef):
+                defs = [(f"{node.name}.{f.name}", f) for f in node.body
+                        if isinstance(f, ast.FunctionDef)]
+            for qual, fn in defs:
+                name = fn.name
+                if name.startswith("_") or f"{mod}.{qual}" in allowed:
+                    continue
+                own = sum(1 for r in refs(fn) if r == name)
+                if counts[name] - own == 0:
+                    offenders.append(f"{mod}.{qual}")
     assert not offenders, offenders

@@ -80,16 +80,6 @@ def test_same_token_append_is_idempotent(spark, work_root):
     assert t.read(spark).count() == 20
 
 
-def test_merge_upsert_last_wins(spark, work_root):
-    t = IceboxTable(f"{work_root}/tbl")
-    old = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k int, v string")
-    new = spark.createDataFrame([(2, "B"), (4, "D")], "k int, v string")
-    t.overwrite(old)
-    t.merge_upsert(spark, new, "k")
-    got = {r.k: r.v for r in t.read(spark).collect()}
-    assert got == {1: "a", 2: "B", 3: "c", 4: "D"}
-
-
 def test_lineage_partition_accounting(spark, corpus_dir, work_root):
     cfg = ExtractConfig(root_dir=work_root)
     run_extract_job(spark, corpus_dir, cfg, job_token="t1")
@@ -693,93 +683,24 @@ def test_dedup_mark_url_staged_twice(spark, tmp_path):
     assert (n_marked, n_rewritten) == (2, 1)
 
 
-def test_compact_small_files(spark, work_root):
-    t = IceboxTable(f"{work_root}/tbl")
-    for i in range(6):                      # six tiny incremental commits
-        t.append(spark.range(i * 100, (i + 1) * 100).repartition(3))
-    m = t.current_manifest()
-    assert len(m["files"]) >= 12
-    before = {r.id for r in t.read(spark).collect()}
-    snap = t.compact(spark)
-    assert snap == m["snapshot_id"] + 1
-    m2 = t.current_manifest()
-    assert len(m2["files"]) < len(m["files"])
-    assert {r.id for r in t.read(spark).collect()} == before
-    removed = t.expire_snapshots(keep_last=1, grace_seconds=0)
-    assert removed >= 12                    # old small files collected
-    assert {r.id for r in t.read(spark).collect()} == before
-
-
 def test_expire_snapshots(spark, work_root):
+    import os
     t = IceboxTable(f"{work_root}/tbl")
     df = spark.range(5)
-    t.overwrite(df)
-    t.append(df)
-    t.append(df)
+    for _ in range(3):
+        t.append(df)
     assert t.read(spark).count() == 15
-    removed = t.expire_snapshots(keep_last=1, grace_seconds=0)
-    assert removed == 0                     # last snapshot references all files
-    t.overwrite(df)                         # orphan the old files
-    # default grace window: freshly-orphaned files survive (an in-flight
+    committed = set(t.current_manifest()["files"])
+    orphans, _ = t.stage(df)                # a crash before commit_staged
+    # default grace window: freshly-staged files survive (an in-flight
     # job's staged-but-uncommitted files must never be collected)
-    assert t.expire_snapshots(keep_last=1) == 0
-    removed = t.expire_snapshots(keep_last=1, grace_seconds=0)
-    assert removed > 0
-    assert t.read(spark).count() == 5
-
-
-def test_time_travel_read_at(spark, work_root):
-    import pytest
-    t = IceboxTable(f"{work_root}/tbl")
-    t.append(spark.range(5).withColumnRenamed("id", "k"), job_token="a")
-    t.append(spark.range(5, 12).withColumnRenamed("id", "k"),
-             job_token="b")
-    t.append(spark.range(12, 15).withColumnRenamed("id", "k"),
-             job_token="c")
-    assert [m["snapshot_id"] for m in t.snapshots()] == [3, 2, 1]
-    assert t.read_at(spark, 1).count() == 5
-    assert t.read_at(spark, 2).count() == 12
-    assert t.read_at(spark, 3).count() == 15
-    # each historical read is the exact rowset, not just a count
-    assert sorted(r.k for r in t.read_at(spark, 2).collect()) \
-        == list(range(12))
-    with pytest.raises(FileNotFoundError):
-        t.read_at(spark, 99)
-
-
-def test_time_travel_respects_expiry(spark, work_root):
-    import pytest
-    t = IceboxTable(f"{work_root}/tbl")
-    for lo, hi, tok in ((0, 5, "a"), (5, 9, "b"), (9, 10, "c")):
-        t.append(spark.range(lo, hi).withColumnRenamed("id", "k"),
-                 job_token=tok)
-    t.expire_snapshots(keep_last=1, grace_seconds=0.0)
-    assert [m["snapshot_id"] for m in t.snapshots()] == [3]
-    assert t.manifest_at(1) is None
-    with pytest.raises(FileNotFoundError):
-        t.read_at(spark, 1)
-    assert t.read_at(spark, 3).count() == 10       # current still fine
-
-
-def test_time_travel_grace_window_data_gone_raises_cleanly(spark, work_root):
-    import os
-    import pytest
-    t = IceboxTable(f"{work_root}/tbl")
-    t.append(spark.range(4).withColumnRenamed("id", "k"), job_token="a")
-    t.overwrite(spark.range(9).withColumnRenamed("id", "k"),
-                job_token="b")
-    # age snapshot 1's data past the grace window while its manifest
-    # (and snapshot 2, which is current) stay young
-    for f in t.manifest_at(1)["files"]:
-        os.utime(f, (1, 1))
-    t.expire_snapshots(keep_last=1, grace_seconds=3600.0)
-    # manifest chain still lists snapshot 1, but its data is collected:
-    # read_at must raise the documented FileNotFoundError, not a deep
-    # scan error
-    assert t.manifest_at(1) is not None
-    with pytest.raises(FileNotFoundError, match="data expired"):
-        t.read_at(spark, 1)
-    assert t.read_at(spark, 2).count() == 9
+    assert t.expire_snapshots() == 0
+    for f in orphans + sorted(committed):
+        os.utime(f, (1, 1))                 # age past the grace window
+    assert t.expire_snapshots() == len(orphans)
+    assert not any(os.path.exists(f) for f in orphans)
+    assert set(t.current_manifest()["files"]) == committed
+    assert t.read(spark).count() == 15
 
 
 def test_snapshots_walk_terminates_on_parent_cycle(spark, work_root):
@@ -797,23 +718,10 @@ def test_snapshots_walk_terminates_on_parent_cycle(spark, work_root):
     doc["parent_snapshot_id"] = 2
     with open(m1, "w") as f:
         json.dump(doc, f)
-    chain = t.snapshots()
-    assert [m["snapshot_id"] for m in chain] == [2, 1]   # each id once
-    assert t.manifest_at(99) is None
     assert t.snapshot_for_token("a") is not None
-    t.expire_snapshots(keep_last=1, grace_seconds=0.0)   # terminates
+    os.utime(m1, (1, 1))                # age past the grace window
+    t.expire_snapshots()                # terminates
+    assert not os.path.exists(m1)
     assert t.read(spark).count() == 5   # appends accumulate: 3 + 2
 
 
-def test_read_at_empty_snapshot_distinct_error(spark, work_root):
-    import pytest
-    t = IceboxTable(f"{work_root}/tbl")
-    t.append(spark.range(3).withColumnRenamed("id", "k"), job_token="a")
-    # a zero-file snapshot (an overwrite still writes a schema-only part
-    # file, but commit_staged accepts an empty staged list) is REACHABLE
-    # but empty — the error must say so, not claim "not reachable"
-    sid = t._commit([], 0, token="b")
-    with pytest.raises(FileNotFoundError, match="empty"):
-        t.read_at(spark, sid)
-    with pytest.raises(FileNotFoundError, match="not reachable"):
-        t.read_at(spark, 99)

@@ -170,22 +170,6 @@ def test_kmv_exact_below_k_and_estimate_above(spark):
         kmv_sketch(big, "v", k=1)
 
 
-def test_kmv_merge_equals_sketch_of_union(spark):
-    from ocr_devnagari_spark.functions.sketches import (
-        kmv_merge,
-        kmv_sketch,
-    )
-    a = spark.range(0, 3000).select(F.col("id").cast("string").alias("v"))
-    b = spark.range(2000, 6000).select(
-        F.col("id").cast("string").alias("v"))
-    merged = sorted(r["p"] for r in
-                    kmv_merge([kmv_sketch(a, "v", 64),
-                               kmv_sketch(b, "v", 64)], 64).collect())
-    direct = sorted(r["p"] for r in
-                    kmv_sketch(a.unionByName(b), "v", 64).collect())
-    assert merged == direct
-
-
 # ---------------------------------------------------------------------------
 # review-fix pins
 # ---------------------------------------------------------------------------

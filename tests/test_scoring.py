@@ -11,10 +11,8 @@ from pyspark.sql import functions as F
 from ocr_devnagari_spark import gates
 from ocr_devnagari_spark.operators.scoring import (
     ccnet_tier,
-    dsir_bucket_logratios,
     dsir_weights,
     linear_quality_score,
-    lm_bucket_logprobs,
     lm_cross_entropy,
 )
 from ocr_devnagari_spark.operators.similarity import semdedup
@@ -129,17 +127,6 @@ def test_dsir_weights_match_brute_force(spark):
     assert got[3]["n_grams"] == 0 and got[3]["weight"] == 0.0
 
 
-def test_dsir_precomputed_ratios_path(spark):
-    target = spark.createDataFrame(TARGET, "doc_id long, text string")
-    raw = spark.createDataFrame(RAW, "doc_id long, text string")
-    ratios = dsir_bucket_logratios(target, raw, n=2, n_buckets=64)
-    assert ratios.count() == 64                 # every bucket present
-    a = sorted(dsir_weights(raw, target, n=2, n_buckets=64).collect())
-    b = sorted(dsir_weights(raw, target, n=2, n_buckets=64,
-                            ratios=ratios).collect())
-    assert a == b
-
-
 def test_bucket_counts_match_brute_force(spark):
     """The Arrow per-batch histogram equals a brute-force Counter of
     md5-wheel buckets (NULL text contributes no grams)."""
@@ -157,11 +144,21 @@ def test_bucket_counts_match_brute_force(spark):
 
 
 def test_dsir_rejects_bad_params(spark):
+    """Both bucket-model scorers reject an out-of-range ``n_buckets`` or
+    a non-positive smoothing ``alpha`` on the driver, before any Spark
+    job runs."""
     df = spark.createDataFrame(RAW, "doc_id long, text string")
-    with pytest.raises(ValueError):
-        dsir_bucket_logratios(df, df, n_buckets=0)
-    with pytest.raises(ValueError):
-        dsir_bucket_logratios(df, df, alpha=0.0)
+    sc = spark.sparkContext
+    sc.setJobGroup("bad-params", "bad params")
+    try:
+        for scorer in (dsir_weights, lm_cross_entropy):
+            for kw in ({"n_buckets": 0}, {"alpha": 0.0},
+                       {"n_buckets": 1, "alpha": -0.5}):
+                with pytest.raises(ValueError):
+                    scorer(df, df, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("bad-params")) == 0
 
 
 # ---------------------------------------------------------------------------
@@ -216,21 +213,7 @@ def test_lm_empty_doc_null_ce_routes_tail(spark):
     assert tiered[0]["tier"] == "tail"
 
 
-def test_lm_precomputed_logprobs_path(spark):
-    target = spark.createDataFrame(TARGET, "doc_id long, text string")
-    raw = spark.createDataFrame(RAW, "doc_id long, text string")
-    lp = lm_bucket_logprobs(target, n=1, n_buckets=64)
-    assert lp.count() == 64
-    a = sorted(lm_cross_entropy(raw, target, n=1, n_buckets=64).collect())
-    b = sorted(lm_cross_entropy(raw, n=1, n_buckets=64,
-                                logprobs=lp).collect())
-    assert a == b
-
-
 def test_lm_requires_target_or_logprobs(spark):
-    raw = spark.createDataFrame(RAW, "doc_id long, text string")
-    with pytest.raises(ValueError):
-        lm_cross_entropy(raw)
     with pytest.raises(ValueError):
         ccnet_tier(F.col("x"), 2.0, 1.0)
 
@@ -364,35 +347,3 @@ def test_semdedup_kmeans_path_drops_planted_dups(spark):
     # originals of the dups survive
     for i in range(3):
         assert got[i] is True
-
-
-def test_ccnet_tier_cuts_terciles(spark):
-    from ocr_devnagari_spark.operators.scoring import (
-        ccnet_tier,
-        ccnet_tier_cuts,
-    )
-    rows = [(i, float(i)) for i in range(90)] + [(90, None), (91, None)]
-    df = spark.createDataFrame(rows, "doc_id long, cross_entropy double")
-    lo, hi = ccnet_tier_cuts(df, rel_err=0.0)    # exact quantiles
-    assert lo <= hi
-    tiers = {r["doc_id"]: r["t"] for r in df.select(
-        "doc_id", ccnet_tier(F.col("cross_entropy"), lo, hi)
-        .alias("t")).collect()}
-    counts = {t: sum(1 for v in tiers.values() if v == t)
-              for t in ("head", "middle", "tail")}
-    # terciles of 90 non-null docs -> ~30 per tier; NULLs route tail
-    assert counts["head"] == 30
-    assert counts["tail"] >= 30 + 2
-    assert tiers[90] == "tail" and tiers[91] == "tail"
-
-
-def test_ccnet_tier_cuts_all_null_raises(spark):
-    import pytest
-
-    from ocr_devnagari_spark.operators.scoring import ccnet_tier_cuts
-    df = spark.createDataFrame(
-        [(0, None), (1, None)], "doc_id long, cross_entropy double")
-    with pytest.raises(ValueError, match="no non-NULL"):
-        ccnet_tier_cuts(df, rel_err=0.0)
-    with pytest.raises(ValueError, match="no non-NULL"):
-        ccnet_tier_cuts(df.filter("doc_id < 0"), rel_err=0.0)

@@ -20,10 +20,12 @@ from ocr_devnagari_spark.functions.text import (
 
 
 def _curate_cols(df):
+    t = F.col("text")
     return df.select(
         "doc_id",
-        pii.redact_pii(F.col("text")).alias("clean"),
-        pii.pii_count(F.col("text")).alias("n_pii"),
+        pii.redact_pii(t).alias("clean"),
+        (pii.email_count(t) + pii.ipv4_count(t) + pii.phone_count(t))
+        .alias("n_pii"),
         quality_score(F.col("text")).alias("q"),
         gopher_pass(F.col("text"), min_words=3).alias("keep"),
         dominant_script(F.col("text")).alias("script"),

@@ -7,7 +7,8 @@ import pytest
 
 from ocr_devnagari_spark.sources.warc import (
     read_warc_pages,
-    write_warc,
+    warc_bytes,
+    write_warc_fs,
 )
 
 HTML_A = (b"<html><body><article><p>The quick brown fox paragraph is "
@@ -20,15 +21,15 @@ HTML_B = (b"<html><body><nav>menu</nav><p>Second page body text that "
 def warc_dir(tmp_path):
     d = tmp_path / "warcs"
     d.mkdir()
-    write_warc(str(d / "a.warc"), [
+    (d / "a.warc").write_bytes(warc_bytes([
         ("http://ex.com/a", "2024-01-02T03:04:05Z", HTML_A, "response"),
         ("http://ex.com/a", "2024-01-02T03:04:05Z",
          b"GET /a HTTP/1.1\r\n\r\n", "request"),      # must be skipped
         ("http://ex.com/b", "2024-01-02T03:04:06Z", HTML_B, "response"),
-    ])
-    write_warc(str(d / "b.warc.gz"), [
+    ], compress=False))
+    (d / "b.warc.gz").write_bytes(warc_bytes([
         ("http://ex.com/c", "2024-02-02T00:00:00Z", HTML_A, "response"),
-    ])
+    ]))
     return str(d)
 
 
@@ -56,14 +57,12 @@ def test_warc_feeds_extraction(spark, warc_dir):
 
 
 def test_warc_truncated_tail_is_tolerated(spark, tmp_path):
-    p = str(tmp_path / "trunc.warc")
-    write_warc(p, [
+    torn = (b"WARC/1.0\r\nWARC-Type: response\r\n"
+            b"WARC-Target-URI: http://ex.com/torn\r\n"
+            b"Content-Length: 99999\r\n\r\nshort")   # torn final record
+    (tmp_path / "trunc.warc").write_bytes(warc_bytes([
         ("http://ex.com/ok", "2024-01-01T00:00:00Z", HTML_A, "response"),
-    ])
-    with open(p, "ab") as f:                     # torn final record
-        f.write(b"WARC/1.0\r\nWARC-Type: response\r\n"
-                b"WARC-Target-URI: http://ex.com/torn\r\n"
-                b"Content-Length: 99999\r\n\r\nshort")
+    ], compress=False) + torn)
     rows = read_warc_pages(spark, str(tmp_path)).collect()
     assert [r.url for r in rows] == ["http://ex.com/ok"]
 
@@ -157,7 +156,7 @@ def test_read_wet_pages_conversion_records(spark, tmp_path):
     from ocr_devnagari_spark.sources.warc import (
         read_warc_pages,
         read_wet_pages,
-        write_warc,
+        write_warc_fs,
     )
     recs = [
         ("http://a.example/1", "2024-03-01T00:00:00Z",
@@ -170,7 +169,7 @@ def test_read_wet_pages_conversion_records(spark, tmp_path):
          b"ignored", "metadata"),
     ]
     path = str(tmp_path / "x.wet.gz")
-    write_warc(path, recs)
+    write_warc_fs(spark, path, recs)
     wet = {r["url"]: r for r in read_wet_pages(spark, path).collect()}
     assert sorted(wet) == ["http://a.example/1", "http://a.example/3"]
     assert wet["http://a.example/1"]["text"] == "plain text one — ünïcode"
@@ -187,7 +186,10 @@ def test_read_wat_links(spark, tmp_path):
     records contribute nothing (tolerant, no task failure)."""
     import json
 
-    from ocr_devnagari_spark.sources.warc import read_wat_links, write_warc
+    from ocr_devnagari_spark.sources.warc import (
+        read_wat_links,
+        write_warc_fs,
+    )
 
     def wat(links):
         return json.dumps({"Envelope": {"Payload-Metadata": {
@@ -207,7 +209,7 @@ def test_read_wat_links(spark, tmp_path):
          b"<html>ignored response</html>", "response"),
     ]
     path = str(tmp_path / "x.wat.gz")
-    write_warc(path, recs)
+    write_warc_fs(spark, path, recs)
     got = sorted((r["url"], r["href"], r["kind"])
                  for r in read_wat_links(spark, path).collect())
     assert got == [

@@ -309,8 +309,9 @@ def dsir_weights(docs: DataFrame, target: DataFrame, n: int = 2,
 
     The model (``_dsir_micro_map``) is ``n_buckets`` entries built
     driver-side, and each document scores in one narrow Arrow pass
-    against the broadcast ratio map — zero shuffles, no per-gram rows (measured ~2×
-    an explode→broadcast-join→sum plan at sf0.1, model build included).
+    against the broadcast ratio map — zero shuffles, no per-gram rows
+    (measured ~2× an explode→broadcast-join→sum plan at sf0.1, model
+    build included).
 
     Malformed ids: ONE ROW PER INPUT ROW comes out — ids are carried
     through, not grouped.  Rows sharing an id each keep their own

@@ -695,10 +695,13 @@ def test_expire_snapshots(spark, work_root):
     # default grace window: freshly-staged files survive (an in-flight
     # job's staged-but-uncommitted files must never be collected)
     assert t.expire_snapshots() == 0
-    for f in orphans + sorted(committed):
-        os.utime(f, (1, 1))                 # age past the grace window
+    for d, _, names in os.walk(t.path):     # age past the grace window
+        for name in names:
+            os.utime(os.path.join(d, name), (1, 1))
     assert t.expire_snapshots() == len(orphans)
     assert not any(os.path.exists(f) for f in orphans)
+    assert os.listdir(os.path.join(t.path, "manifests")) == [
+        "manifest-00000003.json"]           # superseded manifests go too
     assert set(t.current_manifest()["files"]) == committed
     assert t.read(spark).count() == 15
 

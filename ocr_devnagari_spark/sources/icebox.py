@@ -71,12 +71,20 @@ class IceboxTable:
         """The manifest of the snapshot whose commit FIRST applied
         ``token`` (walking parent links from the current snapshot).
         Lets a re-run heal work that depends on that snapshot's
-        ``added_files`` (e.g. lineage written after the commit)."""
+        ``added_files`` (e.g. lineage written after the commit).  None
+        when ``expire_snapshots`` removed the parent of the oldest
+        snapshot carrying ``token``: tokens accumulate, so the first
+        applier is then unknown, and a later snapshot's files must not
+        stand in for it."""
         found = None
         for m in self._walk_snapshots():   # lazy: stops at the boundary
             if token not in m.get("applied_tokens", []):
-                break
+                return found
             found = m
+        parent = found and found.get("parent_snapshot_id")
+        if parent is not None and not os.path.exists(os.path.join(
+                self.path, "manifests", f"manifest-{parent:08d}.json")):
+            return None
         return found
 
     def _commit(self, files: list, row_count: int, token: str | None) -> int:

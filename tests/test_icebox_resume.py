@@ -706,6 +706,24 @@ def test_expire_snapshots(spark, work_root):
     assert t.read(spark).count() == 15
 
 
+def test_snapshot_for_token_unknown_after_expiry(spark, work_root):
+    """Once expiry removed the snapshot that first applied a token, the
+    token's snapshot is unknown: the current snapshot also carries the
+    token (tokens accumulate) but did not add that commit's files, so a
+    lineage heal must not read them as the token's."""
+    import os
+    t = IceboxTable(f"{work_root}/tbl")
+    t.append(spark.range(3), job_token="a")
+    t.append(spark.range(2), job_token="b")
+    assert t.snapshot_for_token("a")["snapshot_id"] == 1
+    for d, _, names in os.walk(t.path):     # age past the grace window
+        for name in names:
+            os.utime(os.path.join(d, name), (1, 1))
+    t.expire_snapshots()
+    assert t.snapshot_for_token("a") is None
+    assert t.snapshot_for_token("c") is None
+
+
 def test_snapshots_walk_terminates_on_parent_cycle(spark, work_root):
     import json
     import os
